@@ -95,7 +95,7 @@ def run_once(sf_dir: str, cpus: str) -> dict:
     # a round-over-round regression with a degraded probe is a host phase,
     # not an engine regression (round-3 lesson: a 17% paper regression was
     # committed without this annotation)
-    out["probe"] = host_probe(8, 32)
+    out["probe"] = host_probe(1, len(os.sched_getaffinity(0)))
     return out
 
 

@@ -11,8 +11,6 @@ Usage:
       write .explain("formatted") for each query to plans/r07/<q>_<tag>.txt
   python bench_extra.py --simhash-stages [--sf DIR]
       per-stage breakdown of the dedup_simhash pipeline
-  python bench_extra.py --bignet-stages [--sf DIR]
-      per-stage breakdown of the staged relational matcher
 """
 
 from __future__ import annotations
@@ -137,21 +135,6 @@ def simhash_stages(sf_dir):
     spark.stop()
 
 
-def bignet_stages(sf_dir):
-    """SPARK_GRAFT_MATCH_DEBUG prints per-stage times inside match_points;
-    run the bignet query twice (warm + timed)."""
-    os.environ["SPARK_GRAFT_MATCH_DEBUG"] = "1"
-    import __spark_entry__ as entry
-    spark = _spark()
-    q = entry.queries()["match_grid_bignet"]
-    for it in range(3):
-        t0 = time.perf_counter()
-        n = q(spark, sf_dir).count()
-        print(f"iter {it}: {time.perf_counter() - t0:.2f}s rows={n}",
-              flush=True)
-    spark.stop()
-
-
 def shuffle_probe(lo: int = 2, hi: int = 8, secs: float = 4.0) -> dict:
     """Bare shuffle-proxy probe (ZERO Spark): per process, the staged
     matcher's shuffle-leg work profile — argsort an int64 key over a
@@ -249,8 +232,6 @@ def main():
         explain_queries(names.split(","), sf_dir, _arg("--tag", "before"))
     elif _arg("--simhash-stages"):
         simhash_stages(sf_dir)
-    elif _arg("--bignet-stages"):
-        bignet_stages(sf_dir)
     elif _arg("--shuffle-probe"):
         print(json.dumps({"metric": "shuffle_probe", **shuffle_probe()}))
     elif _arg("--staged-pair"):

@@ -45,14 +45,10 @@ TRAJ_SCHEMA = "url string, pid_raw long, x double, y double, t_epoch long"
 # in-band dilation marker carried by the cell index (see network_frames)
 INDEX_PAD_COL = "__st_index_pad"
 POINTS_SCHEMA = "url string, pid int, x double, y double"
-# Slim refine output: geometry cuts are re-materialized later from the
-# broadcast network via (eid, seg_idx, ratio) — nested coordinate arrays
-# never enter a shuffle.
-REFINE_SCHEMA = ("url string, pid int, x double, y double, eid long, src long, dst long, "
-                 "way_id long, dir int, dist double, speed double, dist_p2c double, "
-                 "len0 double, len1 double, seg_idx int, ratio double")
-# What the refine STAGE actually emits in non-slim mode: projection +
-# cut params only. Edge attributes (src/dst/way_id/dir/dist/speed) are
+# What the refine STAGE emits in non-slim mode: projection + cut params
+# (eid, seg_idx, ratio), from which geometry is re-materialized later off
+# the broadcast network — nested coordinate arrays never enter a
+# shuffle. Edge attributes (src/dst/way_id/dir/dist/speed) are
 # joined onto the top-k survivors afterwards — they were dead
 # pass-through bytes across the Arrow boundary and the url exchange.
 REFINE_SCHEMA_CUTS = ("url string, pid int, x double, y double, eid long, "
@@ -70,6 +66,31 @@ def url_typed(schema: str, df: DataFrame) -> str:
     every Python-stage output schema must follow the input's url dtype."""
     t = dict(df.dtypes).get("url", "string")
     return schema.replace("url string", f"url {t}", 1)
+
+
+def url_batches(batches):
+    """Re-cut a url-sorted stream of pandas batches at url boundaries, so
+    every yielded frame holds each of its urls' rows complete. The last
+    url of a batch may continue in the next one, so it is carried over;
+    whatever is left is flushed at the end. Empty batches are skipped.
+
+    This is the streamed group-by of every per-trajectory mapInPandas
+    stage (simplify_trajs, viterbi_match, fused_match): many trajectories
+    per Python call instead of one call and frame per url."""
+    buf = None
+    for pdf in batches:
+        if buf is not None and len(buf):
+            pdf = pd.concat([buf, pdf], ignore_index=True)
+        if len(pdf) == 0:
+            buf = None
+            continue
+        u = pdf.url.to_numpy()
+        cut = int(np.searchsorted(u, u[-1], side="left"))
+        buf = pdf.iloc[cut:]
+        if cut:
+            yield pdf.iloc[:cut]
+    if buf is not None and len(buf):
+        yield buf
 
 
 def extract_trajs(pages: DataFrame) -> DataFrame:
@@ -94,9 +115,8 @@ def simplify_trajs(trajs: DataFrame, cfg: MatchConfig) -> DataFrame:
     the Arrow batch at once — the previous per-url applyInPandas paid
     ~12 ms of fixed Python overhead per group (the measured cost that
     motivated extract_simplify's batch shape), dominating the actual
-    kernel at ~50-point trajectories. Url-boundary buffering carries the
-    last (possibly incomplete) url of each Arrow batch into the next, the
-    same pattern as the fused matcher."""
+    kernel at ~50-point trajectories. Batches are re-cut at url
+    boundaries by url_batches."""
     lon0, lat0 = cfg.lon0, cfg.lat0
     x, y = xy_cols(F.col("x"), F.col("y"), lon0, lat0)
     pts = trajs.select("url", "pid_raw", x.alias("xm"), y.alias("ym"))
@@ -122,20 +142,8 @@ def simplify_trajs(trajs: DataFrame, cfg: MatchConfig) -> DataFrame:
                              "x": xy[keep, 0], "y": xy[keep, 1]})
 
     def op(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                buf = None
-                continue
-            u = pdf.url.to_numpy()
-            cut = int(np.searchsorted(u, u[-1], side="left"))
-            buf = pdf.iloc[cut:]
-            if cut:
-                yield _frame(pdf.iloc[:cut])
-        if buf is not None and len(buf):
-            yield _frame(buf)
+        for pdf in url_batches(batches):
+            yield _frame(pdf)
 
     src = pts.repartition("url").sortWithinPartitions("url", "pid_raw")
     return src.mapInPandas(op, schema=url_typed(POINTS_SCHEMA, trajs))
@@ -274,15 +282,17 @@ def candidate_join(points: DataFrame, cell_index: DataFrame, edge_attrs: DataFra
                    net: Network | None = None,
                    padded_geoms=None, slim: bool = False,
                    salt_hot_cells: int = 0, hot_threshold: int = 1000,
-                   hot_sample_frac: float | None = None,
-                   url_local: bool = False) -> DataFrame:
+                   hot_sample_frac: float | None = None) -> DataFrame:
     """points(url,pid,x,y metric) x edges -> candidates with projection.
 
     Plan: each point probes its OWN cell (pure column math, no explode)
     against the radius-dilated cell->eid index (one broadcast equi-join,
     one row per candidate pair by construction), refine with the exact
-    linear-referencing kernel, filter by radius, cut top-k per point,
-    attach observ_prob normalized per trajectory.
+    linear-referencing kernel, filter by radius, shuffle once on url, cut
+    top-k per point. The full output then gets the edge attributes and
+    observ_prob normalized per trajectory; ``slim=True`` (the matcher's
+    input) stops after the top-k cut with (url, pid, x, y, eid, dist_p2c)
+    and leaves the rest to be re-derived from the broadcast network.
 
     ``cell_index`` must be the radius-dilated index (network_frames).
     The pre-dilation design exploded each point into its ~9 cover cells
@@ -396,29 +406,6 @@ def candidate_join(points: DataFrame, cell_index: DataFrame, edge_attrs: DataFra
                    REFINE_SCHEMA_SLIM if slim else REFINE_SCHEMA_CUTS, points))
                .filter(F.col("dist_p2c") <= r))
 
-    if slim and url_local:
-        if not broadcast_index:
-            raise ValueError(
-                "url_local requires broadcast_index=True: a shuffled cell "
-                "join repartitions candidates by cell, destroying the url "
-                "contiguity the skipped url shuffle/dedupe/top-k relies on "
-                "— downstream would decode per-partition url fragments as "
-                "whole trajectories")
-        # Caller guarantees url-locality: points came from a
-        # one-row-per-trajectory source (pages), so an url's points are
-        # emitted inside one extract task and the whole chain down to here
-        # is narrow — every url's candidates are already contiguous in
-        # exactly one partition. The url shuffle below is then
-        # structurally redundant, and it is the scaling bottleneck of the
-        # matcher (profile_leg: the only stages whose per-task CPU
-        # inflates ~3x with core count are the candidate shuffle
-        # write/read — memory-bandwidth-bound JVM serialization; the
-        # Python kernels scale at ~1.05x). The dilated-index join emits
-        # each (url, pid, eid) exactly once (guarded above), so the
-        # dedupe is a no-op, and fused_match(cut_topk=True) applies the
-        # identical (dist_p2c, eid) top-k cut in-kernel.
-        return refined
-
     # One deliberate shuffle on url: url-hash partitioning is a
     # subset of every downstream clustering key — the (url,pid) top-k
     # window, (url) emission window, the (url,pid_*) pair self-joins —
@@ -443,8 +430,7 @@ def candidate_join(points: DataFrame, cell_index: DataFrame, edge_attrs: DataFra
         return topk
 
     # attrs attach on the top-k SURVIVORS only (and prunable when unused);
-    # re-select into the historical REFINE_SCHEMA column order so the
-    # non-slim output contract is unchanged
+    # re-select into the non-slim output's fixed column order
     topk = (topk.join(F.broadcast(edge_attrs), "eid")
             .select("url", "pid", "x", "y", "eid", "src", "dst", "way_id",
                     "dir", "dist", "speed", "dist_p2c", "len0", "len1",

@@ -1,19 +1,30 @@
-"""The map-matching pipeline: transition pairs -> flags -> shortest-path
-attach -> scoring -> per-trajectory beam Viterbi.
+"""The map-matching pipeline: candidates -> transition pairs + flags ->
+shortest-path attach -> scoring -> per-trajectory beam Viterbi -> stitch.
 
-Stage map (Spark lifecycle of ST_Matching.matching, SURVEY.md §3.1):
+choose_plan picks one of two plans for match_pages (the third, the
+region-sharded plan, is match_pages_sharded in sharded.py):
+  onepass: the whole pipeline in numpy inside one narrow Arrow stage over
+           pages (match_pages_onepass -> _probe_match -> _match_frame)
+  staged : Spark stages (match_points): candidate_join, then either
+           fused_match (_match_frame over url batches, sp broadcast) or
+           the relational tail below
+
+Relational tail (Spark lifecycle of ST_Matching.matching, SURVEY.md §3.1):
   pairs  : layer self-join of the candidate table — pure DataFrame joins
            (candidatesGraph.py:117-166 at table granularity)
   flags  : F.when column arithmetic (candidatesGraph.py:58-114)
   sp     : broadcast-adjacency Dijkstra fan-out + equi-join back
   scores : one Arrow pass with the shared numpy kernel (dist/temporal/
-           dir/trans probs, spatialAnalysis.py:10-151); when
-           dir_trans=False the whole scoring stays JVM-side
-  viterbi: cogrouped applyInPandas keyed by url — the only genuinely
-           sequential state (viterbi.py:107-154)
+           dir/trans probs, spatialAnalysis.py:10-151)
+  viterbi: one url-sorted Arrow stage over candidates + scored pairs —
+           the only genuinely sequential state (viterbi.py:107-154)
+  epath  : equi-join of the winning steps with the sp table
 """
 
 from __future__ import annotations
+
+import logging
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -25,14 +36,19 @@ from ..config import MatchConfig
 from ..functions.geo_cols import bearing_col
 from ..graph.network import Network
 from ..kernels import hmm
-from .candidates import (attach_observ_prob, candidate_join, extract_simplify,
-                         extract_trajs, network_frames, rehydrate_cands,
-                         simplify_trajs, url_typed)
+from .candidates import (candidate_join, extract_arrays, extract_simplify,
+                         network_frames, rehydrate_cands, url_batches,
+                         url_typed)
 from .shortest_paths import shortest_path_table
+
+log = logging.getLogger(__name__)
 
 MATCHED_SCHEMA = ("url string, status int, epath array<long>, step_0 double, "
                   "step_n double, dist double, avg_speed double, prob double, "
                   "norm_prob double, dist_prob double, trans_prob double, dir_prob double")
+# the float columns of a matched row; all NaN/null when nothing matched
+METRIC_COLS = ("step_0", "step_n", "dist", "avg_speed", "prob", "norm_prob",
+               "dist_prob", "trans_prob", "dir_prob")
 
 # planet-scale variant: the cogroup emits the winning transition steps
 # instead of expanded paths; attach_epath_relational joins the sp table and
@@ -49,6 +65,14 @@ MATCHED_PRE_SCHEMA = (
 SCORED_COLS = ["url", "pid_0", "pid_1", "eid_0", "eid_1", "flag", "observ_prob",
                "trans_prob", "dist_prob", "dir_prob", "d_sht", "avg_speed",
                "o_node", "d_node"]
+
+
+def no_match_rows(urls) -> list[dict]:
+    """One status-3 row (MATCHED_SCHEMA) per url: no candidates, no path,
+    NaN metrics. The pandas matchers start every trajectory's row from it
+    and overwrite what the decode finds."""
+    return [{"url": u, "status": hmm.STATUS_NO_CANDIDATES, "epath": None,
+             **dict.fromkeys(METRIC_COLS, np.nan)} for u in urls]
 
 
 def build_pairs_df(cands: DataFrame, points: DataFrame, cfg: MatchConfig) -> DataFrame:
@@ -204,12 +228,14 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
     over whole Arrow batches. Sentinel zeros (never nulls) fill the
     other tag's columns so pandas dtypes survive the union intact.
 
-    ``sp_paths`` (optional) is a broadcast dict {(o_node, d_node): epath
-    list} — paths are then resolved in-UDF only for the <=L winning steps
-    per trajectory. With sp_paths=None (the planet-scale default) the
-    output is MATCHED_PRE_SCHEMA: winning steps only; feed it through
-    attach_epath_relational(sp) to finalize — nothing is ever collected
-    to the driver."""
+    The output is MATCHED_PRE_SCHEMA: the winning steps only, no paths;
+    feed it through attach_epath_relational(sp) to finalize — nothing is
+    ever collected to the driver. ``sp_paths`` must be None (the only
+    mode left; the keyword stays for existing callers)."""
+    if sp_paths is not None:
+        raise ValueError("viterbi_match only emits winning steps "
+                         "(MATCHED_PRE_SCHEMA): sp_paths must be None; "
+                         "attach paths with attach_epath_relational")
     # no observ_prob here: the kernel recomputes the emission per url group
     # (per-url max normalization) — carrying a column it overwrites invited
     # stale/placeholder reads (r5 judge, What's wrong #2). dir_prob is
@@ -223,7 +249,6 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
     cands_min = cands.select("url", *c_cols)
     dir_trans = cfg.dir_trans
     gps_sigma, gps_bias = cfg.gps_sigma, cfg.gps_bias
-    relational = sp_paths is None
 
     c_types = dict(cands_min.dtypes)
     s_types = dict(scored.dtypes)
@@ -347,28 +372,17 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
                                   hmm.ColFrame({"pid": lay[ridx],
                                                 "eid": reid}))
 
-        paths = None if relational else sp_paths.value
-        rows: list = []
-        for g in range(ngroups):
-            base = {"url": u[starts[g]], "status": hmm.STATUS_NO_CANDIDATES,
-                    "epath0" if relational else "epath": None,
-                    "step_0": np.nan, "step_n": np.nan, "dist": np.nan,
-                    "avg_speed": np.nan, "prob": np.nan,
-                    "norm_prob": np.nan, "dist_prob": np.nan,
-                    "trans_prob": np.nan, "dir_prob": np.nan}
-            if relational:
-                base.update(steps=None, last_eid=None)
+        rows = no_match_rows(u[starts])
+        for g, row in enumerate(rows):
+            row.update(steps=None, last_eid=None)
             cs, ce = int(c_off[g]), int(c_off[g + 1])
             if ce == cs:
-                rows.append(base)
                 continue
             if n_g[g] == 0:
                 # single matched layer -> nearest edge (matching.py:170-178)
                 k = int(np.lexsort((ceid[cs:ce], dp[cs:ce]))[0])
-                base.update(status=hmm.STATUS_ONE_POINT)
-                base["epath0" if relational else "epath"] = \
-                    [int(ceid[cs + k])]
-                rows.append(base)
+                row.update(status=hmm.STATUS_ONE_POINT,
+                           epath=[int(ceid[cs + k])])
                 continue
             gl, gh = int(g_lo[g]), int(g_hi[g])
             gt_g = hmm.ColFrame(
@@ -382,40 +396,15 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
                 end_prob, rlist = decoded[g]
             else:
                 end_prob, rlist = hmm.decode_sequence(cands_g, gt_g, cfg)
-            if relational:
-                res = hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
-                                      dir_trans, collect_steps=True)
-                if "epath" in res:
-                    res["epath0"] = res.pop("epath")
-            else:
-                res = hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
-                                      dir_trans,
-                                      epath_lookup=lambda o, d:
-                                      paths.get((o, d)))
-            base.update(res)
-            rows.append(base)
-        return pd.DataFrame(rows)
+            row.update(hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
+                                       dir_trans, collect_steps=True))
+        return pd.DataFrame(rows).rename(columns={"epath": "epath0"})
 
     def op(batches):
-        # url-boundary buffering identical to fused_match: the (possibly
-        # batch-spanning) last url of each Arrow batch carries over
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                buf = None
-                continue
-            u = pdf.url.to_numpy()
-            cut = int(np.searchsorted(u, u[-1], side="left"))
-            buf = pdf.iloc[cut:]
-            if cut:
-                yield _frame(pdf.iloc[:cut])
-        if buf is not None and len(buf):
-            yield _frame(buf)
+        for pdf in url_batches(batches):
+            yield _frame(pdf)
 
-    return src.mapInPandas(op, schema=url_typed(
-        MATCHED_PRE_SCHEMA if relational else MATCHED_SCHEMA, cands))
+    return src.mapInPandas(op, schema=url_typed(MATCHED_PRE_SCHEMA, cands))
 
 
 def attach_epath_relational(pre: DataFrame, sp: DataFrame, cfg: MatchConfig) -> DataFrame:
@@ -493,8 +482,8 @@ def attach_epath_relational(pre: DataFrame, sp: DataFrame, cfg: MatchConfig) -> 
 
 def layer_links(cands: DataFrame, points: DataFrame) -> DataFrame:
     """(url, pid_0, pid_1, d_euc, move_dir) between consecutive candidate
-    layers (candidatesGraph.py:137-160) — shared by the staged pair build
-    and the fused matcher."""
+    layers (candidatesGraph.py:137-160) for the relational pair build;
+    _match_frame derives the same values in numpy."""
     layer_pts = cands.select("url", "pid").distinct().join(points, ["url", "pid"])
     w = Window.partitionBy("url").orderBy("pid")
     dx = F.col("x1") - F.col("x")
@@ -567,6 +556,14 @@ class SpPayload:
                  "pw", "pn", "epaths", "has_path")
 
     def __init__(self, sp_pdf: pd.DataFrame):
+        order = self._index(sp_pdf)
+        self.epaths = eps = sp_pdf.epath.to_numpy()[order]
+        self.has_path = np.array([e is not None and len(e) > 0 for e in eps],
+                                 dtype=bool)
+
+    def _index(self, sp_pdf: pd.DataFrame) -> np.ndarray:
+        """Build the composite-key index and the numeric columns in key
+        order; returns that order for the subclass-specific columns."""
         o = sp_pdf.o_node.to_numpy(np.int64)
         d = sp_pdf.d_node.to_numpy(np.int64)
         self.o_u = np.unique(o)
@@ -578,10 +575,7 @@ class SpPayload:
         for c in ("cost", "path_speed", "pcx", "pcy", "pw"):
             setattr(self, c, sp_pdf[c].to_numpy(np.float64)[order])
         self.pn = sp_pdf.pn.to_numpy(np.int64)[order]
-        eps = sp_pdf.epath.to_numpy()[order]
-        self.epaths = eps
-        self.has_path = np.array([e is not None and len(e) > 0 for e in eps],
-                                 dtype=bool)
+        return order
 
     def locate(self, o_node: np.ndarray, d_node: np.ndarray):
         """(positions, hit_mask) for (o, d) query arrays — pure numpy."""
@@ -601,25 +595,24 @@ class SpPayload:
     def epath_of(self, o: int, d: int):
         pos, hit = self.locate(np.array([o], dtype=np.int64),
                                np.array([d], dtype=np.int64))
-        if not hit[0]:
-            return None
-        ep = self.epaths[pos[0]]
-        return None if ep is None else ep
+        return self.epaths[pos[0]] if hit[0] else None
 
 
-def _match_frame(pdf: pd.DataFrame, geom, stats, spd, cfg: MatchConfig,
-                 cut_topk: bool) -> pd.DataFrame:
+def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
+                 cfg: MatchConfig) -> pd.DataFrame:
     """Score EVERY trajectory of a sorted candidate frame in one set of
     numpy passes (projection, emission, layer params, pair cross-product,
     flags, sp gather, dist/dir probs), then run only the genuinely
     sequential decode + stitch per trajectory over zero-copy slices.
 
     ``pdf`` must be sorted (url, pid, dist_p2c, eid) with each url's rows
-    complete and contiguous. ``geom``/``stats`` are the broadcast network
-    tuples ((eids_sorted, mat, src, dst, dist, speed) / (dir_stats,
-    node_xy)); ``spd`` the SpPayload. Shared verbatim by the staged fused
-    matcher (fused_match) and the one-pass pages matcher
-    (match_pages_onepass) so the two paths cannot drift.
+    complete and contiguous; the top-k cut per (url, pid) is applied here
+    (a no-op on fused_match's input, which the JVM window already cut).
+    ``geom``/``stats`` are the broadcast network tuples ((eids_sorted,
+    mat, src, dst, dist, speed) / (dir_stats, node_xy)); ``spd`` the
+    SpPayload. Shared verbatim by the staged fused matcher (fused_match),
+    the one-pass pages matcher and the sharded matcher (both through
+    _probe_match) so the paths cannot drift.
 
     Historical note: ran per url originally; at ~50-point trajectories the
     fixed per-call numpy/pandas overhead was ~12 of ~18 core-ms per group
@@ -633,21 +626,18 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd, cfg: MatchConfig,
     dist_eps, ratio_eps = cfg.flag_dist_eps, cfg.flag_ratio_eps
     gps_sigma, gps_bias = cfg.gps_sigma, cfg.gps_bias
 
-    if cut_topk:
-        # url-local path (candidate_join url_local=True skipped the
-        # shuffle + row_number window): apply the identical top-k cut
-        # here. Rows arrive sorted (url, pid, dist_p2c, eid), so
-        # row_number() <= k is exactly rank-within-layer < k.
-        u0 = pdf.url.to_numpy()
-        pp = pdf.pid.to_numpy()
-        head = np.concatenate(
-            [[True], (pp[1:] != pp[:-1]) | (u0[1:] != u0[:-1])])
-        starts = np.flatnonzero(head)
-        lens = np.diff(np.concatenate([starts, [len(pp)]]))
-        rank = np.arange(len(pp)) - np.repeat(starts, lens)
-        keep = rank < cfg.top_k
-        if not keep.all():
-            pdf = pdf.iloc[np.flatnonzero(keep)]
+    # top-k per (url, pid): rows arrive sorted (url, pid, dist_p2c, eid),
+    # so candidate_join's row_number() <= k is rank-within-layer < k
+    u0 = pdf.url.to_numpy()
+    pp = pdf.pid.to_numpy()
+    head = np.concatenate(
+        [[True], (pp[1:] != pp[:-1]) | (u0[1:] != u0[:-1])])
+    starts = np.flatnonzero(head)
+    lens = np.diff(np.concatenate([starts, [len(pp)]]))
+    rank = np.arange(len(pp)) - np.repeat(starts, lens)
+    keep = rank < cfg.top_k
+    if not keep.all():
+        pdf = pdf.iloc[np.flatnonzero(keep)]
 
     u = pdf.url.to_numpy()
     n = len(pdf)
@@ -797,19 +787,13 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd, cfg: MatchConfig,
                           hmm.ColFrame({"pid": pids, "eid": reid}))
 
     # ---- per-trajectory decode (classic) / stitch over slices ----
-    rows = []
-    for g in range(ngroups):
+    rows = no_match_rows(u[g_start])
+    for g, row in enumerate(rows):
         s, e = int(g_start[g]), int(g_end[g])
-        base = {"url": u[s], "status": hmm.STATUS_NO_CANDIDATES,
-                "epath": None, "step_0": np.nan, "step_n": np.nan,
-                "dist": np.nan, "avg_speed": np.nan, "prob": np.nan,
-                "norm_prob": np.nan, "dist_prob": np.nan,
-                "trans_prob": np.nan, "dir_prob": np.nan}
         if g not in pair_span:
             # single candidate layer -> nearest edge (rows are sorted
             # (dist_p2c, eid) within the layer)
-            base.update(status=hmm.STATUS_ONE_POINT, epath=[int(eid[s])])
-            rows.append(base)
+            row.update(status=hmm.STATUS_ONE_POINT, epath=[int(eid[s])])
             continue
         ps, pe = pair_span[g]
         cands_g = hmm.ColFrame({k: v[s:e] for k, v in cand_cols.items()})
@@ -818,10 +802,8 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd, cfg: MatchConfig,
             end_prob, rlist = decoded[g]
         else:
             end_prob, rlist = hmm.decode_sequence(cands_g, gt_g, cfg)
-        res = hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
-                              dir_trans, epath_lookup=spd.epath_of)
-        base.update(res)
-        rows.append(base)
+        row.update(hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
+                                   dir_trans, epath_lookup=spd.epath_of))
     return pd.DataFrame(rows)
 
 
@@ -848,16 +830,79 @@ def _sp_payload_for(spark: SparkSession, net: Network,
     return payload
 
 
+# Rows of candidates one _match_frame call scores: its pair-table
+# temporaries (score + dir-prob passes) must stay cache-resident — one
+# giant call measured 3-4x the per-url cost of ~1e5-row chunks
+# (superlinear in working set, not in work)
+CHUNK_ROWS = 100_000
+
+
+def _probe_match(u, pid, x, y, cells, geom, stats, spd,
+                 cfg: MatchConfig) -> tuple[list[pd.DataFrame], set]:
+    """Candidates + match for url-major points (extract_arrays' output or
+    a slice of it), all in numpy: cell probe of the radius-dilated index
+    (searchsorted twin of candidate_join's broadcast equi-join) -> exact
+    linear-referencing refine + radius filter -> (dist_p2c, eid) sort ->
+    _match_frame in url-aligned chunks of ~CHUNK_ROWS candidate rows.
+    ``cells`` is the (cell, eid)-sorted index as two arrays; ``geom``,
+    ``stats`` and ``spd`` are _match_frame's. Shared by the one-pass and
+    the sharded matcher.
+
+    Returns the matched frames and the set of urls that had at least one
+    in-radius candidate; the caller emits status-3 rows for the rest."""
+    from ..kernels.cells import xy_to_cell
+    from ..kernels.linear_ref import project_core
+    cells_s, cell_eids = cells
+    eids_sorted, mat = geom[0], geom[1]
+    # url strings never enter the kernel: points carry a local integer
+    # gid (the in-kernel twin of the staged path's url dictionary-
+    # encoding), mapped back to the url once per output chunk
+    new_url = np.concatenate([[True], u[1:] != u[:-1]])
+    urls_by_gid = u[new_url]
+    pgid = np.cumsum(new_url) - 1
+    ck = xy_to_cell(x, y, cfg.cell_size)
+    lo = np.searchsorted(cells_s, ck, side="left")
+    cnt = np.searchsorted(cells_s, ck, side="right") - lo
+    # expand each point over its cell's eid run
+    P = np.repeat(np.arange(len(u)), cnt)
+    E = cell_eids[np.arange(int(cnt.sum())) -
+                  np.repeat(np.cumsum(cnt) - cnt, cnt) + np.repeat(lo, cnt)]
+    pr = project_core(np.stack([x[P], y[P]], axis=1),
+                      mat[np.searchsorted(eids_sorted, E)])
+    keep = pr["dist"] <= cfg.radius
+    P, E, dp = P[keep], E[keep], pr["dist"][keep]
+    if not len(P):
+        return [], set()
+    # (url, pid) grouping == point ordinal P; within a layer the
+    # (dist_p2c, eid) order the decode requires
+    o = np.lexsort((E, dp, P))
+    P, E, dp = P[o], E[o], dp[o]
+    gid = pgid[P]
+    cands = pd.DataFrame({"url": gid, "pid": pid[P], "x": x[P], "y": y[P],
+                          "eid": E, "dist_p2c": dp})
+    gheads = np.flatnonzero(np.concatenate([[True], gid[1:] != gid[:-1]]))
+    cut_pos = np.concatenate([gheads, [len(gid)]])
+    frames, c0 = [], 0
+    while c0 < len(gheads):
+        c1 = max(int(np.searchsorted(cut_pos, cut_pos[c0] + CHUNK_ROWS,
+                                     side="left")), c0 + 1)
+        out = _match_frame(
+            cands.iloc[cut_pos[c0]:cut_pos[min(c1, len(gheads))]],
+            geom, stats, spd, cfg)
+        out["url"] = urls_by_gid[out.url.to_numpy()]
+        frames.append(out)
+        c0 = c1
+    return frames, set(urls_by_gid[gid[gheads]])
+
+
 def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
                         cfg: MatchConfig) -> DataFrame:
     """The whole matcher as ONE narrow Arrow stage with a SINGLE
     JVM<->Python crossing: pages go in, one matched row per page comes
     out. Per batch, in numpy: GEO-line extraction + projection +
-    Douglas-Peucker (extract_arrays) -> cell probe of the broadcast
-    radius-dilated index (searchsorted twin of candidate_join's broadcast
-    equi-join) -> exact linear-referencing refine + radius filter ->
-    (dist_p2c, eid) sort + top-k -> scoring + Viterbi + stitch
-    (_match_frame, the exact frame the staged path runs).
+    Douglas-Peucker (extract_arrays) -> cell probe, refine, top-k,
+    scoring, Viterbi and stitch (_probe_match, running the exact frame
+    kernel the staged path runs).
 
     Why: the staged pages path crosses the Arrow boundary three times
     (extract out, refine in/out, match in), with the WIDE candidate table
@@ -873,12 +918,11 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
     At 1000 executors this is the ideal plan: a single embarrassingly
     parallel map over pages with all network state broadcast once.
     Requires the memoized-sp small-network regime and a broadcastable
-    index; match_pages falls back to the staged path otherwise.
+    index (choose_plan's "onepass").
 
     The index is built radius-dilated in-function (pad >= cfg.radius by
     construction — the staged path's in-band pad guard is satisfied
     structurally)."""
-    from ..kernels.cells import xy_to_cell
     stats_bc = net.broadcast(spark, "stats",
                              lambda: (net.dir_stats(), net.node_xy_arrays()))
     geom_bc = net.broadcast(spark, "geom",
@@ -889,86 +933,19 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
     idx_bc = net.broadcast(spark, f"cellidx:{_pad}", lambda: (
         lambda ci: (ci.cell.to_numpy(), ci.eid.to_numpy()))(
         net.cell_index(pad=_pad).sort_values(["cell", "eid"], kind="stable")))
-    cell_size, radius = cfg.cell_size, cfg.radius
     lon0, lat0, tol, do_simpl = cfg.lon0, cfg.lat0, cfg.tolerance, cfg.simplify
 
     def op(batches):
-        from ..kernels.linear_ref import project_core
-        from .candidates import extract_arrays
-        cells_s, cell_eids = idx_bc.value
-        geom = geom_bc.value
-        eids_sorted, mat = geom[0], geom[1]
+        cells, geom = idx_bc.value, geom_bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            page_urls = pdf.url.to_numpy()
-            frames = []
             ex = extract_arrays(pdf, lon0, lat0, tol, do_simpl)
-            have = set()
-            if ex is not None:
-                u, pid, x, y = ex
-                # url strings never enter the kernel: points carry a
-                # batch-local integer gid (the in-kernel twin of the
-                # staged path's url dictionary-encoding) and the output
-                # maps gid -> url once per batch
-                uheads = np.flatnonzero(
-                    np.concatenate([[True], u[1:] != u[:-1]]))
-                urls_by_gid = u[uheads]
-                pgid = np.cumsum(np.concatenate(
-                    [[0], (u[1:] != u[:-1]).astype(np.int64)]))
-                ck = xy_to_cell(x, y, cell_size)
-                lo = np.searchsorted(cells_s, ck, side="left")
-                cnt = np.searchsorted(cells_s, ck, side="right") - lo
-                # expand each point over its cell's eid run
-                P = np.repeat(np.arange(len(u)), cnt)
-                E = cell_eids[np.arange(int(cnt.sum())) -
-                              np.repeat(np.cumsum(cnt) - cnt, cnt) +
-                              np.repeat(lo, cnt)]
-                pr = project_core(np.stack([x[P], y[P]], axis=1),
-                                  mat[np.searchsorted(eids_sorted, E)])
-                keep = pr["dist"] <= radius
-                P, E, dp = P[keep], E[keep], pr["dist"][keep]
-                if len(P):
-                    # (url, pid) grouping == point ordinal P; within a
-                    # layer the (dist_p2c, eid) order the decode requires
-                    o = np.lexsort((E, dp, P))
-                    P, E, dp = P[o], E[o], dp[o]
-                    gid = pgid[P]
-                    pdf2 = pd.DataFrame({
-                        "url": gid, "pid": pid[P], "x": x[P], "y": y[P],
-                        "eid": E, "dist_p2c": dp})
-                    # score/decode in url-aligned chunks of bounded
-                    # candidate rows: the frame kernel's pair-table
-                    # temporaries (score + dir-prob passes) must stay
-                    # cache-resident — one giant call measured 3-4x the
-                    # per-url cost of ~1e5-row chunks (superlinear in
-                    # working-set, not in work)
-                    gheads = np.flatnonzero(
-                        np.concatenate([[True], gid[1:] != gid[:-1]]))
-                    have = set(urls_by_gid[gid[gheads]])
-                    budget = 100_000
-                    cut_pos = np.concatenate([gheads, [len(gid)]])
-                    c0 = 0
-                    while c0 < len(gheads):
-                        c1 = int(np.searchsorted(
-                            cut_pos, cut_pos[c0] + budget, side="left"))
-                        c1 = max(c1, c0 + 1)
-                        sl = pdf2.iloc[cut_pos[c0]:cut_pos[min(c1, len(gheads))]]
-                        out = _match_frame(
-                            sl, geom, stats_bc.value, sp_bc.value, cfg,
-                            cut_topk=True)
-                        out["url"] = urls_by_gid[out.url.to_numpy()]
-                        frames.append(out)
-                        c0 = c1
-            miss = [pu for pu in page_urls if pu not in have]
-            if len(miss):
-                frames.append(pd.DataFrame([
-                    {"url": mu, "status": hmm.STATUS_NO_CANDIDATES,
-                     "epath": None, "step_0": np.nan, "step_n": np.nan,
-                     "dist": np.nan, "avg_speed": np.nan, "prob": np.nan,
-                     "norm_prob": np.nan, "dist_prob": np.nan,
-                     "trans_prob": np.nan, "dir_prob": np.nan}
-                    for mu in miss]))
+            frames, have = ([], set()) if ex is None else _probe_match(
+                *ex, cells, geom, stats_bc.value, sp_bc.value, cfg)
+            miss = [pu for pu in pdf.url.to_numpy() if pu not in have]
+            if miss:
+                frames.append(pd.DataFrame(no_match_rows(miss)))
             yield pd.concat(frames, ignore_index=True) if len(frames) > 1 \
                 else frames[0]
 
@@ -976,8 +953,7 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
 
 
 def fused_match(spark: SparkSession, cands: DataFrame,
-                sp: DataFrame, net: Network, cfg: MatchConfig,
-                cut_topk: bool = False) -> DataFrame:
+                sp: DataFrame, net: Network, cfg: MatchConfig) -> DataFrame:
     """Per-trajectory pair build + flags + scoring + Viterbi + stitch in ONE
     shuffle-free Arrow stage over the url-partitioned candidate table.
 
@@ -986,15 +962,17 @@ def fused_match(spark: SparkSession, cands: DataFrame,
     inside the per-url group, with the sp table + direction stats
     broadcast. Unlike a cogrouped applyInPandas (one Python call and two
     pandas constructions per trajectory), this streams whole Arrow batches
-    of MANY trajectories through one mapInPandas and slices groups in
-    numpy. Numeric semantics are identical: the same score_base_np /
-    engine_dir_probs / viterbi_beam / stitch_path kernels run either way
-    (the parity suite pins this against the oracle).
+    of MANY trajectories through one mapInPandas (cut at url boundaries
+    by url_batches) and slices groups in numpy. Numeric semantics are
+    identical: the same score_base_np / engine_dir_probs / viterbi_beam /
+    stitch_path kernels run either way (the parity suite pins this
+    against the oracle).
 
+    ``sp`` is the memoized SpPayload or a sp DataFrame, collected here.
     Urls with no candidates never enter this stage — the caller re-attaches
     their status-3 rows (_with_no_cand_rows). The caller also guards sp's
-    size: above cfg.sp_broadcast_max_rows it routes to the relational path
-    instead of this broadcast."""
+    size (choose_plan, and the row count against
+    cfg.sp_broadcast_max_rows)."""
     stats_bc = net.broadcast(spark, "stats",
                              lambda: (net.dir_stats(), net.node_xy_arrays()))
     geom_bc = net.broadcast(spark, "geom",
@@ -1002,30 +980,10 @@ def fused_match(spark: SparkSession, cands: DataFrame,
     sp_bc = spark.sparkContext.broadcast(
         sp if isinstance(sp, SpPayload) else SpPayload(sp.toPandas()))
 
-    def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _match_frame(pdf, geom_bc.value, stats_bc.value,
-                            sp_bc.value, cfg, cut_topk)
-
     def op(batches):
-        """Streamed group-by within the url-hash partition: batches are
-        cut at url boundaries, with the (possibly batch-spanning) last url
-        carried over. Many trajectories per Arrow batch — the cogroup
-        machinery this replaces cost ~15 core-ms per group, ~3x the
-        matching kernels themselves (measured round 2)."""
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                buf = None
-                continue
-            u = pdf.url.to_numpy()
-            cut = int(np.searchsorted(u, u[-1], side="left"))
-            buf = pdf.iloc[cut:]
-            if cut:
-                yield _frame(pdf.iloc[:cut])
-        if buf is not None and len(buf):
-            yield _frame(buf)
+        for pdf in url_batches(batches):
+            yield _match_frame(pdf, geom_bc.value, stats_bc.value,
+                               sp_bc.value, cfg)
 
     # local sort only — cands is already url-hash partitioned, so every
     # url's rows are contiguous in exactly one partition after this
@@ -1033,75 +991,103 @@ def fused_match(spark: SparkSession, cands: DataFrame,
     return src.mapInPandas(op, schema=url_typed(MATCHED_SCHEMA, cands))
 
 
+class Plan(NamedTuple):
+    """choose_plan's answer: the plan, where the staged plan's shortest
+    paths come from, and why."""
+    name: str    # "onepass" | "staged"
+    sp: str      # "memo" | "count" | "relational"
+    reason: str
+
+
+def choose_plan(net: Network, cfg: MatchConfig,
+                broadcast_index: bool) -> Plan:
+    """The one place the matcher's plan is chosen; logged at INFO.
+
+    The gate is the memoized all-pairs sp payload (_sp_payload_for): it
+    holds n^2 rows for an n-node network, so it is taken only while
+    n^2 <= min(4,000,000, cfg.sp_broadcast_max_rows). Then:
+
+    * ``onepass`` — the gate holds and the cell index is broadcast: the
+      whole matcher is one narrow Arrow stage (match_pages_onepass).
+    * ``staged``/``memo`` — the gate holds but broadcast_index=False:
+      the staged plan (match_points) on the memoized payload.
+    * ``staged``/``relational`` — cfg.sp_broadcast_max_rows <= 0 pins the
+      relational tail: sp equi-join + attach_epath_relational, nothing
+      collected to the driver.
+    * ``staged``/``count`` — otherwise the demand-driven sp table is
+      built; it is collected for fused_match when its row count is
+      <= cfg.sp_broadcast_max_rows, and takes the relational tail when not.
+
+    match_points has no one-pass form: it runs the staged plan with the
+    sp source chosen here. The region-sharded plan is called explicitly
+    (match_pages_sharded); its guard fallback comes back through
+    match_pages."""
+    n2 = len(net.node_xy_arrays()[0]) ** 2
+    cap = min(4_000_000, cfg.sp_broadcast_max_rows)
+    if n2 <= cap:
+        gate = f"memoized sp fits (n^2 = {n2:,} <= {cap:,})"
+        plan = (Plan("onepass", "memo", f"{gate}, cell index broadcast")
+                if broadcast_index else
+                Plan("staged", "memo", f"{gate}, cell index shuffled"))
+    elif cfg.sp_broadcast_max_rows <= 0:
+        plan = Plan("staged", "relational",
+                    "sp_broadcast_max_rows <= 0 pins the relational sp join")
+    else:
+        plan = Plan("staged", "count",
+                    f"n^2 = {n2:,} > {cap:,}: demand sp table, collected if "
+                    f"<= {cfg.sp_broadcast_max_rows:,} rows")
+    log.info("matcher plan %s (sp %s): %s", plan.name, plan.sp, plan.reason)
+    return plan
+
+
 def match_pages(spark: SparkSession, pages: DataFrame, net: Network,
-                cfg: MatchConfig = MatchConfig(), broadcast_index: bool = True,
-                fused: bool = True) -> DataFrame:
-    """pages -> matched, one row per url (SURVEY.md §1.2 result schema).
+                cfg: MatchConfig = MatchConfig(),
+                broadcast_index: bool = True) -> DataFrame:
+    """pages -> matched, one row per url (SURVEY.md §1.2 result schema),
+    on the plan choose_plan picks: match_pages_onepass, or extraction
+    (extract_simplify) followed by match_points' staged plan.
 
-    fused=True (default) runs pair-build/scoring/Viterbi in one cogrouped
-    stage (the transition-pair table never shuffles) with the sp table
-    broadcast; fused=False keeps every stage a separate relational
-    operator — same kernels, same numbers.
-
-    Scale guard: whichever mode is requested, the sp table is only taken
-    driver-side when its measured row count is <= cfg.sp_broadcast_max_rows.
-    Above that the pipeline runs fully relationally: sp equi-join on
-    (o_node, d_node) in scoring (score_pairs_df broadcast_sp=False) and a
-    post-Viterbi epath attach (attach_epath_relational) — no collect, no
-    broadcast of unbounded state.
-
-    Urls whose trajectories produce no candidates anywhere (including
-    out-of-bbox, status 3) are re-attached via a left-anti join — the
-    engine's non-throwing version of the reference's bbox assert
-    (matching.py:155-168)."""
-    if fused and broadcast_index:
-        nids, _ = net.node_xy_arrays()
-        if len(nids) ** 2 <= min(4_000_000, cfg.sp_broadcast_max_rows):
-            # memoized-sp regime: the whole matcher is one narrow Arrow
-            # stage over pages — single JVM<->Python crossing, no shuffle,
-            # no persist (see match_pages_onepass). The result is lazily
-            # persisted: every caller runs >= 1 action on it and several
-            # derive follow-up frames (path geometry, metrics).
-            return match_pages_onepass(spark, pages, net, cfg).persist()
-    points = extract_simplify(pages, cfg)
-    # staged fallback (big networks / relational paths): pages are one row
-    # per url, so extraction leaves every url's points inside one
-    # partition — the matcher may drop its url shuffle — and the pages
-    # url column IS the url universe (Catalyst prunes the render/text
-    # columns out of this scan), so the matcher can also skip its points
-    # persist + distinct. Consequence (both paths): a page whose text
-    # yields ZERO extractable points still gets a status-3 output row —
-    # every input page produces exactly one output row.
-    return match_points(spark, points, net, cfg, broadcast_index, fused,
-                        url_local=True, urls=pages.select("url"))
+    Every input page yields exactly one output row: a page whose text
+    yields no points, or whose points find no candidates (including
+    out-of-bbox), gets status 3 — the engine's non-throwing version of
+    the reference's bbox assert (matching.py:155-168). The result is
+    persisted (lazily on the one-pass plan): every caller runs >= 1
+    action on it and several derive follow-up frames (path geometry,
+    metrics)."""
+    plan = choose_plan(net, cfg, broadcast_index)
+    if plan.name == "onepass":
+        return match_pages_onepass(spark, pages, net, cfg).persist()
+    # pages are one row per url, so the pages url column IS the url
+    # universe (Catalyst prunes the text column out of this scan): the
+    # staged plan skips its points distinct, and a page whose text yields
+    # ZERO extractable points still gets its status-3 row
+    return _match_staged(spark, extract_simplify(pages, cfg), net, cfg,
+                         broadcast_index, plan.sp, urls=pages.select("url"))
 
 
 def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
                  cfg: MatchConfig = MatchConfig(), broadcast_index: bool = True,
-                 fused: bool = True, url_local: bool = False,
                  urls: DataFrame | None = None) -> DataFrame:
     """Match pre-extracted metric points (url, pid, x, y) — the pipeline
     below the text extractor; used by match_pages and by operators that
     synthesize point tables directly (e.g. the topology repair loop's
-    reversed re-match).
+    reversed re-match). Runs the staged plan with the sp source
+    choose_plan picks (points have no one-pass form):
 
-    url_local=True asserts every url's points sit in one partition already
-    (true when they were exploded from a one-row-per-url pages table, as
-    match_pages does) — the candidate url shuffle, global dedupe, and
-    top-k window are then skipped and, on the memoized-sp (small network)
-    fused path, the whole matcher runs as ONE shuffle-free narrow stage:
-    cache-read -> cell join (broadcast) -> refine -> in-kernel top-k ->
-    score -> Viterbi, with no intermediate candidate materialization.
-    That stage is embarrassingly parallel — the plan that scales at
-    1000 executors — and measured per-task CPU stays flat with core count
-    where the shuffle's serialization inflated ~3x (profile_leg).
+    candidate_join (slim, one url shuffle, top-k window) -> shortest
+    paths -> fused_match on a driver-side SpPayload (memoized, or the
+    collected demand table), or, when the sp table is too big for a
+    driver copy, the relational tail: rehydrate_cands -> build_pairs_df ->
+    score_pairs_df (sp equi-join) -> viterbi_match ->
+    attach_epath_relational. Urls without candidates get status-3 rows
+    (_with_no_cand_rows). The result is persisted and materialized; the
+    intermediates are released before returning.
 
     urls: optional one-row-per-url frame (column ``url``, string domain,
     caller-guaranteed distinct — e.g. ``pages.select("url")``, one row
     per url by construction of the render groupBy). Supplies the
     status-3 anti-join universe and the url-restore dim without scanning
-    the points table; with url_local it also removes the points persist
-    (single consumer). A url present here but absent from points_in
+    the points table. A url present here but absent from points_in
     yields a status-3 row.
 
     url dictionary-encoding (cfg.url_id_encode): the url string would
@@ -1113,48 +1099,29 @@ def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
     result. Collision odds are n^2/2^65 (~5e-10 at 1e5 trajectories);
     for >1e8-trajectory corpora set url_id_encode=False or pre-assign
     numeric ids upstream."""
-    import os as _os
-    _dbg_timer = _os.environ.get("SPARK_GRAFT_MATCH_DEBUG")
+    plan = choose_plan(net, cfg, broadcast_index)
+    return _match_staged(spark, points_in, net, cfg, broadcast_index,
+                         plan.sp, urls)
+
+
+def _match_staged(spark: SparkSession, points_in: DataFrame, net: Network,
+                  cfg: MatchConfig, broadcast_index: bool, sp_from: str,
+                  urls: DataFrame | None) -> DataFrame:
+    """match_points' body; ``sp_from`` is choose_plan's Plan.sp."""
     cell_index, edge_attrs = network_frames(spark, net, cfg)
-    nids, _ = net.node_xy_arrays()
-    small_net = fused and len(nids) ** 2 <= min(4_000_000,
-                                                cfg.sp_broadcast_max_rows)
-    # streaming path: no cands persist — the candidate chain has exactly
-    # one consumer (fused_match); the no-cand anti-join reads the small
-    # matched output instead
-    # url-locality is only preserved when the cell join is a broadcast:
-    # with broadcast_index=False the cell equi-join shuffles candidates by
-    # cell, scattering each url across partitions, and the skipped url
-    # repartition/dedupe/top-k would then decode per-partition fragments
-    # as whole trajectories (wrong statuses/epaths). Fail back to the
-    # staged path instead of silently producing fragment matches.
-    local_fast = url_local and small_net and broadcast_index
-    # with a caller-provided url universe the points table TOO has exactly
-    # one consumer (the candidate chain): extraction streams straight into
-    # the fused kernel with no cache materialization, and the url-restore
-    # dim + no-cand universe derive from the slim urls frame instead of a
-    # full points-cache scan + distinct exchange each (profile_leg: those
-    # two scans were ~20% of task-CPU and inflate 1.8x with core count)
-    stream_pts = local_fast and urls is not None
     encode = cfg.url_id_encode and dict(points_in.dtypes).get("url") == "string"
-    both = None
     if encode:
-        src = points_in.withColumn("_uid", F.xxhash64("url"))
-        if not stream_pts:
-            # persist carries BOTH forms; the pipeline reads the long, the
-            # restore dim reads both — all from the same cached table
-            src = src.persist()
-            both = src
-        points = src.select(F.col("_uid").alias("url"),
-                            *[c for c in points_in.columns if c != "url"])
+        # persist carries BOTH forms; the pipeline reads the long, the
+        # restore dim reads both — all from the same cached table
+        both = points_in.withColumn("_uid", F.xxhash64("url")).persist()
+        points = both.select(F.col("_uid").alias("url"),
+                             *[c for c in points_in.columns if c != "url"])
         if urls is not None:
             url_dim = urls.select(F.xxhash64("url").alias("url"),
                                   F.col("url").alias("_url_str"))
         else:
-            url_dim = src.select(F.col("_uid").alias("url"),
-                                 F.col("url").alias("_url_str")).distinct()
-    elif stream_pts:
-        points = points_in
+            url_dim = both.select(F.col("_uid").alias("url"),
+                                  F.col("url").alias("_url_str")).distinct()
     else:
         both = points = points_in.persist()
     # the one-row-per-url universe for the status-3 anti-join, in the
@@ -1165,96 +1132,46 @@ def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
     else:
         url_universe = points.select("url").distinct()
     cands = candidate_join(points, cell_index, edge_attrs, cfg, broadcast_index,
-                           net=net, slim=fused, url_local=local_fast)
-    if not local_fast:
-        cands = cands.persist()
-    pairs = full = sp = matched_p = pre = None
+                           net=net, slim=True).persist()
+    full = sp = pre = None
 
-    if fused:
-        if small_net:
-            # the n^2 bound makes the broadcast-size count job redundant;
-            # the payload is memoized on the network (_sp_payload_for)
-            payload = _sp_payload_for(spark, net, cfg)
-            matched = fused_match(spark, cands, payload, net, cfg,
-                                  cut_topk=local_fast)
-            if local_fast:
-                # matched feeds both the output union and the no-cand
-                # anti-join (its url set == cands' url set: every url
-                # group yields exactly one row); persisting it — one slim
-                # row per url — is what lets cands stay unpersisted
-                matched = matched_p = matched.persist()
-                out = _with_no_cand_rows(matched, url_universe, matched)
-            else:
-                out = _with_no_cand_rows(matched, url_universe, cands)
-        else:
-            sp = shortest_path_table(
-                spark, sp_demands(cands, edge_attrs, n_nodes=len(nids)),
-                net, cfg).persist()
-            # sp_broadcast_max_rows <= 0 pins the relational tail, so the
-            # row-count probe would be a pure extra blocking action (it
-            # forced candidates + the whole sp pipeline to materialize
-            # serially before the tail was even planned); skip it and let
-            # the single output action pipeline everything. An empty sp
-            # table behaves identically on both paths (every lookup
-            # misses -> cost=inf), so the branch flip at count()==0 is
-            # semantics-free.
-            if cfg.sp_broadcast_max_rows > 0 and \
-                    sp.count() <= cfg.sp_broadcast_max_rows:
-                matched = fused_match(spark, cands, sp, net, cfg)
-                out = _with_no_cand_rows(matched, url_universe, cands)
-            else:
-                # sp too large for a driver copy: rehydrate the slim
-                # candidates (one shuffle-free Arrow pass) and run the
-                # relational tail; persisted because the pair self-join
-                # scans it twice and the Viterbi cogroup a third time.
-                # NO observ_prob attach: the Viterbi kernel recomputes
-                # the per-url-max emission in-numpy, and the upstream
-                # attach cost a url exchange + window over the candidate
-                # table that nothing on this path read (r7).
-                full = rehydrate_cands(cands, net).persist()
-                # pairs has exactly ONE consumer (score) — persisting it
-                # only added a cache write/read of the widest table (r7)
-                pairs = build_pairs_df(full, points, cfg)
-                scored = score_pairs_df(spark, pairs, sp, net, cfg,
-                                        broadcast_sp=False)
-                # PERSIST pre: attach_epath_relational references it three
-                # times (steps explode, the agg join-back, the dedup branch)
-                # and Spark does not dedupe common subplans — unpersisted,
-                # the ENTIRE score+viterbi subtree re-executed per reference
-                # (measured 8x wall on the forced-relational bignet leg)
-                pre = viterbi_match(full, scored, cfg, sp_paths=None).persist()
-                pairs = None
-                if _dbg_timer:
-                    import time as _t
-                    for _lbl, _df in (("full", full),
-                                      ("pre(score+viterbi)", pre)):
-                        _x = _t.perf_counter()
-                        _df.count()
-                        print(f"[match] {_lbl}: {_t.perf_counter() - _x:.2f}s",
-                              flush=True)
-                matched = attach_epath_relational(pre, sp, cfg)
-                out = _with_no_cand_rows(matched, url_universe, cands)
+    if sp_from == "memo":
+        # the payload is memoized on the network (_sp_payload_for)
+        matched = fused_match(spark, cands, _sp_payload_for(spark, net, cfg),
+                              net, cfg)
     else:
-        pairs = build_pairs_df(cands, points, cfg).persist()
-        demands = pairs.select("o_node", "d_node")
-        sp = shortest_path_table(spark, demands, net, cfg).persist()
-        if sp.count() <= cfg.sp_broadcast_max_rows:
-            scored = score_pairs_df(spark, pairs, sp, net, cfg, broadcast_sp=True)
-            # demand-bounded path map for stitch, fetched columnar
-            # (one Arrow toPandas), not row-by-row
-            spp = (sp.select("o_node", "d_node", "epath")
-                   .filter(F.col("epath").isNotNull()).toPandas())
-            sp_paths = spark.sparkContext.broadcast(
-                {(int(o), int(d)): [int(e) for e in ep]
-                 for o, d, ep in zip(spp.o_node, spp.d_node, spp.epath)})
-            matched = viterbi_match(cands, scored, cfg, sp_paths)
+        nids, _ = net.node_xy_arrays()
+        sp = shortest_path_table(
+            spark, sp_demands(cands, edge_attrs, n_nodes=len(nids)),
+            net, cfg).persist()
+        # "relational" (sp_broadcast_max_rows <= 0) skips the row-count
+        # probe: it would be a pure extra blocking action (it forced
+        # candidates + the whole sp pipeline to materialize serially
+        # before the tail was even planned). An empty sp table behaves
+        # identically on both tails (every lookup misses -> cost=inf).
+        if sp_from == "count" and sp.count() <= cfg.sp_broadcast_max_rows:
+            matched = fused_match(spark, cands, sp, net, cfg)
         else:
-            scored = score_pairs_df(spark, pairs, sp, net, cfg, broadcast_sp=False)
-            # persisted: attach_epath_relational references pre 3x (see
-            # the fused branch note)
-            pre = viterbi_match(cands, scored, cfg, sp_paths=None).persist()
+            # sp too large for a driver copy: rehydrate the slim
+            # candidates (one shuffle-free Arrow pass) and run the
+            # relational tail; persisted because the pair self-join
+            # scans it twice and the Viterbi union a third time.
+            # NO observ_prob attach: the Viterbi kernel recomputes
+            # the per-url-max emission in-numpy (r7).
+            full = rehydrate_cands(cands, net).persist()
+            # pairs has exactly ONE consumer (score) — persisting it
+            # only added a cache write/read of the widest table (r7)
+            pairs = build_pairs_df(full, points, cfg)
+            scored = score_pairs_df(spark, pairs, sp, net, cfg,
+                                    broadcast_sp=False)
+            # PERSIST pre: attach_epath_relational references it three
+            # times (steps explode, the agg join-back, the dedup branch)
+            # and Spark does not dedupe common subplans — unpersisted,
+            # the ENTIRE score+viterbi subtree re-executed per reference
+            # (measured 8x wall on the forced-relational bignet leg)
+            pre = viterbi_match(full, scored, cfg).persist()
             matched = attach_epath_relational(pre, sp, cfg)
-        out = _with_no_cand_rows(matched, url_universe, cands)
+    out = _with_no_cand_rows(matched, url_universe, cands)
 
     if encode:
         # restore the url string: one slim equi-join on the final
@@ -1263,15 +1180,9 @@ def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
                .select(F.col("_url_str").alias("url"),
                        *[c for c in out.columns if c not in ("url", "_url_str")]))
     out = out.persist()
-    if _dbg_timer:
-        import time as _t
-        _x = _t.perf_counter()
-        out.count()
-        print(f"[match] attach+finalize: {_t.perf_counter() - _x:.2f}s",
-              flush=True)
     out.count()  # materialize, then release the intermediate caches —
     # leaving them pinned degrades successive runs via eviction churn
-    for df in (both, cands, pairs, full, sp, matched_p, pre):
+    for df in (both, cands, full, sp, pre):
         if df is not None:
             df.unpersist()
     return out
@@ -1279,22 +1190,18 @@ def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
 
 def _with_no_cand_rows(matched: DataFrame, url_universe: DataFrame,
                        cands: DataFrame) -> DataFrame:
-    """Re-attach status-3 rows for urls with no candidates anywhere.
-    ``url_universe`` is a one-row-per-url frame (column ``url``) holding
-    every input url — the caller either distincts the points table or, on
-    the pages path, passes the pages url set (cheaper: pruned through the
-    render aggregate, never touches extraction). ``cands`` must be a
-    persisted (or otherwise cheap) frame whose url set equals the
-    candidate-bearing urls: the persisted candidate table on the staged
-    paths, or the persisted matched output itself on the streaming
-    url-local path — never an unpersisted heavy subtree, which would
-    compute twice per action."""
+    """Re-attach status-3 rows for urls with no candidates anywhere (the
+    JVM twin of no_match_rows, for the staged plan). ``url_universe`` is a
+    one-row-per-url frame (column ``url``) holding every input url — the
+    distinct points urls, or on the pages path the pages url set
+    (cheaper: never touches extraction). ``cands`` must be the persisted
+    candidate table, whose url set is the candidate-bearing urls — never
+    an unpersisted heavy subtree, which would compute twice per action."""
     no_cands = (url_universe.select("url")
                 .join(cands.select("url"), "url", "left_anti")
                 .select("url",
                         F.lit(hmm.STATUS_NO_CANDIDATES).alias("status"),
                         F.lit(None).cast("array<long>").alias("epath"),
-                        *[F.lit(None).cast("double").alias(c) for c in
-                          ("step_0", "step_n", "dist", "avg_speed", "prob",
-                           "norm_prob", "dist_prob", "trans_prob", "dir_prob")]))
+                        *[F.lit(None).cast("double").alias(c)
+                          for c in METRIC_COLS]))
     return matched.unionByName(no_cands)

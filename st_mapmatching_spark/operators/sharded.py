@@ -58,8 +58,8 @@ from pyspark.sql import functions as F
 from ..config import M_PER_DEG, MatchConfig
 from ..graph.dijkstra import _epath, bounded_dijkstra, shortest_paths_to_targets
 from ..graph.network import Network
-from ..kernels import hmm
-from ..kernels.cells import xy_to_cell
+from .matching import (MATCHED_SCHEMA, SpPayload, _probe_match, match_pages,
+                       no_match_rows)
 
 _SP_COLS = ["o_node", "d_node", "cost", "path_speed", "pcx", "pcy", "pw",
             "pn", "has_path"]
@@ -74,49 +74,19 @@ def _region_key(rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
         + (np.asarray(ry, np.int64) + (1 << 25))
 
 
-class RegionSpPayload:
-    """SpPayload twin backed by cost/stat columns only: epaths are
+class RegionSpPayload(SpPayload):
+    """SpPayload backed by cost/stat columns only: epaths are
     reconstructed on demand by bounded Dijkstra over the region's expanded
     adjacency (exact — see module invariants). Keeps path storage out of
     the broadcast payload entirely."""
 
-    __slots__ = ("o_u", "d_u", "key", "cost", "path_speed", "pcx", "pcy",
-                 "pw", "pn", "has_path_a", "adj", "max_dist")
+    __slots__ = ("adj", "max_dist")
 
     def __init__(self, sp_pdf: pd.DataFrame, adj: dict, max_dist: float):
-        o = sp_pdf.o_node.to_numpy(np.int64)
-        d = sp_pdf.d_node.to_numpy(np.int64)
-        self.o_u = np.unique(o)
-        self.d_u = np.unique(d)
-        key = (np.searchsorted(self.o_u, o).astype(np.int64) * len(self.d_u)
-               + np.searchsorted(self.d_u, d))
-        order = np.argsort(key)
-        self.key = key[order]
-        for c in ("cost", "path_speed", "pcx", "pcy", "pw"):
-            setattr(self, c, sp_pdf[c].to_numpy(np.float64)[order])
-        self.pn = sp_pdf.pn.to_numpy(np.int64)[order]
-        self.has_path_a = sp_pdf.has_path.to_numpy(bool)[order]
+        order = self._index(sp_pdf)
+        self.has_path = sp_pdf.has_path.to_numpy(bool)[order]
         self.adj = adj
         self.max_dist = max_dist
-
-    # -- SpPayload interface ------------------------------------------
-    @property
-    def has_path(self):
-        return self.has_path_a
-
-    def locate(self, o_node: np.ndarray, d_node: np.ndarray):
-        n = len(self.key)
-        if n == 0:
-            z = np.zeros(len(o_node), dtype=np.int64)
-            return z, np.zeros(len(o_node), dtype=bool)
-        o_r = np.searchsorted(self.o_u, o_node)
-        d_r = np.searchsorted(self.d_u, d_node)
-        o_ok = (o_r < len(self.o_u)) & (self.o_u[np.minimum(o_r, len(self.o_u) - 1)] == o_node)
-        d_ok = (d_r < len(self.d_u)) & (self.d_u[np.minimum(d_r, len(self.d_u) - 1)] == d_node)
-        key_q = o_r * len(self.d_u) + d_r
-        pos = np.searchsorted(self.key, key_q)
-        hit = o_ok & d_ok & (pos < n) & (self.key[np.minimum(pos, n - 1)] == key_q)
-        return np.minimum(pos, n - 1), hit
 
     def epath_of(self, o: int, d: int):
         if o == d:
@@ -444,8 +414,6 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
     that is the cache's point; drop the Network (or clear
     net._shard_payload_cache and unpersist its handles) to release
     executor memory in a session that is done matching."""
-    from .matching import MATCHED_SCHEMA, _match_frame, match_pages
-
     if region_m is None or cover_pad is None or sp_pair_max is None:
         auto = derive_shard_params(spark, pages, net, cfg)
         region_m = auto["region_m"] if region_m is None else region_m
@@ -466,18 +434,11 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
     lat1 = F.regexp_extract("text", r"GEO \d+ (-?[\d.]+) (-?[\d.]+)", 2)
     x1 = (lon1.cast("double") - F.lit(lon0)) * F.lit(M_PER_DEG) * F.lit(k)
     y1 = (lat1.cast("double") - F.lit(lat0)) * F.lit(M_PER_DEG)
-    import os as _os
-    import time as _time
-    _dbg = _os.environ.get("SPARK_GRAFT_SHARD_DEBUG")
-    _t = _time.perf_counter()
     pres = (pages.filter(lon1 != "")
             .select(F.floor(x1 / F.lit(region_m)).cast("long").alias("rx"),
                     F.floor(y1 / F.lit(region_m)).cast("long").alias("ry"))
             .distinct().collect())
     regions = [(int(r.rx), int(r.ry)) for r in pres]
-    if _dbg:
-        print(f"[shard] regions job {_time.perf_counter() - _t:.2f}s "
-              f"({len(regions)} regions)", flush=True)
 
     # payloads are a per-(network, tiling) artifact — memoize on the net
     # like _sp_payload_for. The cache key is the TILING (not the region
@@ -497,11 +458,7 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
     missing = [(rx, ry) for rx, ry in regions
                if int(_region_key(np.array([rx]), np.array([ry]))[0])
                not in entry["pays"]]
-    if _dbg:
-        print(f"[shard] payload cache: {len(regions) - len(missing)} hit, "
-              f"{len(missing)} to build", flush=True)
     if missing:
-        _t = _time.perf_counter()
         new_pays, n_rows, n_bytes = _build_region_payloads(
             spark, net, cfg, missing, region_m, cover_pad, sp_pair_max,
             margin, payload_max_rows - entry["rows"],
@@ -525,29 +482,22 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                                     cfg, sp_pair_max)
         entry["spds"].update(new_spds)
         entry["spd_bc"] = spark.sparkContext.broadcast(entry["spds"])
-        if _dbg:
-            print(f"[shard] payload build {_time.perf_counter() - _t:.2f}s "
-                  f"({len(missing)} regions, {entry['bytes']} bytes)",
-                  flush=True)
     if entry["pay_bc"] is None:
         entry["pay_bc"] = spark.sparkContext.broadcast({})
         entry["spd_bc"] = spark.sparkContext.broadcast({})
     pay_bc, spd_bc = entry["pay_bc"], entry["spd_bc"]
     empty_keys = frozenset(k for k, v in entry["pays"].items() if v is None)
-    cell_size, radius = cfg.cell_size, cfg.radius
+    radius = cfg.radius
     tol, do_simpl = cfg.tolerance, cfg.simplify
     pair_budget = sp_pair_max
 
+    def miss_rows(urls, fallback):
+        return pd.DataFrame(no_match_rows(urls)).assign(_fb=fallback)
+
     def op(batches):
-        import os as _os
-        import time as _time
-        _t0 = _time.perf_counter()
-        from ..kernels.linear_ref import project_core
         from .candidates import extract_arrays
         pays = pay_bc.value
         spds = spd_bc.value
-        _t1 = _time.perf_counter()
-        _dbg = _os.environ.get("SPARK_GRAFT_SHARD_DEBUG")
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -555,15 +505,6 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
             frames = []
             done = set()
             fb = []
-
-            def miss_rows(urls, fallback):
-                return pd.DataFrame([
-                    {"url": mu, "status": hmm.STATUS_NO_CANDIDATES,
-                     "epath": None, "step_0": np.nan, "step_n": np.nan,
-                     "dist": np.nan, "avg_speed": np.nan, "prob": np.nan,
-                     "norm_prob": np.nan, "dist_prob": np.nan,
-                     "trans_prob": np.nan, "dir_prob": np.nan,
-                     "_fb": fallback} for mu in urls])
 
             ex = extract_arrays(pdf, lon0, lat0, tol, do_simpl)
             if ex is not None:
@@ -585,30 +526,24 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                         fb.append(url)
                         done.add(url)
                         continue
-                    if pay is None:
-                        # region has no edges at all: with guard A the
-                        # radius cannot reach any edge -> status 3; a
-                        # guard-A violation still falls back
-                        bx0, bx1 = x[s:e].min(), x[s:e].max()
-                        by0, by1 = y[s:e].min(), y[s:e].max()
-                        cb = (rx[i] * region_m - cover_pad,
-                              ry[i] * region_m - cover_pad,
-                              rx[i] * region_m + region_m + cover_pad,
-                              ry[i] * region_m + region_m + cover_pad)
-                        if (bx0 - radius < cb[0] or by0 - radius < cb[1]
-                                or bx1 + radius > cb[2] or by1 + radius > cb[3]):
-                            fb.append(url)
-                        else:
-                            frames.append(miss_rows([url], False))
-                        done.add(url)
-                        continue
-                    # guard A: bbox + radius inside the core box
-                    cb = pay["core_box"]
+                    # guard A: bbox + radius inside the core box (the
+                    # one _build_one_payload uses, also for an edgeless
+                    # region, which has no payload)
+                    cx0, cy0 = rx[i] * region_m, ry[i] * region_m
+                    cb = pay["core_box"] if pay is not None else (
+                        cx0 - cover_pad, cy0 - cover_pad,
+                        cx0 + region_m + cover_pad, cy0 + region_m + cover_pad)
                     bx0, bx1 = x[s:e].min(), x[s:e].max()
                     by0, by1 = y[s:e].min(), y[s:e].max()
                     if (bx0 - radius < cb[0] or by0 - radius < cb[1]
                             or bx1 + radius > cb[2] or by1 + radius > cb[3]):
                         fb.append(url)
+                        done.add(url)
+                        continue
+                    if pay is None:
+                        # region has no edges at all: with guard A the
+                        # radius cannot reach any edge -> status 3
+                        frames.append(miss_rows([url], False))
                         done.add(url)
                         continue
                     # guard B: every step coverable by the sp pair table
@@ -639,58 +574,12 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                         spd.adj = pay["exp"][0]
                     sel = np.concatenate(
                         [np.arange(s, e) for s, e in spans])
-                    # urls never enter the kernel (match_pages_onepass's
-                    # gid trick): points carry a slice-local integer gid,
-                    # restored once on the 1-row-per-url output
-                    urls_by_gid = np.array([u[s] for s, e in spans])
-                    pgid = np.repeat(np.arange(len(spans)),
-                                     [e - s for s, e in spans])
-                    pr_, xr, yr = pid[sel], x[sel], y[sel]
-                    cells_s, cell_eids = pay["cells"]
-                    geom = pay["geom"]
-                    eids_sorted, mat = geom[0], geom[1]
-                    ck = xy_to_cell(xr, yr, cell_size)
-                    lo = np.searchsorted(cells_s, ck, side="left")
-                    cnt = np.searchsorted(cells_s, ck, side="right") - lo
-                    P = np.repeat(np.arange(len(sel)), cnt)
-                    E = cell_eids[np.arange(int(cnt.sum())) -
-                                  np.repeat(np.cumsum(cnt) - cnt, cnt) +
-                                  np.repeat(lo, cnt)]
-                    pr = project_core(np.stack([xr[P], yr[P]], axis=1),
-                                      mat[np.searchsorted(eids_sorted, E)])
-                    keep = pr["dist"] <= radius
-                    P, E, dp = P[keep], E[keep], pr["dist"][keep]
-                    have = set()
-                    if len(P):
-                        o = np.lexsort((E, dp, P))
-                        P, E, dp = P[o], E[o], dp[o]
-                        gid = pgid[P]
-                        pdf2 = pd.DataFrame({
-                            "url": gid, "pid": pr_[P], "x": xr[P],
-                            "y": yr[P], "eid": E, "dist_p2c": dp})
-                        # chunk by candidate-row budget: the frame
-                        # kernel's pair temporaries must stay
-                        # cache-resident (onepass measured 3-4x the
-                        # per-url cost on one giant call)
-                        gheads = np.flatnonzero(np.concatenate(
-                            [[True], gid[1:] != gid[:-1]]))
-                        have = set(urls_by_gid[gid[gheads]])
-                        budget = 100_000
-                        cut_pos = np.concatenate([gheads, [len(gid)]])
-                        c0 = 0
-                        while c0 < len(gheads):
-                            c1 = int(np.searchsorted(
-                                cut_pos, cut_pos[c0] + budget, side="left"))
-                            c1 = max(c1, c0 + 1)
-                            sl = pdf2.iloc[cut_pos[c0]:
-                                           cut_pos[min(c1, len(gheads))]]
-                            out = _match_frame(sl, geom, pay["stats"],
-                                               spd, cfg,
-                                               cut_topk=True)
-                            out["url"] = urls_by_gid[out.url.to_numpy()]
-                            out["_fb"] = False
-                            frames.append(out)
-                            c0 = c1
+                    out, have = _probe_match(
+                        u[sel], pid[sel], x[sel], y[sel], pay["cells"],
+                        pay["geom"], pay["stats"], spd, cfg)
+                    for f in out:
+                        f["_fb"] = False
+                    frames += out
                     no_c = [u[s] for s, e in spans if u[s] not in have]
                     if no_c:
                         frames.append(miss_rows(no_c, False))
@@ -703,19 +592,11 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                 frames.append(miss_rows(fb, True))
             yield pd.concat(frames, ignore_index=True) if len(frames) > 1 \
                 else frames[0]
-        if _dbg:
-            with open("/tmp/shard_debug.log", "a") as _f:
-                _f.write(f"{_os.getpid()} start={_t0:.3f} bc={_t1 - _t0:.3f} "
-                         f"end={_time.perf_counter():.3f}\n")
 
     out = (pages.select("url", "text")
            .mapInPandas(op, schema=MATCHED_SCHEMA + ", _fb boolean")
            .persist())
-    _t = _time.perf_counter()
     n_fb = out.filter(F.col("_fb")).count()
-    if _dbg:
-        print(f"[shard] op stage {_time.perf_counter() - _t:.2f}s "
-              f"(fb={n_fb})", flush=True)
     good = out.filter(~F.col("_fb")).drop("_fb")
     if n_fb == 0:
         result = good

@@ -94,25 +94,24 @@ def _assert_matches_oracle(got, oracle_results):
                 assert gv == pytest.approx(wv, rel=1e-9, abs=1e-12), f"{url}: {k}"
 
 
-@pytest.mark.parametrize("fused", [True, False])
-def test_matched_parity_relational(spark, pages_df, net, cfg, oracle_results, fused):
+def test_matched_parity_relational(spark, pages_df, net, cfg, oracle_results):
     """Planet-scale path: sp_broadcast_max_rows=0 forces the relational
     sp equi-join + post-Viterbi epath attach (zero driver collects of the
     sp table) — results must still be EXACTLY the oracle's."""
     from dataclasses import replace
     cfg0 = replace(cfg, sp_broadcast_max_rows=0)
-    got = match_pages(spark, pages_df, net, cfg0, fused=fused).toPandas().set_index("url")
+    got = match_pages(spark, pages_df, net, cfg0).toPandas().set_index("url")
     _assert_matches_oracle(got, oracle_results)
 
 
 def test_matched_parity_no_broadcast_index(spark, pages_df, net, cfg,
                                             oracle_results):
-    """broadcast_index=False must NOT take the url-local shuffle-skip: the
-    shuffled cell join scatters each url across partitions, and skipping
-    the url repartition there decodes per-partition fragments as whole
-    trajectories (r5 ADVICE high — 79/83 mismatches when Catalyst did not
-    auto-broadcast). Pin autoBroadcastJoinThreshold=-1 so Catalyst cannot
-    mask the bug, then require exact oracle parity."""
+    """broadcast_index=False takes the staged plan on the memoized sp: the
+    shuffled cell join scatters each url across partitions, and only the
+    url repartition puts each trajectory back together (r5 ADVICE high —
+    decoding per-partition fragments gave 79/83 mismatches when Catalyst
+    did not auto-broadcast). Pin autoBroadcastJoinThreshold=-1 so Catalyst
+    cannot mask such a bug, then require exact oracle parity."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from st_mapmatching_spark.config import M_PER_DEG, MatchConfig
-from st_mapmatching_spark.operators.matching import match_pages
+from st_mapmatching_spark.operators.matching import choose_plan, match_pages
 from st_mapmatching_spark.operators.sharded import match_pages_sharded
 from st_mapmatching_spark.sources import derived as D
 
@@ -57,30 +57,39 @@ def fixture_pages(spark):
 
 
 def test_sharded_matches_staged(spark, bignet, fixture_pages):
+    """The sharded plan, and the staged plan with its sp table collected
+    to the driver, both equal the relational staged plan row for row.
+    The default CFG takes the collected variant here: 1,600 nodes give
+    n^2 = 2.56 M, above the 2 M memoized-sp cap."""
     from dataclasses import replace
     cfg = replace(CFG, sp_broadcast_max_rows=0)   # force the staged path
+    assert choose_plan(bignet, CFG, True)[:2] == ("staged", "count")
     want = (match_pages(spark, fixture_pages, bignet, cfg)
             .toPandas().set_index("url").sort_index())
-    got = (match_pages_sharded(spark, fixture_pages, bignet, cfg,
-                               region_m=3000.0, cover_pad=1500.0,
-                               sp_pair_max=1300.0)
-           .toPandas().set_index("url").sort_index())
-    assert list(got.index) == list(want.index)
-    assert (got.status == want.status).all(), \
-        got.status.compare(want.status)
-    for url in want.index:
-        g_ep = got.loc[url].epath
-        w_ep = want.loc[url].epath
-        g_ep = None if g_ep is None else [int(e) for e in g_ep]
-        w_ep = None if w_ep is None else [int(e) for e in w_ep]
-        assert g_ep == w_ep, f"{url}: {g_ep} != {w_ep}"
-        for c in ("step_0", "step_n", "dist", "avg_speed", "prob",
-                  "norm_prob", "dist_prob", "trans_prob", "dir_prob"):
-            gv, wv = float(got.loc[url][c]), float(want.loc[url][c])
-            if np.isnan(wv):
-                assert np.isnan(gv), f"{url}:{c}"
-            else:
-                assert gv == pytest.approx(wv, rel=1e-12, abs=1e-12), f"{url}:{c}"
+    sharded = (match_pages_sharded(spark, fixture_pages, bignet, cfg,
+                                   region_m=3000.0, cover_pad=1500.0,
+                                   sp_pair_max=1300.0)
+               .toPandas().set_index("url").sort_index())
+    collected = (match_pages(spark, fixture_pages, bignet, CFG)
+                 .toPandas().set_index("url").sort_index())
+    for got in (sharded, collected):
+        assert list(got.index) == list(want.index)
+        assert (got.status == want.status).all(), \
+            got.status.compare(want.status)
+        for url in want.index:
+            g_ep = got.loc[url].epath
+            w_ep = want.loc[url].epath
+            g_ep = None if g_ep is None else [int(e) for e in g_ep]
+            w_ep = None if w_ep is None else [int(e) for e in w_ep]
+            assert g_ep == w_ep, f"{url}: {g_ep} != {w_ep}"
+            for c in ("step_0", "step_n", "dist", "avg_speed", "prob",
+                      "norm_prob", "dist_prob", "trans_prob", "dir_prob"):
+                gv, wv = float(got.loc[url][c]), float(want.loc[url][c])
+                if np.isnan(wv):
+                    assert np.isnan(gv), f"{url}:{c}"
+                else:
+                    assert gv == pytest.approx(wv, rel=1e-12, abs=1e-12), \
+                        f"{url}:{c}"
     # sanity on the fixture's intent
     assert int(want.loc["t1"].status) == 0
     assert int(want.loc["t2"].status) == 0
