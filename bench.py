@@ -63,10 +63,13 @@ def run_once(sf_dir: str, cpus: str) -> dict:
     # min — the early sf-target iterations additionally pay the page-cache
     # read of the input parquet and the JIT tail, which a long-running
     # production job pays once (documented in BENCH/NOTES.md; measured
-    # warm-up profile 14 -> 9 -> 7 -> 6 s on the flagship)
+    # warm-up profile 14 -> 9 -> 7 -> 6 s on the flagship). The cache is
+    # cleared before each timed query: a query's persisted results would
+    # otherwise serve the next iteration of the same plan.
     times, counts = {}, {}
     for _ in range(3):
         for name in HEADLINE:
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
             counts[name] = qs[name](spark, sf_dir).count()
             dt = round(time.perf_counter() - t0, 3)

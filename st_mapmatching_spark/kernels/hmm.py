@@ -27,6 +27,7 @@ import pandas as pd
 
 from ..config import MatchConfig
 from .geodesy import bearing_deg, polyline_bearing_cos_dist
+from .keys import check_key_space, key_find, key_index
 
 # status codes (/root/reference/mapmatching/match/status.py:3-14)
 STATUS_SUCCESS = 0
@@ -547,6 +548,7 @@ def viterbi_beam_lockstep(pl_gid, pair_off, pair_cnt, e0, e1, tp,
     maxT = int(n_steps.max()) if ng else 0
     M = np.int64(max(int(e1.max(initial=0)), int(e0.max(initial=0)),
                      int(l0_e.max(initial=0))) + 1)
+    check_key_space(ng, M)  # the (group, eid) keys grp * M + e
     NEG_INF = -np.inf
 
     # step-major ordering of pair layers
@@ -829,64 +831,43 @@ def stitch_path(rlist: pd.DataFrame, gt: pd.DataFrame, cands: pd.DataFrame,
         res["status"] = STATUS_FAILED if end_prob < cfg.prob_thres else STATUS_SAME_LINK
         return res
 
-    # winning-step row lookup: rank-encode the (pid_0, eid_0, eid_1)
-    # triples and binary-search the whole key vector at once (the
-    # per-group dict build over every transition pair was the measured
-    # stitch hot spot; triples are unique, so first == the dict's last)
-    g_p = gt.pid_0.to_numpy()
-    g_a = gt.eid_0.to_numpy()
-    g_b = gt.eid_1.to_numpy()
-    pu, au, bu = np.unique(g_p), np.unique(g_a), np.unique(g_b)
-    code = ((np.searchsorted(pu, g_p).astype(np.int64) * len(au)
-             + np.searchsorted(au, g_a)) * len(bu) + np.searchsorted(bu, g_b))
-    corder = np.argsort(code, kind="stable")
-    csort = code[corder]
+    # winning-step row lookup: one composite-key binary search over the
+    # (pid_0, eid_0, eid_1) triples (the per-group dict build over every
+    # transition pair was the measured stitch hot spot; triples are
+    # unique, so first == the dict's last)
+    uniq, code, corder = key_index(gt.pid_0.to_numpy(), gt.eid_0.to_numpy(),
+                                   gt.eid_1.to_numpy())
     kp = r_pid[:-1].astype(np.int64)
     ka = r_eid[:-1].astype(np.int64)
     kb = r_eid[1:].astype(np.int64)
-    qp, qa, qb = (np.searchsorted(pu, kp), np.searchsorted(au, ka),
-                  np.searchsorted(bu, kb))
-    comp_ok = ((qp < len(pu)) & (pu[np.minimum(qp, len(pu) - 1)] == kp)
-               & (qa < len(au)) & (au[np.minimum(qa, len(au) - 1)] == ka)
-               & (qb < len(bu)) & (bu[np.minimum(qb, len(bu) - 1)] == kb))
-    qcode = (qp.astype(np.int64) * len(au) + qa) * len(bu) + qb
-    pos = np.minimum(np.searchsorted(csort, qcode), len(csort) - 1)
-    hit = comp_ok & (csort[pos] == qcode)
+    pos, hit = key_find(uniq, code, kp, ka, kb)
     if not hit.all():
         # only reachable via the empty-lattice guard in viterbi_beam;
         # the reference raises here, we degrade to FAILED
         res["status"] = STATUS_FAILED
         return res
     rows = corder[pos]
-    keys = list(zip(kp.tolist(), ka.tolist(), kb.tolist()))
-    g_dsht = gt.d_sht.to_numpy(dtype=np.float64)[rows]
-    g_speed = gt.avg_speed.to_numpy(dtype=np.float64)[rows]
-    g_distp = gt.dist_prob.to_numpy(dtype=np.float64)[rows]
-    g_transp = gt.trans_prob.to_numpy(dtype=np.float64)[rows]
+    g_dsht, g_speed, g_distp, g_transp = (
+        getattr(gt, c).to_numpy(dtype=np.float64)[rows]
+        for c in ("d_sht", "avg_speed", "dist_prob", "trans_prob"))
+    if "epath" not in gt.columns:
+        g_o, g_d, g_flag = (getattr(gt, c).to_numpy()[rows]
+                            for c in ("o_node", "d_node", "flag"))
+        need = g_flag != FLAG_SAME_SRC_FIRST
     if collect_steps:
-        g_flag = gt.flag.to_numpy()[rows]
-        g_o = gt.o_node.to_numpy()[rows]
-        g_d = gt.d_node.to_numpy()[rows]
-        res["steps"] = [(int(o), int(d), int(f) != FLAG_SAME_SRC_FIRST, int(k[1]))
-                        for o, d, f, k in zip(g_o, g_d, g_flag, keys)]
+        res["steps"] = [(int(o), int(d), bool(n), int(a))
+                        for o, d, n, a in zip(g_o, g_d, need, ka)]
         res["last_eid"] = int(r_eid[-1])
         _stitch_metrics(res, g_dsht, g_speed, g_distp, g_transp, end_prob,
-                        len(keys), dir_trans)
+                        len(rows), dir_trans)
         return res  # status stays STATUS_UNKNOWN: finalized relationally
-    if "epath" in gt.columns:
-        g_ep = gt.epath.to_numpy(dtype=object)[rows]
-    else:
-        g_flag = gt.flag.to_numpy()[rows]
-        g_o = gt.o_node.to_numpy()[rows]
-        g_d = gt.d_node.to_numpy()[rows]
-        g_ep = np.array([None if int(f) == FLAG_SAME_SRC_FIRST
-                         else epath_lookup(int(o), int(d))
-                         for o, d, f in zip(g_o, g_d, g_flag)], dtype=object)
+    g_ep = gt.epath.to_numpy(dtype=object)[rows] if "epath" in gt.columns \
+        else [epath_lookup(int(o), int(d)) if n else None
+              for o, d, n in zip(g_o, g_d, need)]
 
     eids = []
-    for i, k in enumerate(keys):
-        eids.append(k[1])
-        ep = g_ep[i]
+    for a, ep in zip(ka.tolist(), g_ep):
+        eids.append(a)
         if ep is not None and not (isinstance(ep, float) and np.isnan(ep)) and len(ep) > 0:
             eids.extend(int(e) for e in ep)
     eids.append(int(r_eid[-1]))
@@ -898,7 +879,7 @@ def stitch_path(rlist: pd.DataFrame, gt: pd.DataFrame, cands: pd.DataFrame,
         return res
 
     _stitch_metrics(res, g_dsht, g_speed, g_distp, g_transp, end_prob,
-                    len(keys), dir_trans)
+                    len(rows), dir_trans)
     res["status"] = STATUS_FAILED if res["trans_prob"] < cfg.prob_thres else STATUS_SUCCESS
     return res
 

@@ -39,6 +39,7 @@ from ..config import MatchConfig
 from ..functions.geo_cols import cell_col, xy_cols
 from ..graph.network import Network
 from ..kernels.linear_ref import project_core
+from ..kernels.simplify import simplify_points_batch
 from ..sources.extract import extract_points
 
 TRAJ_SCHEMA = "url string, pid_raw long, x double, y double, t_epoch long"
@@ -125,20 +126,10 @@ def simplify_trajs(trajs: DataFrame, cfg: MatchConfig) -> DataFrame:
     do_simplify = cfg.simplify
 
     def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..kernels.simplify import simplify_points_batch
-        u = pdf.url.to_numpy()
         xy = pdf[["xm", "ym"]].to_numpy()
-        bounds = np.flatnonzero(np.concatenate([[True], u[1:] != u[:-1], [True]]))
-        starts, ends = bounds[:-1], bounds[1:]
-        if do_simplify:
-            keepm = simplify_points_batch(xy, starts, ends, tolerance)
-        else:
-            keepm = np.ones(len(xy), dtype=bool)
-        counts = np.add.reduceat(keepm, starts)
-        keep = np.flatnonzero(keepm)
-        pid = (np.arange(len(keep)) -
-               np.repeat(np.cumsum(counts) - counts, counts)).astype(np.int32)
-        return pd.DataFrame({"url": np.repeat(u[starts], counts), "pid": pid,
+        keep, u, pid = simplify_runs(pdf.url.to_numpy(), xy, tolerance,
+                                     do_simplify)
+        return pd.DataFrame({"url": u, "pid": pid,
                              "x": xy[keep, 0], "y": xy[keep, 1]})
 
     def op(batches):
@@ -147,6 +138,25 @@ def simplify_trajs(trajs: DataFrame, cfg: MatchConfig) -> DataFrame:
 
     src = pts.repartition("url").sortWithinPartitions("url", "pid_raw")
     return src.mapInPandas(op, schema=url_typed(POINTS_SCHEMA, trajs))
+
+
+def simplify_runs(u: np.ndarray, xy: np.ndarray, tolerance: float,
+                  do_simplify: bool):
+    """Douglas-Peucker over every url run of url-major metric points at
+    once (simplify_points_batch evaluates each round's pending intervals
+    of all trajectories together). Returns (keep, url, pid): the kept row
+    positions, their url, and their pid re-densified to 0..m-1 per url."""
+    bounds = np.flatnonzero(np.concatenate([[True], u[1:] != u[:-1], [True]]))
+    starts, ends = bounds[:-1], bounds[1:]
+    if do_simplify:
+        keepm = simplify_points_batch(xy, starts, ends, tolerance)
+    else:
+        keepm = np.ones(len(xy), dtype=bool)
+    counts = np.add.reduceat(keepm, starts)
+    keep = np.flatnonzero(keepm)
+    pid = (np.arange(len(keep)) -
+           np.repeat(np.cumsum(counts) - counts, counts)).astype(np.int32)
+    return keep, np.repeat(u[starts], counts), pid
 
 
 def extract_arrays(pdf: pd.DataFrame, lon0: float, lat0: float,
@@ -163,23 +173,9 @@ def extract_arrays(pdf: pd.DataFrame, lon0: float, lat0: float,
     # assemble one frame at the end (per-group DataFrames are the
     # measured overhead at millions of pages)
     xy_all = project_coords(pts[["x", "y"]].to_numpy(), lon0, lat0)
-    u = pts.url.to_numpy()
-    bounds = np.flatnonzero(np.concatenate([[True], u[1:] != u[:-1], [True]]))
-    starts, ends = bounds[:-1], bounds[1:]
-    if do_simplify:
-        # batched Douglas-Peucker: every pending interval of every
-        # trajectory evaluated per round (the per-trajectory
-        # recursion's call overhead was the stage's measured cost)
-        from ..kernels.simplify import simplify_points_batch
-        keepm = simplify_points_batch(xy_all, starts, ends, tolerance)
-    else:
-        keepm = np.ones(len(xy_all), dtype=bool)
-    counts = np.add.reduceat(keepm, starts)
-    keep = np.flatnonzero(keepm)
-    pid = (np.arange(len(keep)) -
-           np.repeat(np.cumsum(counts) - counts, counts)).astype(np.int32)
-    return (np.repeat(u[starts], counts), pid,
-            xy_all[keep, 0], xy_all[keep, 1])
+    keep, u, pid = simplify_runs(pts.url.to_numpy(), xy_all, tolerance,
+                                 do_simplify)
+    return u, pid, xy_all[keep, 0], xy_all[keep, 1]
 
 
 def extract_simplify(pages: DataFrame, cfg: MatchConfig) -> DataFrame:
@@ -279,8 +275,7 @@ def network_frames(spark: SparkSession, net: Network,
 
 def candidate_join(points: DataFrame, cell_index: DataFrame, edge_attrs: DataFrame,
                    cfg: MatchConfig, broadcast_index: bool = True,
-                   net: Network | None = None,
-                   padded_geoms=None, slim: bool = False,
+                   net: Network | None = None, slim: bool = False,
                    salt_hot_cells: int = 0, hot_threshold: int = 1000,
                    hot_sample_frac: float | None = None) -> DataFrame:
     """points(url,pid,x,y metric) x edges -> candidates with projection.
@@ -294,7 +289,8 @@ def candidate_join(points: DataFrame, cell_index: DataFrame, edge_attrs: DataFra
     input) stops after the top-k cut with (url, pid, x, y, eid, dist_p2c)
     and leaves the rest to be re-derived from the broadcast network.
 
-    ``cell_index`` must be the radius-dilated index (network_frames).
+    ``cell_index`` must be the radius-dilated index (network_frames);
+    ``net`` supplies the broadcast edge geometry the refine projects onto.
     The pre-dilation design exploded each point into its ~9 cover cells
     and deduped (url,pid,eid) in-batch — 3x the Arrow rows through the
     refine stage for the same candidate set (measured; the refine is the
@@ -359,10 +355,8 @@ def candidate_join(points: DataFrame, cell_index: DataFrame, edge_attrs: DataFra
         pairs = (covered.join(cell_index, "cell")
                  .select("url", "pid", "x", "y", "eid"))
 
-    if padded_geoms is None:
-        assert net is not None, "candidate_join needs `net` or `padded_geoms`"
-        padded_geoms = net.broadcast(points.sparkSession, "padded",
-                                     net.padded_geoms)
+    padded_geoms = net.broadcast(points.sparkSession, "padded",
+                                 net.padded_geoms)
 
     def refine(batches):
         """mapInArrow: numeric columns come out of Arrow zero-copy; the

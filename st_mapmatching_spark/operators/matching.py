@@ -19,6 +19,13 @@ Relational tail (Spark lifecycle of ST_Matching.matching, SURVEY.md §3.1):
   viterbi: one url-sorted Arrow stage over candidates + scored pairs —
            the only genuinely sequential state (viterbi.py:107-154)
   epath  : equi-join of the winning steps with the sp table
+
+Both routes end in one decode tail, _decode_stitch: per-url-max
+emission, lockstep beam (or classic) Viterbi and path stitch over every
+trajectory of a batch. _match_frame calls it with sp paths looked up
+from the broadcast payload, viterbi_match with the winning steps
+collected for attach_epath_relational. Both score transitions with
+_transition_probs.
 """
 
 from __future__ import annotations
@@ -36,6 +43,7 @@ from ..config import MatchConfig
 from ..functions.geo_cols import bearing_col
 from ..graph.network import Network
 from ..kernels import hmm
+from ..kernels.keys import key_find, key_index
 from .candidates import (candidate_join, extract_arrays, extract_simplify,
                          network_frames, rehydrate_cands, url_batches,
                          url_typed)
@@ -125,6 +133,38 @@ def build_pairs_df(cands: DataFrame, points: DataFrame, cfg: MatchConfig) -> Dat
     return gt
 
 
+def _transition_probs(col, stats, dir_trans: bool):
+    """Transition scoring shared by score_pairs_df and _match_frame
+    (spatialAnalysis.py:10-151): ``col(name)`` returns a pair column
+    (build_pairs_df's, plus the sp attach incl. has_path); ``stats`` is
+    (dir_stats, (node ids, node xy)). Returns (avg_speed, d_sht,
+    dist_prob, dir_prob, trans_prob); dir_prob is NaN without dir_trans."""
+    from ..kernels.dir_stats import engine_dir_probs
+
+    def f(name):
+        return col(name).astype(np.float64, copy=False)
+
+    def i(name):
+        return col(name).astype(np.int64, copy=False)
+
+    flag = col("flag")
+    avg_speed, d_sht, dist_prob, flag1 = hmm.score_base_np(
+        f("cost"), f("step_0_len"), f("step_n_len"), f("speed_0"),
+        f("speed_1"), f("path_speed"), flag, f("dist_0"), f("d_euc"))
+    if not dir_trans:
+        return (avg_speed, d_sht, dist_prob, np.full(len(flag), np.nan),
+                dist_prob)
+    dstats, (nids, nxy) = stats
+    dir_prob = engine_dir_probs(
+        dstats, i("eid_0"), i("seg_idx_0"), f("ratio_0"),
+        i("eid_1"), i("seg_idx_1"), f("ratio_1"), col("approx"), flag1,
+        col("has_path"), f("pcx"), f("pcy"), f("pw"), i("pn"),
+        f("move_dir"),
+        o_xy=nxy[np.searchsorted(nids, i("o_node"))],
+        d_xy=nxy[np.searchsorted(nids, i("d_node"))])
+    return avg_speed, d_sht, dist_prob, dir_prob, dist_prob * dir_prob
+
+
 def score_pairs_df(spark: SparkSession, pairs: DataFrame, sp: DataFrame,
                    net: Network, cfg: MatchConfig, broadcast_sp: bool = True) -> DataFrame:
     """Attach shortest paths (equi-join on the precomputed table — the
@@ -169,41 +209,18 @@ def score_pairs_df(spark: SparkSession, pairs: DataFrame, sp: DataFrame,
         Arrow->pandas object conversion of wide rows was the measured
         bottleneck of this stage)."""
         import pyarrow as pa
-
-        from ..kernels.dir_stats import engine_dir_probs
-        stats, (nids, nxy) = bc.value
         for b in batches:
             if b.num_rows == 0:
                 continue
             col = {n: b.column(i) for i, n in enumerate(b.schema.names)}
 
-            def g(name, dt=np.float64):
-                return col[name].to_numpy(zero_copy_only=False).astype(dt, copy=False)
+            def get(name):
+                if name == "has_path":
+                    return get("path_len") > 0
+                return col[name].to_numpy(zero_copy_only=False)
 
-            flag = g("flag", np.int32)
-            avg_speed, d_sht, dist_prob, flag1 = hmm.score_base_np(
-                g("cost"), g("step_0_len"), g("step_n_len"),
-                g("speed_0"), g("speed_1"), g("path_speed"),
-                flag, g("dist_0"), g("d_euc"))
-
-            if not dir_trans:
-                dir_prob = np.full(len(flag), np.nan)
-                trans_prob = dist_prob
-            else:
-                o_node = g("o_node", np.int64)
-                d_node = g("d_node", np.int64)
-                dir_prob = engine_dir_probs(
-                    stats,
-                    g("eid_0", np.int64), g("seg_idx_0", np.int64), g("ratio_0"),
-                    g("eid_1", np.int64), g("seg_idx_1", np.int64), g("ratio_1"),
-                    col["approx"].to_numpy(zero_copy_only=False), flag1,
-                    g("path_len", np.int64) > 0,
-                    g("pcx"), g("pcy"), g("pw"), g("pn", np.int64),
-                    g("move_dir"),
-                    o_xy=nxy[np.searchsorted(nids, o_node)],
-                    d_xy=nxy[np.searchsorted(nids, d_node)])
-                trans_prob = dist_prob * dir_prob
-
+            avg_speed, d_sht, dist_prob, dir_prob, trans_prob = \
+                _transition_probs(get, bc.value, dir_trans)
             computed = {"trans_prob": trans_prob, "dist_prob": dist_prob,
                         "dir_prob": dir_prob, "d_sht": d_sht,
                         "avg_speed": avg_speed}
@@ -217,16 +234,12 @@ def score_pairs_df(spark: SparkSession, pairs: DataFrame, sp: DataFrame,
 
 def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
                   sp_paths=None) -> DataFrame:
-    """Per-trajectory beam Viterbi + path stitch (the stateful core,
-    viterbi.py:107-154 + postprocess.py:13-97) as ONE streamed Arrow
-    stage: candidates and scored pairs are tag-unioned into a single
-    url-sorted stream and sliced per trajectory in numpy — the cogrouped
-    applyInPandas this replaces paid ~15 core-ms of machinery per
-    trajectory (one Python call + pandas constructions per group, the
-    round-2 measurement that motivated fused_match) and TWO groupBy
-    shuffles; the union costs one shuffle and amortizes the Python entry
-    over whole Arrow batches. Sentinel zeros (never nulls) fill the
-    other tag's columns so pandas dtypes survive the union intact.
+    """Per-trajectory Viterbi + path stitch (viterbi.py:107-154 +
+    postprocess.py:13-97) as ONE streamed Arrow stage: candidates and
+    scored pairs are tag-unioned into a single url-sorted stream (one
+    shuffle) and decoded whole Arrow batches at a time by _decode_stitch.
+    Sentinel zeros (never nulls) fill the other tag's columns so pandas
+    dtypes survive the union intact.
 
     The output is MATCHED_PRE_SCHEMA: the winning steps only, no paths;
     feed it through attach_epath_relational(sp) to finalize — nothing is
@@ -236,19 +249,12 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
         raise ValueError("viterbi_match only emits winning steps "
                          "(MATCHED_PRE_SCHEMA): sp_paths must be None; "
                          "attach paths with attach_epath_relational")
-    # no observ_prob here: the kernel recomputes the emission per url group
-    # (per-url max normalization) — carrying a column it overwrites invited
-    # stale/placeholder reads (r5 judge, What's wrong #2). dir_prob is
-    # likewise never read downstream (stitch re-derives it as
-    # trans_prob/dist_prob) — both stay OUT of the union so the one
-    # url shuffle carries only columns the decode actually consumes
-    # (guide §2.3: project before the exchange).
+    # the url shuffle carries only what the decode reads: no observ_prob
+    # (recomputed per url) and no dir_prob (stitch re-derives it)
     c_cols = ["pid", "eid", "dist_p2c", "len0", "len1"]
     s_cols = [c for c in SCORED_COLS
               if c not in ("url", "observ_prob", "dir_prob")]
     cands_min = cands.select("url", *c_cols)
-    dir_trans = cfg.dir_trans
-    gps_sigma, gps_bias = cfg.gps_sigma, cfg.gps_bias
 
     c_types = dict(cands_min.dtypes)
     s_types = dict(scored.dtypes)
@@ -263,141 +269,35 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
     src = both.repartition("url").sortWithinPartitions("url", "_tag")
 
     def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Whole-batch decode: candidate/pair rows of EVERY url in the
-        Arrow batch are processed in shared numpy passes (emission with
-        per-url max via reduceat, pair-obs attach via one composite-key
-        searchsorted, lockstep beam decode across all trajectories) —
-        the batch shape match_pages_onepass/_match_frame already uses.
-        The per-url pandas slicing + merge + per-trajectory viterbi_beam
-        this replaces cost ~ms-per-trajectory of pure frame machinery on
-        the relational path (r7; the kernels are identical row-for-row —
-        decisions pinned by the lockstep parity suite and all four match
-        gates)."""
+        """Split the batch's tagged union into candidate and pair arrays
+        in _decode_stitch's order, find each pair's (pid_1, eid_1)
+        candidate row, and decode every url of the batch at once."""
         u = pdf.url.to_numpy()
-        tags = pdf._tag.to_numpy()
-        bounds = np.flatnonzero(np.concatenate(
-            [[True], u[1:] != u[:-1], [True]]))
-        starts, ends = bounds[:-1], bounds[1:]
-        ngroups = len(starts)
-        n_c = np.add.reduceat((tags == 0).astype(np.int64), starts)
-        n_g = (ends - starts) - n_c
-
-        carr = {c: pdf[c].to_numpy() for c in c_cols}
-        garr = {c: pdf[c].to_numpy() for c in s_cols}
-
-        # candidate rows (url-major; per-url span via c_off)
-        cidx = np.flatnonzero(tags == 0)
-        c_off = np.concatenate([[0], np.cumsum(n_c)])
-        cpid = carr["pid"][cidx]
-        ceid = carr["eid"][cidx]
-        dp = carr["dist_p2c"][cidx]
-        cl0 = carr["len0"][cidx]
-        cl1 = carr["len1"][cidx]
-        gid_c = np.repeat(np.arange(ngroups), n_c)
-        # emission recomputed with the shared numpy kernel (ulp parity
-        # with the oracle); per-url max via reduceat over non-empty runs
-        if len(cidx):
-            dens = hmm.gaussian_emission(dp, gps_sigma, gps_bias)
-            ne = np.flatnonzero(n_c > 0)
-            gmax = np.full(ngroups, np.nan)
-            gmax[ne] = np.maximum.reduceat(dens, c_off[:-1][ne])
-            obs_c = hmm.observ_prob_from_density(dens, gmax[gid_c])
-        else:
-            dens = obs_c = np.empty(0)
-
-        # pair rows, sorted per url by pid_0 (stable — within-layer order
-        # stays arrival order, the exact order viterbi_beam's stable
-        # argsort preserved)
-        gidx = np.flatnonzero(tags == 1)
-        gid_g = np.repeat(np.arange(ngroups), n_g)
-        qpid = garr["pid_1"][gidx]
-        qeid = garr["eid_1"][gidx]
-        # pair observ_prob: (gid, pid_1, eid_1) -> candidate emission via
-        # one composite-rank searchsorted (the per-url pandas merge this
-        # replaces); misses keep the merge's NaN semantics
-        pu = np.unique(np.concatenate([cpid, qpid]))
-        eu = np.unique(np.concatenate([ceid, qeid]))
-        code_c = ((gid_c * len(pu) + np.searchsorted(pu, cpid))
-                  * len(eu) + np.searchsorted(eu, ceid))
-        oc = np.argsort(code_c, kind="stable")
-        code_s, obs_s = code_c[oc], obs_c[oc]
-        qcode = ((gid_g * len(pu) + np.searchsorted(pu, qpid))
-                 * len(eu) + np.searchsorted(eu, qeid))
-        if len(code_s):
-            pos = np.minimum(np.searchsorted(code_s, qcode),
-                             len(code_s) - 1)
-            hitq = code_s[pos] == qcode
-            obs_pair = np.where(hitq, obs_s[pos], np.nan)
-        else:
-            obs_pair = np.full(len(qcode), np.nan)
-
-        pid0 = garr["pid_0"][gidx]
-        porder = np.lexsort((pid0, gid_g))
-        sg = gid_g[porder]
-        sarr = {c: garr[c][gidx][porder] for c in s_cols}
-        sobs = obs_pair[porder]
-        spid0 = sarr["pid_0"]
-        se0, se1 = sarr["eid_0"], sarr["eid_1"]
-        stp = sarr["trans_prob"] * sobs
-        g_lo = np.searchsorted(sg, np.arange(ngroups))
-        g_hi = np.searchsorted(sg, np.arange(ngroups), side="right")
-
-        decoded = {}
-        if len(sg):
-            newlay = np.concatenate(
-                [[True], (sg[1:] != sg[:-1]) | (spid0[1:] != spid0[:-1])])
-            pair_off = np.flatnonzero(newlay)
-            pair_cnt = np.diff(np.concatenate([pair_off, [len(sg)]]))
-            pl_gid_global = sg[pair_off]
-            multi = np.unique(pl_gid_global)
-            if cfg.beam_search:
-                pl_gid_d = np.searchsorted(multi, pl_gid_global)
-                rr = np.arange(len(multi))
-                n_steps = (np.searchsorted(pl_gid_d, rr, side="right")
-                           - np.searchsorted(pl_gid_d, rr))
-                m_mask = np.zeros(ngroups, dtype=bool)
-                m_mask[multi] = True
-                l0i = np.flatnonzero((cpid == 0) & m_mask[gid_c])
-                l0o = l0i[np.lexsort((ceid[l0i], dp[l0i], gid_c[l0i]))]
-                l0_cnt = np.bincount(np.searchsorted(multi, gid_c[l0o]),
-                                     minlength=len(multi))
-                l0_off = np.concatenate([[0], np.cumsum(l0_cnt)])
-                dec = hmm.viterbi_beam_lockstep(
-                    pl_gid_d, pair_off, pair_cnt, se0, se1, stp,
-                    ceid[l0o], obs_c[l0o], l0_off, n_steps, cfg)
-                for gi, (end_prob, ridx, reid) in enumerate(dec):
-                    g = int(multi[gi])
-                    lay = np.unique(cpid[c_off[g]:c_off[g + 1]])
-                    decoded[g] = (end_prob,
-                                  hmm.ColFrame({"pid": lay[ridx],
-                                                "eid": reid}))
-
-        rows = no_match_rows(u[starts])
-        for g, row in enumerate(rows):
-            row.update(steps=None, last_eid=None)
-            cs, ce = int(c_off[g]), int(c_off[g + 1])
-            if ce == cs:
-                continue
-            if n_g[g] == 0:
-                # single matched layer -> nearest edge (matching.py:170-178)
-                k = int(np.lexsort((ceid[cs:ce], dp[cs:ce]))[0])
-                row.update(status=hmm.STATUS_ONE_POINT,
-                           epath=[int(ceid[cs + k])])
-                continue
-            gl, gh = int(g_lo[g]), int(g_hi[g])
-            gt_g = hmm.ColFrame(
-                {**{c: sarr[c][gl:gh] for c in s_cols},
-                 "observ_prob": sobs[gl:gh]})
-            cands_g = hmm.ColFrame(
-                {"pid": cpid[cs:ce], "eid": ceid[cs:ce],
-                 "dist_p2c": dp[cs:ce], "len0": cl0[cs:ce],
-                 "len1": cl1[cs:ce], "observ_prob": obs_c[cs:ce]})
-            if g in decoded:
-                end_prob, rlist = decoded[g]
-            else:
-                end_prob, rlist = hmm.decode_sequence(cands_g, gt_g, cfg)
-            row.update(hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
-                                       dir_trans, collect_steps=True))
+        head = np.concatenate([[True], u[1:] != u[:-1]])
+        gid = np.cumsum(head) - 1
+        tag = pdf._tag.to_numpy()
+        col = {c: pdf[c].to_numpy() for c in c_cols + s_cols}
+        # candidates (url, pid, dist_p2c, eid); pairs (url, pid_0), stable
+        # so a layer keeps its arrival order
+        ci = np.flatnonzero(tag == 0)
+        ci = ci[np.lexsort((col["eid"][ci], col["dist_p2c"][ci],
+                            col["pid"][ci], gid[ci]))]
+        pi = np.flatnonzero(tag == 1)
+        pi = pi[np.lexsort((col["pid_0"][pi], gid[pi]))]
+        cand = {c: col[c][ci] for c in c_cols}
+        pairs = {c: col[c][pi] for c in s_cols}
+        # a pair whose (pid_1, eid_1) is no candidate gets right = -1:
+        # a NaN emission, as the per-url pandas merge gave
+        uniq, code, corder = key_index(gid[ci], cand["pid"], cand["eid"])
+        pos, hit = key_find(uniq, code, gid[pi], pairs["pid_1"],
+                            pairs["eid_1"])
+        pairs["right"] = np.where(hit, corder[pos], -1)
+        c_off = np.searchsorted(gid[ci], np.arange(gid[-1] + 2))
+        rows = _decode_stitch(u[head], c_off, cand, pairs, gid[pi], cfg,
+                              collect_steps=True)
+        for row in rows:
+            row.setdefault("steps", None)
+            row.setdefault("last_eid", None)
         return pd.DataFrame(rows).rename(columns={"epath": "epath0"})
 
     def op(batches):
@@ -552,7 +452,7 @@ class SpPayload:
     uniques, binary-search the composite key). Replaces the row-by-row
     python dict — build is one toPandas, lookup is O(log n) vectorized."""
 
-    __slots__ = ("o_u", "d_u", "key", "cost", "path_speed", "pcx", "pcy",
+    __slots__ = ("uniq", "key", "cost", "path_speed", "pcx", "pcy",
                  "pw", "pn", "epaths", "has_path")
 
     def __init__(self, sp_pdf: pd.DataFrame):
@@ -564,14 +464,8 @@ class SpPayload:
     def _index(self, sp_pdf: pd.DataFrame) -> np.ndarray:
         """Build the composite-key index and the numeric columns in key
         order; returns that order for the subclass-specific columns."""
-        o = sp_pdf.o_node.to_numpy(np.int64)
-        d = sp_pdf.d_node.to_numpy(np.int64)
-        self.o_u = np.unique(o)
-        self.d_u = np.unique(d)
-        key = (np.searchsorted(self.o_u, o).astype(np.int64) * len(self.d_u)
-               + np.searchsorted(self.d_u, d))
-        order = np.argsort(key)
-        self.key = key[order]
+        self.uniq, self.key, order = key_index(
+            sp_pdf.o_node.to_numpy(np.int64), sp_pdf.d_node.to_numpy(np.int64))
         for c in ("cost", "path_speed", "pcx", "pcy", "pw"):
             setattr(self, c, sp_pdf[c].to_numpy(np.float64)[order])
         self.pn = sp_pdf.pn.to_numpy(np.int64)[order]
@@ -579,18 +473,7 @@ class SpPayload:
 
     def locate(self, o_node: np.ndarray, d_node: np.ndarray):
         """(positions, hit_mask) for (o, d) query arrays — pure numpy."""
-        n = len(self.key)
-        if n == 0:
-            z = np.zeros(len(o_node), dtype=np.int64)
-            return z, np.zeros(len(o_node), dtype=bool)
-        o_r = np.searchsorted(self.o_u, o_node)
-        d_r = np.searchsorted(self.d_u, d_node)
-        o_ok = (o_r < len(self.o_u)) & (self.o_u[np.minimum(o_r, len(self.o_u) - 1)] == o_node)
-        d_ok = (d_r < len(self.d_u)) & (self.d_u[np.minimum(d_r, len(self.d_u) - 1)] == d_node)
-        key_q = o_r * len(self.d_u) + d_r
-        pos = np.searchsorted(self.key, key_q)
-        hit = o_ok & d_ok & (pos < n) & (self.key[np.minimum(pos, n - 1)] == key_q)
-        return np.minimum(pos, n - 1), hit
+        return key_find(self.uniq, self.key, o_node, d_node)
 
     def epath_of(self, o: int, d: int):
         pos, hit = self.locate(np.array([o], dtype=np.int64),
@@ -601,9 +484,9 @@ class SpPayload:
 def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
                  cfg: MatchConfig) -> pd.DataFrame:
     """Score EVERY trajectory of a sorted candidate frame in one set of
-    numpy passes (projection, emission, layer params, pair cross-product,
-    flags, sp gather, dist/dir probs), then run only the genuinely
-    sequential decode + stitch per trajectory over zero-copy slices.
+    numpy passes (projection, layer params, pair cross-product, flags, sp
+    gather, dist/dir probs), then decode and stitch them all through
+    _decode_stitch, the tail viterbi_match shares.
 
     ``pdf`` must be sorted (url, pid, dist_p2c, eid) with each url's rows
     complete and contiguous; the top-k cut per (url, pid) is applied here
@@ -612,45 +495,29 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
     mat, src, dst, dist, speed) / (dir_stats, node_xy)); ``spd`` the
     SpPayload. Shared verbatim by the staged fused matcher (fused_match),
     the one-pass pages matcher and the sharded matcher (both through
-    _probe_match) so the paths cannot drift.
-
-    Historical note: ran per url originally; at ~50-point trajectories the
-    fixed per-call numpy/pandas overhead was ~12 of ~18 core-ms per group
-    (profiled) — the kernels are identical row-for-row, so the numbers
-    are bitwise unchanged (the parity suite pins this)."""
-    from ..kernels.dir_stats import engine_dir_probs
+    _probe_match) so the paths cannot drift."""
     from ..kernels.geodesy import bearing_deg
     from ..kernels.linear_ref import project_core
 
-    dir_trans = cfg.dir_trans
     dist_eps, ratio_eps = cfg.flag_dist_eps, cfg.flag_ratio_eps
-    gps_sigma, gps_bias = cfg.gps_sigma, cfg.gps_bias
 
     # top-k per (url, pid): rows arrive sorted (url, pid, dist_p2c, eid),
-    # so candidate_join's row_number() <= k is rank-within-layer < k
-    u0 = pdf.url.to_numpy()
-    pp = pdf.pid.to_numpy()
-    head = np.concatenate(
-        [[True], (pp[1:] != pp[:-1]) | (u0[1:] != u0[:-1])])
-    starts = np.flatnonzero(head)
-    lens = np.diff(np.concatenate([starts, [len(pp)]]))
-    rank = np.arange(len(pp)) - np.repeat(starts, lens)
-    keep = rank < cfg.top_k
+    # so candidate_join's row_number() <= k is rank-within-layer < k; a
+    # layer's head row (rank 0) always survives the cut
+    u, pid = pdf.url.to_numpy(), pdf.pid.to_numpy()
+    newlayer = np.concatenate(
+        [[True], (pid[1:] != pid[:-1]) | (u[1:] != u[:-1])])
+    i = np.arange(len(pid))
+    keep = i - np.maximum.accumulate(np.where(newlayer, i, 0)) < cfg.top_k
     if not keep.all():
-        pdf = pdf.iloc[np.flatnonzero(keep)]
-
-    u = pdf.url.to_numpy()
+        pdf, newlayer = pdf.iloc[np.flatnonzero(keep)], newlayer[keep]
+        u, pid = pdf.url.to_numpy(), pdf.pid.to_numpy()
     n = len(pdf)
     bounds = np.flatnonzero(np.concatenate([[True], u[1:] != u[:-1], [True]]))
-    g_start, g_end = bounds[:-1], bounds[1:]
-    ngroups = len(g_start)
-    gid = np.repeat(np.arange(ngroups), g_end - g_start)
-
-    pid = pdf.pid.to_numpy()
+    gid = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
     eid = pdf.eid.to_numpy()
     x = pdf.x.to_numpy()
     y = pdf.y.to_numpy()
-    distp = pdf.dist_p2c.to_numpy()
 
     # per-candidate attrs + cut params re-derived from the broadcast
     # network (bitwise-identical to the refine stage's project_core)
@@ -662,18 +529,8 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
     src, dst = src_a[di], dst_a[di]
     dist, speed = dist_a[di], speed_a[di]
 
-    # emission recomputed with the shared numpy kernel (the JVM
-    # exp/sqrt differ in the last ulp — every float entering the
-    # decode must come from one library); per-group max via reduceat
-    # divides by the exact same scalar the per-group code used
-    dens = hmm.gaussian_emission(distp, gps_sigma, gps_bias)
-    gmax = np.maximum.reduceat(dens, g_start)
-    obs = hmm.observ_prob_from_density(dens, gmax[gid])
-
     # ---- layers: first row of each (url, pid) run ----
-    newlayer = np.concatenate(
-        [[True], (pid[1:] != pid[:-1]) | (u[1:] != u[:-1])])
-    lay_row = np.flatnonzero(newlayer)          # head row of each layer
+    lay_row = np.flatnonzero(newlayer)
     lay_gid = gid[lay_row]
     lay_pid = pid[lay_row]
     lay_end = np.concatenate([lay_row[1:], [n]])
@@ -721,90 +578,107 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
     o_node = np.where(flag1, src[R], dst[L])
     d_node = np.where(flag1, dst[L], src[R])
 
-    # ---- sp attach: one vectorized binary-search gather ----
+    # ---- sp attach (one vectorized binary-search gather) + scoring ----
     pos, hit = spd.locate(o_node, d_node)
-    cost = np.where(hit, spd.cost[pos], np.inf)
-    path_speed = np.where(hit, spd.path_speed[pos], 0.0)
-    pcx = np.where(hit, spd.pcx[pos], 0.0)
-    pcy = np.where(hit, spd.pcy[pos], 0.0)
-    pw = np.where(hit, spd.pw[pos], 0.0)
-    pn_path = np.where(hit, spd.pn[pos], 0)
-    has_path = hit & spd.has_path[pos]
-    d_euc = d_euc_l[K]
-    move_dir = move_dir_l[K]
+    pair = {"cost": np.where(hit, spd.cost[pos], np.inf),
+            "path_speed": np.where(hit, spd.path_speed[pos], 0.0),
+            "pcx": np.where(hit, spd.pcx[pos], 0.0),
+            "pcy": np.where(hit, spd.pcy[pos], 0.0),
+            "pw": np.where(hit, spd.pw[pos], 0.0),
+            "pn": np.where(hit, spd.pn[pos], 0),
+            "has_path": hit & spd.has_path[pos],
+            "step_0_len": step_0_len, "step_n_len": step_n_len,
+            "speed_0": speed[L], "speed_1": speed[R], "flag": flag,
+            "dist_0": dist_0, "d_euc": d_euc_l[K], "move_dir": move_dir_l[K],
+            "eid_0": e0, "seg_idx_0": segi[L], "ratio_0": rat[L],
+            "eid_1": e1, "seg_idx_1": segi[R], "ratio_1": rat[R],
+            "approx": approx, "o_node": o_node, "d_node": d_node}
+    avg_speed, d_sht, dist_prob, _, trans_prob = _transition_probs(
+        pair.__getitem__, stats, cfg.dir_trans)
 
-    avg_speed, d_sht, dist_prob, _ = hmm.score_base_np(
-        cost, step_0_len, step_n_len, speed[L], speed[R], path_speed,
-        flag, dist_0, d_euc)
-    if dir_trans:
-        dstats, (nids, nxy) = stats
-        dir_prob = engine_dir_probs(
-            dstats, e0, segi[L].astype(np.int64), rat[L],
-            e1, segi[R].astype(np.int64), rat[R],
-            approx, flag1, has_path, pcx, pcy, pw, pn_path, move_dir,
-            o_xy=nxy[np.searchsorted(nids, o_node)],
-            d_xy=nxy[np.searchsorted(nids, d_node)])
-        trans_prob = dist_prob * dir_prob
-    else:
-        trans_prob = dist_prob
+    pairs = {"pid_0": lay_pid[p0][K], "eid_0": e0, "eid_1": e1,
+             "flag": flag, "trans_prob": trans_prob, "dist_prob": dist_prob,
+             "d_sht": d_sht, "avg_speed": avg_speed,
+             "o_node": o_node, "d_node": d_node, "right": R}
+    cand = {"pid": pid, "eid": eid, "dist_p2c": pdf.dist_p2c.to_numpy(),
+            "len0": len0, "len1": len1}
+    return pd.DataFrame(_decode_stitch(
+        u[bounds[:-1]], bounds, cand, pairs, lay_gid[p0][K], cfg,
+        epath_lookup=spd.epath_of))
 
-    gt_cols = {"pid_0": lay_pid[p0][K], "eid_0": e0, "eid_1": e1,
-               "flag": flag, "observ_prob": obs[R],
-               "trans_prob": trans_prob, "dist_prob": dist_prob,
-               "d_sht": d_sht, "avg_speed": avg_speed,
-               "o_node": o_node, "d_node": d_node}
-    cand_cols = {"pid": pid, "eid": eid, "dist_p2c": distp,
-                 "observ_prob": obs, "len0": len0, "len1": len1}
-    pair_gid = lay_gid[p0][K]
-    # multi-layer groups in batch order + their pair-table spans
-    multi = np.unique(pair_gid)
-    plo = np.searchsorted(pair_gid, multi, side="left")
-    phi = np.searchsorted(pair_gid, multi, side="right")
-    pair_span = {int(g): (int(a), int(b)) for g, a, b in zip(multi, plo, phi)}
+
+def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
+                   cfg: MatchConfig, **stitch_kw) -> list[dict]:
+    """The decode tail of _match_frame and viterbi_match: emission,
+    Viterbi (lockstep beam, or classic per url) and stitch for every url
+    of a batch; one row dict per url, ``stitch_kw`` passed to
+    hmm.stitch_path. Url g's candidate rows are c_off[g]:c_off[g + 1]
+    of ``cand`` (pid, eid, dist_p2c, len0, len1), sorted (url, pid,
+    dist_p2c, eid). ``pairs`` (SCORED_COLS' decode columns) is sorted
+    (url, pid_0), ``pair_gid`` its url index, and ``right`` the row of
+    its (pid_1, eid_1) candidate, -1 if none (NaN emission). The
+    emission is recomputed in numpy (the JVM's exp/sqrt differ in the
+    last ulp) and normalized by the per-url max."""
+    ngroups = len(urls)
+    n_c = np.diff(c_off)
+    gid = np.repeat(np.arange(ngroups), n_c)
+    pid, eid = cand["pid"], cand["eid"]
+    dens = hmm.gaussian_emission(cand["dist_p2c"], cfg.gps_sigma,
+                                 cfg.gps_bias)
+    gmax = np.full(ngroups, np.nan)
+    ne = np.flatnonzero(n_c)
+    gmax[ne] = np.maximum.reduceat(dens, c_off[ne])
+    obs = hmm.observ_prob_from_density(dens, gmax[gid])
+    right = pairs["right"]
+    p_obs = np.full(len(right), np.nan)
+    p_obs[right >= 0] = obs[right[right >= 0]]
+
+    # candidate layers, and the pair-layers between consecutive ones
+    lay_row = np.flatnonzero((np.diff(gid, prepend=-1) != 0)
+                             | (np.diff(pid, prepend=-1) != 0))
+    lay_gid, lay_pid = gid[lay_row], pid[lay_row]
+    pair_off = np.flatnonzero((np.diff(pair_gid, prepend=-1) != 0)
+                              | (np.diff(pairs["pid_0"], prepend=-1) != 0))
+    plo = np.searchsorted(pair_gid, np.arange(ngroups))
+    phi = np.searchsorted(pair_gid, np.arange(ngroups), side="right")
+    has_pairs = phi > plo
+    multi = np.flatnonzero(has_pairs)
 
     decoded = {}
     if cfg.beam_search and len(multi):
-        # lockstep beam decode across every multi-layer trajectory
-        pl_gid_d = np.searchsorted(multi, lay_gid[p0])
-        n_steps = np.searchsorted(pl_gid_d, np.arange(len(multi)),
-                                  side="right") \
-            - np.searchsorted(pl_gid_d, np.arange(len(multi)))
-        m_mask = np.zeros(ngroups, dtype=bool)
-        m_mask[multi] = True
-        l0m = (pid == 0) & m_mask[gid]
-        l0_e = eid[l0m]
-        l0_p = obs[l0m]
+        pl_gid = np.searchsorted(multi, pair_gid[pair_off])
+        l0 = np.flatnonzero((pid == 0) & has_pairs[gid])
         l0_off = np.concatenate([[0], np.cumsum(np.bincount(
-            np.searchsorted(multi, gid[l0m]), minlength=len(multi)))])
+            np.searchsorted(multi, gid[l0]), minlength=len(multi)))])
         dec = hmm.viterbi_beam_lockstep(
-            pl_gid_d, off, tot, e0, e1,
-            trans_prob * obs[R], l0_e, l0_p, l0_off, n_steps, cfg)
+            pl_gid, pair_off, np.diff(np.append(pair_off, len(pair_gid))),
+            pairs["eid_0"], pairs["eid_1"], pairs["trans_prob"] * p_obs,
+            eid[l0], obs[l0], l0_off,
+            np.bincount(pl_gid, minlength=len(multi)), cfg)
         lay_lo = np.searchsorted(lay_gid, multi)
         for gi, (end_prob, ridx, reid) in enumerate(dec):
-            g = int(multi[gi])
-            pids = lay_pid[lay_lo[gi] + ridx]
-            decoded[g] = (end_prob,
-                          hmm.ColFrame({"pid": pids, "eid": reid}))
+            decoded[int(multi[gi])] = (end_prob, hmm.ColFrame(
+                {"pid": lay_pid[lay_lo[gi] + ridx], "eid": reid}))
 
-    # ---- per-trajectory decode (classic) / stitch over slices ----
-    rows = no_match_rows(u[g_start])
+    cand_cols = {**cand, "observ_prob": obs}
+    pair_cols = {**pairs, "observ_prob": p_obs}
+    rows = no_match_rows(urls)
     for g, row in enumerate(rows):
-        s, e = int(g_start[g]), int(g_end[g])
-        if g not in pair_span:
-            # single candidate layer -> nearest edge (rows are sorted
-            # (dist_p2c, eid) within the layer)
-            row.update(status=hmm.STATUS_ONE_POINT, epath=[int(eid[s])])
+        cs, ce = int(c_off[g]), int(c_off[g + 1])
+        if ce == cs:
             continue
-        ps, pe = pair_span[g]
-        cands_g = hmm.ColFrame({k: v[s:e] for k, v in cand_cols.items()})
-        gt_g = hmm.ColFrame({k: v[ps:pe] for k, v in gt_cols.items()})
-        if g in decoded:
-            end_prob, rlist = decoded[g]
-        else:
-            end_prob, rlist = hmm.decode_sequence(cands_g, gt_g, cfg)
+        if not has_pairs[g]:
+            # one candidate layer -> nearest edge (matching.py:170-178)
+            row.update(status=hmm.STATUS_ONE_POINT, epath=[int(eid[cs])])
+            continue
+        cands_g = hmm.ColFrame({k: v[cs:ce] for k, v in cand_cols.items()})
+        gt_g = hmm.ColFrame({k: v[plo[g]:phi[g]]
+                             for k, v in pair_cols.items()})
+        end_prob, rlist = decoded[g] if g in decoded \
+            else hmm.decode_sequence(cands_g, gt_g, cfg)
         row.update(hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
-                                   dir_trans, epath_lookup=spd.epath_of))
-    return pd.DataFrame(rows)
+                                   cfg.dir_trans, **stitch_kw))
+    return rows
 
 
 def _sp_payload_for(spark: SparkSession, net: Network,

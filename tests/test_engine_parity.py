@@ -125,17 +125,21 @@ def test_matched_parity_no_broadcast_index(spark, pages_df, net, cfg,
 def test_matched_parity_classic_decode(spark, pages_df, pages, net, cfg):
     """beam_search=False runs the classic full-lattice decode
     (viterbi.py:200-268 semantics) — engine must equal the oracle running
-    the same flag, and successful epaths must stay connected."""
+    the same flag, and successful epaths must stay connected. Checked on
+    the default plan and on the relational plan (sp_broadcast_max_rows=0,
+    viterbi_match), which share the decode tail."""
     from dataclasses import replace
     cfg0 = replace(cfg, beam_search=False)
     pts = extract_points(pages)
     want = {}
     for url, grp in pts.groupby("url"):
         want[url] = match_trajectory(grp[["x", "y"]].to_numpy(), net, cfg0)
-    got = match_pages(spark, pages_df, net, cfg0).toPandas().set_index("url")
-    _assert_matches_oracle(got, want)
-    n_success = (got.status == hmm.STATUS_SUCCESS).sum()
-    assert n_success >= 8
+    for run_cfg in (cfg0, replace(cfg0, sp_broadcast_max_rows=0)):
+        got = (match_pages(spark, pages_df, net, run_cfg)
+               .toPandas().set_index("url"))
+        _assert_matches_oracle(got, want)
+        n_success = (got.status == hmm.STATUS_SUCCESS).sum()
+        assert n_success >= 8
 
 
 def test_matched_statuses(spark, pages_df, net, cfg):
