@@ -37,6 +37,10 @@ STATUS_NO_CANDIDATES = 3
 STATUS_FAILED = 4
 STATUS_UNKNOWN = 99
 
+# the float columns of a matched row; all NaN/null when nothing matched
+METRIC_COLS = ("step_0", "step_n", "dist", "avg_speed", "prob", "norm_prob",
+               "dist_prob", "trans_prob", "dir_prob")
+
 FLAG_NORMAL = 0
 FLAG_SAME_SRC_FIRST = 1
 FLAG_SAME_SRC_LAST = 2
@@ -529,8 +533,8 @@ def viterbi_beam_lockstep(pl_gid, pair_off, pair_cnt, e0, e1, tp,
     index, state lookups use one composite-key searchsorted across all
     active trajectories, and the beam prune (threshold, (-prob, e1, e0)
     order, cap, first-per-e1 dedup) runs on the concatenated rows with
-    group-aware segmentation. The backward walk is likewise lockstep;
-    only the final epath list assembly is per-trajectory Python.
+    group-aware segmentation. The backward walk and the epath assembly
+    are likewise lockstep.
 
     Inputs (all numpy, pair layers sorted group-major then step-ascending;
     every consecutive-layer pair has >= 1 row — the fused matcher's pair
@@ -542,8 +546,9 @@ def viterbi_beam_lockstep(pl_gid, pair_off, pair_cnt, e0, e1, tp,
                       (dist_p2c, eid) row order; l0_off: offsets (ng+1)
       n_steps         transitions per group (= layer count - 1)
 
-    Returns per group: (end_prob, idx array, eid array) where idx is the
-    layer INDEX (caller maps to pids)."""
+    Returns flat arrays (w_off, idx, eid, end_prob): group g's epath is
+    idx/eid[w_off[g]:w_off[g + 1]], idx the layer INDEX (the caller maps
+    it to pids), empty with end_prob 0.0 when nothing was decoded."""
     ng = len(n_steps)
     maxT = int(n_steps.max()) if ng else 0
     M = np.int64(max(int(e1.max(initial=0)), int(e0.max(initial=0)),
@@ -642,10 +647,13 @@ def viterbi_beam_lockstep(pl_gid, pair_off, pair_cnt, e0, e1, tp,
         svals = wp[so]
 
     # ------------------------------------------------------- lockstep walk
+    # per group and step idx (descending) where the state looked up is
+    # found, one record (group, idx, cur, prev): cur that state, prev its
+    # back pointer
     S = np.full(ng, -1, dtype=np.int64)
     ep_sum = np.zeros(ng)
     ep_cnt = np.zeros(ng, dtype=np.int64)
-    rec = [None] * (maxT + 1)
+    rec = []
     for idx in range(maxT, 0, -1):
         wg, we1, wp, wb = steps[idx - 1]
         g_ids = np.flatnonzero(n_steps >= idx)
@@ -684,45 +692,37 @@ def viterbi_beam_lockstep(pl_gid, pair_off, pair_cnt, e0, e1, tp,
             else:
                 found = np.zeros(len(eng), dtype=bool)
                 prev_e0 = np.zeros(len(eng), dtype=np.int64)
-            rec[idx] = (g_ids[eng], S[g_ids[eng]].copy(),
-                        np.where(found, prev_e0, -1), found)
-            S[g_ids[eng]] = np.where(found, prev_e0, -1)
+            ge = g_ids[eng]
+            f = np.flatnonzero(found)
+            rec.append((ge[f], np.full(len(f), idx, np.int64), S[ge[f]],
+                        prev_e0[f]))
+            S[ge] = np.where(found, prev_e0, -1)
 
-    # ---------------------------------------- per-group epath assembly
-    # per-group sequences of (idx, cur, prev, found), idx descending
-    seqs: list[list] = [[] for _ in range(ng)]
-    for idx in range(maxT, 0, -1):
-        r = rec[idx]
-        if r is None:
-            continue
-        gg, cur, prev, fnd = r
-        for g, c, p, f in zip(gg.tolist(), cur.tolist(), prev.tolist(),
-                              fnd.tolist()):
-            seqs[g].append((idx, c, p, f))
-
-    out = []
-    for g in range(ng):
-        if ep_cnt[g] == 0:
-            out.append((0.0, np.empty(0, np.int64), np.empty(0, np.int64)))
-            continue
-        epath = []
-        for idx, c, p, f in seqs[g]:
-            if not f:
-                continue
-            cur = (idx, c)
-            if not epath or cur != epath[-1]:
-                epath.append(cur)
-            epath.append((idx - 1, p))
-        epath = epath[::-1]
-        end_prob = float(ep_sum[g] / ep_cnt[g])
-        out.append((end_prob,
-                    np.array([i for i, _ in epath], dtype=np.int64),
-                    np.array([e for _, e in epath], dtype=np.int64)))
-    return out
+    # ------------------------------------------------ flat epath assembly
+    # viterbi_beam's walk, for all groups at once: records group-major,
+    # idx descending; a record appends (idx, cur) unless that is the item
+    # the group's previous record appended last, then (idx - 1, prev);
+    # the group's items, reversed, are its epath
+    rg, ri, rc, rp = (np.concatenate(a) for a in zip(*rec)) if rec \
+        else (np.empty(0, np.int64),) * 4
+    o = np.argsort(rg, kind="stable")
+    rg, ri, rc, rp = rg[o], ri[o], rc[o], rp[o]
+    dup = np.zeros(len(rg), dtype=bool)
+    dup[1:] = (rg[1:] == rg[:-1]) & (ri[:-1] - 1 == ri[1:]) \
+        & (rp[:-1] == rc[1:])
+    keep = np.stack([~dup, np.ones_like(dup)], axis=1).ravel()
+    it_g = np.repeat(rg, 2)[keep][::-1]
+    it_i = np.stack([ri, ri - 1], axis=1).ravel()[keep][::-1]
+    it_e = np.stack([rc, rp], axis=1).ravel()[keep][::-1]
+    o = np.argsort(it_g, kind="stable")
+    w_off = np.concatenate([[0], np.cumsum(np.bincount(it_g, minlength=ng))])
+    end_prob = np.zeros(ng)
+    np.divide(ep_sum, ep_cnt, out=end_prob, where=ep_cnt > 0)
+    return w_off, it_i[o], it_e[o], end_prob
 
 
 class _ACol:
-    """Array-backed stand-in for a pandas column (decode/stitch only call
+    """Array-backed stand-in for a pandas column (the decode only calls
     .to_numpy())."""
     __slots__ = ("a",)
 
@@ -738,12 +738,12 @@ class _ACol:
 class ColFrame:
     """Minimal DataFrame stand-in over a dict of aligned numpy arrays.
 
-    decode_sequence / viterbi_* / stitch_path only read columns by
-    attribute and call .to_numpy() — the fused matcher feeds them
-    zero-copy slices of batch-level arrays through this shim instead of
-    constructing a fresh pandas frame per trajectory (measured ~2.3 ms of
-    pure BlockManager work per group). pandas inputs keep working: these
-    functions use the exact attribute surface this class provides."""
+    decode_sequence / viterbi_* only read columns by attribute, call
+    .to_numpy() and len() — the classic decode of _decode_stitch feeds
+    them zero-copy slices of batch-level arrays through this shim instead
+    of constructing a fresh pandas frame per trajectory (measured ~2.3 ms
+    of pure BlockManager work per group). pandas inputs keep working:
+    these functions use the exact attribute surface this class provides."""
     __slots__ = ("_d",)
 
     def __init__(self, d: dict):
@@ -755,17 +755,9 @@ class ColFrame:
         except KeyError:
             raise AttributeError(k)
 
-    @property
-    def columns(self):
-        return list(self._d)
-
     def __len__(self):
         d = self._d
         return len(next(iter(d.values()))) if d else 0
-
-    @property
-    def empty(self):
-        return len(self) == 0
 
 
 def decode_sequence(cands: pd.DataFrame, gt: pd.DataFrame,
@@ -782,17 +774,15 @@ def decode_sequence(cands: pd.DataFrame, gt: pd.DataFrame,
 
 def stitch_path(rlist: pd.DataFrame, gt: pd.DataFrame, cands: pd.DataFrame,
                 end_prob: float, cfg: MatchConfig = MatchConfig(),
-                dir_trans: bool = True, epath_lookup=None,
+                dir_trans: bool = True,
                 collect_steps: bool = False) -> dict:
-    """Assemble the final matched path + metrics (postprocess.py:13-97).
+    """Assemble one trajectory's matched path + metrics
+    (postprocess.py:13-97): the per-url reference of stitch_batch, which
+    the engine runs.
 
-    ``gt`` carries either an ``epath`` column (oracle path) or
-    (o_node, d_node, flag) + ``epath_lookup(o, d) -> list|None`` (engine
-    path — nested path arrays never ride through Arrow; they are fetched
-    from the broadcast sp table only for the <=L chosen steps).
-
-    ``collect_steps=True`` is the planet-scale variant: instead of looking
-    paths up it returns ``steps`` = [(o_node, d_node, need_path, eid), ...]
+    ``gt`` carries an ``epath`` column (each pair's sp path), or, with
+    ``collect_steps=True`` (the planet-scale variant), (o_node, d_node,
+    flag): instead of paths it returns ``steps`` = [(o_node, d_node, need_path, eid), ...]
     plus ``last_eid`` and leaves status=STATUS_UNKNOWN; a downstream
     relational stage joins the sp table, assembles + consecutive-dedups the
     epath and finalizes status (operators.matching.attach_epath_relational).
@@ -850,20 +840,17 @@ def stitch_path(rlist: pd.DataFrame, gt: pd.DataFrame, cands: pd.DataFrame,
     g_dsht, g_speed, g_distp, g_transp = (
         getattr(gt, c).to_numpy(dtype=np.float64)[rows]
         for c in ("d_sht", "avg_speed", "dist_prob", "trans_prob"))
-    if "epath" not in gt.columns:
+    if collect_steps:
         g_o, g_d, g_flag = (getattr(gt, c).to_numpy()[rows]
                             for c in ("o_node", "d_node", "flag"))
         need = g_flag != FLAG_SAME_SRC_FIRST
-    if collect_steps:
         res["steps"] = [(int(o), int(d), bool(n), int(a))
                         for o, d, n, a in zip(g_o, g_d, need, ka)]
         res["last_eid"] = int(r_eid[-1])
         _stitch_metrics(res, g_dsht, g_speed, g_distp, g_transp, end_prob,
                         len(rows), dir_trans)
         return res  # status stays STATUS_UNKNOWN: finalized relationally
-    g_ep = gt.epath.to_numpy(dtype=object)[rows] if "epath" in gt.columns \
-        else [epath_lookup(int(o), int(d)) if n else None
-              for o, d, n in zip(g_o, g_d, need)]
+    g_ep = gt.epath.to_numpy(dtype=object)[rows]
 
     eids = []
     for a, ep in zip(ka.tolist(), g_ep):
@@ -901,3 +888,174 @@ def _stitch_metrics(res: dict, g_dsht, g_speed, g_distp, g_transp,
     res["trans_prob"] = float(np.power(trans_prob, coef))
     if dir_trans:
         res["dir_prob"] = res["trans_prob"] / res["dist_prob"] if res["dist_prob"] else float("nan")
+
+
+def csr_take(flat: np.ndarray, off: np.ndarray, pos: np.ndarray,
+             hit: np.ndarray):
+    """Rows ``pos`` of the CSR (flat, off) as a new CSR; a row where
+    ``hit`` is False comes out empty."""
+    lens = np.zeros(len(pos), dtype=np.int64)
+    lens[hit] = off[pos[hit] + 1] - off[pos[hit]]
+    out_off = np.concatenate([[0], np.cumsum(lens)])
+    start = np.zeros(len(pos), dtype=np.int64)
+    start[hit] = off[pos[hit]]
+    idx = np.repeat(start - out_off[:-1], lens) + np.arange(out_off[-1])
+    return flat[idx], out_off
+
+
+def split_rows(flat: np.ndarray, off: np.ndarray) -> np.ndarray:
+    """Object array whose element i is flat[off[i]:off[i + 1]]."""
+    if len(off) < 2:
+        return np.empty(0, dtype=object)
+    return np.fromiter(np.split(flat, off[1:-1]), dtype=object,
+                       count=len(off) - 1)
+
+
+def segment_reduce(off: np.ndarray, *terms) -> list[np.ndarray]:
+    """Per-segment ``fn(v[off[i]:off[i + 1]])`` for each (fn, v) term
+    (fn np.sum or np.prod; segments non-empty). The segments of one
+    length are reduced as the rows of one 2-D array, which numpy sums
+    in the same pairwise order as a 1-D call, so every result is
+    bitwise what the per-segment call returns (np.add.reduceat is not)."""
+    lens = np.diff(off)
+    outs = [np.empty(len(lens)) for _ in terms]
+    for n in np.unique(lens):
+        segs = np.flatnonzero(lens == n)
+        ix = off[segs][:, None] + np.arange(n)
+        for out, (fn, v) in zip(outs, terms):
+            out[segs] = fn(v[ix], axis=1)
+    return outs
+
+
+def stitch_batch(gid: np.ndarray, w_off: np.ndarray, w_pid: np.ndarray,
+                 w_eid: np.ndarray, end_prob: np.ndarray, cands: dict,
+                 pairs: dict, cfg: MatchConfig = MatchConfig(),
+                 dir_trans: bool = True, paths=None) -> dict:
+    """stitch_path for many trajectories at once, result for result the
+    same (tests/test_stitch_batch.py pins it url by url).
+
+    Trajectory k is group gid[k]; its winning states are
+    w_pid/w_eid[w_off[k]:w_off[k + 1]] (layer order) with end_prob[k].
+    ``cands`` (gid, pid, eid, len0, len1) and ``pairs`` (gid, pid_0,
+    eid_0, eid_1, flag, o_node, d_node, d_sht, avg_speed, dist_prob,
+    trans_prob) hold the rows of every group. ``paths(o, d)`` returns
+    the sp paths of the (o, d) arrays as CSR (flat eids, offsets), empty
+    where there is none. ``paths=None`` is stitch_path's collect_steps
+    mode: the ``steps`` and ``last_eid`` columns instead of epaths.
+
+    Returns one array per output column (status, epath, METRIC_COLS),
+    epath an object array of int64 arrays (None where stitch_path gives
+    None)."""
+    m = len(gid)
+    n_w = np.diff(w_off)
+    state_g = np.repeat(np.arange(m), n_w)
+    out = {"status": np.full(m, STATUS_FAILED, dtype=np.int64),
+           **{c: np.full(m, np.nan) for c in METRIC_COLS}}
+    out["prob"][:] = end_prob
+    if paths is None:
+        out["steps"] = np.full(m, None, dtype=object)
+        out["last_eid"] = np.full(m, np.nan)
+
+    # first/last cut params: one composite-key lookup for every group
+    won = np.flatnonzero(n_w > 0)
+    ends = np.concatenate([w_off[won], w_off[won + 1] - 1])
+    uniq, code, corder = key_index(cands["gid"], cands["pid"], cands["eid"])
+    pos, hit = key_find(uniq, code, np.tile(gid[won], 2), w_pid[ends],
+                        w_eid[ends])
+    if not hit.all():
+        raise KeyError("winning state with no candidate row")
+    r = corder[pos]
+    l0 = cands["len0"][r].astype(np.float64)
+    cut = l0 / (l0 + cands["len1"][r].astype(np.float64))
+    out["step_0"][won], out["step_n"][won] = cut[:len(won)], cut[len(won):]
+
+    by_prob = np.where(end_prob < cfg.prob_thres, STATUS_FAILED,
+                       STATUS_SAME_LINK)
+    single = np.flatnonzero(n_w == 1)
+    out["status"][single] = by_prob[single]
+
+    # winning-step pair rows: one composite-key lookup for every step;
+    # a group with a missing step stays FAILED without a path
+    st = np.flatnonzero(state_g[1:] == state_g[:-1])   # state -> next
+    uniq, code, corder = key_index(pairs["gid"], pairs["pid_0"],
+                                   pairs["eid_0"], pairs["eid_1"])
+    pos, hit = key_find(uniq, code, gid[state_g[st]], w_pid[st], w_eid[st],
+                        w_eid[st + 1])
+    ok_g = np.zeros(m, dtype=bool)
+    ok_g[n_w >= 2] = True
+    ok_g[state_g[st[~hit]]] = False
+    ok = np.flatnonzero(ok_g)
+    st_ok = ok_g[state_g[st]]
+    st, rows = st[st_ok], corder[pos[st_ok]]
+    st_off = np.concatenate([[0], np.cumsum(n_w[ok] - 1)])
+
+    # metrics of every ok group (_stitch_metrics)
+    d_sht, speed, dist_p, trans_p = (
+        pairs[c][rows].astype(np.float64)
+        for c in ("d_sht", "avg_speed", "dist_prob", "trans_prob"))
+    dist, sw, dp, tp = segment_reduce(
+        st_off, (np.sum, d_sht), (np.sum, speed * d_sht),
+        (np.prod, dist_p), (np.prod, trans_p))
+    coef = 1.0 / (n_w[ok] - 1)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        metrics = {"dist": dist,
+                   "avg_speed": np.where(dist > 0, sw / dist, np.nan),
+                   "norm_prob": np.power(end_prob[ok], coef),
+                   "dist_prob": np.power(dp, coef),
+                   "trans_prob": np.power(tp, coef)}
+        if dir_trans:
+            metrics["dir_prob"] = np.where(
+                metrics["dist_prob"] != 0,
+                metrics["trans_prob"] / metrics["dist_prob"], np.nan)
+
+    o_node = pairs["o_node"][rows]
+    d_node = pairs["d_node"][rows]
+    need = pairs["flag"][rows] != FLAG_SAME_SRC_FIRST
+    if paths is None:
+        for c, v in metrics.items():
+            out[c][ok] = v
+        out["status"][ok] = STATUS_UNKNOWN
+        out["last_eid"][ok] = w_eid[w_off[ok + 1] - 1]
+        steps = np.fromiter(zip(o_node.tolist(), d_node.tolist(),
+                                need.tolist(), w_eid[st].tolist()),
+                            dtype=object, count=len(st))
+        out["steps"][ok] = split_rows(steps, st_off)
+        ep_g, ep_e = single, w_eid[w_off[single]]
+    else:
+        # full sequence per ok group: each winning state's eid, then (a
+        # step, not the last state) its sp path unless SAME_SRC_FIRST,
+        # then a consecutive dedup within the group
+        ok_state = np.flatnonzero(ok_g[state_g])
+        plen = np.zeros(len(w_eid), dtype=np.int64)
+        p_flat, p_off = paths(o_node[need], d_node[need])
+        plen[st[need]] = np.diff(p_off)
+        seg = 1 + plen[ok_state]
+        head = np.zeros(int(seg.sum()), dtype=bool)
+        head[np.cumsum(seg) - seg] = True
+        seq = np.empty(len(head), dtype=np.int64)
+        seq[head] = w_eid[ok_state]
+        seq[~head] = p_flat
+        seq_g = np.repeat(state_g[ok_state], seg)
+        keep = np.ones(len(seq), dtype=bool)
+        keep[1:] = (seq_g[1:] != seq_g[:-1]) | (seq[1:] != seq[:-1])
+        seq, seq_g = seq[keep], seq_g[keep]
+        # a path that dedups to one edge is SAME_LINK (or FAILED) with
+        # the step metrics left NaN
+        linked = np.bincount(seq_g, minlength=m)[ok] > 1
+        one = ok[~linked]
+        out["status"][one] = by_prob[one]
+        for c, v in metrics.items():
+            out[c][ok[linked]] = v[linked]
+        out["status"][ok[linked]] = np.where(
+            metrics["trans_prob"][linked] < cfg.prob_thres, STATUS_FAILED,
+            STATUS_SUCCESS)
+        ep_g = np.concatenate([single, seq_g])
+        ep_e = np.concatenate([w_eid[w_off[single]], seq])
+
+    # one split of every group's epath items; no items -> None
+    order = np.argsort(ep_g, kind="stable")
+    cnt = np.bincount(ep_g, minlength=m)
+    out["epath"] = split_rows(ep_e[order].astype(np.int64),
+                              np.concatenate([[0], np.cumsum(cnt)]))
+    out["epath"][cnt == 0] = None
+    return out

@@ -21,11 +21,16 @@ Relational tail (Spark lifecycle of ST_Matching.matching, SURVEY.md §3.1):
   epath  : equi-join of the winning steps with the sp table
 
 Both routes end in one decode tail, _decode_stitch: per-url-max
-emission, lockstep beam (or classic) Viterbi and path stitch over every
-trajectory of a batch. _match_frame calls it with sp paths looked up
-from the broadcast payload, viterbi_match with the winning steps
-collected for attach_epath_relational. Both score transitions with
-_transition_probs.
+emission, lockstep beam (or classic) Viterbi and one batched stitch
+(hmm.stitch_batch) over every trajectory of a batch, in flat arrays:
+the winning states come back from viterbi_beam_lockstep as offsets +
+(layer, eid), the winning pair rows are one composite-key lookup, the
+sp paths one gather from the payload's CSR path arrays (SpPayload.paths)
+and the metrics per-url segment reductions. _match_frame calls it with
+the broadcast payload's paths, viterbi_match with none, emitting the
+winning steps for attach_epath_relational. Both score transitions with
+_transition_probs. hmm.stitch_path stays as the per-url reference (the
+oracle's stitch and the differential tests' baseline).
 """
 
 from __future__ import annotations
@@ -54,9 +59,7 @@ log = logging.getLogger(__name__)
 MATCHED_SCHEMA = ("url string, status int, epath array<long>, step_0 double, "
                   "step_n double, dist double, avg_speed double, prob double, "
                   "norm_prob double, dist_prob double, trans_prob double, dir_prob double")
-# the float columns of a matched row; all NaN/null when nothing matched
-METRIC_COLS = ("step_0", "step_n", "dist", "avg_speed", "prob", "norm_prob",
-               "dist_prob", "trans_prob", "dir_prob")
+METRIC_COLS = hmm.METRIC_COLS
 
 # planet-scale variant: the cogroup emits the winning transition steps
 # instead of expanded paths; attach_epath_relational joins the sp table and
@@ -293,12 +296,8 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
                             pairs["eid_1"])
         pairs["right"] = np.where(hit, corder[pos], -1)
         c_off = np.searchsorted(gid[ci], np.arange(gid[-1] + 2))
-        rows = _decode_stitch(u[head], c_off, cand, pairs, gid[pi], cfg,
-                              collect_steps=True)
-        for row in rows:
-            row.setdefault("steps", None)
-            row.setdefault("last_eid", None)
-        return pd.DataFrame(rows).rename(columns={"epath": "epath0"})
+        return _decode_stitch(u[head], c_off, cand, pairs, gid[pi],
+                              cfg).rename(columns={"epath": "epath0"})
 
     def op(batches):
         for pdf in url_batches(batches):
@@ -449,17 +448,23 @@ def sp_demands(cands: DataFrame, edge_attrs: DataFrame,
 class SpPayload:
     """Columnar shortest-path table for broadcast: (o, d) lookups are
     vectorized numpy gathers (rank-encode o and d against their sorted
-    uniques, binary-search the composite key). Replaces the row-by-row
-    python dict — build is one toPandas, lookup is O(log n) vectorized."""
+    uniques, binary-search the composite key). The paths are stored
+    once as CSR arrays (ep_flat eids, ep_off offsets in key order), so
+    the stitch gathers every path of a batch in one call (paths)."""
 
     __slots__ = ("uniq", "key", "cost", "path_speed", "pcx", "pcy",
-                 "pw", "pn", "epaths", "has_path")
+                 "pw", "pn", "ep_flat", "ep_off", "has_path")
 
     def __init__(self, sp_pdf: pd.DataFrame):
         order = self._index(sp_pdf)
-        self.epaths = eps = sp_pdf.epath.to_numpy()[order]
-        self.has_path = np.array([e is not None and len(e) > 0 for e in eps],
-                                 dtype=bool)
+        eps = sp_pdf.epath.to_numpy()[order]
+        lens = np.fromiter((0 if e is None else len(e) for e in eps),
+                           dtype=np.int64, count=len(eps))
+        self.ep_off = np.concatenate([[0], np.cumsum(lens)])
+        self.ep_flat = np.concatenate(
+            [np.empty(0, np.int64)]
+            + [np.asarray(e, dtype=np.int64) for e in eps[lens > 0]])
+        self.has_path = lens > 0
 
     def _index(self, sp_pdf: pd.DataFrame) -> np.ndarray:
         """Build the composite-key index and the numeric columns in key
@@ -475,10 +480,11 @@ class SpPayload:
         """(positions, hit_mask) for (o, d) query arrays — pure numpy."""
         return key_find(self.uniq, self.key, o_node, d_node)
 
-    def epath_of(self, o: int, d: int):
-        pos, hit = self.locate(np.array([o], dtype=np.int64),
-                               np.array([d], dtype=np.int64))
-        return self.epaths[pos[0]] if hit[0] else None
+    def paths(self, o_node: np.ndarray, d_node: np.ndarray):
+        """The sp paths of the (o, d) query arrays as CSR (flat eids,
+        offsets); a pair missing from the table has an empty path."""
+        return hmm.csr_take(self.ep_flat, self.ep_off,
+                        *self.locate(o_node, d_node))
 
 
 def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
@@ -602,23 +608,26 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
              "o_node": o_node, "d_node": d_node, "right": R}
     cand = {"pid": pid, "eid": eid, "dist_p2c": pdf.dist_p2c.to_numpy(),
             "len0": len0, "len1": len1}
-    return pd.DataFrame(_decode_stitch(
-        u[bounds[:-1]], bounds, cand, pairs, lay_gid[p0][K], cfg,
-        epath_lookup=spd.epath_of))
+    return _decode_stitch(u[bounds[:-1]], bounds, cand, pairs,
+                          lay_gid[p0][K], cfg, spd.paths)
 
 
 def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
-                   cfg: MatchConfig, **stitch_kw) -> list[dict]:
+                   cfg: MatchConfig, paths=None) -> pd.DataFrame:
     """The decode tail of _match_frame and viterbi_match: emission,
-    Viterbi (lockstep beam, or classic per url) and stitch for every url
-    of a batch; one row dict per url, ``stitch_kw`` passed to
-    hmm.stitch_path. Url g's candidate rows are c_off[g]:c_off[g + 1]
-    of ``cand`` (pid, eid, dist_p2c, len0, len1), sorted (url, pid,
-    dist_p2c, eid). ``pairs`` (SCORED_COLS' decode columns) is sorted
-    (url, pid_0), ``pair_gid`` its url index, and ``right`` the row of
-    its (pid_1, eid_1) candidate, -1 if none (NaN emission). The
-    emission is recomputed in numpy (the JVM's exp/sqrt differ in the
-    last ulp) and normalized by the per-url max."""
+    Viterbi (lockstep beam, or classic per url) and one batched stitch
+    (hmm.stitch_batch) over every url of a batch; one MATCHED_SCHEMA row
+    per url. ``paths`` is the sp payload's CSR path lookup
+    (SpPayload.paths); with None the rows carry MATCHED_PRE_SCHEMA's
+    winning steps (steps, last_eid) instead of expanded paths.
+
+    Url g's candidate rows are c_off[g]:c_off[g + 1] of ``cand`` (pid,
+    eid, dist_p2c, len0, len1), sorted (url, pid, dist_p2c, eid).
+    ``pairs`` (SCORED_COLS' decode columns) is sorted (url, pid_0),
+    ``pair_gid`` its url index, and ``right`` the row of its (pid_1,
+    eid_1) candidate, -1 if none (NaN emission). The emission is
+    recomputed in numpy (the JVM's exp/sqrt differ in the last ulp) and
+    normalized by the per-url max."""
     ngroups = len(urls)
     n_c = np.diff(c_off)
     gid = np.repeat(np.arange(ngroups), n_c)
@@ -644,41 +653,56 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
     has_pairs = phi > plo
     multi = np.flatnonzero(has_pairs)
 
-    decoded = {}
-    if cfg.beam_search and len(multi):
+    # winning states of every multi-layer url as flat arrays
+    if cfg.beam_search:
         pl_gid = np.searchsorted(multi, pair_gid[pair_off])
         l0 = np.flatnonzero((pid == 0) & has_pairs[gid])
         l0_off = np.concatenate([[0], np.cumsum(np.bincount(
             np.searchsorted(multi, gid[l0]), minlength=len(multi)))])
-        dec = hmm.viterbi_beam_lockstep(
+        w_off, w_idx, w_eid, end_prob = hmm.viterbi_beam_lockstep(
             pl_gid, pair_off, np.diff(np.append(pair_off, len(pair_gid))),
             pairs["eid_0"], pairs["eid_1"], pairs["trans_prob"] * p_obs,
             eid[l0], obs[l0], l0_off,
             np.bincount(pl_gid, minlength=len(multi)), cfg)
         lay_lo = np.searchsorted(lay_gid, multi)
-        for gi, (end_prob, ridx, reid) in enumerate(dec):
-            decoded[int(multi[gi])] = (end_prob, hmm.ColFrame(
-                {"pid": lay_pid[lay_lo[gi] + ridx], "eid": reid}))
+        w_pid = lay_pid[np.repeat(lay_lo, np.diff(w_off)) + w_idx]
+    else:
+        cand_cols = {**cand, "observ_prob": obs}
+        pair_cols = {**pairs, "observ_prob": p_obs}
+        dec = [hmm.decode_sequence(
+            hmm.ColFrame({k: v[c_off[g]:c_off[g + 1]]
+                          for k, v in cand_cols.items()}),
+            hmm.ColFrame({k: v[plo[g]:phi[g]]
+                          for k, v in pair_cols.items()}), cfg)
+            for g in multi]
+        end_prob = np.array([p for p, _ in dec], dtype=np.float64)
+        w_off = np.concatenate([[0], np.cumsum([len(r) for _, r in dec],
+                                               dtype=np.int64)])
+        w_pid, w_eid = (np.concatenate([np.empty(0, np.int64)] + [
+            getattr(r, c).to_numpy().astype(np.int64) for _, r in dec])
+            for c in ("pid", "eid"))
 
-    cand_cols = {**cand, "observ_prob": obs}
-    pair_cols = {**pairs, "observ_prob": p_obs}
-    rows = no_match_rows(urls)
-    for g, row in enumerate(rows):
-        cs, ce = int(c_off[g]), int(c_off[g + 1])
-        if ce == cs:
-            continue
-        if not has_pairs[g]:
-            # one candidate layer -> nearest edge (matching.py:170-178)
-            row.update(status=hmm.STATUS_ONE_POINT, epath=[int(eid[cs])])
-            continue
-        cands_g = hmm.ColFrame({k: v[cs:ce] for k, v in cand_cols.items()})
-        gt_g = hmm.ColFrame({k: v[plo[g]:phi[g]]
-                             for k, v in pair_cols.items()})
-        end_prob, rlist = decoded[g] if g in decoded \
-            else hmm.decode_sequence(cands_g, gt_g, cfg)
-        row.update(hmm.stitch_path(rlist, gt_g, cands_g, end_prob, cfg,
-                                   cfg.dir_trans, **stitch_kw))
-    return rows
+    st = hmm.stitch_batch(
+        multi, w_off, w_pid, w_eid, end_prob,
+        {"gid": gid, **cand}, {"gid": pair_gid, **pairs}, cfg,
+        cfg.dir_trans, paths)
+
+    # no candidates: status 3; one candidate layer: the nearest edge
+    # (matching.py:170-178); more: the stitch
+    out = {"url": urls,
+           "status": np.full(ngroups, hmm.STATUS_NO_CANDIDATES, np.int64),
+           "epath": np.full(ngroups, None, dtype=object),
+           **{c: np.full(ngroups, np.nan) for c in METRIC_COLS}}
+    if paths is None:
+        out["steps"] = np.full(ngroups, None, dtype=object)
+        out["last_eid"] = np.full(ngroups, np.nan)
+    one = np.flatnonzero((n_c > 0) & ~has_pairs)
+    out["status"][one] = hmm.STATUS_ONE_POINT
+    out["epath"][one] = hmm.split_rows(eid[c_off[one]].astype(np.int64),
+                                       np.arange(len(one) + 1))
+    for c, v in st.items():
+        out[c][multi] = v
+    return pd.DataFrame(out)
 
 
 def _sp_payload_for(spark: SparkSession, net: Network,
@@ -838,9 +862,9 @@ def fused_match(spark: SparkSession, cands: DataFrame,
     pandas constructions per trajectory), this streams whole Arrow batches
     of MANY trajectories through one mapInPandas (cut at url boundaries
     by url_batches) and slices groups in numpy. Numeric semantics are
-    identical: the same score_base_np / engine_dir_probs / viterbi_beam /
-    stitch_path kernels run either way (the parity suite pins this
-    against the oracle).
+    the oracle's: score_base_np / engine_dir_probs, the lockstep twin of
+    viterbi_beam and the batch twin of stitch_path (the parity suite
+    pins this against the oracle).
 
     ``sp`` is the memoized SpPayload or a sp DataFrame, collected here.
     Urls with no candidates never enter this stage — the caller re-attaches

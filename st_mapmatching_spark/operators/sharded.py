@@ -36,8 +36,9 @@ never silently degrades):
   path — costs, tie-breaks ((cost, node) heap order) and therefore
   epaths are IDENTICAL to the full-network Dijkstra. Winning-step epaths
   are reconstructed in-kernel by the same bounded_dijkstra on the same
-  expanded adjacency (only for the <= n_points winning steps per
-  trajectory, so path storage never rides in the payload).
+  expanded adjacency (RegionSpPayload.paths: one search per distinct
+  origin of a batch's winning steps, so path storage never rides in the
+  payload).
 
 Scale envelope: payload rows ~= region_nodes x pairs_within(sp_pair_max);
 on real road networks (node spacing >= 100 m) with sp_pair_max ~1 km this
@@ -58,6 +59,7 @@ from pyspark.sql import functions as F
 from ..config import M_PER_DEG, MatchConfig
 from ..graph.dijkstra import _epath, bounded_dijkstra, shortest_paths_to_targets
 from ..graph.network import Network
+from ..kernels.hmm import csr_take
 from .matching import (MATCHED_SCHEMA, SpPayload, _probe_match, match_pages,
                        no_match_rows)
 
@@ -75,7 +77,7 @@ def _region_key(rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
 
 
 class RegionSpPayload(SpPayload):
-    """SpPayload backed by cost/stat columns only: epaths are
+    """SpPayload backed by cost/stat columns only: paths are
     reconstructed on demand by bounded Dijkstra over the region's expanded
     adjacency (exact — see module invariants). Keeps path storage out of
     the broadcast payload entirely."""
@@ -88,15 +90,34 @@ class RegionSpPayload(SpPayload):
         self.adj = adj
         self.max_dist = max_dist
 
-    def epath_of(self, o: int, d: int):
-        if o == d:
-            return None
-        cost, prev, settled = bounded_dijkstra(self.adj, int(o),
-                                               self.max_dist, {int(d)})
-        if int(d) not in settled:
-            return None
-        ep = _epath(prev, int(d))
-        return ep if ep else None
+    def paths(self, o_node: np.ndarray, d_node: np.ndarray):
+        """SpPayload.paths by search: one bounded Dijkstra per distinct
+        origin, toward that origin's distinct targets. A settled node's
+        back pointers never change, so each path equals the one a
+        single-target search finds; o == d and unreached targets get an
+        empty path."""
+        if not len(o_node):
+            return np.empty(0, np.int64), np.zeros(1, np.int64)
+        od, inv = np.unique(np.stack([o_node, d_node], axis=1).astype(
+            np.int64), axis=0, return_inverse=True)
+        found = []
+        bounds = np.flatnonzero(np.diff(od[:, 0], prepend=od[0, 0] - 1,
+                                        append=od[-1, 0] + 1))
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            o, tgts = int(od[lo, 0]), od[lo:hi, 1].tolist()
+            want = {t for t in tgts if t != o}
+            settled, prev = set(), {}
+            if want:
+                _, prev, settled = bounded_dijkstra(self.adj, o,
+                                                    self.max_dist, want)
+            found.extend(_epath(prev, t) if t in want and t in settled
+                         else [] for t in tgts)
+        lens = np.fromiter(map(len, found), dtype=np.int64, count=len(found))
+        flat = np.fromiter((e for ep in found for e in ep), dtype=np.int64,
+                           count=int(lens.sum()))
+        inv = inv.ravel()
+        return csr_take(flat, np.concatenate([[0], np.cumsum(lens)]), inv,
+                        np.ones(len(inv), dtype=bool))
 
 
 def _network_flat(net: Network) -> dict:

@@ -11,7 +11,9 @@ can run it inside `mapInPandas` over Arrow batches.
 from __future__ import annotations
 
 import re
+from itertools import chain
 
+import numpy as np
 import pandas as pd
 
 GEO_LINE = re.compile(r"^GEO (\d+) (-?\d+\.\d+) (-?\d+\.\d+) (\d+)$", re.MULTILINE)
@@ -21,15 +23,18 @@ def extract_points(pages: pd.DataFrame) -> pd.DataFrame:
     """pages(url, text, ...) -> points(url, pid_raw, x, y, t_epoch).
 
     ``pid_raw`` preserves the in-page order (the GEO index); downstream
-    stages re-densify to 0..n-1 after simplification. Uses
-    Series.str.extractall (C regex loop over the whole Arrow batch — no
-    per-row Python).
+    stages re-densify to 0..n-1 after simplification. One C regex scan
+    per page (``findall``; a non-string text has no points), then one
+    numpy conversion of every captured field of the batch.
     """
-    hits = pages.set_index("url")["text"].str.extractall(GEO_LINE)
-    hits.columns = ["pid_raw", "x", "y", "t_epoch"]
-    hits = hits.reset_index(level=0).reset_index(drop=True)
-    hits["pid_raw"] = hits.pid_raw.astype("int64")
-    hits["x"] = hits.x.astype("float64")
-    hits["y"] = hits.y.astype("float64")
-    hits["t_epoch"] = hits.t_epoch.astype("int64")
-    return hits.sort_values(["url", "pid_raw"]).reset_index(drop=True)
+    found = [GEO_LINE.findall(t) if isinstance(t, str) else []
+             for t in pages["text"].to_numpy()]
+    n = np.fromiter(map(len, found), dtype=np.int64, count=len(found))
+    fields = np.array(list(chain.from_iterable(found)),
+                      dtype=object).reshape(-1, 4)
+    pts = pd.DataFrame({"url": np.repeat(pages["url"].to_numpy(), n),
+                        "pid_raw": fields[:, 0].astype(np.int64),
+                        "x": fields[:, 1].astype(np.float64),
+                        "y": fields[:, 2].astype(np.float64),
+                        "t_epoch": fields[:, 3].astype(np.int64)})
+    return pts.sort_values(["url", "pid_raw"]).reset_index(drop=True)

@@ -1,0 +1,364 @@
+"""Differential test: the batched decode tail (_decode_stitch ->
+hmm.stitch_batch) against the per-url reference hmm.stitch_path, url by
+url, with sp paths from an SpPayload and in collect_steps mode. Every
+output column must match exactly: the batch sums each url's steps in
+the order np.sum does (hmm.segment_reduce)."""
+
+from dataclasses import replace
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from st_mapmatching_spark.config import MatchConfig
+from st_mapmatching_spark.graph.dijkstra import _epath, bounded_dijkstra
+from st_mapmatching_spark.kernels import hmm
+from st_mapmatching_spark.kernels.keys import key_find, key_index
+from st_mapmatching_spark.operators.matching import (METRIC_COLS,
+                                                     SpPayload,
+                                                     _decode_stitch,
+                                                     no_match_rows)
+from test_viterbi_lockstep import _random_case
+from test_viterbi_match_batched import _mk_inputs
+
+CFG = MatchConfig()
+N_NODES = 12
+
+
+def _sp_table(rng):
+    """sp rows over N_NODES x N_NODES (o, d) pairs, ~15% of them missing
+    (an sp miss), paths None, empty or 1-4 eids of the candidates'
+    range (so consecutive-dedup fires). Returns (SpPayload, {(o, d): path})."""
+    rows, paths = [], {}
+    for o in range(N_NODES):
+        for d in range(N_NODES):
+            if rng.random() < 0.15:
+                continue
+            r = rng.random()
+            ep = None if r < 0.2 else [] if r < 0.3 else \
+                [int(e) for e in rng.integers(100, 106, rng.integers(1, 5))]
+            paths[(o, d)] = ep
+            rows.append((o, d, 0.0, 0.0, 0.0, 0.0, 0.0, 0, ep))
+    pdf = pd.DataFrame(rows, columns=["o_node", "d_node", "cost",
+                                      "path_speed", "pcx", "pcy", "pw",
+                                      "pn", "epath"])
+    return SpPayload(pdf), paths
+
+
+def _augment(rng, cands, pairs):
+    """Fill in the decode columns a generator leaves out: cut lengths,
+    pid_1, flags (some SAME_SRC_FIRST / SAME_SRC_LAST), step metrics
+    (some zero d_sht) and sp nodes within the sp table's range."""
+    cands = cands.copy()
+    pairs = pairs.copy()
+    n, k = len(cands), len(pairs)
+    if "len0" not in cands:
+        cands["len0"] = rng.random(n) * 100
+        cands["len1"] = rng.random(n) * 100
+    if "pid_1" not in pairs:
+        nxt = {}
+        for u, g in cands.groupby("url"):
+            p = np.sort(g.pid.unique())
+            nxt.update({(u, a): b for a, b in zip(p[:-1], p[1:])})
+        pairs["pid_1"] = [nxt[(u, p)] for u, p in zip(pairs.url, pairs.pid_0)]
+    r = rng.random(k)
+    pairs["flag"] = np.where(r < 0.15, hmm.FLAG_SAME_SRC_FIRST,
+                             np.where(r < 0.2, hmm.FLAG_SAME_SRC_LAST,
+                                      hmm.FLAG_NORMAL))
+    pairs["dist_prob"] = rng.random(k)
+    pairs["d_sht"] = np.where(rng.random(k) < 0.1, 0.0, rng.random(k) * 300)
+    pairs["avg_speed"] = rng.random(k) * 20
+    pairs["o_node"] = rng.integers(0, N_NODES, k)
+    pairs["d_node"] = rng.integers(0, N_NODES, k)
+    return cands, pairs
+
+
+def _lockstep_inputs(rng, ngroups):
+    """test_viterbi_lockstep's adversarial lattices (NaN transitions,
+    HMM breaks, missing layer 0, ties) as flat url-keyed frames."""
+    cs, gs = [], []
+    for g, (c, gt) in enumerate(_random_case(
+            np.random.RandomState(int(rng.integers(1 << 30))), ngroups)):
+        cs.append(c.drop(columns="observ_prob").assign(url=f"g{g:03d}"))
+        gs.append(gt.drop(columns="observ_prob").assign(url=f"g{g:03d}"))
+    return _augment(rng, pd.concat(cs, ignore_index=True),
+                    pd.concat(gs, ignore_index=True))
+
+
+def _batched(cands, pairs, cfg, paths, extra_urls=()):
+    """_decode_stitch over the whole batch, laid out as the matcher
+    feeds it; ``extra_urls`` have no candidates (status 3)."""
+    urls = np.array(sorted(set(cands.url) | set(extra_urls)), dtype=object)
+    c = cands.sort_values(["url", "pid", "dist_p2c", "eid"], kind="stable")
+    p = pairs.sort_values(["url", "pid_0"], kind="stable")
+    c_gid = np.searchsorted(urls, c.url.to_numpy())
+    p_gid = np.searchsorted(urls, p.url.to_numpy())
+    c_off = np.searchsorted(c_gid, np.arange(len(urls) + 1))
+    cand = {k: c[k].to_numpy() for k in ("pid", "eid", "dist_p2c", "len0",
+                                         "len1")}
+    pair = {k: p[k].to_numpy() for k in ("pid_0", "eid_0", "eid_1", "flag",
+                                         "trans_prob", "dist_prob", "d_sht",
+                                         "avg_speed", "o_node", "d_node")}
+    uniq, code, corder = key_index(c_gid, cand["pid"], cand["eid"])
+    pos, hit = key_find(uniq, code, p_gid, p.pid_1.to_numpy(),
+                        pair["eid_1"])
+    pair["right"] = np.where(hit, corder[pos], -1)
+    return _decode_stitch(urls, c_off, cand, pair, p_gid, cfg,
+                          paths).set_index("url")
+
+
+def _reference(cands, pairs, cfg, sp_paths, collect, extra_urls=()):
+    """Per url: pandas emission + merge, decode_sequence, stitch_path
+    (payload paths as an ``epath`` column, None for SAME_SRC_FIRST)."""
+    rows = no_match_rows(sorted(extra_urls))
+    for url in sorted(set(cands.url)):
+        cpdf = (cands[cands.url == url]
+                .sort_values(["pid", "dist_p2c", "eid"], kind="stable")
+                .reset_index(drop=True))
+        gpdf = (pairs[pairs.url == url].sort_values("pid_0", kind="stable")
+                .reset_index(drop=True))
+        row = no_match_rows([url])[0]
+        rows.append(row)
+        if not len(gpdf):
+            row.update(status=hmm.STATUS_ONE_POINT, epath=[int(cpdf.eid[0])])
+            continue
+        dens = hmm.gaussian_emission(cpdf.dist_p2c.to_numpy(),
+                                     cfg.gps_sigma, cfg.gps_bias)
+        cpdf["observ_prob"] = hmm.observ_prob_from_density(dens, dens.max())
+        obs = cpdf[["pid", "eid", "observ_prob"]].rename(
+            columns={"pid": "pid_1", "eid": "eid_1"})
+        gpdf = gpdf.merge(obs, on=["pid_1", "eid_1"], how="left")
+        end_prob, rlist = hmm.decode_sequence(cpdf, gpdf, cfg)
+        if not collect:
+            gpdf["epath"] = [
+                None if f == hmm.FLAG_SAME_SRC_FIRST else sp_paths.get((o, d))
+                for o, d, f in zip(gpdf.o_node, gpdf.d_node, gpdf.flag)]
+        row.update(hmm.stitch_path(rlist, gpdf, cpdf, end_prob, cfg,
+                                   cfg.dir_trans, collect_steps=collect))
+    return pd.DataFrame(rows).set_index("url").sort_index()
+
+
+def _same(a, b):
+    return (a is None and b is None) or a == b or (a != a and b != b)
+
+
+def _assert_rows_equal(got, want, collect):
+    assert list(got.index) == list(want.index)
+    for url in want.index:
+        g, w = got.loc[url], want.loc[url]
+        assert g.status == w.status, f"{url}: status {g.status} != {w.status}"
+        g_ep = None if g.epath is None else [int(e) for e in g.epath]
+        assert g_ep == w.epath, f"{url}: epath {g_ep} != {w.epath}"
+        for c in METRIC_COLS:
+            assert _same(float(g[c]), float(w[c])), \
+                f"{url}:{c}: {g[c]!r} != {w[c]!r}"
+        if collect:
+            w_steps = w.get("steps")
+            w_steps = None if w_steps is None or w_steps != w_steps \
+                else w_steps
+            g_steps = None if g.steps is None else list(g.steps)
+            assert g_steps == w_steps, f"{url}: steps differ"
+            w_last = w.get("last_eid")
+            assert _same(float(g.last_eid),
+                         np.nan if w_last is None else float(w_last)), \
+                f"{url}: last_eid differs"
+
+
+def _check(cands, pairs, cfg, rng, extra_urls=()):
+    spd, sp_paths = _sp_table(rng)
+    for collect in (False, True):
+        got = _batched(cands, pairs, cfg, None if collect else spd.paths,
+                       extra_urls)
+        want = _reference(cands, pairs, cfg, sp_paths, collect, extra_urls)
+        _assert_rows_equal(got, want, collect)
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_lockstep_lattices(seed):
+    rng = np.random.default_rng(seed)
+    cands, pairs = _lockstep_inputs(rng, 30)
+    _check(cands, pairs, CFG, rng)
+
+
+@pytest.mark.parametrize("seed", [3, 11, 17])
+@pytest.mark.parametrize("beam", [True, False])
+def test_match_batched_inputs(seed, beam):
+    rng = np.random.default_rng(seed)
+    cands, pairs = _mk_inputs(rng, 40, adversarial=beam)
+    cands, pairs = _augment(rng, cands, pairs.drop(columns="flag"))
+    _check(cands, pairs, replace(CFG, beam_search=beam), rng,
+           extra_urls=("u_none",))
+
+
+def test_dir_trans_off():
+    rng = np.random.default_rng(5)
+    cands, pairs = _mk_inputs(rng, 30)
+    _check(*_augment(rng, cands, pairs), replace(CFG, dir_trans=False), rng)
+
+
+# ---------------------------------------------------------------------------
+# named cases: stitch_batch on hand-made winners vs stitch_path
+# ---------------------------------------------------------------------------
+
+def _cands(pids, eids):
+    n = len(pids)
+    return pd.DataFrame({"pid": pids, "eid": eids,
+                         "len0": np.arange(1.0, n + 1) * 10,
+                         "len1": np.arange(n, 0.0, -1) * 7})
+
+
+def _pairs(rows):
+    """rows: (pid_0, eid_0, eid_1, flag, o_node, d_node)."""
+    df = pd.DataFrame(rows, columns=["pid_0", "eid_0", "eid_1", "flag",
+                                     "o_node", "d_node"])
+    k = len(df)
+    df["d_sht"] = np.linspace(10.0, 90.0, k)
+    df["avg_speed"] = np.linspace(3.0, 9.0, k)
+    df["dist_prob"] = np.linspace(0.9, 0.5, k)
+    df["trans_prob"] = np.linspace(0.8, 0.4, k)
+    return df
+
+
+def _stitch_cases(cases, cfg, sp_paths):
+    """cases: (rlist pids, rlist eids, end_prob, cands, pairs) per url.
+    Returns the batch's columns with sp paths."""
+    spd = SpPayload(pd.DataFrame(
+        [(o, d, 0.0, 0.0, 0.0, 0.0, 0.0, 0, ep)
+         for (o, d), ep in sp_paths.items()],
+        columns=["o_node", "d_node", "cost", "path_speed", "pcx", "pcy",
+                 "pw", "pn", "epath"]))
+    w_off = np.concatenate([[0], np.cumsum([len(c[0]) for c in cases])])
+    w_pid, w_eid = (np.concatenate([np.asarray(c[i], np.int64)
+                                    for c in cases]) for i in (0, 1))
+    end_prob = np.array([c[2] for c in cases], dtype=np.float64)
+    cat = {"gid": [], "c": [], "p": []}
+    for g, c in enumerate(cases):
+        cat["c"].append(c[3].assign(gid=g))
+        cat["p"].append(c[4].assign(gid=g))
+    cc, pp = (pd.concat(cat[k], ignore_index=True) for k in ("c", "p"))
+    res = {}
+    for collect in (False, True):
+        got = res[collect] = hmm.stitch_batch(
+            np.arange(len(cases)), w_off, w_pid, w_eid, end_prob,
+            {k: cc[k].to_numpy() for k in cc}, {k: pp[k].to_numpy()
+                                                for k in pp},
+            cfg, cfg.dir_trans, None if collect else spd.paths)
+        for g, (pids, eids, ep, c, p) in enumerate(cases):
+            gt = p.copy()
+            if not collect:
+                gt["epath"] = [None if f == hmm.FLAG_SAME_SRC_FIRST
+                               else sp_paths.get((o, d))
+                               for o, d, f in zip(p.o_node, p.d_node, p.flag)]
+            want = hmm.stitch_path(pd.DataFrame({"pid": pids, "eid": eids}),
+                                   gt, c, ep, cfg, cfg.dir_trans,
+                                   collect_steps=collect)
+            assert got["status"][g] == want["status"], (g, collect)
+            g_ep = got["epath"][g]
+            assert (None if g_ep is None else list(g_ep)) == want["epath"], \
+                (g, collect)
+            for k in METRIC_COLS:
+                assert _same(got[k][g], want[k]), (g, k, collect)
+            if collect:
+                g_st = got["steps"][g]
+                assert (None if g_st is None else list(g_st)) \
+                    == want.get("steps"), (g, collect)
+    return res[False]
+
+
+def test_named_cases():
+    cfg = CFG
+    c3 = _cands([0, 1, 2], [100, 101, 102])
+    cases = [
+        # an empty winner list: FAILED, prob kept
+        ([], [], 0.0, c3, _pairs([(0, 100, 101, 0, 1, 2)])),
+        # a single winning state above / below prob_thres
+        ([1], [101], 0.9, c3, _pairs([(0, 100, 101, 0, 1, 2)])),
+        ([1], [101], cfg.prob_thres / 2, c3, _pairs([(0, 100, 101, 0, 1, 2)])),
+        # a winning pair missing from the pair table: FAILED
+        ([0, 1], [100, 101], 0.5, c3, _pairs([(0, 100, 999, 0, 1, 2)])),
+        # a SAME_SRC_FIRST step (its path is skipped) then a NORMAL one
+        ([0, 1, 2], [100, 101, 102], 0.5, c3,
+         _pairs([(0, 100, 101, hmm.FLAG_SAME_SRC_FIRST, 1, 2),
+                 (1, 101, 102, 0, 2, 3)])),
+        # an sp miss: (5, 6) is not in the table
+        ([0, 1], [100, 101], 0.5, c3, _pairs([(0, 100, 101, 0, 5, 6)])),
+        # a path that dedups to one edge: SAME_LINK, metrics NaN
+        ([0, 1], [100, 100], 0.9, _cands([0, 1], [100, 100]),
+         _pairs([(0, 100, 100, 0, 7, 7)])),
+        # ... and the same below prob_thres: FAILED
+        ([0, 1], [100, 100], cfg.prob_thres / 2, _cands([0, 1], [100, 100]),
+         _pairs([(0, 100, 100, 0, 7, 7)])),
+        # zero step distance: avg_speed NaN; path overlapping both ends
+        ([0, 2], [100, 102], 0.5, c3,
+         _pairs([(0, 100, 102, 0, 3, 4)]).assign(d_sht=0.0)),
+    ]
+    sp_paths = {(1, 2): [100, 104], (2, 3): [101, 105, 102], (3, 4): [100, 102],
+                (7, 7): None}
+    got = _stitch_cases(cases, cfg, sp_paths)
+    assert got["status"][0] == hmm.STATUS_FAILED
+    assert list(got["status"][1:3]) == [hmm.STATUS_SAME_LINK,
+                                        hmm.STATUS_FAILED]
+    assert got["status"][3] == hmm.STATUS_FAILED and got["epath"][3] is None
+    assert list(got["epath"][4]) == [100, 101, 105, 102]
+    assert list(got["epath"][5]) == [100, 101]
+    assert list(got["epath"][6]) == [100]
+    assert list(got["status"][6:8]) == [hmm.STATUS_SAME_LINK,
+                                        hmm.STATUS_FAILED]
+    assert np.isnan(got["dist"][6])
+    assert np.isnan(got["avg_speed"][8])
+
+
+def test_missing_winning_candidate_raises():
+    c = _cands([0, 1], [100, 101])
+    with pytest.raises(KeyError):
+        _stitch_cases([([0, 1], [100, 555], 0.5, c,
+                        _pairs([(0, 100, 555, 0, 1, 2)]))], CFG, {})
+
+
+def test_no_candidates_and_one_layer_urls():
+    """A url with no candidates (status 3), one-layer urls (status 2,
+    the layer's nearest edge) and no multi-layer url in the batch."""
+    rng = np.random.default_rng(0)
+    cands = pd.DataFrame({"url": ["a", "a", "b"], "pid": [0, 0, 0],
+                          "eid": [7, 3, 9], "dist_p2c": [4.0, 2.0, 1.0],
+                          "len0": [1.0, 2.0, 3.0], "len1": [1.0, 1.0, 1.0]})
+    pairs = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in (
+        ("url", object), ("pid_0", np.int64), ("pid_1", np.int64),
+        ("eid_0", np.int64), ("eid_1", np.int64), ("flag", np.int32),
+        ("trans_prob", np.float64), ("dist_prob", np.float64),
+        ("d_sht", np.float64), ("avg_speed", np.float64),
+        ("o_node", np.int64), ("d_node", np.int64))})
+    _check(cands, pairs, CFG, rng, extra_urls=("c",))
+    got = _batched(cands, pairs, CFG, _sp_table(rng)[0].paths, ("c",))
+    assert list(got.status) == [hmm.STATUS_ONE_POINT, hmm.STATUS_ONE_POINT,
+                                hmm.STATUS_NO_CANDIDATES]
+    assert [list(e) for e in got.epath[:2]] == [[3], [9]]
+
+
+def test_region_payload_paths_equal_single_target_search():
+    """RegionSpPayload.paths (one search per distinct origin) gives every
+    (o, d) the path a single-target bounded Dijkstra finds."""
+    from st_mapmatching_spark.graph.network import Network
+    from st_mapmatching_spark.operators.sharded import RegionSpPayload
+    from st_mapmatching_spark.sources.network_gen import make_grid_network
+    e, n = make_grid_network(CFG)
+    net = Network(e, n, CFG)
+    nodes = net.nodes.nid.to_numpy()
+    rng = np.random.default_rng(1)
+    o = rng.choice(nodes[:12], 300)
+    d = rng.choice(nodes, 300)
+    d[::17] = o[::17]                      # o == d: no path
+    max_dist = 1500.0
+    spd = RegionSpPayload.__new__(RegionSpPayload)
+    spd.adj, spd.max_dist = net.adj, max_dist
+    flat, off = spd.paths(o, d)
+    for i, (a, b) in enumerate(zip(o.tolist(), d.tolist())):
+        want = []
+        if a != b:
+            _, prev, settled = bounded_dijkstra(net.adj, a, max_dist, {b})
+            want = _epath(prev, b) if b in settled else []
+        assert flat[off[i]:off[i + 1]].tolist() == want, (a, b)
+    assert any(off[i + 1] > off[i] for i in range(len(o)))
+    assert not any(off[i + 1] > off[i] for i in range(0, len(o), 17))
+    empty = spd.paths(np.empty(0, np.int64), np.empty(0, np.int64))
+    assert len(empty[0]) == 0 and list(empty[1]) == [0]

@@ -81,17 +81,24 @@ def _batchify(groups):
             np.array(l0_off), np.array(n_steps))
 
 
+def _group(w_off, w_idx, w_eid, w_prob, g):
+    """Group g's (end_prob, layer indices, eids) from the flat return."""
+    sl = slice(w_off[g], w_off[g + 1])
+    return w_prob[g], w_idx[sl], w_eid[sl]
+
+
 @pytest.mark.parametrize("seed", range(8))
 def test_lockstep_equals_pergroup(seed):
     rng = np.random.RandomState(seed)
     cfg = MatchConfig()
     groups = _random_case(rng, ngroups=25)
     batch = _batchify(groups)
-    dec = hmm.viterbi_beam_lockstep(*batch, cfg)
+    w_off, w_idx, w_eid, w_prob = hmm.viterbi_beam_lockstep(*batch, cfg)
+    assert len(w_off) == len(groups) + 1
 
     for g, (cands, gt) in enumerate(groups):
         exp_prob, exp_rlist = hmm.viterbi_beam(cands, gt, cfg)
-        got_prob, ridx, reid = dec[g]
+        got_prob, ridx, reid = _group(w_off, w_idx, w_eid, w_prob, g)
         pids = np.sort(cands.pid.unique())
         got_pid = pids[ridx]
         assert np.array_equal(got_pid, exp_rlist.pid.to_numpy().astype(np.int64)), \
@@ -114,7 +121,7 @@ def test_lockstep_low_beam_cap():
     dec = hmm.viterbi_beam_lockstep(*batch, cfg)
     for g, (cands, gt) in enumerate(groups):
         exp_prob, exp_rlist = hmm.viterbi_beam(cands, gt, cfg)
-        got_prob, ridx, reid = dec[g]
+        got_prob, ridx, reid = _group(*dec, g)
         pids = np.sort(cands.pid.unique())
         assert np.array_equal(pids[ridx], exp_rlist.pid.to_numpy().astype(np.int64))
         assert np.array_equal(reid, exp_rlist.eid.to_numpy().astype(np.int64))
