@@ -422,8 +422,7 @@ def q_match_grid_sharded(spark, sf):
     from st_mapmatching_spark.operators.sharded import match_pages_sharded
     pages = _render_pages(_pts(spark, sf))
     m = match_pages_sharded(spark, pages, _net(), CFG,
-                            region_m=4000.0, cover_pad=4000.0,
-                            sp_pair_max=1300.0)
+                            region_m=4000.0, cover_pad=4000.0)
     return m.select("url", "status",
                     F.concat_ws(",", F.col("epath").cast("array<string>")).alias("epath_s"),
                     F.round("step_0", 6).alias("step_0_r"),

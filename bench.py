@@ -242,58 +242,6 @@ def run_bignet_leg(sf_dir: str, cpus: str, mult: int, g: int = 350) -> dict:
     return out
 
 
-def run_sharded_leg(sf_dir: str, cpus: str, mult: int, g: int = 150) -> dict:
-    """Region-sharded ONE-PASS matcher on a network 11x over the one-pass
-    gate (g=150 -> 22,500 nodes; gate is 2,000): the shuffle-free regional
-    kernel must survive where the global broadcast/memo cannot. Contrast
-    with --bignet-leg (the staged relational path on the same class of
-    network)."""
-    import __spark_entry__ as entry
-    from st_mapmatching_spark.operators.sharded import match_pages_sharded
-    from st_mapmatching_spark.session import get_spark
-    from st_mapmatching_spark.sources import derived as D
-
-    spark = get_spark(cores=cpus, app=f"bench-sharded-{cpus}")
-    net = D.big_grid_network(entry.CFG, g)
-    points = D.replicate_points(
-        D.derive_points_snake(spark, sf_dir, g), mult)
-    # AQE coalesces the render groupBy output to ~1 partition at these
-    # byte sizes, serializing the (CPU-bound, not byte-bound) map stage —
-    # spread pages across the cores like a real corpus scan would be
-    pages = (entry._render_pages(points)
-             .repartition(int(cpus) * 4, "url").persist())
-    n_trajs = pages.count()
-
-    # sized to the corpus, as a real deployment would: cover_pad must
-    # exceed the longest trajectory's extent (variable events/user -> up
-    # to ~4 km here), sp_pair_max the largest post-DP step (~520 m) plus
-    # the 2*(radius + max_edge_len) slack — under-sizing is CORRECT but
-    # routes a tail through the staged fallback, whose fixed stage
-    # latency dominates at toy scale
-    kw = dict(region_m=20_000.0, cover_pad=4_500.0, sp_pair_max=1_400.0)
-    df = match_pages_sharded(spark, pages, net, entry.CFG, **kw)   # warm-up
-    df.count(); df.unpersist()
-    t0 = time.perf_counter()
-    df = match_pages_sharded(spark, pages, net, entry.CFG, **kw)
-    n_matched = df.count()
-    t_match = time.perf_counter() - t0
-    n_success = df.filter("status = 0").count()
-    df.unpersist()
-    out = {"leg": "sharded", "g": g, "n_nodes": g * g,
-           "cpus": int(cpus), "mult": mult, "n_trajs": n_trajs,
-           "n_matched": n_matched, "n_success": n_success,
-           "match_sec": round(t_match, 2),
-           "trajs_per_sec": round(n_trajs / t_match, 2), **kw}
-    spark.stop()
-    try:
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/LEGS.jsonl", "a") as f:
-            f.write(json.dumps({**out, "ts": time.strftime("%Y-%m-%dT%H:%M:%S")}) + "\n")
-    except OSError:
-        pass
-    return out
-
-
 def run_salted(sf_dir: str, cpus: str) -> dict:
     """Exercise the salted candidate join under real skew: 80% of points
     are clamped into a ~2 m square (one hot cell), then the cell join runs
@@ -445,52 +393,12 @@ def main():
         print(json.dumps(run_scaling_leg(sf_dir, cpus, mult)))
         return
 
-    if "--sharded-leg" in sys.argv:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
-        g = int(os.environ.get("SPARK_GRAFT_BIGNET_G", "150"))
-        print(json.dumps(run_sharded_leg(sf_dir, cpus, mult, g)))
-        return
-
     if "--bignet-leg" in sys.argv:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
         g = int(os.environ.get("SPARK_GRAFT_BIGNET_G", "350"))
         print(json.dumps(run_bignet_leg(sf_dir, cpus, mult, g)))
-        return
-
-    if "--sharded" in sys.argv:
-        # north-rule 2-parallelism pair on the REGION-SHARDED one-pass path
-        lo, hi = os.environ.get("SPARK_GRAFT_SCALING_CORES", "2,8").split(",")
-        mult = os.environ.get("SPARK_GRAFT_SCALE_MULT", "32")
-        g = os.environ.get("SPARK_GRAFT_BIGNET_G", "150")
-        probe = host_probe(int(lo), int(hi))
-        results = {}
-        for cpus in (lo, hi):
-            env = dict(os.environ, SPARK_GRAFT_CPUS=cpus,
-                       SPARK_GRAFT_SCALE_MULT=mult, SPARK_GRAFT_BIGNET_G=g)
-            p = subprocess.run([sys.executable, __file__, "--sharded-leg"],
-                               env=env, capture_output=True, text=True, check=True)
-            results[cpus] = json.loads(p.stdout.strip().splitlines()[-1])
-        rlo, rhi = results[lo], results[hi]
-        ratio = int(hi) / int(lo)
-        eff = (rhi["trajs_per_sec"] / rlo["trajs_per_sec"]) / ratio
-        out = {"metric": "sharded_scaling", "g": int(g),
-               "n_nodes": rlo["n_nodes"], "mult": rlo["mult"],
-               "n_trajs": rlo["n_trajs"], "cores": [int(lo), int(hi)],
-               "trajs_per_sec": {lo: rlo["trajs_per_sec"], hi: rhi["trajs_per_sec"]},
-               "match_sec": {lo: rlo["match_sec"], hi: rhi["match_sec"]},
-               "scaling_efficiency": round(eff, 3), "probe": probe}
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/RUNS.md", "a") as f:
-            f.write(f"| sharded g={g} {lo}->{hi} | x{rlo['mult']} | "
-                    f"{rlo['match_sec']}s/{rhi['match_sec']}s | "
-                    f"{rlo['trajs_per_sec']}/{rhi['trajs_per_sec']} trajs/s | "
-                    f"eff {eff:.3f} | probe compute "
-                    f"{probe['compute']['scaling_lo_to_hi']}x |\n")
-        print(json.dumps(out))
         return
 
     if "--bignet" in sys.argv:

@@ -46,6 +46,7 @@ from pyspark.sql.window import Window
 
 from ..config import MatchConfig
 from ..functions.geo_cols import bearing_col
+from ..graph.dijkstra import shortest_paths_to_targets
 from ..graph.network import Network
 from ..kernels import hmm
 from ..kernels.keys import key_find, key_index
@@ -445,6 +446,17 @@ def sp_demands(cands: DataFrame, edge_attrs: DataFrame,
     return dem_a.unionByName(dem_b)
 
 
+def _csr_paths(eps: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """CSR (flat eids, offsets) of an object array of epaths (None =
+    empty)."""
+    lens = np.fromiter((0 if e is None else len(e) for e in eps),
+                       dtype=np.int64, count=len(eps))
+    flat = np.concatenate([np.empty(0, np.int64)]
+                          + [np.asarray(e, dtype=np.int64)
+                             for e in eps[lens > 0]])
+    return flat, np.concatenate([[0], np.cumsum(lens)])
+
+
 class SpPayload:
     """Columnar shortest-path table for broadcast: (o, d) lookups are
     vectorized numpy gathers (rank-encode o and d against their sorted
@@ -456,35 +468,111 @@ class SpPayload:
                  "pw", "pn", "ep_flat", "ep_off", "has_path")
 
     def __init__(self, sp_pdf: pd.DataFrame):
-        order = self._index(sp_pdf)
-        eps = sp_pdf.epath.to_numpy()[order]
-        lens = np.fromiter((0 if e is None else len(e) for e in eps),
-                           dtype=np.int64, count=len(eps))
-        self.ep_off = np.concatenate([[0], np.cumsum(lens)])
-        self.ep_flat = np.concatenate(
-            [np.empty(0, np.int64)]
-            + [np.asarray(e, dtype=np.int64) for e in eps[lens > 0]])
-        self.has_path = lens > 0
-
-    def _index(self, sp_pdf: pd.DataFrame) -> np.ndarray:
-        """Build the composite-key index and the numeric columns in key
-        order; returns that order for the subclass-specific columns."""
         self.uniq, self.key, order = key_index(
             sp_pdf.o_node.to_numpy(np.int64), sp_pdf.d_node.to_numpy(np.int64))
         for c in ("cost", "path_speed", "pcx", "pcy", "pw"):
             setattr(self, c, sp_pdf[c].to_numpy(np.float64)[order])
         self.pn = sp_pdf.pn.to_numpy(np.int64)[order]
-        return order
+        self.ep_flat, self.ep_off = _csr_paths(sp_pdf.epath.to_numpy()[order])
+        self.has_path = np.diff(self.ep_off) > 0
 
     def locate(self, o_node: np.ndarray, d_node: np.ndarray):
         """(positions, hit_mask) for (o, d) query arrays — pure numpy."""
         return key_find(self.uniq, self.key, o_node, d_node)
+
+    def lookup(self, o_node: np.ndarray, d_node: np.ndarray) -> dict:
+        """The sp columns _transition_probs reads for the (o, d) query
+        arrays; a pair missing from the table is unreachable (cost inf,
+        zero stats, no path)."""
+        pos, hit = self.locate(o_node, d_node)
+        return {"cost": np.where(hit, self.cost[pos], np.inf),
+                "path_speed": np.where(hit, self.path_speed[pos], 0.0),
+                "pcx": np.where(hit, self.pcx[pos], 0.0),
+                "pcy": np.where(hit, self.pcy[pos], 0.0),
+                "pw": np.where(hit, self.pw[pos], 0.0),
+                "pn": np.where(hit, self.pn[pos], 0),
+                "has_path": hit & self.has_path[pos]}
 
     def paths(self, o_node: np.ndarray, d_node: np.ndarray):
         """The sp paths of the (o, d) query arrays as CSR (flat eids,
         offsets); a pair missing from the table has an empty path."""
         return hmm.csr_take(self.ep_flat, self.ep_off,
                         *self.locate(o_node, d_node))
+
+
+class DemandSpPayload:
+    """SpPayload's interface (lookup, paths) over a search state instead
+    of a precomputed table: the first time a pair is asked for, it is
+    searched by bounded Dijkstra on ``exp`` = (adjacency, edge speed,
+    edge dist, edge dir totals) — one shortest_paths_to_targets call per
+    distinct origin, toward that origin's new targets — and its row is
+    memoized on this object. Held in a broadcast value, the memo lives
+    as long as the worker keeps the broadcast loaded, so a pair is
+    searched at most once per worker: the reference's per-query route
+    memo (astar.py:70-72, geograph.py:223), per worker.
+
+    Exact: a settled node's cost and back pointer never change, so a
+    row does not depend on which other targets shared its search. The
+    memo is stored in insertion order (columns, CSR paths) and indexed
+    by one composite key, rebuilt when new rows arrive."""
+
+    _COLS = ("cost", "path_speed", "pcx", "pcy", "pw", "pn")
+
+    def __init__(self, exp: tuple, max_dist: float):
+        self.exp, self.max_dist = exp, max_dist
+        self.o = self.d = self.pn = self.ep_flat = np.empty(0, np.int64)
+        self.cost = self.path_speed = self.pcx = self.pcy = self.pw = \
+            np.empty(0, np.float64)
+        self.ep_off = np.zeros(1, np.int64)
+        self._reindex()
+
+    def _reindex(self):
+        self.uniq, self.key, self.order = key_index(self.o, self.d)
+
+    def _rows(self, o_node: np.ndarray, d_node: np.ndarray) -> np.ndarray:
+        """Memo rows of the (o, d) query arrays, searching the pairs not
+        memoized yet."""
+        o_node = np.asarray(o_node, np.int64)
+        d_node = np.asarray(d_node, np.int64)
+        pos, hit = key_find(self.uniq, self.key, o_node, d_node)
+        if not hit.all():
+            self._search(o_node[~hit], d_node[~hit])
+            pos, _ = key_find(self.uniq, self.key, o_node, d_node)
+        return self.order[pos]
+
+    def _search(self, o_node: np.ndarray, d_node: np.ndarray):
+        od = np.unique(np.stack([o_node, d_node], axis=1), axis=0)
+        heads = np.flatnonzero(np.diff(od[:, 0], prepend=od[0, 0] - 1))
+        adj, espeed, edist, etot = self.exp
+        rows = []
+        for lo, hi in zip(heads, np.append(heads[1:], len(od))):
+            rows.extend(shortest_paths_to_targets(
+                adj, int(od[lo, 0]), od[lo:hi, 1].tolist(), self.max_dist,
+                espeed, edist, etot))
+        new = pd.DataFrame(rows)
+        self.o = np.concatenate([self.o, od[:, 0]])
+        self.d = np.concatenate([self.d, od[:, 1]])
+        for c in self._COLS:
+            old = getattr(self, c)
+            setattr(self, c, np.concatenate([old, new[c].to_numpy(old.dtype)]))
+        flat, off = _csr_paths(new.epath.to_numpy())
+        self.ep_off = np.concatenate([self.ep_off,
+                                      self.ep_off[-1] + off[1:]])
+        self.ep_flat = np.concatenate([self.ep_flat, flat])
+        self._reindex()
+
+    def lookup(self, o_node: np.ndarray, d_node: np.ndarray) -> dict:
+        """SpPayload.lookup: every pair is searched, so a miss default
+        is the search's own unreachable row."""
+        r = self._rows(o_node, d_node)
+        return {c: getattr(self, c)[r] for c in self._COLS} | {
+            "has_path": self.ep_off[r + 1] > self.ep_off[r]}
+
+    def paths(self, o_node: np.ndarray, d_node: np.ndarray):
+        """SpPayload.paths, as CSR (flat eids, offsets)."""
+        r = self._rows(o_node, d_node)
+        return hmm.csr_take(self.ep_flat, self.ep_off, r,
+                            np.ones(len(r), dtype=bool))
 
 
 def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
@@ -499,7 +587,7 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
     (a no-op on fused_match's input, which the JVM window already cut).
     ``geom``/``stats`` are the broadcast network tuples ((eids_sorted,
     mat, src, dst, dist, speed) / (dir_stats, node_xy)); ``spd`` the
-    SpPayload. Shared verbatim by the staged fused matcher (fused_match),
+    SpPayload or DemandSpPayload. Shared verbatim by the staged fused matcher (fused_match),
     the one-pass pages matcher and the sharded matcher (both through
     _probe_match) so the paths cannot drift."""
     from ..kernels.geodesy import bearing_deg
@@ -585,14 +673,7 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
     d_node = np.where(flag1, dst[L], src[R])
 
     # ---- sp attach (one vectorized binary-search gather) + scoring ----
-    pos, hit = spd.locate(o_node, d_node)
-    pair = {"cost": np.where(hit, spd.cost[pos], np.inf),
-            "path_speed": np.where(hit, spd.path_speed[pos], 0.0),
-            "pcx": np.where(hit, spd.pcx[pos], 0.0),
-            "pcy": np.where(hit, spd.pcy[pos], 0.0),
-            "pw": np.where(hit, spd.pw[pos], 0.0),
-            "pn": np.where(hit, spd.pn[pos], 0),
-            "has_path": hit & spd.has_path[pos],
+    pair = {**spd.lookup(o_node, d_node),
             "step_0_len": step_0_len, "step_n_len": step_n_len,
             "speed_0": speed[L], "speed_1": speed[R], "flag": flag,
             "dist_0": dist_0, "d_euc": d_euc_l[K], "move_dir": move_dir_l[K],

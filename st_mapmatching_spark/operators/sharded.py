@@ -2,7 +2,7 @@
 (match_pages_onepass) extended past the global broadcast/memo cap by
 partitioning the NETWORK into coarse region tiles and broadcasting one
 compact payload per region — cell index, geometry/attr arrays, direction
-stats, and a euclid-bounded shortest-path cost table — keyed by region.
+stats, and the region's shortest-path search state — keyed by region.
 Pages stay wherever they are (no shuffle): the kernel derives each
 trajectory's region from its FIRST point and looks the payload up in the
 broadcast dict, so the whole matcher is still one narrow Arrow stage.
@@ -22,29 +22,16 @@ never silently degrades):
 * GUARD A (candidate coverage): the simplified trajectory's bbox dilated
   by the search radius must fit the region's CORE box (tile ± cover_pad).
   Candidate edges then all lie inside the core subnetwork.
-* GUARD B (sp coverage): every consecutive-layer sp demand (o, d)
-  satisfies euclid(o, d) <= step + 2*(radius + longest core edge); the
-  payload precomputes ALL core-node pairs with euclid <= sp_pair_max, so
-  requiring step <= sp_pair_max - 2*(radius + max_edge_len) guarantees
-  every demanded pair is present — a payload miss therefore can only mean
-  UNREACHABLE (cost inf), exactly the staged path's semantics.
-* DIJKSTRA PARITY: payload costs/stats come from bounded Dijkstra on the
+* DIJKSTRA PARITY: shortest paths are searched inside the kernel, per
+  Arrow batch, for that batch's own (o, d) demands (DemandSpPayload: one
+  bounded Dijkstra per distinct origin, memoized per worker), on the
   region's EXPANDED subnetwork (core padded by margin >= radius +
   max_dist/2 + slack). Any path of cost <= max_dist between core nodes
   stays within max_dist/2 of one endpoint (d(o,p) + d(p,d) <= cost), so
   the expanded graph contains every node that can relax a node on such a
   path — costs, tie-breaks ((cost, node) heap order) and therefore
-  epaths are IDENTICAL to the full-network Dijkstra. Winning-step epaths
-  are reconstructed in-kernel by the same bounded_dijkstra on the same
-  expanded adjacency (RegionSpPayload.paths: one search per distinct
-  origin of a batch's winning steps, so path storage never rides in the
-  payload).
-
-Scale envelope: payload rows ~= region_nodes x pairs_within(sp_pair_max);
-on real road networks (node spacing >= 100 m) with sp_pair_max ~1 km this
-is tens of pairs per node. The synthetic 250 m uniform grid used by the
-bench is denser than any real city; payload_max_rows fails closed with
-sizing guidance rather than silently OOMing the driver.
+  epaths are IDENTICAL to the full-network Dijkstra, whichever batch
+  searched a pair and whichever targets shared its search.
 """
 
 from __future__ import annotations
@@ -57,67 +44,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import M_PER_DEG, MatchConfig
-from ..graph.dijkstra import _epath, bounded_dijkstra, shortest_paths_to_targets
 from ..graph.network import Network
-from ..kernels.hmm import csr_take
-from .matching import (MATCHED_SCHEMA, SpPayload, _probe_match, match_pages,
-                       no_match_rows)
-
-_SP_COLS = ["o_node", "d_node", "cost", "path_speed", "pcx", "pcy", "pw",
-            "pn", "has_path"]
-_SP_SCHEMA = ("region long, o_node long, d_node long, cost double, "
-              "path_speed double, pcx double, pcy double, pw double, "
-              "pn int, has_path boolean")
+from .matching import (MATCHED_SCHEMA, DemandSpPayload, _probe_match,
+                       match_pages, no_match_rows)
 
 
 def _region_key(rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
     """Composite region id (same packing as the cell encoding)."""
     return (np.asarray(rx, np.int64) + (1 << 25)) * (1 << 26) \
         + (np.asarray(ry, np.int64) + (1 << 25))
-
-
-class RegionSpPayload(SpPayload):
-    """SpPayload backed by cost/stat columns only: paths are
-    reconstructed on demand by bounded Dijkstra over the region's expanded
-    adjacency (exact — see module invariants). Keeps path storage out of
-    the broadcast payload entirely."""
-
-    __slots__ = ("adj", "max_dist")
-
-    def __init__(self, sp_pdf: pd.DataFrame, adj: dict, max_dist: float):
-        order = self._index(sp_pdf)
-        self.has_path = sp_pdf.has_path.to_numpy(bool)[order]
-        self.adj = adj
-        self.max_dist = max_dist
-
-    def paths(self, o_node: np.ndarray, d_node: np.ndarray):
-        """SpPayload.paths by search: one bounded Dijkstra per distinct
-        origin, toward that origin's distinct targets. A settled node's
-        back pointers never change, so each path equals the one a
-        single-target search finds; o == d and unreached targets get an
-        empty path."""
-        if not len(o_node):
-            return np.empty(0, np.int64), np.zeros(1, np.int64)
-        od, inv = np.unique(np.stack([o_node, d_node], axis=1).astype(
-            np.int64), axis=0, return_inverse=True)
-        found = []
-        bounds = np.flatnonzero(np.diff(od[:, 0], prepend=od[0, 0] - 1,
-                                        append=od[-1, 0] + 1))
-        for lo, hi in zip(bounds[:-1], bounds[1:]):
-            o, tgts = int(od[lo, 0]), od[lo:hi, 1].tolist()
-            want = {t for t in tgts if t != o}
-            settled, prev = set(), {}
-            if want:
-                _, prev, settled = bounded_dijkstra(self.adj, o,
-                                                    self.max_dist, want)
-            found.extend(_epath(prev, t) if t in want and t in settled
-                         else [] for t in tgts)
-        lens = np.fromiter(map(len, found), dtype=np.int64, count=len(found))
-        flat = np.fromiter((e for ep in found for e in ep), dtype=np.int64,
-                           count=int(lens.sum()))
-        inv = inv.ravel()
-        return csr_take(flat, np.concatenate([[0], np.cumsum(lens)]), inv,
-                        np.ones(len(inv), dtype=bool))
 
 
 def _network_flat(net: Network) -> dict:
@@ -176,71 +111,44 @@ def _subnetwork_from_flat(flat: dict, x0: float, y0: float,
 
 
 def _build_one_payload(flat: dict, cfg: MatchConfig, rx: int, ry: int,
-                       region_m: float, cover_pad: float,
-                       sp_pair_max: float, margin: float):
-    """(payload | None, n_demand_estimate) for one region — pure function
-    of the flat network arrays, runs on an executor."""
+                       region_m: float, cover_pad: float, margin: float):
+    """The payload of one region (None if its core has no edge) — pure
+    function of the flat network arrays, runs on an executor."""
     cx0, cy0 = rx * region_m, ry * region_m
     core_box = (cx0 - cover_pad, cy0 - cover_pad,
                 cx0 + region_m + cover_pad, cy0 + region_m + cover_pad)
     core = _subnetwork_from_flat(flat, *core_box)
     if len(core.edges) == 0:
-        return None, 0
+        return None
     exp = _subnetwork_from_flat(flat, core_box[0] - margin,
                                 core_box[1] - margin,
                                 core_box[2] + margin, core_box[3] + margin)
-    max_edge_len = float(core.edges.dist.max())
-    nids, nxy = core.node_xy_arrays()
-    # demand-row estimate (pre-dedup pair count + edge demands) for the
-    # driver's cumulative fail-closed cap; the exact pairs are generated
-    # in the sp job, origin-chunked
-    n_pairs = 0
-    for s in range(0, len(nids), 1024):
-        dx = nxy[s:s + 1024, 0][:, None] - nxy[None, :, 0]
-        dy = nxy[s:s + 1024, 1][:, None] - nxy[None, :, 1]
-        n_pairs += int((dx * dx + dy * dy
-                        <= sp_pair_max * sp_pair_max).sum())
     ci = (core.cell_index(pad=max(flat["cfg"].radius, cfg.radius))
           .sort_values(["cell", "eid"], kind="stable"))
-    payload = {
+    return {
         "geom": (*core.padded_geoms(), *core.attr_arrays()),
         "stats": (core.dir_stats(), core.node_xy_arrays()),
         "cells": (ci.cell.to_numpy(), ci.eid.to_numpy()),
         "core_box": core_box,
-        "max_edge_len": max_edge_len,
-        # the expanded-subnetwork search state: Dijkstra adjacency +
-        # per-edge stats. Shipped once here — the sp job AND the
-        # in-kernel epath reconstruction both read it from this payload.
-        "exp": (exp.adj, exp.edge_speed, exp.edge_dist,
-                exp.dir_stats().edge_totals()),
+        # the expanded-subnetwork search state (Dijkstra adjacency +
+        # per-edge stats) the kernel searches its batches' demands on
+        "sp": DemandSpPayload((exp.adj, exp.edge_speed, exp.edge_dist,
+                               exp.dir_stats().edge_totals()), cfg.max_dist),
     }
-    return payload, n_pairs + len(core.edges)
 
 
 def _build_region_payloads(spark: SparkSession, net: Network,
                            cfg: MatchConfig, regions: list[tuple[int, int]],
-                           region_m: float, cover_pad: float,
-                           sp_pair_max: float, margin: float,
-                           payload_max_rows: int,
-                           payload_max_bytes: int) -> tuple[dict, dict, int, int]:
-    """Distributed region-payload build (r6 verdict item 2: the serial
-    driver loop became hours of single-threaded time at 10^3-10^4
-    regions). Two Spark jobs:
+                           region_m: float, cover_pad: float, margin: float,
+                           payload_max_bytes: int) -> tuple[dict, int]:
+    """Distributed region-payload build (a serial driver loop is hours of
+    single-threaded time at 10^3-10^4 regions): one task per region
+    slices the core/expanded subnetworks from the broadcast flat network
+    arrays and builds every payload structure; the driver only collects
+    the pickled payloads and assembles the broadcast dict.
 
-      A. one task per region slices the core/expanded subnetworks from
-         the broadcast flat network arrays and builds every payload
-         structure; the driver only collects the pickled payloads and
-         assembles the broadcast dict.
-      B. origin-chunked demand generation + bounded Dijkstra against the
-         payload broadcast — the O(n^2) euclid masks AND the search now
-         both run distributed, balanced by origin chunks rather than by
-         region (a 4-region corpus still fans out to every core).
-
-    Returns (payloads, sp_payloads, n_demand_estimate, payload_bytes).
-    Fail-closed caps: cumulative demand-row ESTIMATE (pre-dedup, >= the
-    exact count the old driver loop capped on) and cumulative pickled
-    payload bytes (the r6 ADVICE gap: adjacency/geometry payloads were
-    uncapped)."""
+    Returns (payloads, payload_bytes). Fails closed when the cumulative
+    pickled payload bytes exceed ``payload_max_bytes``."""
     import pickle
 
     flat_bc = net.broadcast(spark, "flat", lambda: _network_flat(net))
@@ -252,199 +160,95 @@ def _build_region_payloads(spark: SparkSession, net: Network,
         for pdf in batches:
             rows = []
             for rx, ry in zip(pdf.rx, pdf.ry):
-                pay, n_dem = _build_one_payload(
-                    flat, cfg, int(rx), int(ry), region_m, cover_pad,
-                    sp_pair_max, margin)
+                pay = _build_one_payload(flat, cfg, int(rx), int(ry),
+                                         region_m, cover_pad, margin)
                 rkey = int(_region_key(np.array([rx]), np.array([ry]))[0])
                 rows.append((rkey,
                              pickle.dumps(pay, protocol=4)
-                             if pay is not None else b"",
-                             int(n_dem)))
-            yield pd.DataFrame(rows, columns=["region", "payload",
-                                              "n_demands"])
+                             if pay is not None else b""))
+            yield pd.DataFrame(rows, columns=["region", "payload"])
 
     built = rdf.mapInPandas(
-        build, schema="region long, payload binary, n_demands long") \
-        .toPandas()
+        build, schema="region long, payload binary").toPandas()
 
-    payloads, total_rows, total_bytes = {}, 0, 0
-    for rkey, blob, n_dem in zip(built.region, built.payload,
-                                 built.n_demands):
-        if len(blob) == 0:
-            payloads[int(rkey)] = None
-            continue
-        total_rows += int(n_dem)
+    payloads, total_bytes = {}, 0
+    for rkey, blob in zip(built.region, built.payload):
         total_bytes += len(blob)
-        pay = pickle.loads(blob)
-        if sp_pair_max <= 2 * (cfg.radius + pay["max_edge_len"]):
-            raise ValueError(
-                f"sp_pair_max={sp_pair_max} m cannot cover any step: "
-                f"2*(radius + longest core edge) = "
-                f"{2 * (cfg.radius + pay['max_edge_len'])} m — raise "
-                "sp_pair_max")
-        payloads[int(rkey)] = pay
-    if total_rows > payload_max_rows:
-        raise ValueError(
-            f"region sp payloads exceed payload_max_rows="
-            f"{payload_max_rows} ({total_rows} estimated demand rows) — "
-            "shrink region_m/cover_pad/sp_pair_max or raise the cap; a "
-            "silent multi-GB broadcast would stall every executor")
+        payloads[int(rkey)] = pickle.loads(blob) if len(blob) else None
     if total_bytes > payload_max_bytes:
         raise ValueError(
             f"region payloads exceed payload_max_bytes="
             f"{payload_max_bytes} ({total_bytes} pickled bytes) — shrink "
             "region_m/cover_pad or raise the cap; the broadcast would "
             "pin this much memory on the driver and every executor")
-
-    return payloads, total_rows, total_bytes
-
-
-def _build_region_sp(spark: SparkSession, pay_bc, region_keys: list[int],
-                     cfg: MatchConfig, sp_pair_max: float) -> dict:
-    """Job B: euclid-bounded demand generation + bounded Dijkstra for the
-    given regions, chunked by ORIGIN so the work balances across every
-    core even when the corpus touches few regions. ``pay_bc`` is the same
-    payload broadcast the match kernel reads — nothing is shipped twice.
-    Returns {region_key: RegionSpPayload} (adj left None; the kernel
-    wires it to the payload's expanded adjacency at use time)."""
-    pays = pay_bc.value
-    chunk = 512
-    chunks = [(rk, lo, min(lo + chunk, len(pays[rk]["stats"][1][0])))
-              for rk in region_keys if pays.get(rk) is not None
-              for lo in range(0, len(pays[rk]["stats"][1][0]), chunk)]
-    if not chunks:
-        return {}
-    cdf = spark.createDataFrame(
-        pd.DataFrame(chunks, columns=["region", "lo", "hi"])) \
-        .repartition(max(len(chunks), 1))
-    max_dist, sp2 = cfg.max_dist, sp_pair_max * sp_pair_max
-
-    def sp_build(batches):
-        pays = pay_bc.value
-        for pdf in batches:
-            out = []
-            for rk, lo, hi in zip(pdf.region, pdf.lo, pdf.hi):
-                pay = pays[int(rk)]
-                nids, nxy = pay["stats"][1]
-                adj, espeed, edist, etot = pay["exp"]
-                src_a, dst_a = pay["geom"][2], pay["geom"][3]
-                orig, oxy = nids[lo:hi], nxy[lo:hi]
-                dx = oxy[:, 0][:, None] - nxy[None, :, 0]
-                dy = oxy[:, 1][:, None] - nxy[None, :, 1]
-                ii, jj = np.nonzero(dx * dx + dy * dy <= sp2)
-                bounds = np.searchsorted(ii, np.arange(len(orig) + 1))
-                for k in range(len(orig)):
-                    o = int(orig[k])
-                    tgt = nids[jj[bounds[k]:bounds[k + 1]]]
-                    ed = dst_a[src_a == o]
-                    if len(ed):
-                        tgt = np.concatenate([tgt, ed])
-                    rows = shortest_paths_to_targets(
-                        adj, o, np.unique(tgt).tolist(), max_dist,
-                        espeed, edist, etot)
-                    for r in rows:
-                        ep = r.pop("epath")
-                        r["has_path"] = ep is not None and len(ep) > 0
-                        r["region"] = int(rk)
-                    out.extend(rows)
-            yield pd.DataFrame(out, columns=["region"] + _SP_COLS)
-
-    sp_all = cdf.mapInPandas(sp_build, schema=_SP_SCHEMA).toPandas()
-    spds = {}
-    for rkey, grp in sp_all.groupby("region"):
-        spds[int(rkey)] = RegionSpPayload(
-            grp.reset_index(drop=True), None, cfg.max_dist)
-    return spds
+    return payloads, total_bytes
 
 
 def derive_shard_params(spark: SparkSession, pages: DataFrame, net: Network,
                         cfg: MatchConfig, sample_n: int = 256,
                         seed: int = 7) -> dict:
-    """Auto-size (region_m, cover_pad, sp_pair_max) from network + corpus
-    stats (r6 verdict item 3: hand-sized parameters were a silent
-    performance cliff — wrong sizing is correct-but-slow via the staged
-    fallback).
+    """Auto-size (region_m, cover_pad) from corpus stats, so no caller
+    hand-sizes the tiling (wrong sizing is correct-but-slow: guard A
+    routes what it does not cover through the staged fallback).
 
     One Spark job over a SEEDED-HASH sample of pages (deterministic and
     unbiased, the same rule the IVF sampler uses): extract + simplify the
-    sample, then take the max post-DP step length and the max trajectory
-    bbox extent. Derivations (all fail CLOSED — an under-estimate routes
-    trajectories through the exact staged fallback, logged per run):
+    sample, then take the max trajectory bbox extent. Derivations (an
+    under-estimate fails CLOSED through the fallback, logged per run):
 
-      sp_pair_max = 1.25 * max_step + 2 * (radius + max core edge len)
-                    (guard B needs step <= sp_pair_max - 2*(radius +
-                     max_edge_len); the 1.25 headroom covers steps the
-                     sample missed)
-      cover_pad   = 1.25 * max_extent + radius
-                    (guard A needs bbox + radius inside tile + pad)
-      region_m    = max(4 * cover_pad, 2 * sp_pair_max)
-                    (tiles dominated by their pad waste payload; capped
-                     so one region's demand estimate stays under
-                     ~payload_max_rows/8 by the density formula below)
-    """
-    from pyspark.sql import Window
+      cover_pad = 1.25 * max_extent + radius
+                  (guard A needs bbox + radius inside tile + pad; the
+                   1.25 headroom covers trajectories the sample missed)
+      region_m  = 4 * cover_pad
+                  (tiles dominated by their pad waste payload)
+
+    ``net`` is unused: the tiling depends on the corpus alone."""
     from .candidates import extract_simplify
 
     sample = pages.orderBy(F.xxhash64("url", F.lit(seed)), "url") \
                   .limit(sample_n)
-    pts = extract_simplify(sample, cfg)
-    w = Window.partitionBy("url").orderBy("pid")
-    dx = F.lead("x").over(w) - F.col("x")
-    dy = F.lead("y").over(w) - F.col("y")
-    stepped = pts.select("url", "x", "y",
-                         F.sqrt(dx * dx + dy * dy).alias("step"))
-    agg = (stepped.groupBy("url")
-           .agg(F.max("step").alias("mstep"),
-                (F.max("x") - F.min("x")).alias("ex"),
+    agg = (extract_simplify(sample, cfg).groupBy("url")
+           .agg((F.max("x") - F.min("x")).alias("ex"),
                 (F.max("y") - F.min("y")).alias("ey"))
-           .agg(F.max("mstep").alias("max_step"),
-                F.max(F.greatest("ex", "ey")).alias("max_extent"))
+           .agg(F.max(F.greatest("ex", "ey")).alias("max_extent"))
            .first())
-    max_step = float(agg.max_step or 0.0)
-    max_extent = float(agg.max_extent or 0.0)
-    max_edge = float(net.edges.dist.max()) if len(net.edges) else 0.0
-    sp_pair_max = 1.25 * max_step + 2.0 * (cfg.radius + max_edge) + 1.0
-    cover_pad = 1.25 * max_extent + cfg.radius + 1.0
-    region_m = max(4.0 * cover_pad, 2.0 * sp_pair_max)
-    return {"region_m": region_m, "cover_pad": cover_pad,
-            "sp_pair_max": sp_pair_max}
+    cover_pad = 1.25 * float(agg.max_extent or 0.0) + cfg.radius + 1.0
+    return {"region_m": 4.0 * cover_pad, "cover_pad": cover_pad}
 
 
 def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                         cfg: MatchConfig = MatchConfig(),
                         region_m: float | None = None,
                         cover_pad: float | None = None,
-                        sp_pair_max: float | None = None,
                         margin: float | None = None,
-                        payload_max_rows: int = 20_000_000,
                         payload_max_bytes: int = 2_000_000_000) -> DataFrame:
     """match_pages semantics over a network too big for one global
     broadcast: single-crossing regional kernel + staged-path fallback for
-    the guard-violating tail. Output rows equal match_pages(...) exactly
-    (pytest-pinned on a two-region fixture).
+    the guard-A-violating tail. Output rows equal match_pages(...) exactly
+    (pytest-pinned on a two-region fixture). Every trajectory that passes
+    guard A is matched in-kernel, its shortest paths searched on demand
+    per batch (module docstring, DIJKSTRA PARITY).
 
-    region_m/cover_pad/sp_pair_max default to AUTO-derivation from
-    network + corpus stats (derive_shard_params); explicit values
-    override. The returned frame carries the guard-fallback count as
-    ``df._shard_fallbacks`` and the fraction is logged per run.
+    region_m/cover_pad default to AUTO-derivation from corpus stats
+    (derive_shard_params); explicit values override. The returned frame
+    carries the guard-fallback count as ``df._shard_fallbacks`` and the
+    fraction is logged per run.
 
-    Persist contract (r6 ADVICE): the returned frame is persist()ed and
-    already materialized; long-lived callers must unpersist() it after
-    consuming (stream_match_batches does this per epoch). The memoized
-    payload broadcasts live on the NETWORK object for its lifetime —
-    that is the cache's point; drop the Network (or clear
-    net._shard_payload_cache and unpersist its handles) to release
-    executor memory in a session that is done matching."""
-    if region_m is None or cover_pad is None or sp_pair_max is None:
+    Persist contract: the returned frame is persist()ed and already
+    materialized; long-lived callers must unpersist() it after consuming
+    (stream_match_batches does this per epoch). The memoized payload
+    broadcasts live on the NETWORK object for its lifetime — that is the
+    cache's point; drop the Network (or clear net._shard_payload_cache
+    and unpersist its handles) to release executor memory in a session
+    that is done matching."""
+    if region_m is None or cover_pad is None:
         auto = derive_shard_params(spark, pages, net, cfg)
         region_m = auto["region_m"] if region_m is None else region_m
         cover_pad = auto["cover_pad"] if cover_pad is None else cover_pad
-        sp_pair_max = (auto["sp_pair_max"] if sp_pair_max is None
-                       else sp_pair_max)
         import logging
         logging.getLogger(__name__).info(
-            "sharded auto-params: region_m=%.0f cover_pad=%.0f "
-            "sp_pair_max=%.0f", region_m, cover_pad, sp_pair_max)
+            "sharded auto-params: region_m=%.0f cover_pad=%.0f",
+            region_m, cover_pad)
     if margin is None:
         margin = cfg.radius + cfg.max_dist / 2.0 + 300.0
 
@@ -470,47 +274,32 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
     cache = getattr(net, "_shard_payload_cache", None)
     if cache is None:
         cache = net._shard_payload_cache = {}
-    ckey = (region_m, cover_pad, sp_pair_max, margin,
-            cfg.max_dist, cfg.radius, cfg.cell_size)
+    ckey = (region_m, cover_pad, margin, cfg.max_dist, cfg.radius,
+            cfg.cell_size)
     entry = cache.get(ckey)
     if entry is None:
-        entry = cache[ckey] = {"pays": {}, "spds": {}, "pay_bc": None,
-                               "spd_bc": None, "rows": 0, "bytes": 0}
+        entry = cache[ckey] = {"pays": {}, "pay_bc": None, "bytes": 0}
     missing = [(rx, ry) for rx, ry in regions
                if int(_region_key(np.array([rx]), np.array([ry]))[0])
                not in entry["pays"]]
     if missing:
-        new_pays, n_rows, n_bytes = _build_region_payloads(
-            spark, net, cfg, missing, region_m, cover_pad, sp_pair_max,
-            margin, payload_max_rows - entry["rows"],
+        new_pays, n_bytes = _build_region_payloads(
+            spark, net, cfg, missing, region_m, cover_pad, margin,
             payload_max_bytes - entry["bytes"])
         entry["pays"].update(new_pays)
-        entry["rows"] += n_rows
         entry["bytes"] += n_bytes
-        # re-broadcast the union; the old handles are dropped (unpersist,
+    if missing or entry["pay_bc"] is None:
+        # re-broadcast the union; the old handle is dropped (unpersist,
         # not destroy: in-flight tasks of this context finished — every
         # sharded call materializes its result before returning)
-        for h in (entry["pay_bc"], entry["spd_bc"]):
-            if h is not None:
-                h.unpersist()
+        if entry["pay_bc"] is not None:
+            entry["pay_bc"].unpersist()
         entry["pay_bc"] = spark.sparkContext.broadcast(
             {k: v for k, v in entry["pays"].items() if v is not None})
-        new_spds = _build_region_sp(spark, entry["pay_bc"],
-                                    [k for k in map(
-                                        lambda r: int(_region_key(
-                                            np.array([r[0]]),
-                                            np.array([r[1]]))[0]), missing)],
-                                    cfg, sp_pair_max)
-        entry["spds"].update(new_spds)
-        entry["spd_bc"] = spark.sparkContext.broadcast(entry["spds"])
-    if entry["pay_bc"] is None:
-        entry["pay_bc"] = spark.sparkContext.broadcast({})
-        entry["spd_bc"] = spark.sparkContext.broadcast({})
-    pay_bc, spd_bc = entry["pay_bc"], entry["spd_bc"]
+    pay_bc = entry["pay_bc"]
     empty_keys = frozenset(k for k, v in entry["pays"].items() if v is None)
     radius = cfg.radius
     tol, do_simpl = cfg.tolerance, cfg.simplify
-    pair_budget = sp_pair_max
 
     def miss_rows(urls, fallback):
         return pd.DataFrame(no_match_rows(urls)).assign(_fb=fallback)
@@ -518,7 +307,6 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
     def op(batches):
         from .candidates import extract_arrays
         pays = pay_bc.value
-        spds = spd_bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -567,37 +355,15 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                         frames.append(miss_rows([url], False))
                         done.add(url)
                         continue
-                    # guard B: every step coverable by the sp pair table
-                    if e - s > 1:
-                        dx = np.diff(x[s:e])
-                        dy = np.diff(y[s:e])
-                        lim = pair_budget - 2.0 * (radius + pay["max_edge_len"])
-                        if (dx * dx + dy * dy > lim * lim).any():
-                            fb.append(url)
-                            done.add(url)
-                            continue
                     by_region.setdefault(int(rkeys[i]), []).append((s, e))
 
                 for rkey, spans in by_region.items():
                     pay = pays[rkey]
-                    spd = spds.get(rkey)
-                    if spd is None:
-                        # no sp rows came back for this region (no demands
-                        # — e.g. single-node core); fall back defensively
-                        for s, e in spans:
-                            fb.append(u[s])
-                            done.add(u[s])
-                        continue
-                    if spd.adj is None:
-                        # wire the epath-reconstruction adjacency to the
-                        # payload broadcast's expanded adj (shipped once,
-                        # shared by the sp job and this kernel)
-                        spd.adj = pay["exp"][0]
                     sel = np.concatenate(
                         [np.arange(s, e) for s, e in spans])
                     out, have = _probe_match(
                         u[sel], pid[sel], x[sel], y[sel], pay["cells"],
-                        pay["geom"], pay["stats"], spd, cfg)
+                        pay["geom"], pay["stats"], pay["sp"], cfg)
                     for f in out:
                         f["_fb"] = False
                     frames += out

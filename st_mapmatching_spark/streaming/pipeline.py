@@ -162,9 +162,9 @@ def stream_match_batches(spark: SparkSession, pages: DataFrame, net, cfg: MatchC
     epoch builds the payloads its regions need, later epochs reuse them
     and build only newly-touched regions — a steady-state stream stops
     rebuilding payloads per epoch entirely. ``sharded_kwargs`` passes
-    region_m/cover_pad/sp_pair_max overrides; omitted values auto-derive
-    from the FIRST micro-batch's sample (then stay pinned via the memo
-    key, so every epoch shares one tiling)."""
+    region_m/cover_pad overrides; omitted values auto-derive from the
+    FIRST micro-batch's sample (then stay pinned via the memo key, so
+    every epoch shares one tiling)."""
     from ..operators.matching import match_pages
     from ..operators.sharded import match_pages_sharded
 
@@ -174,7 +174,7 @@ def stream_match_batches(spark: SparkSession, pages: DataFrame, net, cfg: MatchC
         if batch_df.isEmpty():
             return
         if plan == "sharded":
-            if not {"region_m", "cover_pad", "sp_pair_max"} <= state.keys():
+            if not {"region_m", "cover_pad"} <= state.keys():
                 from ..operators.sharded import derive_shard_params
                 auto = derive_shard_params(spark, batch_df, net, cfg)
                 for k, v in auto.items():

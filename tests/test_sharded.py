@@ -1,7 +1,8 @@
 """Region-sharded one-pass matcher (operators/sharded.py) vs the staged
 relational path: identical rows on a multi-region fixture including
 guard-violating trajectories (fallback), an off-network trajectory
-(status 3), and a single-point page."""
+(status 3), a single-point page and long-step trajectories matched
+in-kernel."""
 
 import math
 
@@ -56,6 +57,28 @@ def fixture_pages(spark):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["url", "text"]))
 
 
+def _assert_same_rows(got, want):
+    """Url-indexed matched frames equal column for column: status and
+    epath exactly, the metrics to 1e-12."""
+    assert list(got.index) == list(want.index)
+    assert (got.status == want.status).all(), \
+        got.status.compare(want.status)
+    for url in want.index:
+        g_ep = got.loc[url].epath
+        w_ep = want.loc[url].epath
+        g_ep = None if g_ep is None else [int(e) for e in g_ep]
+        w_ep = None if w_ep is None else [int(e) for e in w_ep]
+        assert g_ep == w_ep, f"{url}: {g_ep} != {w_ep}"
+        for c in ("step_0", "step_n", "dist", "avg_speed", "prob",
+                  "norm_prob", "dist_prob", "trans_prob", "dir_prob"):
+            gv, wv = float(got.loc[url][c]), float(want.loc[url][c])
+            if np.isnan(wv):
+                assert np.isnan(gv), f"{url}:{c}"
+            else:
+                assert gv == pytest.approx(wv, rel=1e-12, abs=1e-12), \
+                    f"{url}:{c}"
+
+
 def test_sharded_matches_staged(spark, bignet, fixture_pages):
     """The sharded plan, and the staged plan with its sp table collected
     to the driver, both equal the relational staged plan row for row.
@@ -67,29 +90,12 @@ def test_sharded_matches_staged(spark, bignet, fixture_pages):
     want = (match_pages(spark, fixture_pages, bignet, cfg)
             .toPandas().set_index("url").sort_index())
     sharded = (match_pages_sharded(spark, fixture_pages, bignet, cfg,
-                                   region_m=3000.0, cover_pad=1500.0,
-                                   sp_pair_max=1300.0)
+                                   region_m=3000.0, cover_pad=1500.0)
                .toPandas().set_index("url").sort_index())
     collected = (match_pages(spark, fixture_pages, bignet, CFG)
                  .toPandas().set_index("url").sort_index())
     for got in (sharded, collected):
-        assert list(got.index) == list(want.index)
-        assert (got.status == want.status).all(), \
-            got.status.compare(want.status)
-        for url in want.index:
-            g_ep = got.loc[url].epath
-            w_ep = want.loc[url].epath
-            g_ep = None if g_ep is None else [int(e) for e in g_ep]
-            w_ep = None if w_ep is None else [int(e) for e in w_ep]
-            assert g_ep == w_ep, f"{url}: {g_ep} != {w_ep}"
-            for c in ("step_0", "step_n", "dist", "avg_speed", "prob",
-                      "norm_prob", "dist_prob", "trans_prob", "dir_prob"):
-                gv, wv = float(got.loc[url][c]), float(want.loc[url][c])
-                if np.isnan(wv):
-                    assert np.isnan(gv), f"{url}:{c}"
-                else:
-                    assert gv == pytest.approx(wv, rel=1e-12, abs=1e-12), \
-                        f"{url}:{c}"
+        _assert_same_rows(got, want)
     # sanity on the fixture's intent
     assert int(want.loc["t1"].status) == 0
     assert int(want.loc["t2"].status) == 0
@@ -106,8 +112,7 @@ def test_sharded_fallback_routes_guard_violators(spark, bignet, fixture_pages):
     from dataclasses import replace
     cfg = replace(CFG, sp_broadcast_max_rows=0)
     got = (match_pages_sharded(spark, fixture_pages, bignet, cfg,
-                               region_m=3000.0, cover_pad=100.0,
-                               sp_pair_max=1300.0)
+                               region_m=3000.0, cover_pad=100.0)
            .toPandas().set_index("url").sort_index())
     want = (match_pages(spark, fixture_pages, bignet, cfg)
             .toPandas().set_index("url").sort_index())
@@ -115,8 +120,8 @@ def test_sharded_fallback_routes_guard_violators(spark, bignet, fixture_pages):
 
 
 def test_sharded_auto_params_no_hand_sizing(spark, bignet, fixture_pages):
-    """r7 (r6 verdict item 3): NO hand params — region_m/cover_pad/
-    sp_pair_max auto-derived from network + corpus stats; results equal
+    """NO hand params — region_m/cover_pad auto-derived from corpus
+    stats; results equal
     the staged path, and the clean trajectories take the sharded kernel
     (the only fallback is t3, whose 7 km span exceeds any sane tiling the
     sample would choose... included in the sample it grows cover_pad, so
@@ -157,8 +162,7 @@ def test_sharded_adversarial_params_fail_closed(spark, bignet,
     from dataclasses import replace
     cfg = replace(CFG, sp_broadcast_max_rows=0)
     res = match_pages_sharded(spark, fixture_pages, bignet, cfg,
-                              region_m=3000.0, cover_pad=100.0,
-                              sp_pair_max=1300.0)
+                              region_m=3000.0, cover_pad=100.0)
     assert res._shard_fallbacks > 0
 
 
@@ -189,19 +193,18 @@ def test_distributed_subnetwork_bitwise_matches_driver(spark, bignet):
     assert a.adj == b.adj
 
 
-def test_sharded_payload_bytes_cap_fails_closed(spark, bignet,
-                                                fixture_pages):
-    """The r6 ADVICE gap: adjacency/geometry payload size was uncapped.
-    A tiny byte budget must raise with sizing guidance, not broadcast."""
+def test_sharded_payload_bytes_cap_fails_closed(spark, fixture_pages):
+    """Adjacency/geometry payload size is capped: a tiny byte budget
+    must raise with sizing guidance, not broadcast. The network is a
+    fresh one: the payload memo lives on the network, keyed by tiling,
+    and a cache hit legitimately skips the guard."""
     from dataclasses import replace
-    import pytest as _pytest
     cfg = replace(CFG, sp_broadcast_max_rows=0)
-    # params must be distinct from every other test's: the payload memo
-    # is keyed by tiling, and a cache hit legitimately skips the guard
-    with _pytest.raises(ValueError, match="payload_max_bytes"):
-        match_pages_sharded(spark, fixture_pages, bignet, cfg,
-                            region_m=2995.0, cover_pad=1495.0,
-                            sp_pair_max=1295.0, payload_max_bytes=10)
+    with pytest.raises(ValueError, match="payload_max_bytes"):
+        match_pages_sharded(spark, fixture_pages,
+                            D.big_grid_network(CFG, g=40), cfg,
+                            region_m=3000.0, cover_pad=1500.0,
+                            payload_max_bytes=10)
 
 
 def test_stream_sharded_plan_reuses_payloads(spark, bignet, fixture_pages,
@@ -213,7 +216,7 @@ def test_stream_sharded_plan_reuses_payloads(spark, bignet, fixture_pages,
     from st_mapmatching_spark.streaming.pipeline import stream_match_batches
 
     cfg = replace(CFG, sp_broadcast_max_rows=0)
-    kw = dict(region_m=3000.0, cover_pad=1500.0, sp_pair_max=1300.0)
+    kw = dict(region_m=3000.0, cover_pad=1500.0)
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     clean = fixture_pages.filter(F.col("url").isin("t1", "t2", "t5"))
     clean.repartition(3).write.parquet(in_dir)
@@ -222,11 +225,10 @@ def test_stream_sharded_plan_reuses_payloads(spark, bignet, fixture_pages,
     # HIT it, which is exactly the reuse this test pins)
     want = (match_pages_sharded(spark, clean, bignet, cfg, **kw)
             .toPandas().set_index("url").sort_index())
-    entry_key = next(iter(bignet._shard_payload_cache))
-    pays_before = dict(bignet._shard_payload_cache[
-        (kw["region_m"], kw["cover_pad"], kw["sp_pair_max"],
-         cfg.radius + cfg.max_dist / 2.0 + 300.0,
-         cfg.max_dist, cfg.radius, cfg.cell_size)]["pays"])
+    memo_key = (kw["region_m"], kw["cover_pad"],
+                cfg.radius + cfg.max_dist / 2.0 + 300.0,
+                cfg.max_dist, cfg.radius, cfg.cell_size)
+    pays_before = dict(bignet._shard_payload_cache[memo_key]["pays"])
 
     def sink(df, epoch_id):
         df.select("url", "status",
@@ -249,8 +251,29 @@ def test_stream_sharded_plan_reuses_payloads(spark, bignet, fixture_pages,
         w_s = "" if w_ep is None else ",".join(str(int(e)) for e in w_ep)
         assert got.loc[url].ep == w_s, url
     # payload memo unchanged: the stream built ZERO new regions
-    pays_after = bignet._shard_payload_cache[
-        (kw["region_m"], kw["cover_pad"], kw["sp_pair_max"],
-         cfg.radius + cfg.max_dist / 2.0 + 300.0,
-         cfg.max_dist, cfg.radius, cfg.cell_size)]["pays"]
+    pays_after = bignet._shard_payload_cache[memo_key]["pays"]
     assert set(pays_after) == set(pays_before)
+
+
+def test_sharded_long_steps_match_in_kernel(spark, bignet):
+    """A clean trajectory with ~900 m post-simplification steps: longer
+    than the 700 m an sp table precomputed to euclid 1,300 m could cover
+    (1300 - 2*(radius 50 + edge 250)), but inside guard A. Its shortest
+    paths are searched on demand in the kernel, so it takes no fallback
+    and its row equals the staged relational plan's."""
+    from dataclasses import replace
+    cfg = replace(CFG, sp_broadcast_max_rows=0)
+    pts = [(150.0, 640.0), (1050.0, 610.0), (1950.0, 640.0),
+           (2125.0, 1500.0), (2110.0, 2400.0)]
+    steps = np.hypot(*np.diff(np.array(pts), axis=0).T)
+    assert steps.max() > 1300.0 - 2 * (CFG.radius + 250.0)
+    pages = spark.createDataFrame(pd.DataFrame([_page("t7", pts)],
+                                               columns=["url", "text"]))
+    res = match_pages_sharded(spark, pages, bignet, cfg,
+                              region_m=3000.0, cover_pad=1500.0)
+    assert res._shard_fallbacks == 0
+    got = res.toPandas().set_index("url").sort_index()
+    want = (match_pages(spark, pages, bignet, cfg)
+            .toPandas().set_index("url").sort_index())
+    _assert_same_rows(got, want)
+    assert int(want.loc["t7"].status) == 0

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from st_mapmatching_spark.config import MatchConfig
-from st_mapmatching_spark.graph.dijkstra import _epath, bounded_dijkstra
+from st_mapmatching_spark.graph.dijkstra import shortest_paths_to_targets
 from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.kernels.keys import key_find, key_index
 from st_mapmatching_spark.operators.matching import (METRIC_COLS,
@@ -335,30 +335,48 @@ def test_no_candidates_and_one_layer_urls():
     assert [list(e) for e in got.epath[:2]] == [[3], [9]]
 
 
-def test_region_payload_paths_equal_single_target_search():
-    """RegionSpPayload.paths (one search per distinct origin) gives every
-    (o, d) the path a single-target bounded Dijkstra finds."""
+def test_demand_payload_equals_sp_table():
+    """DemandSpPayload (searched per batch, one search per distinct
+    origin, memoized) gives every (o, d) exactly the lookup columns and
+    path of an SpPayload built from single-target searches over the same
+    adjacency: across two overlapping batches (memo hits, and origins
+    asked again with new targets), with o == d pairs, unreachable pairs
+    (a node off the graph) and pairs beyond max_dist."""
     from st_mapmatching_spark.graph.network import Network
-    from st_mapmatching_spark.operators.sharded import RegionSpPayload
+    from st_mapmatching_spark.operators.matching import DemandSpPayload
     from st_mapmatching_spark.sources.network_gen import make_grid_network
     e, n = make_grid_network(CFG)
     net = Network(e, n, CFG)
-    nodes = net.nodes.nid.to_numpy()
+    exp = (net.adj, net.edge_speed, net.edge_dist,
+           net.dir_stats().edge_totals())
+    nodes = np.append(net.nodes.nid.to_numpy(np.int64), 10 ** 6)
     rng = np.random.default_rng(1)
-    o = rng.choice(nodes[:12], 300)
-    d = rng.choice(nodes, 300)
-    d[::17] = o[::17]                      # o == d: no path
-    max_dist = 1500.0
-    spd = RegionSpPayload.__new__(RegionSpPayload)
-    spd.adj, spd.max_dist = net.adj, max_dist
-    flat, off = spd.paths(o, d)
-    for i, (a, b) in enumerate(zip(o.tolist(), d.tolist())):
-        want = []
-        if a != b:
-            _, prev, settled = bounded_dijkstra(net.adj, a, max_dist, {b})
-            want = _epath(prev, b) if b in settled else []
-        assert flat[off[i]:off[i + 1]].tolist() == want, (a, b)
-    assert any(off[i + 1] > off[i] for i in range(len(o)))
-    assert not any(off[i + 1] > off[i] for i in range(0, len(o), 17))
-    empty = spd.paths(np.empty(0, np.int64), np.empty(0, np.int64))
-    assert len(empty[0]) == 0 and list(empty[1]) == [0]
+    o1, d1 = rng.choice(nodes[:12], 300), rng.choice(nodes, 300)
+    d1[::17] = o1[::17]                    # o == d: cost 0, no path
+    o2 = np.concatenate([o1[:100], o1[:100]])
+    d2 = np.concatenate([d1[:100], rng.choice(nodes, 100)])
+    max_dist = 1500.0                      # far grid corners are beyond
+    rows = [shortest_paths_to_targets(exp[0], int(a), [int(b)], max_dist,
+                                      *exp[1:])[0]
+            for a, b in {(a, b) for a, b in zip(np.concatenate([o1, o2]),
+                                                np.concatenate([d1, d2]))}]
+    want_spd = SpPayload(pd.DataFrame(rows))
+    spd = DemandSpPayload(exp, max_dist)
+    for o, d in ((o1, d1), (o2, d2)):
+        got, want = spd.lookup(o, d), want_spd.lookup(o, d)
+        assert got.keys() == want.keys()
+        for c in want:
+            assert got[c].dtype == want[c].dtype, c
+            assert np.array_equal(got[c], want[c]), c
+        for g, w in zip(spd.paths(o, d), want_spd.paths(o, d)):
+            assert np.array_equal(g, w)
+    assert len(spd.o) == len(rows)         # each pair searched once
+    hit = want_spd.lookup(o1, d1)
+    assert hit["has_path"].any() and not hit["has_path"][::17].any()
+    off_graph = d1 == 10 ** 6
+    assert off_graph.any() and np.isinf(hit["cost"][off_graph]).all()
+    assert np.isinf(hit["cost"][~off_graph & (o1 != d1)]).any()
+    empty = np.empty(0, np.int64)
+    flat, off = spd.paths(empty, empty)
+    assert len(flat) == 0 and list(off) == [0]
+    assert all(len(v) == 0 for v in spd.lookup(empty, empty).values())
