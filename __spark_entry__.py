@@ -391,18 +391,14 @@ def q_match_grid(spark, sf):
 
 
 def q_match_grid_bignet(spark, sf):
-    """THE planet-network gate: the SAME end-to-end pipeline as match_grid
-    but with sp_broadcast_max_rows=0, which defeats the one-pass
-    memoized-sp regime exactly the way a >2,000-node network does (the
-    gate is n_nodes^2 <= min(4e6, sp_broadcast_max_rows) at
-    operators/matching.py — identical code path either way): distributed
-    demand-driven shortest paths, relational sp equi-join scoring
-    (score_pairs_df broadcast_sp=False), post-Viterbi
-    attach_epath_relational. ZERO driver collects of unbounded state —
-    the plan a 100 TB / planet-OSM deployment runs. Hash-gated against
-    the same full DuckDB twin as match_grid (semantics are
-    path-independent by design; throughput of this path on a real 122k-
-    node network is measured by bench.py --bignet-leg)."""
+    """The relational-plan gate: the SAME end-to-end pipeline as
+    match_grid but with sp_broadcast_max_rows=0, which pins choose_plan's
+    relational plan (operators/matching.py): distributed demand-driven
+    shortest paths, relational sp equi-join scoring (score_pairs_df
+    broadcast_sp=False), post-Viterbi attach_epath_relational. ZERO
+    driver collects of unbounded state and no in-kernel search.
+    Hash-gated against the same full DuckDB twin as match_grid
+    (semantics are plan-independent by design)."""
     from dataclasses import replace
     from st_mapmatching_spark.operators.matching import match_pages
     pages = _render_pages(_pts(spark, sf))

@@ -54,10 +54,10 @@ class MatchConfig:
     # cell grid (replaces the GeoPandas STRtree; new engineering)
     cell_size: float = 64.0         # meters; >= radius keeps covers tiny
 
-    # scale switch: the demand-driven sp table is broadcast into the fused
-    # matcher only below this row count; above it the pipeline falls back
-    # to the relational path (sp equi-join + post-Viterbi epath attach)
-    # with zero driver-side collection of the table
+    # plan switch: only the sign is read. <= 0 pins the relational plan
+    # (distributed sp table, sp equi-join + post-Viterbi epath attach,
+    # zero driver-side collection); > 0 lets the kernel plans search
+    # their shortest paths in-kernel (operators/matching.choose_plan)
     sp_broadcast_max_rows: int = 2_000_000
 
     # run the match pipeline on xxhash64(url) longs instead of the url

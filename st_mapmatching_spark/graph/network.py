@@ -182,6 +182,13 @@ class Network:
             self._padded = (eids, mat)
         return self._padded
 
+    def search_state(self):
+        """(adjacency, edge speed, edge dist, edge dir totals): the state
+        one bounded Dijkstra (shortest_paths_to_targets) searches on. The
+        sp table broadcasts it; a DemandSpPayload holds it."""
+        return (self.adj, self.edge_speed, self.edge_dist,
+                self.dir_stats().edge_totals())
+
     def dir_stats(self):
         """Lazily-built per-edge direction sufficient stats
         (kernels.dir_stats.EdgeDirStats)."""

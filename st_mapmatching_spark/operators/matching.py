@@ -1,13 +1,20 @@
 """The map-matching pipeline: candidates -> transition pairs + flags ->
 shortest-path attach -> scoring -> per-trajectory beam Viterbi -> stitch.
 
-choose_plan picks one of two plans for match_pages (the third, the
-region-sharded plan, is match_pages_sharded in sharded.py):
-  onepass: the whole pipeline in numpy inside one narrow Arrow stage over
-           pages (match_pages_onepass -> _probe_match -> _match_frame)
-  staged : Spark stages (match_points): candidate_join, then either
-           fused_match (_match_frame over url batches, sp broadcast) or
-           the relational tail below
+choose_plan picks one of three plans for match_pages and match_points
+(a fourth, the region-sharded plan, is match_pages_sharded in
+sharded.py):
+  onepass   : the whole pipeline in numpy inside one narrow Arrow stage
+              over pages (match_pages_onepass -> _probe_match ->
+              _match_frame)
+  staged    : candidate_join's url shuffle and top-k window, then
+              fused_match (_match_frame over url batches)
+  relational: candidate_join, then the relational tail below
+
+The kernel plans (onepass, staged, sharded) take their shortest paths
+from one source, a DemandSpPayload: each batch's (o, d) pairs are
+searched on the broadcast search state the first time they are asked
+for and memoized per worker. No sp table is built before the match.
 
 Relational tail (Spark lifecycle of ST_Matching.matching, SURVEY.md §3.1):
   pairs  : layer self-join of the candidate table — pure DataFrame joins
@@ -25,12 +32,13 @@ emission, lockstep beam (or classic) Viterbi and one batched stitch
 (hmm.stitch_batch) over every trajectory of a batch, in flat arrays:
 the winning states come back from viterbi_beam_lockstep as offsets +
 (layer, eid), the winning pair rows are one composite-key lookup, the
-sp paths one gather from the payload's CSR path arrays (SpPayload.paths)
-and the metrics per-url segment reductions. _match_frame calls it with
-the broadcast payload's paths, viterbi_match with none, emitting the
-winning steps for attach_epath_relational. Both score transitions with
-_transition_probs. hmm.stitch_path stays as the per-url reference (the
-oracle's stitch and the differential tests' baseline).
+sp paths one gather from the payload's CSR path arrays
+(DemandSpPayload.paths) and the metrics per-url segment reductions.
+_match_frame calls it with the payload's paths, viterbi_match with
+none, emitting the winning steps for attach_epath_relational. Both
+score transitions with _transition_probs. hmm.stitch_path stays as the
+per-url reference (the oracle's stitch and the differential tests'
+baseline).
 """
 
 from __future__ import annotations
@@ -457,56 +465,13 @@ def _csr_paths(eps: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return flat, np.concatenate([[0], np.cumsum(lens)])
 
 
-class SpPayload:
-    """Columnar shortest-path table for broadcast: (o, d) lookups are
-    vectorized numpy gathers (rank-encode o and d against their sorted
-    uniques, binary-search the composite key). The paths are stored
-    once as CSR arrays (ep_flat eids, ep_off offsets in key order), so
-    the stitch gathers every path of a batch in one call (paths)."""
-
-    __slots__ = ("uniq", "key", "cost", "path_speed", "pcx", "pcy",
-                 "pw", "pn", "ep_flat", "ep_off", "has_path")
-
-    def __init__(self, sp_pdf: pd.DataFrame):
-        self.uniq, self.key, order = key_index(
-            sp_pdf.o_node.to_numpy(np.int64), sp_pdf.d_node.to_numpy(np.int64))
-        for c in ("cost", "path_speed", "pcx", "pcy", "pw"):
-            setattr(self, c, sp_pdf[c].to_numpy(np.float64)[order])
-        self.pn = sp_pdf.pn.to_numpy(np.int64)[order]
-        self.ep_flat, self.ep_off = _csr_paths(sp_pdf.epath.to_numpy()[order])
-        self.has_path = np.diff(self.ep_off) > 0
-
-    def locate(self, o_node: np.ndarray, d_node: np.ndarray):
-        """(positions, hit_mask) for (o, d) query arrays — pure numpy."""
-        return key_find(self.uniq, self.key, o_node, d_node)
-
-    def lookup(self, o_node: np.ndarray, d_node: np.ndarray) -> dict:
-        """The sp columns _transition_probs reads for the (o, d) query
-        arrays; a pair missing from the table is unreachable (cost inf,
-        zero stats, no path)."""
-        pos, hit = self.locate(o_node, d_node)
-        return {"cost": np.where(hit, self.cost[pos], np.inf),
-                "path_speed": np.where(hit, self.path_speed[pos], 0.0),
-                "pcx": np.where(hit, self.pcx[pos], 0.0),
-                "pcy": np.where(hit, self.pcy[pos], 0.0),
-                "pw": np.where(hit, self.pw[pos], 0.0),
-                "pn": np.where(hit, self.pn[pos], 0),
-                "has_path": hit & self.has_path[pos]}
-
-    def paths(self, o_node: np.ndarray, d_node: np.ndarray):
-        """The sp paths of the (o, d) query arrays as CSR (flat eids,
-        offsets); a pair missing from the table has an empty path."""
-        return hmm.csr_take(self.ep_flat, self.ep_off,
-                        *self.locate(o_node, d_node))
-
-
 class DemandSpPayload:
-    """SpPayload's interface (lookup, paths) over a search state instead
-    of a precomputed table: the first time a pair is asked for, it is
-    searched by bounded Dijkstra on ``exp`` = (adjacency, edge speed,
-    edge dist, edge dir totals) — one shortest_paths_to_targets call per
-    distinct origin, toward that origin's new targets — and its row is
-    memoized on this object. Held in a broadcast value, the memo lives
+    """The kernel's shortest paths, (o, d) lookups and CSR paths searched
+    on demand: the first time a pair is asked for, it is searched by
+    bounded Dijkstra on ``exp`` (Network.search_state: adjacency, edge
+    speed, edge dist, edge dir totals) — one shortest_paths_to_targets
+    call per distinct origin, toward that origin's new targets — and its
+    row is memoized on this object. Held in a broadcast value, the memo lives
     as long as the worker keeps the broadcast loaded, so a pair is
     searched at most once per worker: the reference's per-query route
     memo (astar.py:70-72, geograph.py:223), per worker.
@@ -562,14 +527,16 @@ class DemandSpPayload:
         self._reindex()
 
     def lookup(self, o_node: np.ndarray, d_node: np.ndarray) -> dict:
-        """SpPayload.lookup: every pair is searched, so a miss default
-        is the search's own unreachable row."""
+        """The sp columns _transition_probs reads for the (o, d) query
+        arrays; an unreachable pair is the search's own row (cost inf,
+        zero stats, no path)."""
         r = self._rows(o_node, d_node)
         return {c: getattr(self, c)[r] for c in self._COLS} | {
             "has_path": self.ep_off[r + 1] > self.ep_off[r]}
 
     def paths(self, o_node: np.ndarray, d_node: np.ndarray):
-        """SpPayload.paths, as CSR (flat eids, offsets)."""
+        """The sp paths of the (o, d) query arrays as CSR (flat eids,
+        offsets)."""
         r = self._rows(o_node, d_node)
         return hmm.csr_take(self.ep_flat, self.ep_off, r,
                             np.ones(len(r), dtype=bool))
@@ -587,9 +554,9 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
     (a no-op on fused_match's input, which the JVM window already cut).
     ``geom``/``stats`` are the broadcast network tuples ((eids_sorted,
     mat, src, dst, dist, speed) / (dir_stats, node_xy)); ``spd`` the
-    SpPayload or DemandSpPayload. Shared verbatim by the staged fused matcher (fused_match),
-    the one-pass pages matcher and the sharded matcher (both through
-    _probe_match) so the paths cannot drift."""
+    DemandSpPayload. Shared verbatim by the staged fused matcher
+    (fused_match), the one-pass pages matcher and the sharded matcher
+    (both through _probe_match) so the paths cannot drift."""
     from ..kernels.geodesy import bearing_deg
     from ..kernels.linear_ref import project_core
 
@@ -699,7 +666,7 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
     Viterbi (lockstep beam, or classic per url) and one batched stitch
     (hmm.stitch_batch) over every url of a batch; one MATCHED_SCHEMA row
     per url. ``paths`` is the sp payload's CSR path lookup
-    (SpPayload.paths); with None the rows carry MATCHED_PRE_SCHEMA's
+    (DemandSpPayload.paths); with None the rows carry MATCHED_PRE_SCHEMA's
     winning steps (steps, last_eid) instead of expanded paths.
 
     Url g's candidate rows are c_off[g]:c_off[g + 1] of ``cand`` (pid,
@@ -786,27 +753,12 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
     return pd.DataFrame(out)
 
 
-def _sp_payload_for(spark: SparkSession, net: Network,
-                    cfg: MatchConfig) -> "SpPayload":
-    """All-pairs shortest-path payload for a small network, memoized ON
-    the network: the demand superset depends only on the network, so
-    repeated match calls (the repair loop, benchmark iterations, repeated
-    jobs against one network) skip the whole sp pipeline — the way the
-    reference memoizes its route searches (geograph.py:223 route memo)."""
-    key = float(cfg.max_dist)  # the only cfg input to the sp build
-    cache = getattr(net, "_sp_payload_cache", None)
-    if cache is None:
-        cache = net._sp_payload_cache = {}
-    payload = cache.get(key)
-    if payload is None:
-        nids, _ = net.node_xy_arrays()
-        nd = spark.createDataFrame(pd.DataFrame({"n": nids}))
-        demands = (nd.select(F.col("n").alias("o_node"))
-                   .crossJoin(nd.select(F.col("n").alias("d_node"))))
-        payload = SpPayload(
-            shortest_path_table(spark, demands, net, cfg).toPandas())
-        cache[key] = payload
-    return payload
+def _sp_broadcast(spark: SparkSession, net: Network, cfg: MatchConfig):
+    """The kernel's DemandSpPayload over the network's search state,
+    broadcast once per network and max_dist. Its memo fills on the
+    workers as batches ask for pairs; nothing is searched here."""
+    return net.broadcast(spark, f"sp:{cfg.max_dist}", lambda: DemandSpPayload(
+        net.search_state(), cfg.max_dist))
 
 
 # Rows of candidates one _match_frame call scores: its pair-table
@@ -895,9 +847,9 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
     no persist, no JVM work between source scan and result.
 
     At 1000 executors this is the ideal plan: a single embarrassingly
-    parallel map over pages with all network state broadcast once.
-    Requires the memoized-sp small-network regime and a broadcastable
-    index (choose_plan's "onepass").
+    parallel map over pages with all network state broadcast once; the
+    shortest paths are searched in-kernel (DemandSpPayload). Requires a
+    broadcastable index (choose_plan's "onepass").
 
     The index is built radius-dilated in-function (pad >= cfg.radius by
     construction — the staged path's in-band pad guard is satisfied
@@ -906,8 +858,7 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
                              lambda: (net.dir_stats(), net.node_xy_arrays()))
     geom_bc = net.broadcast(spark, "geom",
                             lambda: (*net.padded_geoms(), *net.attr_arrays()))
-    sp_bc = net.broadcast(spark, f"sp:{cfg.max_dist}",
-                          lambda: _sp_payload_for(spark, net, cfg))
+    sp_bc = _sp_broadcast(spark, net, cfg)
     _pad = max(net.cfg.radius, cfg.radius)
     idx_bc = net.broadcast(spark, f"cellidx:{_pad}", lambda: (
         lambda ci: (ci.cell.to_numpy(), ci.eid.to_numpy()))(
@@ -931,91 +882,84 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
     return pages.select("url", "text").mapInPandas(op, schema=MATCHED_SCHEMA)
 
 
-def fused_match(spark: SparkSession, cands: DataFrame,
-                sp: DataFrame, net: Network, cfg: MatchConfig) -> DataFrame:
+def fused_match(spark: SparkSession, cands: DataFrame, urls: DataFrame,
+                net: Network, cfg: MatchConfig) -> DataFrame:
     """Per-trajectory pair build + flags + scoring + Viterbi + stitch in ONE
-    shuffle-free Arrow stage over the url-partitioned candidate table.
+    Arrow stage over the url-partitioned candidate table; one
+    MATCHED_SCHEMA row per url of ``urls`` (one row per url, column
+    ``url``), status 3 for a url without candidates.
 
     The staged design materializes the top_k^2-per-layer transition-pair
     table (O(25x points)) through three shuffles; fusing keeps it entirely
-    inside the per-url group, with the sp table + direction stats
-    broadcast. Unlike a cogrouped applyInPandas (one Python call and two
-    pandas constructions per trajectory), this streams whole Arrow batches
-    of MANY trajectories through one mapInPandas (cut at url boundaries
-    by url_batches) and slices groups in numpy. Numeric semantics are
-    the oracle's: score_base_np / engine_dir_probs, the lockstep twin of
+    inside the per-url group, with the network state broadcast and the
+    shortest paths searched in-kernel (DemandSpPayload). Unlike a
+    cogrouped applyInPandas (one Python call and two pandas
+    constructions per trajectory), this streams whole Arrow batches of
+    MANY trajectories through one mapInPandas (cut at url boundaries by
+    url_batches) and slices groups in numpy. Numeric semantics are the
+    oracle's: score_base_np / engine_dir_probs, the lockstep twin of
     viterbi_beam and the batch twin of stitch_path (the parity suite
     pins this against the oracle).
 
-    ``sp`` is the memoized SpPayload or a sp DataFrame, collected here.
-    Urls with no candidates never enter this stage — the caller re-attaches
-    their status-3 rows (_with_no_cand_rows). The caller also guards sp's
-    size (choose_plan, and the row count against
-    cfg.sp_broadcast_max_rows)."""
+    ``urls`` is left-joined to the candidates on their url partitioning,
+    so a url without candidates arrives as one all-null row and gets its
+    status-3 row in the kernel, as on the one-pass plan."""
     stats_bc = net.broadcast(spark, "stats",
                              lambda: (net.dir_stats(), net.node_xy_arrays()))
     geom_bc = net.broadcast(spark, "geom",
                             lambda: (*net.padded_geoms(), *net.attr_arrays()))
-    sp_bc = spark.sparkContext.broadcast(
-        sp if isinstance(sp, SpPayload) else SpPayload(sp.toPandas()))
+    sp_bc = _sp_broadcast(spark, net, cfg)
 
     def op(batches):
         for pdf in url_batches(batches):
-            yield _match_frame(pdf, geom_bc.value, stats_bc.value,
-                               sp_bc.value, cfg)
+            hit = pdf.eid.notna().to_numpy()
+            frames = [] if not hit.any() else [_match_frame(
+                pdf[hit].astype({"pid": np.int64, "eid": np.int64}),
+                geom_bc.value, stats_bc.value, sp_bc.value, cfg)]
+            if not hit.all():
+                frames.append(pd.DataFrame(no_match_rows(pdf.url[~hit])))
+            yield pd.concat(frames, ignore_index=True) if len(frames) > 1 \
+                else frames[0]
 
-    # local sort only — cands is already url-hash partitioned, so every
-    # url's rows are contiguous in exactly one partition after this
-    src = cands.sortWithinPartitions("url", "pid", "dist_p2c", "eid")
+    # the url side is shuffled onto cands' url-hash partitioning, so every
+    # url's rows are contiguous in exactly one partition after the sort
+    src = (urls.join(cands, "url", "left")
+           .sortWithinPartitions("url", "pid", "dist_p2c", "eid"))
     return src.mapInPandas(op, schema=url_typed(MATCHED_SCHEMA, cands))
 
 
 class Plan(NamedTuple):
-    """choose_plan's answer: the plan, where the staged plan's shortest
-    paths come from, and why."""
-    name: str    # "onepass" | "staged"
-    sp: str      # "memo" | "count" | "relational"
+    """choose_plan's answer: the plan and why."""
+    name: str    # "onepass" | "staged" | "relational"
     reason: str
 
 
 def choose_plan(net: Network, cfg: MatchConfig,
                 broadcast_index: bool) -> Plan:
-    """The one place the matcher's plan is chosen; logged at INFO.
+    """The one place the matcher's plan is chosen; logged at INFO. It
+    reads the config and the caller's index choice, nothing of the
+    network: every kernel plan searches its shortest paths on demand.
 
-    The gate is the memoized all-pairs sp payload (_sp_payload_for): it
-    holds n^2 rows for an n-node network, so it is taken only while
-    n^2 <= min(4,000,000, cfg.sp_broadcast_max_rows). Then:
-
-    * ``onepass`` — the gate holds and the cell index is broadcast: the
-      whole matcher is one narrow Arrow stage (match_pages_onepass).
-    * ``staged``/``memo`` — the gate holds but broadcast_index=False:
-      the staged plan (match_points) on the memoized payload.
-    * ``staged``/``relational`` — cfg.sp_broadcast_max_rows <= 0 pins the
-      relational tail: sp equi-join + attach_epath_relational, nothing
+    * ``relational`` — cfg.sp_broadcast_max_rows <= 0 pins the relational
+      tail: sp table + equi-join + attach_epath_relational, nothing
       collected to the driver.
-    * ``staged``/``count`` — otherwise the demand-driven sp table is
-      built; it is collected for fused_match when its row count is
-      <= cfg.sp_broadcast_max_rows, and takes the relational tail when not.
+    * ``onepass`` — the cell index is broadcast: the whole matcher is one
+      narrow Arrow stage (match_pages_onepass).
+    * ``staged`` — broadcast_index=False: candidate_join's shuffled index
+      join, then fused_match.
 
-    match_points has no one-pass form: it runs the staged plan with the
-    sp source chosen here. The region-sharded plan is called explicitly
+    match_points has no one-pass form: it runs fused_match on ``onepass``
+    as on ``staged``. The region-sharded plan is called explicitly
     (match_pages_sharded); its guard fallback comes back through
     match_pages."""
-    n2 = len(net.node_xy_arrays()[0]) ** 2
-    cap = min(4_000_000, cfg.sp_broadcast_max_rows)
-    if n2 <= cap:
-        gate = f"memoized sp fits (n^2 = {n2:,} <= {cap:,})"
-        plan = (Plan("onepass", "memo", f"{gate}, cell index broadcast")
-                if broadcast_index else
-                Plan("staged", "memo", f"{gate}, cell index shuffled"))
-    elif cfg.sp_broadcast_max_rows <= 0:
-        plan = Plan("staged", "relational",
+    if cfg.sp_broadcast_max_rows <= 0:
+        plan = Plan("relational",
                     "sp_broadcast_max_rows <= 0 pins the relational sp join")
+    elif broadcast_index:
+        plan = Plan("onepass", "cell index broadcast, sp searched in-kernel")
     else:
-        plan = Plan("staged", "count",
-                    f"n^2 = {n2:,} > {cap:,}: demand sp table, collected if "
-                    f"<= {cfg.sp_broadcast_max_rows:,} rows")
-    log.info("matcher plan %s (sp %s): %s", plan.name, plan.sp, plan.reason)
+        plan = Plan("staged", "cell index shuffled, sp searched in-kernel")
+    log.info("matcher plan %s: %s", plan.name, plan.reason)
     return plan
 
 
@@ -1024,15 +968,15 @@ def match_pages(spark: SparkSession, pages: DataFrame, net: Network,
                 broadcast_index: bool = True) -> DataFrame:
     """pages -> matched, one row per url (SURVEY.md §1.2 result schema),
     on the plan choose_plan picks: match_pages_onepass, or extraction
-    (extract_simplify) followed by match_points' staged plan.
+    (extract_simplify) followed by match_points' plan.
 
     Every input page yields exactly one output row: a page whose text
     yields no points, or whose points find no candidates (including
     out-of-bbox), gets status 3 — the engine's non-throwing version of
     the reference's bbox assert (matching.py:155-168). The result is
-    persisted (lazily on the one-pass plan): every caller runs >= 1
-    action on it and several derive follow-up frames (path geometry,
-    metrics)."""
+    persisted (lazily, except on the relational plan): every caller runs
+    >= 1 action on it and several derive follow-up frames (path
+    geometry, metrics)."""
     plan = choose_plan(net, cfg, broadcast_index)
     if plan.name == "onepass":
         return match_pages_onepass(spark, pages, net, cfg).persist()
@@ -1041,7 +985,8 @@ def match_pages(spark: SparkSession, pages: DataFrame, net: Network,
     # staged plan skips its points distinct, and a page whose text yields
     # ZERO extractable points still gets its status-3 row
     return _match_staged(spark, extract_simplify(pages, cfg), net, cfg,
-                         broadcast_index, plan.sp, urls=pages.select("url"))
+                         broadcast_index, plan.name == "relational",
+                         urls=pages.select("url"))
 
 
 def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
@@ -1050,24 +995,26 @@ def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
     """Match pre-extracted metric points (url, pid, x, y) — the pipeline
     below the text extractor; used by match_pages and by operators that
     synthesize point tables directly (e.g. the topology repair loop's
-    reversed re-match). Runs the staged plan with the sp source
-    choose_plan picks (points have no one-pass form):
+    reversed re-match). Points have no one-pass form:
 
-    candidate_join (slim, one url shuffle, top-k window) -> shortest
-    paths -> fused_match on a driver-side SpPayload (memoized, or the
-    collected demand table), or, when the sp table is too big for a
-    driver copy, the relational tail: rehydrate_cands -> build_pairs_df ->
-    score_pairs_df (sp equi-join) -> viterbi_match ->
-    attach_epath_relational. Urls without candidates get status-3 rows
-    (_with_no_cand_rows). The result is persisted and materialized; the
-    intermediates are released before returning.
+    candidate_join (slim, one url shuffle, top-k window) -> fused_match,
+    its shortest paths searched in-kernel; or, on choose_plan's
+    ``relational`` plan: shortest_path_table over sp_demands ->
+    rehydrate_cands -> build_pairs_df -> score_pairs_df (sp equi-join)
+    -> viterbi_match -> attach_epath_relational, with status-3 rows for
+    urls without candidates (_with_no_cand_rows). The result is
+    persisted. The kernel plan returns it lazily: no Spark job runs
+    before the caller's action. The relational plan materializes it and
+    releases its intermediates before returning.
 
     urls: optional one-row-per-url frame (column ``url``, string domain,
     caller-guaranteed distinct — e.g. ``pages.select("url")``, one row
     per url by construction of the render groupBy). Supplies the
-    status-3 anti-join universe and the url-restore dim without scanning
-    the points table. A url present here but absent from points_in
-    yields a status-3 row.
+    status-3 universe and the url-restore dim without scanning the
+    points table. A url present here but absent from points_in yields a
+    status-3 row. Without it the kernel plan's action reads points_in
+    once per use (candidates, url universe, url-restore dim): persist a
+    costly points_in first.
 
     url dictionary-encoding (cfg.url_id_encode): the url string would
     otherwise ride through every stage (refine -> shuffle -> top-k window
@@ -1080,19 +1027,18 @@ def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
     numeric ids upstream."""
     plan = choose_plan(net, cfg, broadcast_index)
     return _match_staged(spark, points_in, net, cfg, broadcast_index,
-                         plan.sp, urls)
+                         plan.name == "relational", urls)
 
 
 def _match_staged(spark: SparkSession, points_in: DataFrame, net: Network,
-                  cfg: MatchConfig, broadcast_index: bool, sp_from: str,
+                  cfg: MatchConfig, broadcast_index: bool, relational: bool,
                   urls: DataFrame | None) -> DataFrame:
-    """match_points' body; ``sp_from`` is choose_plan's Plan.sp."""
+    """match_points' body."""
     cell_index, edge_attrs = network_frames(spark, net, cfg)
     encode = cfg.url_id_encode and dict(points_in.dtypes).get("url") == "string"
     if encode:
-        # persist carries BOTH forms; the pipeline reads the long, the
-        # restore dim reads both — all from the same cached table
-        both = points_in.withColumn("_uid", F.xxhash64("url")).persist()
+        # the pipeline reads the long, the restore dim reads both
+        both = points_in.withColumn("_uid", F.xxhash64("url"))
         points = both.select(F.col("_uid").alias("url"),
                              *[c for c in points_in.columns if c != "url"])
         if urls is not None:
@@ -1102,8 +1048,8 @@ def _match_staged(spark: SparkSession, points_in: DataFrame, net: Network,
             url_dim = both.select(F.col("_uid").alias("url"),
                                   F.col("url").alias("_url_str")).distinct()
     else:
-        both = points = points_in.persist()
-    # the one-row-per-url universe for the status-3 anti-join, in the
+        both = points = points_in
+    # the one-row-per-url universe for the status-3 rows, in the
     # matcher's url domain (xxhash64-encoded when encode)
     if urls is not None:
         url_universe = urls.select(
@@ -1111,67 +1057,56 @@ def _match_staged(spark: SparkSession, points_in: DataFrame, net: Network,
     else:
         url_universe = points.select("url").distinct()
     cands = candidate_join(points, cell_index, edge_attrs, cfg, broadcast_index,
-                           net=net, slim=True).persist()
-    full = sp = pre = None
+                           net=net, slim=True)
 
-    if sp_from == "memo":
-        # the payload is memoized on the network (_sp_payload_for)
-        matched = fused_match(spark, cands, _sp_payload_for(spark, net, cfg),
-                              net, cfg)
-    else:
-        nids, _ = net.node_xy_arrays()
-        sp = shortest_path_table(
-            spark, sp_demands(cands, edge_attrs, n_nodes=len(nids)),
-            net, cfg).persist()
-        # "relational" (sp_broadcast_max_rows <= 0) skips the row-count
-        # probe: it would be a pure extra blocking action (it forced
-        # candidates + the whole sp pipeline to materialize serially
-        # before the tail was even planned). An empty sp table behaves
-        # identically on both tails (every lookup misses -> cost=inf).
-        if sp_from == "count" and sp.count() <= cfg.sp_broadcast_max_rows:
-            matched = fused_match(spark, cands, sp, net, cfg)
-        else:
-            # sp too large for a driver copy: rehydrate the slim
-            # candidates (one shuffle-free Arrow pass) and run the
-            # relational tail; persisted because the pair self-join
-            # scans it twice and the Viterbi union a third time.
-            # NO observ_prob attach: the Viterbi kernel recomputes
-            # the per-url-max emission in-numpy (r7).
-            full = rehydrate_cands(cands, net).persist()
-            # pairs has exactly ONE consumer (score) — persisting it
-            # only added a cache write/read of the widest table (r7)
-            pairs = build_pairs_df(full, points, cfg)
-            scored = score_pairs_df(spark, pairs, sp, net, cfg,
-                                    broadcast_sp=False)
-            # PERSIST pre: attach_epath_relational references it three
-            # times (steps explode, the agg join-back, the dedup branch)
-            # and Spark does not dedupe common subplans — unpersisted,
-            # the ENTIRE score+viterbi subtree re-executed per reference
-            # (measured 8x wall on the forced-relational bignet leg)
-            pre = viterbi_match(full, scored, cfg).persist()
-            matched = attach_epath_relational(pre, sp, cfg)
-    out = _with_no_cand_rows(matched, url_universe, cands)
+    def restore(out: DataFrame) -> DataFrame:
+        """The url string back on the matched rows: one slim equi-join on
+        the final 1-row-per-url table (AQE broadcasts it when small)."""
+        if not encode:
+            return out
+        return (out.join(url_dim, "url")
+                .select(F.col("_url_str").alias("url"),
+                        *[c for c in out.columns if c not in ("url", "_url_str")]))
 
-    if encode:
-        # restore the url string: one slim equi-join on the final
-        # 1-row-per-url table (AQE broadcasts it when small)
-        out = (out.join(url_dim, "url")
-               .select(F.col("_url_str").alias("url"),
-                       *[c for c in out.columns if c not in ("url", "_url_str")]))
-    out = out.persist()
+    if not relational:
+        return restore(fused_match(spark, cands, url_universe, net,
+                                   cfg)).persist()
+
+    # persisted: the relational tail reads points and cands more than once
+    both, cands = both.persist(), cands.persist()
+    nids, _ = net.node_xy_arrays()
+    sp = shortest_path_table(
+        spark, sp_demands(cands, edge_attrs, n_nodes=len(nids)),
+        net, cfg).persist()
+    # rehydrate the slim candidates (one shuffle-free Arrow pass) and run
+    # the relational tail; persisted because the pair self-join scans it
+    # twice and the Viterbi union a third time. NO observ_prob attach:
+    # the Viterbi kernel recomputes the per-url-max emission in-numpy (r7).
+    full = rehydrate_cands(cands, net).persist()
+    # pairs has exactly ONE consumer (score) — persisting it only added a
+    # cache write/read of the widest table (r7)
+    pairs = build_pairs_df(full, points, cfg)
+    scored = score_pairs_df(spark, pairs, sp, net, cfg, broadcast_sp=False)
+    # PERSIST pre: attach_epath_relational references it three times
+    # (steps explode, the agg join-back, the dedup branch) and Spark does
+    # not dedupe common subplans — unpersisted, the ENTIRE score+viterbi
+    # subtree re-executed per reference (measured 8x wall on the
+    # forced-relational bignet leg)
+    pre = viterbi_match(full, scored, cfg).persist()
+    out = restore(_with_no_cand_rows(attach_epath_relational(pre, sp, cfg),
+                                     url_universe, cands)).persist()
     out.count()  # materialize, then release the intermediate caches —
     # leaving them pinned degrades successive runs via eviction churn
     for df in (both, cands, full, sp, pre):
-        if df is not None:
-            df.unpersist()
+        df.unpersist()
     return out
 
 
 def _with_no_cand_rows(matched: DataFrame, url_universe: DataFrame,
                        cands: DataFrame) -> DataFrame:
     """Re-attach status-3 rows for urls with no candidates anywhere (the
-    JVM twin of no_match_rows, for the staged plan). ``url_universe`` is a
-    one-row-per-url frame (column ``url``) holding every input url — the
+    JVM twin of no_match_rows, for the relational plan). ``url_universe``
+    is a one-row-per-url frame (column ``url``) holding every input url — the
     distinct points urls, or on the pages path the pages url set
     (cheaper: never touches extraction). ``cands`` must be the persisted
     candidate table, whose url set is the candidate-bearing urls — never

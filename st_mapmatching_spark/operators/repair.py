@@ -78,7 +78,7 @@ def repair_topology(spark: SparkSession, points: DataFrame, net: Network,
             break
         added_all.extend(new_eids)
         prev = matched
-        matched = match_points(spark, pts, net, cfg)  # materializes its output
+        matched = match_points(spark, pts, net, cfg)  # a persisted output
         prev.unpersist()  # superseded — pinned caches cause eviction churn
     pts.unpersist()
     return matched, net, added_all

@@ -1,5 +1,5 @@
 """Region-sharded one-pass matching: the shuffle-free single-crossing plan
-(match_pages_onepass) extended past the global broadcast/memo cap by
+(match_pages_onepass) extended past what one network broadcast holds by
 partitioning the NETWORK into coarse region tiles and broadcasting one
 compact payload per region — cell index, geometry/attr arrays, direction
 stats, and the region's shortest-path search state — keyed by region.
@@ -12,7 +12,7 @@ The reference has no analogue (its A* memo is a single-process dict,
 distributed answer to "the planet network does not fit one broadcast, but
 any region does".
 
-Exactness invariants (each falls back to the staged path when violated,
+Exactness invariants (each falls back to match_pages when violated,
 never silently degrades):
 
 * REGION ASSIGNMENT uses the trajectory's first extracted point — the one
@@ -132,8 +132,7 @@ def _build_one_payload(flat: dict, cfg: MatchConfig, rx: int, ry: int,
         "core_box": core_box,
         # the expanded-subnetwork search state (Dijkstra adjacency +
         # per-edge stats) the kernel searches its batches' demands on
-        "sp": DemandSpPayload((exp.adj, exp.edge_speed, exp.edge_dist,
-                               exp.dir_stats().edge_totals()), cfg.max_dist),
+        "sp": DemandSpPayload(exp.search_state(), cfg.max_dist),
     }
 
 
@@ -189,7 +188,7 @@ def derive_shard_params(spark: SparkSession, pages: DataFrame, net: Network,
                         seed: int = 7) -> dict:
     """Auto-size (region_m, cover_pad) from corpus stats, so no caller
     hand-sizes the tiling (wrong sizing is correct-but-slow: guard A
-    routes what it does not cover through the staged fallback).
+    routes what it does not cover through the match_pages fallback).
 
     One Spark job over a SEEDED-HASH sample of pages (deterministic and
     unbiased, the same rule the IVF sampler uses): extract + simplify the
@@ -223,7 +222,7 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                         margin: float | None = None,
                         payload_max_bytes: int = 2_000_000_000) -> DataFrame:
     """match_pages semantics over a network too big for one global
-    broadcast: single-crossing regional kernel + staged-path fallback for
+    broadcast: single-crossing regional kernel + match_pages fallback for
     the guard-A-violating tail. Output rows equal match_pages(...) exactly
     (pytest-pinned on a two-region fixture). Every trajectory that passes
     guard A is matched in-kernel, its shortest paths searched on demand
@@ -265,12 +264,12 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
             .distinct().collect())
     regions = [(int(r.rx), int(r.ry)) for r in pres]
 
-    # payloads are a per-(network, tiling) artifact — memoize on the net
-    # like _sp_payload_for. The cache key is the TILING (not the region
-    # set): a new call (or streaming micro-batch) touching new regions
-    # builds ONLY the missing ones and re-broadcasts the union, so a
-    # stream against a big network stops rebuilding payloads per epoch
-    # (r6 verdict item 5) and repeated batch jobs extend the same cache.
+    # payloads are a per-(network, tiling) artifact — memoize on the
+    # net. The cache key is the TILING (not the region set): a new call
+    # (or streaming micro-batch) touching new regions builds ONLY the
+    # missing ones and re-broadcasts the union, so a stream against a big
+    # network stops rebuilding payloads per epoch (r6 verdict item 5) and
+    # repeated batch jobs extend the same cache.
     cache = getattr(net, "_shard_payload_cache", None)
     if cache is None:
         cache = net._shard_payload_cache = {}

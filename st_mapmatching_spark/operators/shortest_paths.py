@@ -38,9 +38,7 @@ def shortest_path_table(spark: SparkSession, demands: DataFrame, net: Network,
     the reference's status-2 search, astar.py:111-114); o==d pairs get
     cost=0 with an empty path (astar.py:67-68). pcx/pcy/pw/pn are the
     path's additive direction statistics (kernels.dir_stats)."""
-    bc = net.broadcast(spark, "adj",
-                       lambda: (net.adj, net.edge_speed, net.edge_dist,
-                                net.dir_stats().edge_totals()))
+    bc = net.broadcast(spark, "adj", net.search_state)
     max_dist = cfg.max_dist
 
     # Origins are BATCHED into hash groups rather than one applyInPandas

@@ -145,9 +145,9 @@ def replicate_points(points: DataFrame, mult: int) -> DataFrame:
 # the same metric grid / boustrophedon construction generalized to g nodes
 # per side, fully numpy-vectorized (a 350x350 grid is 122,500 nodes /
 # 488,600 directed edges — a Python per-edge loop would dominate setup).
-# No DuckDB twin is needed: correctness of the staged relational path is
-# hash-gated by match_grid_bignet on the 9x9 oracle grid; this input only
-# measures its throughput/scaling (bench.py --bignet-leg).
+# No DuckDB twin is needed: correctness of every matcher plan is
+# hash-gated on the 9x9 oracle grid (match_grid, match_grid_bignet,
+# match_grid_sharded); this input only measures throughput and scaling.
 # ---------------------------------------------------------------------------
 
 def big_grid_edges_nodes(g: int, s: float = S):

@@ -106,11 +106,11 @@ def test_matched_parity_relational(spark, pages_df, net, cfg, oracle_results):
 
 def test_matched_parity_no_broadcast_index(spark, pages_df, net, cfg,
                                             oracle_results):
-    """broadcast_index=False takes the staged plan on the memoized sp: the
-    shuffled cell join scatters each url across partitions, and only the
-    url repartition puts each trajectory back together (r5 ADVICE high —
-    decoding per-partition fragments gave 79/83 mismatches when Catalyst
-    did not auto-broadcast). Pin autoBroadcastJoinThreshold=-1 so Catalyst
+    """broadcast_index=False takes the staged plan (fused_match, sp
+    searched in-kernel): the shuffled cell join scatters each url across
+    partitions, and only the url repartition puts each trajectory back
+    together (r5 ADVICE high — decoding per-partition fragments gave
+    79/83 mismatches when Catalyst did not auto-broadcast). Pin autoBroadcastJoinThreshold=-1 so Catalyst
     cannot mask such a bug, then require exact oracle parity."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -140,6 +140,41 @@ def test_matched_parity_classic_decode(spark, pages_df, pages, net, cfg):
         _assert_matches_oracle(got, want)
         n_success = (got.status == hmm.STATUS_SUCCESS).sum()
         assert n_success >= 8
+
+
+def test_match_calls_launch_no_job_before_the_action(spark, pages_df, cfg):
+    """On a fresh network (no broadcast, no sp memo yet) neither
+    match_pages on the default plan nor match_points runs a Spark job
+    inside the call: the kernel searches its shortest paths during the
+    caller's action. Both plans give the same rows."""
+    from st_mapmatching_spark.graph.network import Network
+    from st_mapmatching_spark.operators.candidates import extract_simplify
+    from st_mapmatching_spark.operators.matching import match_points
+    from st_mapmatching_spark.sources.network_gen import make_grid_network
+    fresh = Network(*make_grid_network(cfg, nx=12, ny=12, seed=42), cfg)
+    points = extract_simplify(pages_df, cfg)
+    sc = spark.sparkContext
+    got = {}
+    for name, call in (
+            ("match_pages", lambda: match_pages(spark, pages_df, fresh, cfg)),
+            ("match_points", lambda: match_points(spark, points, fresh, cfg))):
+        group = f"no-job-before-action:{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+            got[name] = out.toPandas().set_index("url").sort_index()
+            out.unpersist()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    by_pages, by_points = got["match_pages"], got["match_points"]
+    # match_points sees only the urls with points: a page without any is
+    # match_pages' status-3 row alone
+    assert set(by_points.index) <= set(by_pages.index)
+    by_pages = by_pages.loc[by_points.index]
+    assert (by_pages.status == by_points.status).all()
+    assert [None if e is None else list(e) for e in by_pages.epath] == \
+        [None if e is None else list(e) for e in by_points.epath]
 
 
 def test_matched_statuses(spark, pages_df, net, cfg):

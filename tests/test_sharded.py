@@ -80,21 +80,21 @@ def _assert_same_rows(got, want):
 
 
 def test_sharded_matches_staged(spark, bignet, fixture_pages):
-    """The sharded plan, and the staged plan with its sp table collected
-    to the driver, both equal the relational staged plan row for row.
-    The default CFG takes the collected variant here: 1,600 nodes give
-    n^2 = 2.56 M, above the 2 M memoized-sp cap."""
+    """The sharded plan, and the default plan, both equal the relational
+    plan row for row. The default CFG takes the one-pass plan on
+    this 1,600-node network: its shortest paths are searched in-kernel,
+    so no network size bounds it."""
     from dataclasses import replace
-    cfg = replace(CFG, sp_broadcast_max_rows=0)   # force the staged path
-    assert choose_plan(bignet, CFG, True)[:2] == ("staged", "count")
+    cfg = replace(CFG, sp_broadcast_max_rows=0)   # pin the relational plan
+    assert choose_plan(bignet, CFG, True).name == "onepass"
     want = (match_pages(spark, fixture_pages, bignet, cfg)
             .toPandas().set_index("url").sort_index())
     sharded = (match_pages_sharded(spark, fixture_pages, bignet, cfg,
                                    region_m=3000.0, cover_pad=1500.0)
                .toPandas().set_index("url").sort_index())
-    collected = (match_pages(spark, fixture_pages, bignet, CFG)
-                 .toPandas().set_index("url").sort_index())
-    for got in (sharded, collected):
+    onepass = (match_pages(spark, fixture_pages, bignet, CFG)
+               .toPandas().set_index("url").sort_index())
+    for got in (sharded, onepass):
         _assert_same_rows(got, want)
     # sanity on the fixture's intent
     assert int(want.loc["t1"].status) == 0

@@ -15,7 +15,7 @@ from st_mapmatching_spark.graph.dijkstra import shortest_paths_to_targets
 from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.kernels.keys import key_find, key_index
 from st_mapmatching_spark.operators.matching import (METRIC_COLS,
-                                                     SpPayload,
+                                                     _csr_paths,
                                                      _decode_stitch,
                                                      no_match_rows)
 from test_viterbi_lockstep import _random_case
@@ -23,6 +23,33 @@ from test_viterbi_match_batched import _mk_inputs
 
 CFG = MatchConfig()
 N_NODES = 12
+
+
+class SpPayload:
+    """Reference sp table with DemandSpPayload's interface (lookup,
+    paths) over given rows, so a case can hold arbitrary paths and
+    misses: a pair missing from the table is unreachable (cost inf, zero
+    stats, no path)."""
+
+    def __init__(self, sp_pdf: pd.DataFrame):
+        self.uniq, self.key, order = key_index(
+            sp_pdf.o_node.to_numpy(np.int64), sp_pdf.d_node.to_numpy(np.int64))
+        self.cols = {c: sp_pdf[c].to_numpy(np.float64)[order]
+                     for c in ("cost", "path_speed", "pcx", "pcy", "pw")}
+        self.cols["pn"] = sp_pdf.pn.to_numpy(np.int64)[order]
+        self.ep_flat, self.ep_off = _csr_paths(sp_pdf.epath.to_numpy()[order])
+
+    def lookup(self, o_node, d_node) -> dict:
+        pos, hit = key_find(self.uniq, self.key, o_node, d_node)
+        miss = {"cost": np.inf, "pn": 0}
+        out = {c: np.where(hit, v[pos], miss.get(c, 0.0))
+               for c, v in self.cols.items()}
+        out["has_path"] = hit & (np.diff(self.ep_off)[pos] > 0)
+        return out
+
+    def paths(self, o_node, d_node):
+        return hmm.csr_take(self.ep_flat, self.ep_off,
+                            *key_find(self.uniq, self.key, o_node, d_node))
 
 
 def _sp_table(rng):
@@ -347,8 +374,7 @@ def test_demand_payload_equals_sp_table():
     from st_mapmatching_spark.sources.network_gen import make_grid_network
     e, n = make_grid_network(CFG)
     net = Network(e, n, CFG)
-    exp = (net.adj, net.edge_speed, net.edge_dist,
-           net.dir_stats().edge_totals())
+    exp = net.search_state()
     nodes = np.append(net.nodes.nid.to_numpy(np.int64), 10 ** 6)
     rng = np.random.default_rng(1)
     o1, d1 = rng.choice(nodes[:12], 300), rng.choice(nodes, 300)
