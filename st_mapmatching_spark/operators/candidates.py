@@ -55,16 +55,17 @@ POINTS_SCHEMA = "url string, pid int, x double, y double"
 REFINE_SCHEMA_CUTS = ("url string, pid int, x double, y double, eid long, "
                       "dist_p2c double, len0 double, len1 double, "
                       "seg_idx int, ratio double")
-# Slimmest variant for the fused matcher: the refine emits only dist_p2c;
+# Slimmest variant, the relational plan's input: the refine emits only dist_p2c;
 # attributes and cut parameters are re-derived per trajectory from the
 # broadcast network (Arrow boundary width is the measured cost driver).
 REFINE_SCHEMA_SLIM = "url string, pid int, x double, y double, eid long, dist_p2c double"
 
 
 def url_typed(schema: str, df: DataFrame) -> str:
-    """Schemas declare `url string` by default; when the pipeline has
-    dictionary-encoded url to a long id (match_points, cfg.url_id_encode),
-    every Python-stage output schema must follow the input's url dtype."""
+    """Schemas declare `url string` by default; when the input's url is
+    another type (a caller's numeric ids, or the relational plan's
+    xxhash64 encoding under cfg.url_id_encode), every Python-stage output
+    schema must follow the input's url dtype."""
     t = dict(df.dtypes).get("url", "string")
     return schema.replace("url string", f"url {t}", 1)
 
@@ -76,7 +77,7 @@ def url_batches(batches):
     whatever is left is flushed at the end. Empty batches are skipped.
 
     This is the streamed group-by of every per-trajectory mapInPandas
-    stage (simplify_trajs, viterbi_match, fused_match): many trajectories
+    stage (simplify_trajs, viterbi_match, match_points): many trajectories
     per Python call instead of one call and frame per url."""
     buf = None
     for pdf in batches:
@@ -207,9 +208,8 @@ def rehydrate_cands(cands_slim: DataFrame, net: Network) -> DataFrame:
     """Slim candidates (url,pid,x,y,eid,dist_p2c) -> full
     candidate columns, re-derived from the broadcast network in one
     shuffle-free Arrow pass (same project_core the refine ran, so the cut
-    parameters are bitwise-identical). Used when the fused matcher's sp
-    broadcast would not fit and the pipeline falls back to the relational
-    path, which needs edge attrs and cut params as real columns."""
+    parameters are bitwise-identical). Used by the relational plan, which
+    needs edge attrs and cut params as real columns."""
     import pyarrow as pa
     bc = net.broadcast(cands_slim.sparkSession, "geom",
                        lambda: (*net.padded_geoms(), *net.attr_arrays()))
@@ -418,7 +418,7 @@ def candidate_join(points: DataFrame, cell_index: DataFrame, edge_attrs: DataFra
             .filter(F.col("rn") <= cfg.top_k).drop("rn"))
 
     if slim:
-        # the fused matcher recomputes the emission in-kernel per url group
+        # the Viterbi kernel recomputes the emission in-numpy per url group
         # (ulp parity with the oracle), so the JVM emission window below
         # would be one full dead pass over the candidate table
         return topk

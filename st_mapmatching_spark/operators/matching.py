@@ -1,20 +1,19 @@
 """The map-matching pipeline: candidates -> transition pairs + flags ->
 shortest-path attach -> scoring -> per-trajectory beam Viterbi -> stitch.
 
-choose_plan picks one of three plans for match_pages and match_points
-(a fourth, the region-sharded plan, is match_pages_sharded in
+choose_plan picks one of two plans for match_pages and match_points
+(a third, the region-sharded plan, is match_pages_sharded in
 sharded.py):
-  onepass   : the whole pipeline in numpy inside one narrow Arrow stage
-              over pages (match_pages_onepass -> _probe_match ->
-              _match_frame)
-  staged    : candidate_join's url shuffle and top-k window, then
-              fused_match (_match_frame over url batches)
+  onepass   : the whole pipeline in numpy inside one Arrow stage, per
+              trajectory batch (_probe_match -> _match_frame): over pages
+              in match_pages_onepass, over url-clustered points in
+              match_points
   relational: candidate_join, then the relational tail below
 
-The kernel plans (onepass, staged, sharded) take their shortest paths
-from one source, a DemandSpPayload: each batch's (o, d) pairs are
-searched on the broadcast search state the first time they are asked
-for and memoized per worker. No sp table is built before the match.
+The kernel plans (onepass, sharded) take their shortest paths from one
+source, a DemandSpPayload: each batch's (o, d) pairs are searched on
+the broadcast search state the first time they are asked for and
+memoized per worker. No sp table is built before the match.
 
 Relational tail (Spark lifecycle of ST_Matching.matching, SURVEY.md §3.1):
   pairs  : layer self-join of the candidate table — pure DataFrame joins
@@ -93,6 +92,18 @@ def no_match_rows(urls) -> list[dict]:
     and overwrite what the decode finds."""
     return [{"url": u, "status": hmm.STATUS_NO_CANDIDATES, "epath": None,
              **dict.fromkeys(METRIC_COLS, np.nan)} for u in urls]
+
+
+def with_no_match_rows(frames: list[pd.DataFrame], urls,
+                       have) -> pd.DataFrame:
+    """A kernel batch's output: the matched ``frames`` plus one status-3
+    row (no_match_rows) per url of ``urls`` not in ``have``, the urls
+    _probe_match found candidates for."""
+    miss = [u for u in urls if u not in have]
+    if miss:
+        frames = [*frames, pd.DataFrame(no_match_rows(miss))]
+    return pd.concat(frames, ignore_index=True) if len(frames) > 1 \
+        else frames[0]
 
 
 def build_pairs_df(cands: DataFrame, points: DataFrame, cfg: MatchConfig) -> DataFrame:
@@ -427,7 +438,7 @@ def sp_demands(cands: DataFrame, edge_attrs: DataFrame,
     construction, so the branch needs NO driver-blocking corridor-count
     job at all — that job forced the whole candidate pipeline to
     materialize before the sp build could even be planned (one of three
-    serial actions on the staged path; guide §1.2 "remove passes")."""
+    serial actions on the relational path; guide §1.2 "remove passes")."""
     attrs = F.broadcast(edge_attrs.select("eid", "src", "dst"))
     eids = cands.select("eid").distinct().join(attrs, "eid")
     o_set = eids.select(F.col("dst").alias("o_node")).distinct()
@@ -550,13 +561,11 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
     _decode_stitch, the tail viterbi_match shares.
 
     ``pdf`` must be sorted (url, pid, dist_p2c, eid) with each url's rows
-    complete and contiguous; the top-k cut per (url, pid) is applied here
-    (a no-op on fused_match's input, which the JVM window already cut).
+    complete and contiguous; the top-k cut per (url, pid) is applied here.
     ``geom``/``stats`` are the broadcast network tuples ((eids_sorted,
     mat, src, dst, dist, speed) / (dir_stats, node_xy)); ``spd`` the
-    DemandSpPayload. Shared verbatim by the staged fused matcher
-    (fused_match), the one-pass pages matcher and the sharded matcher
-    (both through _probe_match) so the paths cannot drift."""
+    DemandSpPayload. Every kernel plan reaches it through _probe_match,
+    so the plans cannot drift."""
     from ..kernels.geodesy import bearing_deg
     from ..kernels.linear_ref import project_core
 
@@ -753,12 +762,27 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
     return pd.DataFrame(out)
 
 
-def _sp_broadcast(spark: SparkSession, net: Network, cfg: MatchConfig):
-    """The kernel's DemandSpPayload over the network's search state,
-    broadcast once per network and max_dist. Its memo fills on the
-    workers as batches ask for pairs; nothing is searched here."""
-    return net.broadcast(spark, f"sp:{cfg.max_dist}", lambda: DemandSpPayload(
-        net.search_state(), cfg.max_dist))
+def _kernel_broadcasts(spark: SparkSession, net: Network,
+                       cfg: MatchConfig) -> tuple:
+    """The one-pass kernel's broadcast network state, in _probe_match's
+    argument order: the radius-dilated cell index as (cell, eid)-sorted
+    arrays, the geometry + attribute arrays, the direction stats + node
+    xy, and the DemandSpPayload over the network's search state. Each is
+    broadcast once per network (and pad, max_dist); the payload's memo
+    fills on the workers as batches ask for pairs, nothing is searched
+    here."""
+    pad = max(net.cfg.radius, cfg.radius)
+    return (
+        net.broadcast(spark, f"cellidx:{pad}", lambda: (
+            lambda ci: (ci.cell.to_numpy(), ci.eid.to_numpy()))(
+            net.cell_index(pad=pad).sort_values(["cell", "eid"],
+                                                kind="stable"))),
+        net.broadcast(spark, "geom",
+                      lambda: (*net.padded_geoms(), *net.attr_arrays())),
+        net.broadcast(spark, "stats",
+                      lambda: (net.dir_stats(), net.node_xy_arrays())),
+        net.broadcast(spark, f"sp:{cfg.max_dist}", lambda: DemandSpPayload(
+            net.search_state(), cfg.max_dist)))
 
 
 # Rows of candidates one _match_frame call scores: its pair-table
@@ -776,8 +800,8 @@ def _probe_match(u, pid, x, y, cells, geom, stats, spd,
     linear-referencing refine + radius filter -> (dist_p2c, eid) sort ->
     _match_frame in url-aligned chunks of ~CHUNK_ROWS candidate rows.
     ``cells`` is the (cell, eid)-sorted index as two arrays; ``geom``,
-    ``stats`` and ``spd`` are _match_frame's. Shared by the one-pass and
-    the sharded matcher.
+    ``stats`` and ``spd`` are _match_frame's. Shared by every kernel
+    plan: match_pages_onepass, match_points and the sharded matcher.
 
     Returns the matched frames and the set of urls that had at least one
     in-radius candidate; the caller emits status-3 rows for the rest."""
@@ -786,8 +810,7 @@ def _probe_match(u, pid, x, y, cells, geom, stats, spd,
     cells_s, cell_eids = cells
     eids_sorted, mat = geom[0], geom[1]
     # url strings never enter the kernel: points carry a local integer
-    # gid (the in-kernel twin of the staged path's url dictionary-
-    # encoding), mapped back to the url once per output chunk
+    # gid, mapped back to the url once per output chunk
     new_url = np.concatenate([[True], u[1:] != u[:-1]])
     urls_by_gid = u[new_url]
     pgid = np.cumsum(new_url) - 1
@@ -832,10 +855,9 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
     JVM<->Python crossing: pages go in, one matched row per page comes
     out. Per batch, in numpy: GEO-line extraction + projection +
     Douglas-Peucker (extract_arrays) -> cell probe, refine, top-k,
-    scoring, Viterbi and stitch (_probe_match, running the exact frame
-    kernel the staged path runs).
+    scoring, Viterbi and stitch (_probe_match).
 
-    Why: the staged pages path crosses the Arrow boundary three times
+    Why: a staged pages plan crosses the Arrow boundary three times
     (extract out, refine in/out, match in), with the WIDE candidate table
     crossing twice — measured as the dominant memory-bandwidth load of
     the matcher after the url shuffle was removed (BENCH/profile_leg,
@@ -848,127 +870,59 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
 
     At 1000 executors this is the ideal plan: a single embarrassingly
     parallel map over pages with all network state broadcast once; the
-    shortest paths are searched in-kernel (DemandSpPayload). Requires a
-    broadcastable index (choose_plan's "onepass").
+    shortest paths are searched in-kernel (DemandSpPayload).
 
-    The index is built radius-dilated in-function (pad >= cfg.radius by
-    construction — the staged path's in-band pad guard is satisfied
-    structurally)."""
-    stats_bc = net.broadcast(spark, "stats",
-                             lambda: (net.dir_stats(), net.node_xy_arrays()))
-    geom_bc = net.broadcast(spark, "geom",
-                            lambda: (*net.padded_geoms(), *net.attr_arrays()))
-    sp_bc = _sp_broadcast(spark, net, cfg)
-    _pad = max(net.cfg.radius, cfg.radius)
-    idx_bc = net.broadcast(spark, f"cellidx:{_pad}", lambda: (
-        lambda ci: (ci.cell.to_numpy(), ci.eid.to_numpy()))(
-        net.cell_index(pad=_pad).sort_values(["cell", "eid"], kind="stable")))
+    The index is built radius-dilated (pad >= cfg.radius by construction
+    — candidate_join's in-band pad guard is satisfied structurally)."""
+    bcs = _kernel_broadcasts(spark, net, cfg)
     lon0, lat0, tol, do_simpl = cfg.lon0, cfg.lat0, cfg.tolerance, cfg.simplify
 
     def op(batches):
-        cells, geom = idx_bc.value, geom_bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ex = extract_arrays(pdf, lon0, lat0, tol, do_simpl)
             frames, have = ([], set()) if ex is None else _probe_match(
-                *ex, cells, geom, stats_bc.value, sp_bc.value, cfg)
-            miss = [pu for pu in pdf.url.to_numpy() if pu not in have]
-            if miss:
-                frames.append(pd.DataFrame(no_match_rows(miss)))
-            yield pd.concat(frames, ignore_index=True) if len(frames) > 1 \
-                else frames[0]
+                *ex, *(b.value for b in bcs), cfg)
+            yield with_no_match_rows(frames, pdf.url.to_numpy(), have)
 
     return pages.select("url", "text").mapInPandas(op, schema=MATCHED_SCHEMA)
 
 
-def fused_match(spark: SparkSession, cands: DataFrame, urls: DataFrame,
-                net: Network, cfg: MatchConfig) -> DataFrame:
-    """Per-trajectory pair build + flags + scoring + Viterbi + stitch in ONE
-    Arrow stage over the url-partitioned candidate table; one
-    MATCHED_SCHEMA row per url of ``urls`` (one row per url, column
-    ``url``), status 3 for a url without candidates.
-
-    The staged design materializes the top_k^2-per-layer transition-pair
-    table (O(25x points)) through three shuffles; fusing keeps it entirely
-    inside the per-url group, with the network state broadcast and the
-    shortest paths searched in-kernel (DemandSpPayload). Unlike a
-    cogrouped applyInPandas (one Python call and two pandas
-    constructions per trajectory), this streams whole Arrow batches of
-    MANY trajectories through one mapInPandas (cut at url boundaries by
-    url_batches) and slices groups in numpy. Numeric semantics are the
-    oracle's: score_base_np / engine_dir_probs, the lockstep twin of
-    viterbi_beam and the batch twin of stitch_path (the parity suite
-    pins this against the oracle).
-
-    ``urls`` is left-joined to the candidates on their url partitioning,
-    so a url without candidates arrives as one all-null row and gets its
-    status-3 row in the kernel, as on the one-pass plan."""
-    stats_bc = net.broadcast(spark, "stats",
-                             lambda: (net.dir_stats(), net.node_xy_arrays()))
-    geom_bc = net.broadcast(spark, "geom",
-                            lambda: (*net.padded_geoms(), *net.attr_arrays()))
-    sp_bc = _sp_broadcast(spark, net, cfg)
-
-    def op(batches):
-        for pdf in url_batches(batches):
-            hit = pdf.eid.notna().to_numpy()
-            frames = [] if not hit.any() else [_match_frame(
-                pdf[hit].astype({"pid": np.int64, "eid": np.int64}),
-                geom_bc.value, stats_bc.value, sp_bc.value, cfg)]
-            if not hit.all():
-                frames.append(pd.DataFrame(no_match_rows(pdf.url[~hit])))
-            yield pd.concat(frames, ignore_index=True) if len(frames) > 1 \
-                else frames[0]
-
-    # the url side is shuffled onto cands' url-hash partitioning, so every
-    # url's rows are contiguous in exactly one partition after the sort
-    src = (urls.join(cands, "url", "left")
-           .sortWithinPartitions("url", "pid", "dist_p2c", "eid"))
-    return src.mapInPandas(op, schema=url_typed(MATCHED_SCHEMA, cands))
-
-
 class Plan(NamedTuple):
     """choose_plan's answer: the plan and why."""
-    name: str    # "onepass" | "staged" | "relational"
+    name: str    # "onepass" | "relational"
     reason: str
 
 
-def choose_plan(net: Network, cfg: MatchConfig,
-                broadcast_index: bool) -> Plan:
+def choose_plan(net: Network, cfg: MatchConfig) -> Plan:
     """The one place the matcher's plan is chosen; logged at INFO. It
-    reads the config and the caller's index choice, nothing of the
-    network: every kernel plan searches its shortest paths on demand.
+    reads the config, nothing of the network: every kernel plan searches
+    its shortest paths on demand.
 
     * ``relational`` — cfg.sp_broadcast_max_rows <= 0 pins the relational
       tail: sp table + equi-join + attach_epath_relational, nothing
       collected to the driver.
-    * ``onepass`` — the cell index is broadcast: the whole matcher is one
-      narrow Arrow stage (match_pages_onepass).
-    * ``staged`` — broadcast_index=False: candidate_join's shuffled index
-      join, then fused_match.
+    * ``onepass`` — otherwise: the whole matcher is one Arrow stage per
+      trajectory batch (match_pages_onepass over pages, match_points over
+      url-clustered points).
 
-    match_points has no one-pass form: it runs fused_match on ``onepass``
-    as on ``staged``. The region-sharded plan is called explicitly
-    (match_pages_sharded); its guard fallback comes back through
-    match_pages."""
+    The region-sharded plan is called explicitly (match_pages_sharded);
+    its guard fallback comes back through match_pages."""
     if cfg.sp_broadcast_max_rows <= 0:
         plan = Plan("relational",
                     "sp_broadcast_max_rows <= 0 pins the relational sp join")
-    elif broadcast_index:
-        plan = Plan("onepass", "cell index broadcast, sp searched in-kernel")
     else:
-        plan = Plan("staged", "cell index shuffled, sp searched in-kernel")
+        plan = Plan("onepass", "cell index broadcast, sp searched in-kernel")
     log.info("matcher plan %s: %s", plan.name, plan.reason)
     return plan
 
 
 def match_pages(spark: SparkSession, pages: DataFrame, net: Network,
-                cfg: MatchConfig = MatchConfig(),
-                broadcast_index: bool = True) -> DataFrame:
+                cfg: MatchConfig = MatchConfig()) -> DataFrame:
     """pages -> matched, one row per url (SURVEY.md §1.2 result schema),
     on the plan choose_plan picks: match_pages_onepass, or extraction
-    (extract_simplify) followed by match_points' plan.
+    (extract_simplify) followed by the relational plan.
 
     Every input page yields exactly one output row: a page whose text
     yields no points, or whose points find no candidates (including
@@ -977,63 +931,75 @@ def match_pages(spark: SparkSession, pages: DataFrame, net: Network,
     persisted (lazily, except on the relational plan): every caller runs
     >= 1 action on it and several derive follow-up frames (path
     geometry, metrics)."""
-    plan = choose_plan(net, cfg, broadcast_index)
-    if plan.name == "onepass":
+    if choose_plan(net, cfg).name == "onepass":
         return match_pages_onepass(spark, pages, net, cfg).persist()
     # pages are one row per url, so the pages url column IS the url
     # universe (Catalyst prunes the text column out of this scan): the
-    # staged plan skips its points distinct, and a page whose text yields
-    # ZERO extractable points still gets its status-3 row
-    return _match_staged(spark, extract_simplify(pages, cfg), net, cfg,
-                         broadcast_index, plan.name == "relational",
-                         urls=pages.select("url"))
+    # relational plan skips its points distinct, and a page whose text
+    # yields ZERO extractable points still gets its status-3 row
+    return _match_relational(spark, extract_simplify(pages, cfg), net, cfg,
+                             urls=pages.select("url"))
 
 
 def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
-                 cfg: MatchConfig = MatchConfig(), broadcast_index: bool = True,
-                 urls: DataFrame | None = None) -> DataFrame:
+                 cfg: MatchConfig = MatchConfig()) -> DataFrame:
     """Match pre-extracted metric points (url, pid, x, y) — the pipeline
-    below the text extractor; used by match_pages and by operators that
-    synthesize point tables directly (e.g. the topology repair loop's
-    reversed re-match). Points have no one-pass form:
+    below the text extractor; used by operators that synthesize point
+    tables directly (e.g. the topology repair loop's reversed re-match).
+    One row per url of points_in.
 
-    candidate_join (slim, one url shuffle, top-k window) -> fused_match,
-    its shortest paths searched in-kernel; or, on choose_plan's
-    ``relational`` plan: shortest_path_table over sp_demands ->
-    rehydrate_cands -> build_pairs_df -> score_pairs_df (sp equi-join)
-    -> viterbi_match -> attach_epath_relational, with status-3 rows for
-    urls without candidates (_with_no_cand_rows). The result is
-    persisted. The kernel plan returns it lazily: no Spark job runs
-    before the caller's action. The relational plan materializes it and
-    releases its intermediates before returning.
+    On choose_plan's ``onepass`` plan the points are clustered on url
+    (one shuffle, sorted (url, pid) within each partition) and matched
+    by one mapInPandas: url_batches cuts the stream at url boundaries,
+    _probe_match runs the one-pass kernel on each batch and a url with
+    no in-radius candidate gets its status-3 row in the kernel. The
+    action reads points_in once. On the ``relational`` plan:
+    _match_relational.
+
+    The onepass result is persisted lazily: no Spark job runs before
+    the caller's action."""
+    if choose_plan(net, cfg).name == "relational":
+        return _match_relational(spark, points_in, net, cfg)
+    bcs = _kernel_broadcasts(spark, net, cfg)
+
+    def op(batches):
+        for pdf in url_batches(batches):
+            u = pdf.url.to_numpy()
+            frames, have = _probe_match(
+                u, pdf.pid.to_numpy(), pdf.x.to_numpy(), pdf.y.to_numpy(),
+                *(b.value for b in bcs), cfg)
+            yield with_no_match_rows(frames, pd.unique(u), have)
+
+    src = (points_in.select("url", "pid", "x", "y").repartition("url")
+           .sortWithinPartitions("url", "pid"))
+    return src.mapInPandas(
+        op, schema=url_typed(MATCHED_SCHEMA, points_in)).persist()
+
+
+def _match_relational(spark: SparkSession, points_in: DataFrame,
+                      net: Network, cfg: MatchConfig,
+                      urls: DataFrame | None = None) -> DataFrame:
+    """The relational plan: candidate_join (slim, one url shuffle, top-k
+    window) -> shortest_path_table over sp_demands -> rehydrate_cands ->
+    build_pairs_df -> score_pairs_df (sp equi-join) -> viterbi_match ->
+    attach_epath_relational, with status-3 rows for urls without
+    candidates (_with_no_cand_rows). The result is materialized and
+    persisted; the intermediates are released before returning.
 
     urls: optional one-row-per-url frame (column ``url``, string domain,
-    caller-guaranteed distinct — e.g. ``pages.select("url")``, one row
-    per url by construction of the render groupBy). Supplies the
-    status-3 universe and the url-restore dim without scanning the
-    points table. A url present here but absent from points_in yields a
-    status-3 row. Without it the kernel plan's action reads points_in
-    once per use (candidates, url universe, url-restore dim): persist a
-    costly points_in first.
+    caller-guaranteed distinct — match_pages passes
+    ``pages.select("url")``). Supplies the status-3 universe and the
+    url-restore dim without scanning the points table; a url present here
+    but absent from points_in yields a status-3 row.
 
     url dictionary-encoding (cfg.url_id_encode): the url string would
-    otherwise ride through every stage (refine -> shuffle -> top-k window
-    -> fused sort -> Viterbi) and dominate Arrow batch bytes on the
-    widest tables. Instead the pipeline runs on `xxhash64(url)` as a long
-    under the same column name — numeric sorts, slimmer shuffles — and the
-    string is restored by one slim equi-join on the final 1-row-per-url
-    result. Collision odds are n^2/2^65 (~5e-10 at 1e5 trajectories);
-    for >1e8-trajectory corpora set url_id_encode=False or pre-assign
-    numeric ids upstream."""
-    plan = choose_plan(net, cfg, broadcast_index)
-    return _match_staged(spark, points_in, net, cfg, broadcast_index,
-                         plan.name == "relational", urls)
-
-
-def _match_staged(spark: SparkSession, points_in: DataFrame, net: Network,
-                  cfg: MatchConfig, broadcast_index: bool, relational: bool,
-                  urls: DataFrame | None) -> DataFrame:
-    """match_points' body."""
+    otherwise ride through every stage and dominate Arrow batch bytes on
+    the widest tables. Instead the pipeline runs on `xxhash64(url)` as a
+    long under the same column name — numeric sorts, slimmer shuffles —
+    and the string is restored by one slim equi-join on the final
+    1-row-per-url result. Collision odds are n^2/2^65 (~5e-10 at 1e5
+    trajectories); for >1e8-trajectory corpora set url_id_encode=False
+    or pre-assign numeric ids upstream."""
     cell_index, edge_attrs = network_frames(spark, net, cfg)
     encode = cfg.url_id_encode and dict(points_in.dtypes).get("url") == "string"
     if encode:
@@ -1056,8 +1022,8 @@ def _match_staged(spark: SparkSession, points_in: DataFrame, net: Network,
             F.xxhash64("url").alias("url") if encode else F.col("url"))
     else:
         url_universe = points.select("url").distinct()
-    cands = candidate_join(points, cell_index, edge_attrs, cfg, broadcast_index,
-                           net=net, slim=True)
+    cands = candidate_join(points, cell_index, edge_attrs, cfg, net=net,
+                           slim=True)
 
     def restore(out: DataFrame) -> DataFrame:
         """The url string back on the matched rows: one slim equi-join on
@@ -1067,10 +1033,6 @@ def _match_staged(spark: SparkSession, points_in: DataFrame, net: Network,
         return (out.join(url_dim, "url")
                 .select(F.col("_url_str").alias("url"),
                         *[c for c in out.columns if c not in ("url", "_url_str")]))
-
-    if not relational:
-        return restore(fused_match(spark, cands, url_universe, net,
-                                   cfg)).persist()
 
     # persisted: the relational tail reads points and cands more than once
     both, cands = both.persist(), cands.persist()

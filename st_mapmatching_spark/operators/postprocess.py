@@ -135,7 +135,7 @@ def match_details(spark: SparkSession, pages: DataFrame, net: Network,
     """The distributed `details=True` (matching.py:108-124): the scored
     per-url transition graph as a DataFrame — every candidate pair with
     flag, observation/dist/dir/transition probabilities and sp endpoints.
-    Runs the staged relational pipeline (same kernels as the fused path)."""
+    Runs the relational pipeline (same kernels as the one-pass plan)."""
     from .candidates import candidate_join, extract_simplify, network_frames
     from .matching import build_pairs_df, score_pairs_df
     from .shortest_paths import shortest_path_table

@@ -11,7 +11,8 @@ Differences from the reference (deliberate):
   trajectories are re-matched in one extra Spark job, not one job per
   step (the reference itself re-runs the full match after a repair);
 * the reference's A* memo clear (geograph.py:223) has no equivalent: the
-  demand-driven sp table is rebuilt per run from the amended network.
+  amended network is a new Network, whose broadcasts (and the kernel's
+  per-worker shortest-path memo with them) start empty.
 
 The candidate comparison rule is the reference's (update_network.py:20-21):
 the reversed match wins if it succeeds while the forward match FAILED, or
@@ -57,7 +58,8 @@ def repair_topology(spark: SparkSession, points: DataFrame, net: Network,
         rev = reversed_points(pts.join(bad_urls.select("url"), "url"))
         if rev.isEmpty():
             break
-        neg = match_points(spark, rev, net, cfg).select(
+        rev_matched = match_points(spark, rev, net, cfg)  # persisted
+        neg = rev_matched.select(
             "url", F.col("status").alias("neg_status"),
             F.col("prob").alias("neg_prob"), F.col("epath").alias("neg_epath"))
         wins = (neg.join(bad_urls, "url")
@@ -70,7 +72,7 @@ def repair_topology(spark: SparkSession, points: DataFrame, net: Network,
                 eids.join(F.broadcast(spark.createDataFrame(
                     net.edges[["eid", "way_id"]])), "eid")
                 .select("way_id").distinct().collect()]
-        neg.unpersist()  # consumed by the collect above
+        rev_matched.unpersist()  # consumed by the collect above
         if not ways:
             break
         net, new_eids = net.with_reverse_ways(ways)

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from ..config import M_PER_DEG, MatchConfig
 from ..graph.network import Network
 from .matching import (MATCHED_SCHEMA, DemandSpPayload, _probe_match,
-                       match_pages, no_match_rows)
+                       match_pages, with_no_match_rows)
 
 
 def _region_key(rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
@@ -300,18 +300,14 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
     radius = cfg.radius
     tol, do_simpl = cfg.tolerance, cfg.simplify
 
-    def miss_rows(urls, fallback):
-        return pd.DataFrame(no_match_rows(urls)).assign(_fb=fallback)
-
     def op(batches):
         from .candidates import extract_arrays
         pays = pay_bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            page_urls = pdf.url.to_numpy()
             frames = []
-            done = set()
+            have = set()
             fb = []
 
             ex = extract_arrays(pdf, lon0, lat0, tol, do_simpl)
@@ -325,14 +321,12 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                 rkeys = _region_key(rx, ry)
                 by_region: dict = {}
                 for i, (s, e) in enumerate(zip(heads, ends)):
-                    url = u[s]
                     rk_i = int(rkeys[i])
                     pay = None if rk_i in empty_keys else pays.get(rk_i)
                     if pay is None and rk_i not in empty_keys:
                         # driver/kernel region disagreement (possible only
                         # for degenerate first-line parses) — fall back
-                        fb.append(url)
-                        done.add(url)
+                        fb.append(u[s])
                         continue
                     # guard A: bbox + radius inside the core box (the
                     # one _build_one_payload uses, also for an edgeless
@@ -345,39 +339,28 @@ def match_pages_sharded(spark: SparkSession, pages: DataFrame, net: Network,
                     by0, by1 = y[s:e].min(), y[s:e].max()
                     if (bx0 - radius < cb[0] or by0 - radius < cb[1]
                             or bx1 + radius > cb[2] or by1 + radius > cb[3]):
-                        fb.append(url)
-                        done.add(url)
+                        fb.append(u[s])
                         continue
                     if pay is None:
                         # region has no edges at all: with guard A the
                         # radius cannot reach any edge -> status 3
-                        frames.append(miss_rows([url], False))
-                        done.add(url)
                         continue
-                    by_region.setdefault(int(rkeys[i]), []).append((s, e))
+                    by_region.setdefault(rk_i, []).append((s, e))
 
                 for rkey, spans in by_region.items():
                     pay = pays[rkey]
                     sel = np.concatenate(
                         [np.arange(s, e) for s, e in spans])
-                    out, have = _probe_match(
+                    out, got = _probe_match(
                         u[sel], pid[sel], x[sel], y[sel], pay["cells"],
                         pay["geom"], pay["stats"], pay["sp"], cfg)
-                    for f in out:
-                        f["_fb"] = False
                     frames += out
-                    no_c = [u[s] for s, e in spans if u[s] not in have]
-                    if no_c:
-                        frames.append(miss_rows(no_c, False))
-                    done.update(u[s] for s, e in spans)
+                    have |= got
 
-            miss = [pu for pu in page_urls if pu not in done]
-            if miss:
-                frames.append(miss_rows(miss, False))
-            if fb:
-                frames.append(miss_rows(fb, True))
-            yield pd.concat(frames, ignore_index=True) if len(frames) > 1 \
-                else frames[0]
+            # status 3 for every other page, a guard fallback's row marked
+            res = with_no_match_rows(frames, pdf.url.to_numpy(), have)
+            res["_fb"] = res.url.isin(fb)
+            yield res
 
     out = (pages.select("url", "text")
            .mapInPandas(op, schema=MATCHED_SCHEMA + ", _fb boolean")

@@ -104,22 +104,22 @@ def test_matched_parity_relational(spark, pages_df, net, cfg, oracle_results):
     _assert_matches_oracle(got, oracle_results)
 
 
-def test_matched_parity_no_broadcast_index(spark, pages_df, net, cfg,
-                                            oracle_results):
-    """broadcast_index=False takes the staged plan (fused_match, sp
-    searched in-kernel): the shuffled cell join scatters each url across
-    partitions, and only the url repartition puts each trajectory back
-    together (r5 ADVICE high — decoding per-partition fragments gave
-    79/83 mismatches when Catalyst did not auto-broadcast). Pin autoBroadcastJoinThreshold=-1 so Catalyst
-    cannot mask such a bug, then require exact oracle parity."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+def test_matched_parity_points_scattered(spark, pages_df, cfg, net,
+                                         oracle_results):
+    """match_points clusters its input on url before the kernel: points
+    scattered by pid over 7 partitions put every url's rows in several
+    input partitions, and only the url repartition puts each trajectory
+    back together (decoding per-partition fragments gave 79/83
+    mismatches on an earlier plan). Exact oracle parity is required."""
+    from st_mapmatching_spark.operators.candidates import extract_simplify
+    from st_mapmatching_spark.operators.matching import match_points
+    points = extract_simplify(pages_df, cfg).repartition(7, "pid")
+    out = match_points(spark, points, net, cfg)
     try:
-        got = (match_pages(spark, pages_df, net, cfg, broadcast_index=False)
-               .toPandas().set_index("url"))
+        _assert_matches_oracle(out.toPandas().set_index("url"),
+                               oracle_results)
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    _assert_matches_oracle(got, oracle_results)
+        out.unpersist()
 
 
 def test_matched_parity_classic_decode(spark, pages_df, pages, net, cfg):

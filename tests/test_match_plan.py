@@ -1,5 +1,6 @@
 """The matcher's shared helpers: the url-boundary batch generator every
-per-trajectory Arrow stage streams through, and the plan chooser."""
+per-trajectory Arrow stage streams through, the plan chooser, and the
+shape of match_points' plan."""
 
 import logging
 from dataclasses import replace
@@ -55,21 +56,18 @@ def test_viterbi_match_has_no_broadcast_paths_mode(cfg):
         viterbi_match(None, None, cfg, sp_paths={(1, 2): [3]})
 
 
-@pytest.mark.parametrize("broadcast_index", [True, False])
 @pytest.mark.parametrize("max_rows, relational", [(1, False), (-1, True)])
-def test_choose_plan_table(net, cfg, broadcast_index, max_rows, relational):
+def test_choose_plan_table(net, cfg, max_rows, relational):
     # only the sign of sp_broadcast_max_rows is read (0: the test below);
     # 1 row is far below the test network's n^2, so no size gate remains
     c = replace(cfg, sp_broadcast_max_rows=max_rows)
-    want = ("relational" if relational else
-            "onepass" if broadcast_index else "staged")
-    assert choose_plan(net, c, broadcast_index).name == want
+    want = "relational" if relational else "onepass"
+    assert choose_plan(net, c).name == want
 
 
 def test_choose_plan_relational_when_no_broadcast_rows(net, cfg):
     c = replace(cfg, sp_broadcast_max_rows=0)
-    for bi in (True, False):
-        assert choose_plan(net, c, bi).name == "relational"
+    assert choose_plan(net, c).name == "relational"
 
 
 class _NoNodes:
@@ -82,13 +80,37 @@ class _NoNodes:
 def test_choose_plan_reads_no_network_size(cfg):
     # the in-kernel sp search has no all-pairs table to size: any
     # network takes the one-stage plan
-    assert choose_plan(_NoNodes(), cfg, True).name == "onepass"
+    assert choose_plan(_NoNodes(), cfg).name == "onepass"
 
 
 def test_choose_plan_logs_plan_and_reason(net, cfg, caplog):
     with caplog.at_level(logging.INFO,
                          logger="st_mapmatching_spark.operators.matching"):
-        plan = choose_plan(net, cfg, True)
+        plan = choose_plan(net, cfg)
     assert plan.reason
     msgs = [r.getMessage() for r in caplog.records]
     assert any(plan.name in m and plan.reason in m for m in msgs), msgs
+
+
+def _leaves(df):
+    """The leaf nodes of a frame's physical plan, as strings."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return [leaves.apply(i).toString() for i in range(leaves.size())]
+
+
+def test_match_points_plan_reads_points_once(spark, pages, net, cfg):
+    """The one-pass points plan is one url shuffle and one kernel stage
+    over its input: it scans points_in once, joins nothing and does not
+    hash-encode the url."""
+    from st_mapmatching_spark.operators.candidates import extract_simplify
+    from st_mapmatching_spark.operators.matching import match_points
+    points = extract_simplify(spark.createDataFrame(pages), cfg)
+    out = match_points(spark, points, net, cfg)
+    # the result is persisted: release it so the plan below is its own,
+    # not a scan of the cache
+    out.unpersist()
+    fresh = out.select(*out.columns)
+    assert _leaves(fresh) == _leaves(points)
+    plan = fresh._jdf.queryExecution().sparkPlan().toString()
+    assert "BroadcastHashJoin" not in plan
+    assert "xxhash64" not in plan

@@ -12,8 +12,7 @@ from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.operators.repair import repair_topology, reversed_points
 
 
-@pytest.fixture(scope="module")
-def oneway_net():
+def _oneway_net():
     """Three collinear edges pointing RIGHT-to-LEFT only (a one-way
     corridor): node i at (250*i, 0), edge i runs node i+1 -> node i."""
     cfg = MatchConfig()
@@ -32,6 +31,11 @@ def oneway_net():
                           "x": [0.0, 250.0, 500.0, 750.0],
                           "y": [0.0, 0.0, 0.0, 0.0]})
     return Network(edges, nodes, cfg, geom_metric=True), cfg
+
+
+@pytest.fixture(scope="module")
+def oneway_net():
+    return _oneway_net()
 
 
 @pytest.fixture(scope="module")
@@ -57,6 +61,24 @@ def test_wrong_way_fails_then_repairs(spark, oneway_net, wrongway_points):
     assert set(int(e) for e in after.epath) <= set(added)
     # the amended network kept the originals too
     assert len(net2.edges) == 3 + len(added)
+
+
+def test_repair_leaves_no_cached_rdd(spark, wrongway_points):
+    """Every frame the loop persists is released, the reversed re-match's
+    included: once the caller unpersists the returned frame, no RDD the
+    call cached is left."""
+    # a network of its own: a frame an earlier call left cached cannot
+    # stand in for one this call persists
+    net, cfg = _oneway_net()
+
+    def cached():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = cached()
+    matched, _, added = repair_topology(spark, wrongway_points, net, cfg)
+    assert added
+    matched.unpersist()
+    assert cached() - before == set()
 
 
 def test_reversed_points_reverses(spark, wrongway_points):

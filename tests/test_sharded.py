@@ -86,7 +86,7 @@ def test_sharded_matches_staged(spark, bignet, fixture_pages):
     so no network size bounds it."""
     from dataclasses import replace
     cfg = replace(CFG, sp_broadcast_max_rows=0)   # pin the relational plan
-    assert choose_plan(bignet, CFG, True).name == "onepass"
+    assert choose_plan(bignet, CFG).name == "onepass"
     want = (match_pages(spark, fixture_pages, bignet, cfg)
             .toPandas().set_index("url").sort_index())
     sharded = (match_pages_sharded(spark, fixture_pages, bignet, cfg,

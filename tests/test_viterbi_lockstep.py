@@ -50,7 +50,7 @@ def _random_case(rng: np.random.RandomState, ngroups: int):
 
 
 def _batchify(groups):
-    """Assemble the lockstep inputs exactly like fused_match._frame does."""
+    """Assemble the lockstep inputs exactly like _decode_stitch does."""
     pl_gid, off, tot = [], [], []
     e0, e1, tp = [], [], []
     l0_e, l0_p, l0_off = [], [], [0]
