@@ -56,13 +56,15 @@ def test_viterbi_match_has_no_broadcast_paths_mode(cfg):
         viterbi_match(None, None, cfg, sp_paths={(1, 2): [3]})
 
 
+@pytest.mark.parametrize("sized_net", [True, False])
 @pytest.mark.parametrize("max_rows, relational", [(1, False), (-1, True)])
-def test_choose_plan_table(net, cfg, max_rows, relational):
+def test_choose_plan_table(net, cfg, sized_net, max_rows, relational):
     # only the sign of sp_broadcast_max_rows is read (0: the test below);
-    # 1 row is far below the test network's n^2, so no size gate remains
+    # 1 row is far below the test network's n^2, so no size gate remains,
+    # and the answer is the same on a network whose size cannot be read
     c = replace(cfg, sp_broadcast_max_rows=max_rows)
     want = "relational" if relational else "onepass"
-    assert choose_plan(net, c).name == want
+    assert choose_plan(net if sized_net else _NoNodes(), c).name == want
 
 
 def test_choose_plan_relational_when_no_broadcast_rows(net, cfg):
