@@ -156,7 +156,10 @@ class EdgeDirStats:
                 for e, i in self.eid_index.items()}
         return self._edge_totals
 
-    def _dense(self, eid: np.ndarray) -> np.ndarray:
+    def dense(self, eid: np.ndarray) -> np.ndarray:
+        """The dense edge index of ``eid``: its position in the sorted
+        edge ids, the row of the per-edge arrays every method below
+        gathers from (Network.padded_geoms uses the same order)."""
         # eid_index is position-in-sorted-order, so the dense index is a
         # binary search (a per-row dict-lookup listcomp here was 12% of
         # the sharded matcher's kernel profile)
@@ -164,10 +167,10 @@ class EdgeDirStats:
             self._eids_sorted = np.array(sorted(self.eid_index), dtype=np.int64)
         return np.searchsorted(self._eids_sorted, np.asarray(eid, dtype=np.int64))
 
-    def head_cut_stats(self, eid, seg_idx, ratio):
-        """Stats of the polyline head cut seg0 (start -> projection), with
-        cut_polyline's boundary conventions. Returns (cx, cy, w, n, present)."""
-        di = self._dense(np.asarray(eid))
+    def head_cut_stats(self, di, seg_idx, ratio):
+        """Stats of the polyline head cut seg0 (start -> projection) of the
+        edges at dense index ``di``, with cut_polyline's boundary
+        conventions. Returns (cx, cy, w, n, present)."""
         idx = np.asarray(seg_idx, dtype=np.int64)
         r = np.asarray(ratio, dtype=np.float64)
         nseg = self.nseg[di]
@@ -192,9 +195,9 @@ class EdgeDirStats:
         w += add
         return cx, cy, w, n.astype(np.int64), ~none0
 
-    def tail_cut_stats(self, eid, seg_idx, ratio):
-        """Stats of the tail cut seg1 (projection -> end)."""
-        di = self._dense(np.asarray(eid))
+    def tail_cut_stats(self, di, seg_idx, ratio):
+        """Stats of the tail cut seg1 (projection -> end) of the edges at
+        dense index ``di``."""
         idx = np.asarray(seg_idx, dtype=np.int64)
         r = np.asarray(ratio, dtype=np.float64)
         nseg = self.nseg[di]
@@ -221,17 +224,17 @@ class EdgeDirStats:
         w = w + add
         return cx, cy, w, n.astype(np.int64), ~none1
 
-    def vertex(self, eid, first: bool) -> np.ndarray:
-        di = self._dense(np.asarray(eid))
+    def vertex(self, di, first: bool) -> np.ndarray:
         return (self.first_v if first else self.last_v)[di]
 
 
-def engine_dir_probs(stats: "EdgeDirStats", e0, i0, r0, e1, i1, r1,
+def engine_dir_probs(stats: "EdgeDirStats", di0, i0, r0, di1, i1, r1,
                      approx, flag1, has_path, pcx, pcy, pw, pn_path,
-                     move_dir, o_xy=None, d_xy=None) -> np.ndarray:
+                     move_dir, o_xy, d_xy) -> np.ndarray:
     """The engine's full dir_prob computation from sufficient stats —
-    shared by the relational Arrow scorer and the fused per-trajectory
-    matcher (single source of truth for the part/joint bookkeeping).
+    shared by the relational Arrow scorer and the one-pass kernel
+    (single source of truth for the part/joint bookkeeping). The pair's
+    edges come as dense indices (EdgeDirStats.dense) ``di0``/``di1``.
 
     Joints between consecutive present parts are real segments in the
     reference's literal concatenation: normally zero-length (the parts
@@ -239,37 +242,37 @@ def engine_dir_probs(stats: "EdgeDirStats", e0, i0, r0, e1, i1, r1,
     at edge_0's FIRST vertex, far from the path's end — those connecting
     segments carry real length and bearing and must enter the stats.
     ``o_xy``/``d_xy`` are the path's endpoint coordinates (the coords of
-    o_node/d_node); when omitted the joints to/from the path are assumed
-    zero-length (pre-round-2 behavior, correct only for non-approx rows)."""
+    o_node/d_node)."""
     from .geodesy import bearing_deg
 
-    en = np.where(approx, e0, e1)
+    din = np.where(approx, di0, di1)
     i_n = np.where(approx, i0, i1)
     rn = np.where(approx, r0, r1)
 
-    cx0, cy0, w0, n0, p0 = stats.tail_cut_stats(e0, i0, r0)
-    cxn, cyn, wn, nn, pn_ = stats.head_cut_stats(en, i_n, rn)
+    cx0, cy0, w0, n0, p0 = stats.tail_cut_stats(di0, i0, r0)
+    cxn, cyn, wn, nn, pn_ = stats.head_cut_stats(din, i_n, rn)
 
-    step0_end = stats.vertex(e0, first=False)
-    stepn_start = stats.vertex(en, first=True)
+    step0_end = stats.vertex(di0, first=False)
+    stepn_start = stats.vertex(din, first=True)
+    rows = len(din)
 
     def joint(frm, to, active):
-        ln = np.hypot(to[:, 0] - frm[:, 0], to[:, 1] - frm[:, 1])
-        b = np.radians(bearing_deg(frm[:, 0], frm[:, 1], to[:, 0], to[:, 1]))
-        act = active & (ln > 0.0)
-        return (np.where(act, ln * np.cos(b), 0.0),
-                np.where(act, ln * np.sin(b), 0.0),
-                np.where(act, ln, 0.0))
+        # (cx, cy, w) of the segment frm -> to on the active rows of
+        # non-zero length, 0 elsewhere: a joint is mostly zero-length or
+        # inactive, so its bearing is taken only where it counts
+        cx, cy, w = np.zeros(rows), np.zeros(rows), np.zeros(rows)
+        a = np.flatnonzero(active)
+        ln = np.hypot(to[a, 0] - frm[a, 0], to[a, 1] - frm[a, 1])
+        a, ln = a[ln > 0.0], ln[ln > 0.0]
+        b = np.radians(bearing_deg(frm[a, 0], frm[a, 1], to[a, 0], to[a, 1]))
+        cx[a], cy[a], w[a] = ln * np.cos(b), ln * np.sin(b), ln
+        return cx, cy, w
 
-    # joint step_0 -> step_n when the path is absent
+    # joint step_0 -> step_n when the path is absent; joints step_0 ->
+    # path start and path end -> step_n when it is present
     j0 = joint(step0_end, stepn_start, p0 & pn_ & (~has_path) & (~flag1))
-    if o_xy is not None:
-        # joints step_0 -> path start and path end -> step_n
-        j1 = joint(step0_end, o_xy, p0 & has_path & (~flag1))
-        j2 = joint(d_xy, stepn_start, pn_ & has_path & (~flag1))
-    else:
-        z = np.zeros(len(j0[0]))
-        j1 = j2 = (z, z, z)
+    j1 = joint(step0_end, o_xy, p0 & has_path & (~flag1))
+    j2 = joint(d_xy, stepn_start, pn_ & has_path & (~flag1))
 
     parts = p0.astype(np.int64) + pn_.astype(np.int64) + has_path.astype(np.int64)
     n_joints = np.maximum(parts - 1, 0)

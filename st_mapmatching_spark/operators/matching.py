@@ -156,11 +156,12 @@ def build_pairs_df(cands: DataFrame, points: DataFrame, cfg: MatchConfig) -> Dat
     return gt
 
 
-def _transition_probs(col, stats, dir_trans: bool):
+def _transition_probs(col, dstats, dir_trans: bool):
     """Transition scoring shared by score_pairs_df and _match_frame
     (spatialAnalysis.py:10-151): ``col(name)`` returns a pair column
-    (build_pairs_df's, plus the sp attach incl. has_path); ``stats`` is
-    (dir_stats, (node ids, node xy)). Returns (avg_speed, d_sht,
+    (build_pairs_df's, plus the sp attach incl. has_path, the edges'
+    dense indices di_0/di_1 and the o/d node coordinates o_xy/d_xy);
+    ``dstats`` is the network's EdgeDirStats. Returns (avg_speed, d_sht,
     dist_prob, dir_prob, trans_prob); dir_prob is NaN without dir_trans."""
     from ..kernels.dir_stats import engine_dir_probs
 
@@ -177,14 +178,11 @@ def _transition_probs(col, stats, dir_trans: bool):
     if not dir_trans:
         return (avg_speed, d_sht, dist_prob, np.full(len(flag), np.nan),
                 dist_prob)
-    dstats, (nids, nxy) = stats
     dir_prob = engine_dir_probs(
-        dstats, i("eid_0"), i("seg_idx_0"), f("ratio_0"),
-        i("eid_1"), i("seg_idx_1"), f("ratio_1"), col("approx"), flag1,
+        dstats, col("di_0"), i("seg_idx_0"), f("ratio_0"),
+        col("di_1"), i("seg_idx_1"), f("ratio_1"), col("approx"), flag1,
         col("has_path"), f("pcx"), f("pcy"), f("pw"), i("pn"),
-        f("move_dir"),
-        o_xy=nxy[np.searchsorted(nids, i("o_node"))],
-        d_xy=nxy[np.searchsorted(nids, i("d_node"))])
+        f("move_dir"), col("o_xy"), col("d_xy"))
     return avg_speed, d_sht, dist_prob, dir_prob, dist_prob * dir_prob
 
 
@@ -236,14 +234,19 @@ def score_pairs_df(spark: SparkSession, pairs: DataFrame, sp: DataFrame,
             if b.num_rows == 0:
                 continue
             col = {n: b.column(i) for i, n in enumerate(b.schema.names)}
+            dstats, (nids, nxy) = bc.value
 
             def get(name):
                 if name == "has_path":
                     return get("path_len") > 0
+                if name in ("di_0", "di_1"):
+                    return dstats.dense(get("eid" + name[2:]))
+                if name in ("o_xy", "d_xy"):
+                    return nxy[np.searchsorted(nids, get(name[0] + "_node"))]
                 return col[name].to_numpy(zero_copy_only=False)
 
             avg_speed, d_sht, dist_prob, dir_prob, trans_prob = \
-                _transition_probs(get, bc.value, dir_trans)
+                _transition_probs(get, dstats, dir_trans)
             computed = {"trans_prob": trans_prob, "dist_prob": dist_prob,
                         "dir_prob": dir_prob, "d_sht": d_sht,
                         "avg_speed": avg_speed}
@@ -553,51 +556,44 @@ class DemandSpPayload:
                             np.ones(len(r), dtype=bool))
 
 
-def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
+def _match_frame(c: dict, urls, geom, stats, spd,
                  cfg: MatchConfig) -> pd.DataFrame:
-    """Score EVERY trajectory of a sorted candidate frame in one set of
-    numpy passes (projection, layer params, pair cross-product, flags, sp
-    gather, dist/dir probs), then decode and stitch them all through
+    """Score EVERY trajectory of one chunk of candidates in one set of
+    numpy passes (layer params, pair cross-product, flags, sp gather,
+    dist/dir probs), then decode and stitch them all through
     _decode_stitch, the tail viterbi_match shares.
 
-    ``pdf`` must be sorted (url, pid, dist_p2c, eid) with each url's rows
-    complete and contiguous; the top-k cut per (url, pid) is applied here.
-    ``geom``/``stats`` are the broadcast network tuples ((eids_sorted,
-    mat, src, dst, dist, speed) / (dir_stats, node_xy)); ``spd`` the
-    DemandSpPayload. Every kernel plan reaches it through _probe_match,
-    so the plans cannot drift."""
+    ``c`` holds _probe_match's candidate rows for one url-aligned chunk
+    as arrays, sorted (url, pid, dist_p2c, eid), cut to top_k per layer
+    and with each url's rows complete: gid (the url's index in ``urls``),
+    pid, x, y, eid, di (the edge's dense index, its row in the geom
+    arrays and in the dir stats, which both follow the sorted edge ids),
+    dist_p2c and the probe's projection (seg_idx, ratio, len0, len1),
+    carried rather than projected again. ``geom``/``stats`` are the
+    broadcast network tuples ((eids_sorted, mat, src, dst, dist, speed) /
+    (dir_stats, (node ids, node xy))); ``spd`` the DemandSpPayload.
+    Every kernel plan reaches it through _probe_match, so the plans
+    cannot drift."""
     from ..kernels.geodesy import bearing_deg
-    from ..kernels.linear_ref import project_core
 
     dist_eps, ratio_eps = cfg.flag_dist_eps, cfg.flag_ratio_eps
-
-    # top-k per (url, pid): rows arrive sorted (url, pid, dist_p2c, eid),
-    # so candidate_join's row_number() <= k is rank-within-layer < k; a
-    # layer's head row (rank 0) always survives the cut
-    u, pid = pdf.url.to_numpy(), pdf.pid.to_numpy()
+    u, pid, di = c["gid"], c["pid"], c["di"]
+    x, y, eid = c["x"], c["y"], c["eid"]
+    len0, len1 = c["len0"], c["len1"]
+    segi, rat = c["seg_idx"], c["ratio"]
+    n = len(u)
     newlayer = np.concatenate(
         [[True], (pid[1:] != pid[:-1]) | (u[1:] != u[:-1])])
-    i = np.arange(len(pid))
-    keep = i - np.maximum.accumulate(np.where(newlayer, i, 0)) < cfg.top_k
-    if not keep.all():
-        pdf, newlayer = pdf.iloc[np.flatnonzero(keep)], newlayer[keep]
-        u, pid = pdf.url.to_numpy(), pdf.pid.to_numpy()
-    n = len(pdf)
     bounds = np.flatnonzero(np.concatenate([[True], u[1:] != u[:-1], [True]]))
     gid = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
-    eid = pdf.eid.to_numpy()
-    x = pdf.x.to_numpy()
-    y = pdf.y.to_numpy()
 
-    # per-candidate attrs + cut params re-derived from the broadcast
-    # network (bitwise-identical to the refine stage's project_core)
-    eids_sorted, mat, src_a, dst_a, dist_a, speed_a = geom
-    di = np.searchsorted(eids_sorted, eid)
-    pr = project_core(np.stack([x, y], axis=1), mat[di])
-    len0, len1 = pr["len0"], pr["len1"]
-    segi, rat = pr["seg_idx"], pr["ratio"]
+    # per-candidate attrs gathered from the broadcast network; the pair
+    # rows below gather from the candidate rows (L/R), never by eid
+    _, _, src_a, dst_a, dist_a, speed_a = geom
     src, dst = src_a[di], dst_a[di]
     dist, speed = dist_a[di], speed_a[di]
+    dstats, (nids, nxy) = stats
+    src_ni, dst_ni = np.searchsorted(nids, src), np.searchsorted(nids, dst)
 
     # ---- layers: first row of each (url, pid) run ----
     lay_row = np.flatnonzero(newlayer)
@@ -655,17 +651,19 @@ def _match_frame(pdf: pd.DataFrame, geom, stats, spd,
             "dist_0": dist_0, "d_euc": d_euc_l[K], "move_dir": move_dir_l[K],
             "eid_0": e0, "seg_idx_0": segi[L], "ratio_0": rat[L],
             "eid_1": e1, "seg_idx_1": segi[R], "ratio_1": rat[R],
-            "approx": approx, "o_node": o_node, "d_node": d_node}
+            "di_0": di[L], "di_1": di[R], "approx": approx,
+            "o_xy": nxy[np.where(flag1, src_ni[R], dst_ni[L])],
+            "d_xy": nxy[np.where(flag1, dst_ni[L], src_ni[R])]}
     avg_speed, d_sht, dist_prob, _, trans_prob = _transition_probs(
-        pair.__getitem__, stats, cfg.dir_trans)
+        pair.__getitem__, dstats, cfg.dir_trans)
 
     pairs = {"pid_0": lay_pid[p0][K], "eid_0": e0, "eid_1": e1,
              "flag": flag, "trans_prob": trans_prob, "dist_prob": dist_prob,
              "d_sht": d_sht, "avg_speed": avg_speed,
              "o_node": o_node, "d_node": d_node, "right": R}
-    cand = {"pid": pid, "eid": eid, "dist_p2c": pdf.dist_p2c.to_numpy(),
+    cand = {"pid": pid, "eid": eid, "dist_p2c": c["dist_p2c"],
             "len0": len0, "len1": len1}
-    return _decode_stitch(u[bounds[:-1]], bounds, cand, pairs,
+    return _decode_stitch(urls[u[bounds[:-1]]], bounds, cand, pairs,
                           lay_gid[p0][K], cfg, spd.paths)
 
 
@@ -785,23 +783,33 @@ def _kernel_broadcasts(spark: SparkSession, net: Network,
             net.search_state(), cfg.max_dist)))
 
 
-# Rows of candidates one _match_frame call scores: its pair-table
-# temporaries (score + dir-prob passes) must stay cache-resident — one
-# giant call measured 3-4x the per-url cost of ~1e5-row chunks
-# (superlinear in working set, not in work)
-CHUNK_ROWS = 100_000
+# Probe rows ((point, cell-edge) pairs) per _probe_match chunk: a chunk's
+# probe, projection, pair table and decode are all sized by it, so it
+# bounds a Python worker's working set whatever the Arrow batch holds.
+# Measured on perfbench onepass (4 cores, one ~375-page, ~100k-probe-row
+# batch per worker; 3 alternating pairs against the whole-batch kernel,
+# worker_rss_mb 1,187 MB and job_s 1.25 s): 40k -> 824 MB, 1.16 s; 20k ->
+# 735 MB, 1.42 s. Below ~40k the per-chunk fixed cost shows, mostly
+# viterbi_beam_lockstep's per-step Python loop, which runs once per layer
+# of each chunk's longest trajectory.
+CHUNK_ROWS = 40_000
 
 
 def _probe_match(u, pid, x, y, cells, geom, stats, spd,
                  cfg: MatchConfig) -> tuple[list[pd.DataFrame], set]:
     """Candidates + match for url-major points (extract_arrays' output or
-    a slice of it), all in numpy: cell probe of the radius-dilated index
-    (searchsorted twin of candidate_join's broadcast equi-join) -> exact
-    linear-referencing refine + radius filter -> (dist_p2c, eid) sort ->
-    _match_frame in url-aligned chunks of ~CHUNK_ROWS candidate rows.
-    ``cells`` is the (cell, eid)-sorted index as two arrays; ``geom``,
-    ``stats`` and ``spd`` are _match_frame's. Shared by every kernel
-    plan: match_pages_onepass, match_points and the sharded matcher.
+    a slice of it), all in numpy, one url-aligned chunk at a time: cell
+    probe of the radius-dilated index (searchsorted twin of
+    candidate_join's broadcast equi-join) -> exact linear-referencing
+    refine + radius filter -> (dist_p2c, eid) sort -> top-k cut ->
+    _match_frame, which scores, decodes and stitches the chunk on the
+    projection carried from the refine. A chunk holds whole urls and at
+    most CHUNK_ROWS probe rows, counted from the cell-index searchsorted
+    before anything is expanded; a url with more probe rows than that is
+    a chunk of its own. ``cells`` is the (cell, eid)-sorted index as two
+    arrays; ``geom``, ``stats`` and ``spd`` are _match_frame's. Shared by
+    every kernel plan: match_pages_onepass, match_points and the sharded
+    matcher.
 
     Returns the matched frames and the set of urls that had at least one
     in-radius candidate; the caller emits status-3 rows for the rest."""
@@ -817,36 +825,44 @@ def _probe_match(u, pid, x, y, cells, geom, stats, spd,
     ck = xy_to_cell(x, y, cfg.cell_size)
     lo = np.searchsorted(cells_s, ck, side="left")
     cnt = np.searchsorted(cells_s, ck, side="right") - lo
-    # expand each point over its cell's eid run
-    P = np.repeat(np.arange(len(u)), cnt)
-    E = cell_eids[np.arange(int(cnt.sum())) -
-                  np.repeat(np.cumsum(cnt) - cnt, cnt) + np.repeat(lo, cnt)]
-    pr = project_core(np.stack([x[P], y[P]], axis=1),
-                      mat[np.searchsorted(eids_sorted, E)])
-    keep = pr["dist"] <= cfg.radius
-    P, E, dp = P[keep], E[keep], pr["dist"][keep]
-    if not len(P):
-        return [], set()
-    # (url, pid) grouping == point ordinal P; within a layer the
-    # (dist_p2c, eid) order the decode requires
-    o = np.lexsort((E, dp, P))
-    P, E, dp = P[o], E[o], dp[o]
-    gid = pgid[P]
-    cands = pd.DataFrame({"url": gid, "pid": pid[P], "x": x[P], "y": y[P],
-                          "eid": E, "dist_p2c": dp})
-    gheads = np.flatnonzero(np.concatenate([[True], gid[1:] != gid[:-1]]))
-    cut_pos = np.concatenate([gheads, [len(gid)]])
-    frames, c0 = [], 0
-    while c0 < len(gheads):
-        c1 = max(int(np.searchsorted(cut_pos, cut_pos[c0] + CHUNK_ROWS,
-                                     side="left")), c0 + 1)
-        out = _match_frame(
-            cands.iloc[cut_pos[c0]:cut_pos[min(c1, len(gheads))]],
-            geom, stats, spd, cfg)
-        out["url"] = urls_by_gid[out.url.to_numpy()]
-        frames.append(out)
-        c0 = c1
-    return frames, set(urls_by_gid[gid[gheads]])
+    # each url's first point, and its first probe row, plus the ends
+    p_off = np.flatnonzero(np.append(new_url, True))
+    r_off = np.concatenate([[0], np.cumsum(cnt)])[p_off]
+    frames, have, a = [], [], 0
+    while a < len(urls_by_gid):
+        b = max(int(np.searchsorted(r_off, r_off[a] + CHUNK_ROWS,
+                                    side="right")) - 1, a + 1)
+        s, e = p_off[a], p_off[b]
+        a = b
+        # expand each point over its cell's eid run
+        n_c = cnt[s:e]
+        P = np.repeat(np.arange(s, e), n_c)
+        E = cell_eids[np.arange(len(P)) - np.repeat(np.cumsum(n_c) - n_c, n_c)
+                      + np.repeat(lo[s:e], n_c)]
+        di = np.searchsorted(eids_sorted, E)
+        pr = project_core(np.stack([x[P], y[P]], axis=1), mat[di])
+        keep = np.flatnonzero(pr["dist"] <= cfg.radius)
+        if not len(keep):
+            continue
+        # (url, pid) grouping == point ordinal P; within a layer the
+        # (dist_p2c, eid) order the decode requires
+        o = keep[np.lexsort((E[keep], pr["dist"][keep], P[keep]))]
+        # top-k per (url, pid): rows are sorted (url, pid, dist_p2c, eid),
+        # so candidate_join's row_number() <= k is rank-within-layer < k
+        g, lp = pgid[P[o]], pid[P[o]]
+        newlayer = np.concatenate(
+            [[True], (lp[1:] != lp[:-1]) | (g[1:] != g[:-1])])
+        i = np.arange(len(o))
+        o = o[i - np.maximum.accumulate(np.where(newlayer, i, 0))
+              < cfg.top_k]
+        P = P[o]
+        cand = {"gid": pgid[P], "pid": pid[P], "x": x[P], "y": y[P],
+                "eid": E[o], "di": di[o], "dist_p2c": pr["dist"][o],
+                **{k: pr[k][o] for k in ("seg_idx", "ratio", "len0", "len1")}}
+        frames.append(_match_frame(cand, urls_by_gid, geom, stats, spd, cfg))
+        have.append(cand["gid"])
+    return frames, (set(urls_by_gid[np.unique(np.concatenate(have))])
+                    if have else set())
 
 
 def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
@@ -855,7 +871,10 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
     JVM<->Python crossing: pages go in, one matched row per page comes
     out. Per batch, in numpy: GEO-line extraction + projection +
     Douglas-Peucker (extract_arrays) -> cell probe, refine, top-k,
-    scoring, Viterbi and stitch (_probe_match).
+    scoring, Viterbi and stitch (_probe_match), one url-aligned chunk of
+    at most CHUNK_ROWS probe rows at a time: the kernel's working set is
+    bounded by that budget, not by the Arrow batch
+    (spark.sql.execution.arrow.maxRecordsPerBatch pages).
 
     Why: a staged pages plan crosses the Arrow boundary three times
     (extract out, refine in/out, match in), with the WIDE candidate table
