@@ -27,7 +27,7 @@ import pandas as pd
 
 from ..config import MatchConfig
 from .geodesy import bearing_deg, polyline_bearing_cos_dist
-from .keys import check_key_space, key_find, key_index
+from .keys import key_find, key_index
 
 # status codes (/root/reference/mapmatching/match/status.py:3-14)
 STATUS_SUCCESS = 0
@@ -275,26 +275,23 @@ def finalize_scores(gt: pd.DataFrame, edge_coords: dict, dir_trans: bool,
 # beam Viterbi
 # ---------------------------------------------------------------------------
 
-def _prune(pid_0, eid_0, eid_1, prob, level: int, prev_scores: dict, cfg: MatchConfig):
+def _prune(pid_0, eid_0, eid_1, prob, level: int, prev_scores: tuple,
+           cfg: MatchConfig):
     """One beam-prune step (viterbi.py:17-69). Returns (eid_1 winners,
     eid_0 back-pointers, probs) in pop order.
 
-    ``prev_scores`` may be a dict {eid: prob} (oracle path) or a
-    (sorted_eids, probs) array pair (the fused matcher's array state) —
-    lookups with default 1.0 either way."""
+    ``prev_scores`` is the previous layer's (eid-sorted eids, probs);
+    an eid_0 not among them scores with 1.0."""
     if level < cfg.prune_start_layer:
         order = np.lexsort((eid_0, eid_1, -prob))
         cap = len(order)
     else:
-        if isinstance(prev_scores, tuple):
-            pe, pp = prev_scores
-            if len(pe):
-                loc = np.minimum(np.searchsorted(pe, eid_0), len(pe) - 1)
-                ps = np.where(pe[loc] == eid_0, pp[loc], 1.0) * prob
-            else:
-                ps = 1.0 * np.asarray(prob)
+        pe, pp = prev_scores
+        if len(pe):
+            loc = np.minimum(np.searchsorted(pe, eid_0), len(pe) - 1)
+            ps = np.where(pe[loc] == eid_0, pp[loc], 1.0) * prob
         else:
-            ps = np.array([prev_scores.get(int(e), 1.0) for e in eid_0]) * prob
+            ps = 1.0 * np.asarray(prob)
         if len(ps) == 0 or not np.isfinite(np.nanmax(ps)):
             thred = -np.inf
         else:
@@ -519,192 +516,186 @@ def viterbi_classic(cands: pd.DataFrame, gt: pd.DataFrame,
     return end_prob, rlist
 
 
-def viterbi_beam_lockstep(pl_gid, pair_off, pair_cnt, e0, e1, tp,
-                          l0_e, l0_p, l0_off, n_steps,
+def _first_max(grp, prob, key, pmax, kmin):
+    """Positions of each group's row with the highest prob, NaN last,
+    ties to the smallest key: two scatter reductions, into ``pmax`` (NaN)
+    and ``kmin`` (int64 max) at the groups' entries, which stay dirty."""
+    np.fmax.at(pmax, grp, prob)
+    m = pmax[grp]
+    top = np.flatnonzero((prob == m) | (m != m))     # m NaN: all rows NaN
+    g, kt = grp[top], key[top]
+    np.minimum.at(kmin, g, kt)
+    return top[kt == kmin[g]]
+
+
+def viterbi_beam_lockstep(pl_gid, pair_off, pair_cnt, e0, e1, tp, s0, s1,
+                          l0_s, l0_p, n_slots, n_steps,
                           cfg: MatchConfig = MatchConfig()):
-    """Beam Viterbi over MANY trajectories in lockstep — the batch twin of
-    viterbi_beam, decision-for-decision identical (the parity suite pins
-    fused-engine == per-group oracle exactly).
+    """Beam Viterbi over MANY trajectories in lockstep: the batch twin of
+    viterbi_beam, decision for decision the same
+    (tests/test_viterbi_lockstep.py pins it group by group).
 
-    Instead of per-trajectory per-layer numpy calls on ~25-element arrays
-    (fixed call overhead dominated the decode at ~6 core-ms/trajectory),
-    step t of EVERY trajectory is processed in one set of array ops:
-    transition-pair layers are grouped by their within-trajectory step
-    index, state lookups use one composite-key searchsorted across all
-    active trajectories, and the beam prune (threshold, (-prob, e1, e0)
-    order, cap, first-per-e1 dedup) runs on the concatenated rows with
-    group-aware segmentation. The backward walk and the epath assembly
-    are likewise lockstep.
+    Step t of every trajectory is one set of array ops over that step's
+    pair rows, which are laid out step-major once per call. Each state
+    (a group's candidate in one layer) has a slot, and the previous
+    layer's winner probs live in dense per-slot arrays: a step reads
+    them with a gather and writes its winners with a scatter. A state's
+    winner is its row with the highest prob, NaN last, ties to the
+    smallest e0. Where no group keeps more than beam_cap rows (every step
+    at the default top_k) two scatter reductions find it; a step where
+    the cap binds sorts its rows by (group, -prob, e1, e0), cuts each
+    group at the cap and keeps the first row per state, as _prune does.
+    The backward walk is a linked list over the winners, followed for
+    every group at once.
 
-    Inputs (all numpy, pair layers sorted group-major then step-ascending;
-    every consecutive-layer pair has >= 1 row — the fused matcher's pair
-    table guarantees this):
-      pl_gid          group id per pair-layer
-      pair_off/cnt    row span of each pair-layer in e0/e1/tp
+    Inputs (all numpy; pair layers sorted group-major then
+    step-ascending, each with >= 1 row):
+      pl_gid          group id per pair layer
+      pair_off/cnt    row span of each pair layer in the pair rows
       e0, e1, tp      pair rows (tp = trans_prob * observ_prob)
-      l0_e, l0_p      layer-0 (pid == 0) start states, group-major, in
-                      (dist_p2c, eid) row order; l0_off: offsets (ng+1)
-      n_steps         transitions per group (= layer count - 1)
+      s0, s1          slot of each pair row's from- and to-state, in
+                      [0, n_slots): one slot per (group, layer, eid)
+      l0_s, l0_p      slots and probs of the layer-0 (pid == 0) states
+      n_steps         pair layers per group (= layer count - 1)
 
     Returns flat arrays (w_off, idx, eid, end_prob): group g's epath is
     idx/eid[w_off[g]:w_off[g + 1]], idx the layer INDEX (the caller maps
     it to pids), empty with end_prob 0.0 when nothing was decoded."""
     ng = len(n_steps)
     maxT = int(n_steps.max()) if ng else 0
-    M = np.int64(max(int(e1.max(initial=0)), int(e0.max(initial=0)),
-                     int(l0_e.max(initial=0))) + 1)
-    check_key_space(ng, M)  # the (group, eid) keys grp * M + e
-    NEG_INF = -np.inf
+    if maxT == 0:
+        return (np.zeros(ng + 1, np.int64), np.empty(0, np.int64),
+                np.empty(0, np.int64), np.zeros(ng))
+    cap = cfg.beam_cap
 
-    # step-major ordering of pair layers
-    t_of = np.concatenate([np.arange(c, dtype=np.int64)
-                           for c in np.diff(np.searchsorted(
-                               pl_gid, np.arange(ng + 1) - 0.5))]) \
-        if len(pl_gid) else np.empty(0, np.int64)
-    ord_kt = np.lexsort((pl_gid, t_of))
-    t_sorted = t_of[ord_kt]
-    t_starts = np.searchsorted(t_sorted, np.arange(maxT + 1))
+    # ---- step-major pair rows, built once: pair layer q (group-major) is
+    # step t_of[q] of its group; a stable sort on t keeps each step's
+    # groups ascending. k below numbers the pair layers step-major.
+    g_lo = np.cumsum(n_steps) - n_steps
+    t_of = np.arange(len(pl_gid)) - np.repeat(g_lo, n_steps)
+    ord_kt = np.argsort(t_of, kind="stable")
+    t_k = t_of[ord_kt]
+    cnt = pair_cnt[ord_kt]
+    k_lo = np.cumsum(cnt) - cnt
+    rows = np.repeat(pair_off[ord_kt] - k_lo, cnt) + np.arange(int(cnt.sum()))
+    E0, E1 = e0[rows].astype(np.int64), e1[rows].astype(np.int64)
+    TP, S0, S1 = tp[rows], s0[rows], s1[rows]
+    K = np.repeat(np.arange(len(cnt)), cnt)          # each row's k
+    step_k = np.searchsorted(t_k, np.arange(maxT + 1))
+    step_r = np.append(k_lo, len(rows))[step_k]
+    # within its step: each pair layer's first row, each row's pair layer
+    k_rst = k_lo - step_r[t_k]
+    r_k = K - step_k[t_k[K]]
+    # a step can bind the cap only if one of its pair layers is larger
+    big = np.maximum.reduceat(cnt, step_k[:-1]) > cap
 
-    # current winner state: insertion-order arrays + sorted lookup copy
-    w_grp = np.repeat(np.arange(ng, dtype=np.int64), np.diff(l0_off))
-    w_e1 = l0_e.astype(np.int64)
-    w_p = l0_p.astype(np.float64)
-    so = np.lexsort((w_e1, w_grp))
-    skey = w_grp[so] * M + w_e1[so]
-    svals = w_p[so]
+    # per slot: the winner prob of the previous layer and whether it has
+    # one; a slot is the to-state of one step only, so nothing is reset
+    P = np.full(n_slots, np.nan)
+    H = np.zeros(n_slots, dtype=bool)
+    P[l0_s], H[l0_s] = l0_p, True
+    pmax = np.full(n_slots, np.nan)                  # scatter scratch
+    e0min = np.full(n_slots, np.iinfo(np.int64).max)
 
-    steps = []  # per step: (wg, we1, wp, wb) winners in pop order
+    wins, wps = [], []  # per step: winner rows, their probs
     for t in range(maxT):
-        ks = ord_kt[t_starts[t]:t_starts[t + 1]]
-        cnts = pair_cnt[ks]
-        tot = int(cnts.sum())
-        base = np.repeat(np.cumsum(cnts) - cnts, cnts)
-        rows = np.repeat(pair_off[ks], cnts) + (np.arange(tot) - base)
-        rg = np.repeat(pl_gid[ks], cnts)
-        re0, re1, rtp = e0[rows], e1[rows], tp[rows]
-        rstarts = np.cumsum(cnts) - cnts
+        a, b = step_r[t], step_r[t + 1]
+        rst, rk = k_rst[step_k[t]:step_k[t + 1]], r_k[a:b]
+        tS0, tS1 = S0[a:b], S1[a:b]
+        # previous-layer lookup; a NaN-prob winner counts as MISSING for
+        # selection (but its NaN value flows into the prune threshold)
+        val, mk = P[tS0], H[tS0]
+        okm = mk & (val == val)
+        hit = np.logical_or.reduceat(okm, rst)
+        if hit.all():
+            sel, prob = okm, val * TP[a:b]
+        else:  # HMM break: the group restarts its layer with prev prob 1
+            rhit = hit[rk]
+            sel = okm | ~rhit
+            prob = np.where(rhit, val, 1.0) * TP[a:b]
 
-        # previous-layer state lookup; a NaN-prob winner counts as MISSING
-        # for selection (but its NaN value flows into the prune threshold)
-        if len(skey):
-            rkey = rg * M + re0
-            loc = np.minimum(np.searchsorted(skey, rkey), len(skey) - 1)
-            mk = skey[loc] == rkey
-            val = svals[loc]
-        else:
-            mk = np.zeros(tot, dtype=bool)
-            val = np.full(tot, np.nan)
-        okm = mk & ~np.isnan(val)
-
-        hit = np.add.reduceat(okm, rstarts) > 0
-        restart_row = np.repeat(~hit, cnts)      # HMM break: prev prob 1
-        sel = okm | restart_row
-        prevv = np.where(restart_row, 1.0, val)
-
-        rs = np.flatnonzero(sel)
-        sgrp, se0, se1 = rg[rs], re0[rs], re1[rs]
-        prob = prevv[rs] * rtp[rs]
-        mk_sel, val_sel = mk[rs], val[rs]
-
-        step_groups = pl_gid[ks]                 # sorted, one per group
-        grank = np.searchsorted(step_groups, sgrp)
-
-        if t >= cfg.prune_start_layer:
-            ps = np.where(mk_sel, val_sel, 1.0) * prob
-            sstarts = np.searchsorted(sgrp, step_groups)
-            segmax = np.fmax.reduceat(ps, sstarts)   # == nanmax per group
+        pruned = t >= cfg.prune_start_layer
+        if pruned:
+            # a row left out of sel has prob NaN: it is never kept and
+            # adds nothing to its group's max
+            ps = np.where(mk, val, 1.0) * prob
+            segmax = np.fmax.reduceat(ps, rst)       # == nanmax per group
             thred = np.where(np.isfinite(segmax),
-                             segmax * cfg.prune_trim_factor, NEG_INF)
-            keep = prob >= thred[grank]
-            kk = np.flatnonzero(keep)
-            cap = cfg.beam_cap
+                             segmax * cfg.prune_trim_factor, -np.inf)
+            keep = prob >= thred[rk]
         else:
-            kk = np.arange(len(rs))
-            cap = 1 << 60
+            keep = sel
+        k = np.flatnonzero(keep)
 
-        kg, kp = sgrp[kk], prob[kk]
-        order = kk[np.lexsort((se0[kk], se1[kk], -kp, kg))]
-        og = sgrp[order]
-        # positional rank within group -> cap, then first-per-(g, e1)
-        gpos = np.searchsorted(og, np.unique(og))
-        starts_of = np.repeat(gpos, np.diff(np.concatenate([gpos, [len(og)]])))
-        rank = np.arange(len(og)) - starts_of
-        capped = order[rank < cap]
-        ogc = sgrp[capped]
-        ckey = ogc * M + se1[capped]
-        _, first = np.unique(ckey, return_index=True)
-        first.sort()
-        win = capped[first]
-
-        wg = sgrp[win]
-        we1 = se1[win]
-        wp = prob[win]
-        wb = se0[win]
-        steps.append((wg, we1, wp, wb))
-
-        so = np.lexsort((we1, wg))
-        skey = wg[so] * M + we1[so]
-        svals = wp[so]
+        if pruned and big[t] and np.add.reduceat(
+                keep, rst, dtype=np.int64).max() > cap:
+            tg = K[a:b]                      # orders the step's groups
+            o = k[np.lexsort((E0[a:b][k], E1[a:b][k], -prob[k], tg[k]))]
+            og = tg[o]
+            i = np.arange(len(o))
+            rank = i - np.maximum.accumulate(np.where(
+                np.concatenate([[True], og[1:] != og[:-1]]), i, 0))
+            capped = o[rank < cap]
+            _, first = np.unique(tS1[capped], return_index=True)
+            first.sort()
+            w = capped[first]
+        else:
+            w = k[_first_max(tS1[k], prob[k], E0[a:b][k], pmax, e0min)]
+        wp = prob[w]
+        P[tS1[w]], H[tS1[w]] = wp, True
+        wins.append(a + w)
+        wps.append(wp)
 
     # ------------------------------------------------------- lockstep walk
-    # per group and step idx (descending) where the state looked up is
-    # found, one record (group, idx, cur, prev): cur that state, prev its
-    # back pointer
-    S = np.full(ng, -1, dtype=np.int64)
+    # viterbi_beam's walk as a linked list over the winners. A group
+    # (re)starts at the first state of a step's pop order, which its
+    # max(f, key=f.get) picks: max prob, NaN last, ties to the smallest
+    # e1. From winner j the walk goes to the winner of j's back-pointer
+    # state one step down; if that state has none, the group restarts two
+    # steps down, or lower where a step left it no winner.
+    W, WP = np.concatenate(wins), np.concatenate(wps)
+    Wk = K[W]
+    o = _first_max(Wk, WP, E1[W], np.full(len(cnt), np.nan),
+                   np.full(len(cnt), np.iinfo(np.int64).max))
+    lead = np.full(len(cnt), -1)
+    lead[ord_kt[Wk[o]]] = o
+    # per group-major pair layer q: the winner a restart at q takes, from
+    # q's step or the nearest step below it with winners
+    q = np.arange(len(lead))
+    below = np.maximum.accumulate(np.where(lead >= 0, q, -1))
+    rs_q = np.where(below >= g_lo[pl_gid], lead[below], -1)
+    win_of = np.full(n_slots, -1, dtype=np.int64)
+    win_of[S1[W]] = np.arange(len(W))
+    nxt = win_of[S0[W]]
+    jump = nxt < 0                      # the next winner is a restart
+    j2 = jump & (t_k[Wk] >= 2)
+    nxt[j2] = rs_q[ord_kt[Wk[j2]] - 2]
+
     ep_sum = np.zeros(ng)
-    ep_cnt = np.zeros(ng, dtype=np.int64)
-    rec = []
-    for idx in range(maxT, 0, -1):
-        wg, we1, wp, wb = steps[idx - 1]
-        g_ids = np.flatnonzero(n_steps >= idx)
-        lo = np.searchsorted(wg, g_ids)
-        hi = np.searchsorted(wg, g_ids, side="right")
-        cnt = hi - lo
-
-        rsm = (S[g_ids] == -1) & (cnt > 0)
-        rsi = np.flatnonzero(rsm)
-        if len(rsi):
-            Wm = int(cnt[rsi].max())
-            mi = lo[rsi][:, None] + np.arange(Wm)[None, :]
-            valid = np.arange(Wm)[None, :] < cnt[rsi][:, None]
-            mi = np.minimum(mi, max(len(wp) - 1, 0))
-            pv = wp[mi]
-            # max(f, key=f.get): first max; a NaN incumbent in slot 0 wins
-            v = np.where(valid & ~np.isnan(pv), pv, NEG_INF)
-            k = np.argmax(v, axis=1)
-            k = np.where(np.isnan(wp[lo[rsi]]), 0, k)
-            pos0 = lo[rsi] + k
-            S[g_ids[rsi]] = we1[pos0]
-            ep_sum[g_ids[rsi]] += wp[pos0]
-            ep_cnt[g_ids[rsi]] += 1
-
-        eng = np.flatnonzero(S[g_ids] != -1)
-        if len(eng):
-            Wm = int(cnt[eng].max()) if len(eng) else 0
-            if Wm > 0:
-                mi = lo[eng][:, None] + np.arange(Wm)[None, :]
-                valid = np.arange(Wm)[None, :] < cnt[eng][:, None]
-                mi = np.minimum(mi, max(len(we1) - 1, 0))
-                eqm = valid & (we1[mi] == S[g_ids[eng]][:, None])
-                found = eqm.any(axis=1)
-                pos = np.argmax(eqm, axis=1)
-                prev_e0 = wb[np.minimum(lo[eng] + pos, max(len(wb) - 1, 0))]
-            else:
-                found = np.zeros(len(eng), dtype=bool)
-                prev_e0 = np.zeros(len(eng), dtype=np.int64)
-            ge = g_ids[eng]
-            f = np.flatnonzero(found)
-            rec.append((ge[f], np.full(len(f), idx, np.int64), S[ge[f]],
-                        prev_e0[f]))
-            S[ge] = np.where(found, prev_e0, -1)
+    c = np.where(n_steps > 0, rs_q[np.maximum(g_lo + n_steps - 1, 0)], -1)
+    act = np.flatnonzero(c >= 0)
+    c, f = c[act], np.ones(len(act), dtype=bool)
+    vis = []  # (group, winner, reached by a restart) per link followed
+    while len(act):
+        vis.append((act, c, f))
+        n, f = nxt[c], jump[c]
+        on = n >= 0
+        act, c, f = act[on], n[on], f[on]
+    vg, vj, vf = (np.concatenate(a) for a in zip(*vis)) if vis \
+        else (np.empty(0, np.int64), np.empty(0, np.int64),
+              np.empty(0, dtype=bool))
+    # the restarts' probs summed in walk order, as viterbi_beam does
+    np.add.at(ep_sum, vg[vf], WP[vj[vf]])
+    ep_cnt = np.bincount(vg[vf], minlength=ng)
+    # one record (group, idx, cur, prev) per winner walked: the step's
+    # layer index + 1, the winner's eid and its back pointer's
+    rg, ri, rc, rp = vg, t_k[Wk[vj]] + 1, E1[W[vj]], E0[W[vj]]
 
     # ------------------------------------------------ flat epath assembly
     # viterbi_beam's walk, for all groups at once: records group-major,
     # idx descending; a record appends (idx, cur) unless that is the item
     # the group's previous record appended last, then (idx - 1, prev);
     # the group's items, reversed, are its epath
-    rg, ri, rc, rp = (np.concatenate(a) for a in zip(*rec)) if rec \
-        else (np.empty(0, np.int64),) * 4
     o = np.argsort(rg, kind="stable")
     rg, ri, rc, rp = rg[o], ri[o], rc[o], rp[o]
     dup = np.zeros(len(rg), dtype=bool)

@@ -312,12 +312,15 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
         pi = pi[np.lexsort((col["pid_0"][pi], gid[pi]))]
         cand = {c: col[c][ci] for c in c_cols}
         pairs = {c: col[c][pi] for c in s_cols}
-        # a pair whose (pid_1, eid_1) is no candidate gets right = -1:
-        # a NaN emission, as the per-url pandas merge gave
+        # each pair side's candidate row; a pair whose (pid_1, eid_1) is
+        # no candidate gets right = -1: a NaN emission, as the per-url
+        # pandas merge gave
         uniq, code, corder = key_index(gid[ci], cand["pid"], cand["eid"])
-        pos, hit = key_find(uniq, code, gid[pi], pairs["pid_1"],
-                            pairs["eid_1"])
-        pairs["right"] = np.where(hit, corder[pos], -1)
+        for side, p_col, e_col in (("left", "pid_0", "eid_0"),
+                                   ("right", "pid_1", "eid_1")):
+            pos, hit = key_find(uniq, code, gid[pi], pairs[p_col],
+                                pairs[e_col])
+            pairs[side] = np.where(hit, corder[pos], -1)
         c_off = np.searchsorted(gid[ci], np.arange(gid[-1] + 2))
         return _decode_stitch(u[head], c_off, cand, pairs, gid[pi],
                               cfg).rename(columns={"epath": "epath0"})
@@ -660,7 +663,7 @@ def _match_frame(c: dict, urls, geom, stats, spd,
     pairs = {"pid_0": lay_pid[p0][K], "eid_0": e0, "eid_1": e1,
              "flag": flag, "trans_prob": trans_prob, "dist_prob": dist_prob,
              "d_sht": d_sht, "avg_speed": avg_speed,
-             "o_node": o_node, "d_node": d_node, "right": R}
+             "o_node": o_node, "d_node": d_node, "left": L, "right": R}
     cand = {"pid": pid, "eid": eid, "dist_p2c": c["dist_p2c"],
             "len0": len0, "len1": len1}
     return _decode_stitch(urls[u[bounds[:-1]]], bounds, cand, pairs,
@@ -679,8 +682,9 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
     Url g's candidate rows are c_off[g]:c_off[g + 1] of ``cand`` (pid,
     eid, dist_p2c, len0, len1), sorted (url, pid, dist_p2c, eid).
     ``pairs`` (SCORED_COLS' decode columns) is sorted (url, pid_0),
-    ``pair_gid`` its url index, and ``right`` the row of its (pid_1,
-    eid_1) candidate, -1 if none (NaN emission). The emission is
+    ``pair_gid`` its url index, ``left`` the row of its (pid_0, eid_0)
+    candidate and ``right`` that of its (pid_1, eid_1) candidate, -1 if
+    none (for right, a NaN emission). The emission is
     recomputed in numpy (the JVM's exp/sqrt differ in the last ulp) and
     normalized by the per-url max."""
     ngroups = len(urls)
@@ -711,15 +715,30 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
     # winning states of every multi-layer url as flat arrays
     if cfg.beam_search:
         pl_gid = np.searchsorted(multi, pair_gid[pair_off])
-        l0 = np.flatnonzero((pid == 0) & has_pairs[gid])
-        l0_off = np.concatenate([[0], np.cumsum(np.bincount(
-            np.searchsorted(multi, gid[l0]), minlength=len(multi)))])
-        w_off, w_idx, w_eid, end_prob = hmm.viterbi_beam_lockstep(
-            pl_gid, pair_off, np.diff(np.append(pair_off, len(pair_gid))),
-            pairs["eid_0"], pairs["eid_1"], pairs["trans_prob"] * p_obs,
-            eid[l0], obs[l0], l0_off,
-            np.bincount(pl_gid, minlength=len(multi)), cfg)
+        pair_cnt = np.diff(np.append(pair_off, len(pair_gid)))
+        n_steps = np.bincount(pl_gid, minlength=len(multi))
         lay_lo = np.searchsorted(lay_gid, multi)
+        # a state's slot is its candidate row; a pair side with no
+        # candidate row gets a fresh slot per (layer, eid)
+        s0, s1, n_slots = pairs["left"], right, len(pid)
+        m0, m1 = np.flatnonzero(s0 < 0), np.flatnonzero(s1 < 0)
+        if len(m0) or len(m1):
+            pl_lay = lay_lo[pl_gid] + np.arange(len(pl_gid)) - np.repeat(
+                np.cumsum(n_steps) - n_steps, n_steps)
+            r_lay = np.repeat(pl_lay, pair_cnt)
+            _, fresh = np.unique(np.stack([
+                np.concatenate([r_lay[m0], r_lay[m1] + 1]),
+                np.concatenate([pairs["eid_0"][m0], pairs["eid_1"][m1]])],
+                axis=1), axis=0, return_inverse=True)
+            fresh = n_slots + fresh.ravel()
+            s0, s1 = s0.copy(), s1.copy()
+            s0[m0], s1[m1] = fresh[:len(m0)], fresh[len(m0):]
+            n_slots = int(fresh.max()) + 1
+        l0 = np.flatnonzero((pid == 0) & has_pairs[gid])
+        w_off, w_idx, w_eid, end_prob = hmm.viterbi_beam_lockstep(
+            pl_gid, pair_off, pair_cnt, pairs["eid_0"], pairs["eid_1"],
+            pairs["trans_prob"] * p_obs, s0, s1, l0, obs[l0], n_slots,
+            n_steps, cfg)
         w_pid = lay_pid[np.repeat(lay_lo, np.diff(w_off)) + w_idx]
     else:
         cand_cols = {**cand, "observ_prob": obs}
@@ -786,13 +805,15 @@ def _kernel_broadcasts(spark: SparkSession, net: Network,
 # Probe rows ((point, cell-edge) pairs) per _probe_match chunk: a chunk's
 # probe, projection, pair table and decode are all sized by it, so it
 # bounds a Python worker's working set whatever the Arrow batch holds.
-# Measured on perfbench onepass (4 cores, one ~375-page, ~100k-probe-row
-# batch per worker; 3 alternating pairs against the whole-batch kernel,
-# worker_rss_mb 1,187 MB and job_s 1.25 s): 40k -> 824 MB, 1.16 s; 20k ->
-# 735 MB, 1.42 s. Below ~40k the per-chunk fixed cost shows, mostly
-# viterbi_beam_lockstep's per-step Python loop, which runs once per layer
-# of each chunk's longest trajectory.
-CHUNK_ROWS = 40_000
+# Each chunk also pays fixed work, mostly viterbi_beam_lockstep's
+# per-step loop, which runs once per layer of the chunk's longest
+# trajectory. In-process over perfbench onepass's four seed-1 batches
+# (~375 pages, ~100k probe rows each; one process, medians of 5), kernel /
+# lockstep: 40k 2.20 / 0.19 s, 20k 2.27 / 0.25 s, 10k 2.50 / 0.36 s.
+# End to end on 4 cores against 40k chunks (worker_rss_mb ~835 MB), 10k
+# reads 669 MB at job_s 1.27 -> 1.20 s (10 pairs) and 20k 728 MB at
+# 1.07 -> 1.05 s (6 pairs).
+CHUNK_ROWS = 10_000
 
 
 def _probe_match(u, pid, x, y, cells, geom, stats, spd,

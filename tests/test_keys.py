@@ -1,7 +1,8 @@
 """kernels.keys: the composite-key lookup shared by SpPayload.locate,
 viterbi_match's pair-emission attach and stitch_path's winning-step
 lookup — matches a dict lookup, including misses and duplicate keys, and
-fails closed (ValueError) when the packed key would overflow int64."""
+fails closed (ValueError) when the packed key would overflow int64. The
+lockstep Viterbi packs no keys: it decodes eids near 2**62 exactly."""
 
 import numpy as np
 import pytest
@@ -9,6 +10,7 @@ import pytest
 from st_mapmatching_spark.config import MatchConfig
 from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.kernels.keys import check_key_space, key_find, key_index
+from test_viterbi_lockstep import _batchify, _group, _random_case
 
 
 def test_lookup_matches_dict():
@@ -52,16 +54,23 @@ def test_key_space_overflow_raises():
         key_find((v, v, v, v), np.empty(0, np.int64), v, v, v, v)
 
 
-def test_lockstep_group_key_overflow_raises():
-    """viterbi_beam_lockstep packs (group, eid) as grp * M + e with
-    M = max eid + 1: three groups over eids near 2**62 overflow int64 and
-    must raise instead of wrapping into colliding state keys."""
-    big = np.int64(2 ** 62)
-    n = 3
-    e0 = np.full(n, big, dtype=np.int64)
-    e1 = np.full(n, big + 1, dtype=np.int64)
-    with pytest.raises(ValueError, match="overflow int64"):
-        hmm.viterbi_beam_lockstep(
-            np.arange(n), np.arange(n), np.ones(n, np.int64), e0, e1,
-            np.full(n, 0.5), e0, np.full(n, 0.5), np.arange(n + 1),
-            np.ones(n, np.int64), MatchConfig())
+def test_lockstep_decodes_eids_near_2_62():
+    """viterbi_beam_lockstep keys its states by slot, not by a packed
+    (group, eid) code: groups over eids near 2**62, whose grp * max_eid
+    product overflows int64, decode exactly as viterbi_beam does."""
+    big = 2 ** 62
+    groups = []
+    for cands, gt in _random_case(np.random.RandomState(4), ngroups=12):
+        groups.append((cands.assign(eid=cands.eid + big),
+                       gt.assign(eid_0=gt.eid_0 + big, eid_1=gt.eid_1 + big)))
+    cfg = MatchConfig()
+    dec = hmm.viterbi_beam_lockstep(*_batchify(groups), cfg)
+    assert int(dec[2].min()) >= big
+    for g, (cands, gt) in enumerate(groups):
+        exp_prob, exp_rlist = hmm.viterbi_beam(cands, gt, cfg)
+        got_prob, ridx, reid = _group(*dec, g)
+        pids = np.sort(cands.pid.unique())
+        assert np.array_equal(pids[ridx], exp_rlist.pid.to_numpy())
+        assert np.array_equal(reid, exp_rlist.eid.to_numpy())
+        assert got_prob == exp_prob or (np.isnan(got_prob)
+                                        and np.isnan(exp_prob))

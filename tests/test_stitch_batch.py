@@ -127,9 +127,11 @@ def _batched(cands, pairs, cfg, paths, extra_urls=()):
                                          "trans_prob", "dist_prob", "d_sht",
                                          "avg_speed", "o_node", "d_node")}
     uniq, code, corder = key_index(c_gid, cand["pid"], cand["eid"])
-    pos, hit = key_find(uniq, code, p_gid, p.pid_1.to_numpy(),
-                        pair["eid_1"])
-    pair["right"] = np.where(hit, corder[pos], -1)
+    for side, p_col, e_col in (("left", "pid_0", "eid_0"),
+                               ("right", "pid_1", "eid_1")):
+        pos, hit = key_find(uniq, code, p_gid, p[p_col].to_numpy(),
+                            p[e_col].to_numpy())
+        pair[side] = np.where(hit, corder[pos], -1)
     return _decode_stitch(urls, c_off, cand, pair, p_gid, cfg,
                           paths).set_index("url")
 
@@ -221,6 +223,33 @@ def test_dir_trans_off():
     rng = np.random.default_rng(5)
     cands, pairs = _mk_inputs(rng, 30)
     _check(*_augment(rng, cands, pairs), replace(CFG, dir_trans=False), rng)
+
+
+def test_missing_right_candidates_share_a_state():
+    """Pairs whose (pid_1, eid_1) is no candidate (right = -1, the
+    relational plan's NaN emission), two of them into the same (url,
+    pid_1, eid_1) and one out of it (left = -1), decode as the per-url
+    viterbi_beam: all of layer 0 -> 1 is NaN, so layer 1 -> 2 restarts
+    and its best row leaves the missing state, which the path then
+    runs through."""
+    rng = np.random.default_rng(8)
+    c = pd.DataFrame({"pid": [0, 0, 1, 1, 2, 2, 3],
+                      "eid": [10, 11, 20, 21, 30, 31, 40],
+                      "dist_p2c": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0]})
+    rows = [(0, 1, a, b, np.nan) for a in (10, 11) for b in (20, 21, 999)]
+    rows += [(1, 2, a, b, 0.3) for a in (20, 21) for b in (30, 31)]
+    rows += [(1, 2, 999, 30, 0.9)]
+    rows += [(2, 3, a, 40, 0.5) for a in (30, 31)]
+    pairs = pd.DataFrame(rows, columns=["pid_0", "pid_1", "eid_0", "eid_1",
+                                        "trans_prob"])
+    mk = _mk_inputs(rng, 20, adversarial=True)
+    cands = pd.concat([c.assign(url="m"), mk[0]], ignore_index=True)
+    pairs = pd.concat([pairs.assign(url="m"), mk[1].drop(columns="flag")],
+                      ignore_index=True)
+    cands, pairs = _augment(rng, cands, pairs)
+    _check(cands, pairs, CFG, rng)
+    got = _batched(cands, pairs, CFG, None)
+    assert 999 in [e for _, _, _, e in got.loc["m"].steps]
 
 
 # ---------------------------------------------------------------------------
