@@ -23,8 +23,14 @@ Layout:
   functions/  reusable pyspark Column expression builders
   plans/      lineage / checkpoint-resume helpers
   streaming/  Structured Streaming variants
+  worker_imports.py  Python task start-up fix for Spark workers
 """
 
 __version__ = "0.1.0"
 
 from .config import MatchConfig  # noqa: F401
+from .worker_imports import install_on_worker
+
+# every engine UDF unpickles a function of this package, so a worker
+# installs this from its first engine task on
+install_on_worker()
