@@ -410,15 +410,17 @@ def q_match_grid_bignet(spark, sf):
 
 
 def q_match_grid_sharded(spark, sf):
-    """Region-sharded one-pass matcher gate (operators/sharded.py): the
-    broadcast-per-region plan for networks past the global broadcast cap,
-    hash-gated against the same full DuckDB twin — the sharded kernel's
-    guards, regional payload build, and fallback routing must reproduce
-    the flagship results exactly."""
-    from st_mapmatching_spark.operators.sharded import match_pages_sharded
+    """The points-route gate: the same pages as match_grid, extracted
+    and simplified in one Arrow stage (extract_simplify), then matched
+    by match_points (one url shuffle, then the one-pass kernel
+    per url-clustered batch). Every rendered page has a GEO line, so the
+    points carry every url and the result has one row per url, hash-gated
+    against match_grid's full DuckDB twin. The gate's name predates this
+    subject: it gated the region-sharded plan, since deleted."""
+    from st_mapmatching_spark.operators.candidates import extract_simplify
+    from st_mapmatching_spark.operators.matching import match_points
     pages = _render_pages(_pts(spark, sf))
-    m = match_pages_sharded(spark, pages, _net(), CFG,
-                            region_m=4000.0, cover_pad=4000.0)
+    m = match_points(spark, extract_simplify(pages, CFG), _net(), CFG)
     return m.select("url", "status",
                     F.concat_ws(",", F.col("epath").cast("array<string>")).alias("epath_s"),
                     F.round("step_0", 6).alias("step_0_r"),

@@ -56,8 +56,8 @@ class MatchConfig:
 
     # plan switch: only the sign is read. <= 0 pins the relational plan
     # (distributed sp table, sp equi-join + post-Viterbi epath attach,
-    # zero driver-side collection); > 0 lets the kernel plans search
-    # their shortest paths in-kernel (operators/matching.choose_plan)
+    # zero driver-side collection); > 0 picks the onepass plan, which
+    # searches its shortest paths in-kernel (operators/matching.choose_plan)
     sp_broadcast_max_rows: int = 2_000_000
 
     # run the match pipeline on xxhash64(url) longs instead of the url

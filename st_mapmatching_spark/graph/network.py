@@ -59,7 +59,7 @@ class Network:
             self.bbox_xy = (float(xs.min()), float(ys.min()),
                             float(xs.max()), float(ys.max()))
         else:
-            # empty subnetwork (region sharding over an off-network tile)
+            # a network with no edges: an empty (inverted) bbox
             self.bbox_xy = (math.inf, math.inf, -math.inf, -math.inf)
 
     def with_reverse_ways(self, way_ids) -> tuple["Network", list[int]]:
@@ -111,34 +111,6 @@ class Network:
             bc = spark.sparkContext.broadcast(builder())
             self._bc_cache[key] = bc
         return bc
-
-    def subnetwork(self, x0: float, y0: float, x1: float, y1: float) -> "Network":
-        """New Network of the edges whose metric bbox intersects the box —
-        the region-sharding primitive (operators/sharded.py). Global eids
-        are preserved, so epaths from a subnetwork are valid against the
-        full network. Vectorized over the flat vertex arrays."""
-        coords = list(self.edge_coords.values())
-        eid_arr = np.fromiter(self.edge_coords.keys(), np.int64, len(coords))
-        cnts = np.fromiter((len(c) for c in coords), np.int64, len(coords))
-        allc = np.concatenate(coords) if coords else np.zeros((0, 2))
-        voff = np.concatenate([[0], np.cumsum(cnts)])
-        # per-edge bbox via per-vertex edge ids (maximum.reduceat needs
-        # contiguous runs, which voff gives)
-        exmin = np.minimum.reduceat(allc[:, 0], voff[:-1]) if len(coords) else allc[:, 0]
-        exmax = np.maximum.reduceat(allc[:, 0], voff[:-1]) if len(coords) else allc[:, 0]
-        eymin = np.minimum.reduceat(allc[:, 1], voff[:-1]) if len(coords) else allc[:, 1]
-        eymax = np.maximum.reduceat(allc[:, 1], voff[:-1]) if len(coords) else allc[:, 1]
-        hit = (exmax >= x0) & (exmin <= x1) & (eymax >= y0) & (eymin <= y1)
-        keep_eids = set(eid_arr[hit].tolist())
-        mask = self.edges.eid.isin(keep_eids)
-        sub_edges = self.edges.loc[mask, ["eid", "src", "dst", "way_id",
-                                          "dir", "speed"]].copy()
-        sub_edges["geom"] = [self.edge_coords[int(e)] for e in sub_edges.eid]
-        nids = set(sub_edges.src.astype(int)) | set(sub_edges.dst.astype(int))
-        sub_nodes = self.nodes[self.nodes.nid.isin(nids)].copy()
-        return Network(sub_edges.reset_index(drop=True),
-                       sub_nodes.reset_index(drop=True),
-                       self.cfg, geom_metric=True)
 
     def node_xy_arrays(self):
         """(nids_sorted, xy) node coordinates taken from EDGE geometry

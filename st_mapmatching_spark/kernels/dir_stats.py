@@ -162,7 +162,7 @@ class EdgeDirStats:
         gathers from (Network.padded_geoms uses the same order)."""
         # eid_index is position-in-sorted-order, so the dense index is a
         # binary search (a per-row dict-lookup listcomp here was 12% of
-        # the sharded matcher's kernel profile)
+        # a one-pass kernel profile)
         if not hasattr(self, "_eids_sorted"):
             self._eids_sorted = np.array(sorted(self.eid_index), dtype=np.int64)
         return np.searchsorted(self._eids_sorted, np.asarray(eid, dtype=np.int64))

@@ -1,17 +1,15 @@
 """The map-matching pipeline: candidates -> transition pairs + flags ->
 shortest-path attach -> scoring -> per-trajectory beam Viterbi -> stitch.
 
-choose_plan picks one of two plans for match_pages and match_points
-(a third, the region-sharded plan, is match_pages_sharded in
-sharded.py):
+choose_plan picks one of two plans for match_pages and match_points:
   onepass   : the whole pipeline in numpy inside one Arrow stage, per
               trajectory batch (_probe_match -> _match_frame): over pages
               in match_pages_onepass, over url-clustered points in
               match_points
   relational: candidate_join, then the relational tail below
 
-The kernel plans (onepass, sharded) take their shortest paths from one
-source, a DemandSpPayload: each batch's (o, d) pairs are searched on
+The onepass plan takes its shortest paths from one source, a
+DemandSpPayload: each batch's (o, d) pairs are searched on
 the broadcast search state the first time they are asked for and
 memoized per worker. No sp table is built before the match.
 
@@ -485,7 +483,7 @@ def _csr_paths(eps: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 class DemandSpPayload:
     """The kernel's shortest paths, (o, d) lookups and CSR paths searched
     on demand: the first time a pair is asked for, it is searched by
-    bounded Dijkstra on ``exp`` (Network.search_state: adjacency, edge
+    bounded Dijkstra on ``state`` (Network.search_state: adjacency, edge
     speed, edge dist, edge dir totals) — one shortest_paths_to_targets
     call per distinct origin, toward that origin's new targets — and its
     row is memoized on this object. Held in a broadcast value, the memo lives
@@ -500,8 +498,8 @@ class DemandSpPayload:
 
     _COLS = ("cost", "path_speed", "pcx", "pcy", "pw", "pn")
 
-    def __init__(self, exp: tuple, max_dist: float):
-        self.exp, self.max_dist = exp, max_dist
+    def __init__(self, state: tuple, max_dist: float):
+        self.state, self.max_dist = state, max_dist
         self.o = self.d = self.pn = self.ep_flat = np.empty(0, np.int64)
         self.cost = self.path_speed = self.pcx = self.pcy = self.pw = \
             np.empty(0, np.float64)
@@ -525,7 +523,7 @@ class DemandSpPayload:
     def _search(self, o_node: np.ndarray, d_node: np.ndarray):
         od = np.unique(np.stack([o_node, d_node], axis=1), axis=0)
         heads = np.flatnonzero(np.diff(od[:, 0], prepend=od[0, 0] - 1))
-        adj, espeed, edist, etot = self.exp
+        adj, espeed, edist, etot = self.state
         rows = []
         for lo, hi in zip(heads, np.append(heads[1:], len(od))):
             rows.extend(shortest_paths_to_targets(
@@ -575,8 +573,8 @@ def _match_frame(c: dict, urls, geom, stats, spd,
     carried rather than projected again. ``geom``/``stats`` are the
     broadcast network tuples ((eids_sorted, mat, src, dst, dist, speed) /
     (dir_stats, (node ids, node xy))); ``spd`` the DemandSpPayload.
-    Every kernel plan reaches it through _probe_match, so the plans
-    cannot drift."""
+    Both kernel routes (match_pages_onepass, match_points) reach it
+    through _probe_match, so they cannot drift."""
     from ..kernels.geodesy import bearing_deg
 
     dist_eps, ratio_eps = cfg.flag_dist_eps, cfg.flag_ratio_eps
@@ -829,8 +827,7 @@ def _probe_match(u, pid, x, y, cells, geom, stats, spd,
     before anything is expanded; a url with more probe rows than that is
     a chunk of its own. ``cells`` is the (cell, eid)-sorted index as two
     arrays; ``geom``, ``stats`` and ``spd`` are _match_frame's. Shared by
-    every kernel plan: match_pages_onepass, match_points and the sharded
-    matcher.
+    both kernel routes: match_pages_onepass and match_points.
 
     Returns the matched frames and the set of urls that had at least one
     in-radius candidate; the caller emits status-3 rows for the rest."""
@@ -937,7 +934,7 @@ class Plan(NamedTuple):
 
 def choose_plan(net: Network, cfg: MatchConfig) -> Plan:
     """The one place the matcher's plan is chosen; logged at INFO. It
-    reads the config, nothing of the network: every kernel plan searches
+    reads the config, nothing of the network: the onepass plan searches
     its shortest paths on demand.
 
     * ``relational`` — cfg.sp_broadcast_max_rows <= 0 pins the relational
@@ -945,10 +942,7 @@ def choose_plan(net: Network, cfg: MatchConfig) -> Plan:
       collected to the driver.
     * ``onepass`` — otherwise: the whole matcher is one Arrow stage per
       trajectory batch (match_pages_onepass over pages, match_points over
-      url-clustered points).
-
-    The region-sharded plan is called explicitly (match_pages_sharded);
-    its guard fallback comes back through match_pages."""
+      url-clustered points)."""
     if cfg.sp_broadcast_max_rows <= 0:
         plan = Plan("relational",
                     "sp_broadcast_max_rows <= 0 pins the relational sp join")

@@ -145,9 +145,10 @@ def replicate_points(points: DataFrame, mult: int) -> DataFrame:
 # the same metric grid / boustrophedon construction generalized to g nodes
 # per side, fully numpy-vectorized (a 350x350 grid is 122,500 nodes /
 # 488,600 directed edges — a Python per-edge loop would dominate setup).
-# No DuckDB twin is needed: correctness of every matcher plan is
-# hash-gated on the 9x9 oracle grid (match_grid, match_grid_bignet,
-# match_grid_sharded); this input only measures throughput and scaling.
+# No DuckDB twin is needed: correctness of every matcher route is
+# hash-gated on the 9x9 oracle grid (match_grid: the onepass plan,
+# match_grid_bignet: the relational plan, match_grid_sharded:
+# match_points); this input only measures throughput and scaling.
 # ---------------------------------------------------------------------------
 
 def big_grid_edges_nodes(g: int, s: float = S):
@@ -201,9 +202,9 @@ def derive_points_snake(spark: SparkSession, sf_dir: str, g: int,
     derive_points (which is this with g=9 plus the shared oracle
     constants), except route-end handling: instead of wrapping modulo the
     route (a whole-grid teleport that makes the trajectory's bbox the
-    entire network — an artificial guard-violation for the region-sharded
-    bench), trajectories PING-PONG: reflect at the route ends and walk
-    back. Continuous, road-following, bbox bounded by the walk length."""
+    entire network), trajectories PING-PONG: reflect at the route ends
+    and walk back. Continuous, road-following, bbox bounded by the walk
+    length."""
     x0 = -(g - 1) * s / 2.0
     row_len = (g - 1) * s
     block = row_len + s

@@ -150,42 +150,19 @@ def stream_sessionize(points: DataFrame, gap_minutes: int = 10,
 
 
 def stream_match_batches(spark: SparkSession, pages: DataFrame, net, cfg: MatchConfig,
-                         sink_fn, plan: str = "batch",
-                         sharded_kwargs: dict | None = None):
-    """foreachBatch bridge: run the batch matcher on each micro-batch and
-    hand the matched DataFrame to sink_fn(df, epoch_id).
-
-    plan="sharded" routes every micro-batch through the region-sharded
-    one-pass matcher (operators/sharded.py) — the planet-network stream
-    plan (r6 verdict item 5). Regional payloads are memoized ON the
-    network keyed by the tiling, and the memo is INCREMENTAL: the first
-    epoch builds the payloads its regions need, later epochs reuse them
-    and build only newly-touched regions — a steady-state stream stops
-    rebuilding payloads per epoch entirely. ``sharded_kwargs`` passes
-    region_m/cover_pad overrides; omitted values auto-derive from the
-    FIRST micro-batch's sample (then stay pinned via the memo key, so
-    every epoch shares one tiling)."""
+                         sink_fn):
+    """foreachBatch bridge: run match_pages on each micro-batch and hand
+    the matched DataFrame to sink_fn(df, epoch_id)."""
     from ..operators.matching import match_pages
-    from ..operators.sharded import match_pages_sharded
-
-    state = dict(sharded_kwargs or {})
 
     def per_batch(batch_df: DataFrame, epoch_id: int):
         if batch_df.isEmpty():
             return
-        if plan == "sharded":
-            if not {"region_m", "cover_pad"} <= state.keys():
-                from ..operators.sharded import derive_shard_params
-                auto = derive_shard_params(spark, batch_df, net, cfg)
-                for k, v in auto.items():
-                    state.setdefault(k, v)
-            matched = match_pages_sharded(spark, batch_df, net, cfg, **state)
-        else:
-            matched = match_pages(spark, batch_df, net, cfg)
+        matched = match_pages(spark, batch_df, net, cfg)
         try:
             sink_fn(matched, epoch_id)
         finally:
-            # matchers return a persist()ed frame; in a long-running
+            # match_pages returns a persist()ed frame; in a long-running
             # stream each epoch would otherwise pin a new cached result,
             # growing executor storage memory without bound
             matched.unpersist()
