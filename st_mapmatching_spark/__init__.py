@@ -8,8 +8,10 @@ Spark-first:
   shortest-path attach, aggregations) are DataFrame/SQL plans that
   Catalyst optimizes;
 * geometry kernels are vectorized numpy shared between the engine
-  (Arrow-batched pandas UDFs) and a pure-pandas oracle, so numeric
-  parity holds by construction;
+  (Arrow-batched UDFs) and a pure-pandas oracle, so numeric parity holds
+  by construction; the one-pass matcher's mapInArrow stage never loads
+  pandas (modules on its import path import pandas only inside the
+  functions that use it);
 * the only genuinely sequential state (per-trajectory beam Viterbi)
   runs in `applyInPandas` keyed by trajectory id.
 
@@ -17,7 +19,8 @@ Layout:
   kernels/    pure numpy geometry + HMM math (no Spark imports)
   graph/      road-network container + bounded Dijkstra shortest paths
   oracle/     single-trajectory pure-pandas reference matcher
-  sources/    deterministic fixture generators + text coordinate extractor
+  sources/    deterministic fixture generators + the GEO-line coordinate
+              extractor (pyarrow.compute, with a pandas wrapper)
   operators/  Spark DataFrame operators (candidates join, matching,
               tiling, dedup, text analysis, similarity search)
   functions/  reusable pyspark Column expression builders

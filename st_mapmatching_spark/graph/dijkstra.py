@@ -77,36 +77,38 @@ def _epath(prev: dict, node: int) -> list[int]:
     return path[::-1]
 
 
-def shortest_paths_to_targets(adj: dict, origin: int, targets, max_dist: float,
-                              edge_speed: dict | None = None,
-                              edge_dist: dict | None = None,
-                              edge_dir_totals: dict | None = None) -> list[dict]:
-    """Shortest paths from one origin to many targets (the demand-driven
-    sp-table row generator). Each row mirrors the reference search result
-    (/root/reference/mapmatching/graph/geograph.py:50-70):
-    cost, epath (list[int] | None), path_speed (dist-weighted mean edge
-    speed along the path; 0.0 when the path is empty/degenerate).
+def path_columns(adj: dict, origin: int, targets, max_dist: float,
+                 edge_speed: dict | None = None,
+                 edge_dist: dict | None = None,
+                 edge_dir_totals: dict | None = None,
+                 cols: dict | None = None) -> dict:
+    """Shortest paths from one origin to many targets, appended column by
+    column: one entry per target to each of ``cols``' lists "cost",
+    "path_speed", "pcx", "pcy", "pw", "pn" and "ep_len" (the path's
+    length), the path's eids to ``cols["ep_flat"]``. Returns ``cols``
+    (new lists when None). shortest_paths_to_targets gives the same
+    values as one dict per target.
 
-    With ``edge_dir_totals`` (eid -> (cx, cy, w, n), see kernels.dir_stats)
-    each row also carries the path's additive direction statistics so the
-    scoring stage stays fully vectorized."""
+    Each target mirrors the reference search result (the reference's
+    mapmatching/graph/geograph.py:50-70): cost (inf
+    beyond ``max_dist`` or unreachable, 0 for the origin itself), the
+    edge path (empty for those three), path_speed (dist-weighted mean
+    edge speed along the path; 0.0 when the path is empty/degenerate).
+    With ``edge_dir_totals`` (eid -> (cx, cy, w, n), see
+    kernels.dir_stats) the path's additive direction statistics pcx,
+    pcy, pw, pn too, so the scoring stage stays fully vectorized."""
+    if cols is None:
+        cols = {c: [] for c in ("cost", "path_speed", "pcx", "pcy", "pw",
+                                "pn", "ep_len", "ep_flat")}
     targets = [int(t) for t in targets]
     cost, prev, settled = bounded_dijkstra(adj, int(origin), max_dist, set(targets))
-    rows = []
     for t in targets:
-        row = {"o_node": origin, "d_node": t, "cost": math.inf,
-               "epath": None, "path_speed": 0.0,
-               "pcx": 0.0, "pcy": 0.0, "pw": 0.0, "pn": 0}
+        c, ep, speed, dirs = math.inf, [], 0.0, (0.0, 0.0, 0.0, 0)
         if t == origin:
-            row["cost"] = 0.0
-            rows.append(row)
-            continue
-        if t not in settled or t not in cost:
-            rows.append(row)
-            continue
-        ep = _epath(prev, t)
-        row["cost"] = float(cost[t])
-        row["epath"] = ep if ep else None
+            c = 0.0
+        elif t in settled and t in cost:
+            ep = _epath(prev, t)
+            c = float(cost[t])
         if edge_speed is not None and ep:
             # sequential sums: numpy's pairwise summation can differ in
             # the LAST ULP from this loop for paths >8 edges, a
@@ -120,16 +122,38 @@ def shortest_paths_to_targets(adj: dict, origin: int, targets, max_dist: float,
                 w = edge_dist[e]
                 wsum += w
                 swsum += edge_speed[e] * w
-            row["path_speed"] = swsum / wsum if wsum > 0 else 0.0
+            speed = swsum / wsum if wsum > 0 else 0.0
         if edge_dir_totals is not None and ep:
             cx = cy = w_ = 0.0
             n = 0
             for e in ep:
                 tcx, tcy, tw, tn = edge_dir_totals[e]
                 cx += tcx; cy += tcy; w_ += tw; n += tn
-            row.update(pcx=cx, pcy=cy, pw=w_, pn=n)
-        rows.append(row)
-    return rows
+            dirs = (cx, cy, w_, n)
+        for k, v in zip(("cost", "path_speed", "pcx", "pcy", "pw", "pn",
+                         "ep_len"), (c, speed, *dirs, len(ep))):
+            cols[k].append(v)
+        cols["ep_flat"].extend(ep)
+    return cols
+
+
+def shortest_paths_to_targets(adj: dict, origin: int, targets, max_dist: float,
+                              edge_speed: dict | None = None,
+                              edge_dist: dict | None = None,
+                              edge_dir_totals: dict | None = None) -> list[dict]:
+    """path_columns' targets as one row per target (the relational sp
+    table's rows): o_node, d_node, cost, epath (list[int], None when
+    empty), path_speed, pcx, pcy, pw, pn."""
+    targets = [int(t) for t in targets]
+    cols = path_columns(adj, origin, targets, max_dist, edge_speed,
+                        edge_dist, edge_dir_totals)
+    ends = np.cumsum(cols["ep_len"], dtype=np.int64)
+    return [{"o_node": origin, "d_node": t, "cost": cols["cost"][i],
+             "epath": cols["ep_flat"][e - n:e] or None,
+             **{k: cols[k][i] for k in ("path_speed", "pcx", "pcy", "pw",
+                                        "pn")}}
+            for i, (t, n, e) in enumerate(zip(targets, cols["ep_len"],
+                                              ends.tolist()))]
 
 
 def build_adjacency_reverse(edges) -> dict:

@@ -13,7 +13,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 
 from ..config import MatchConfig
 from ..kernels.cells import encode_cell, polyline_cover_cells
@@ -85,6 +84,7 @@ class Network:
             next_eid += 1
         if not add:
             return self, []
+        import pandas as pd
         base = e[["eid", "src", "dst", "way_id", "dir", "speed"]].copy()
         base["geom"] = list(e.geom_xy)
         new = pd.DataFrame(add, columns=["eid", "src", "dst", "way_id",
@@ -193,6 +193,7 @@ class Network:
         if key in self._cell_index_cache:
             return self._cell_index_cache[key]
 
+        import pandas as pd
         cs = self.cfg.cell_size
         coords = list(self.edge_coords.values())
         eid_arr = np.fromiter(self.edge_coords.keys(), np.int64, len(coords))

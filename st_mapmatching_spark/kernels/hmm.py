@@ -1,8 +1,10 @@
 """ST-Matching HMM math: transition-pair construction, flag identification,
 probability scoring, beam Viterbi, path stitching.
 
-Pure pandas/numpy — shared verbatim by the oracle and by the engine's
-`applyInPandas` / `mapInPandas` stages. Semantics re-derived from:
+Pure numpy — shared verbatim by the oracle and by the engine's Arrow
+stages. pandas is imported only by the per-trajectory functions that take
+or return frames (the oracle's and the classic decode's), so the batched
+kernels run in a worker that never loads it. Semantics re-derived from:
 
 * pair construction + flags:  /root/reference/mapmatching/match/candidatesGraph.py:58-166
 * dist/temporal/trans probs:  /root/reference/mapmatching/match/spatialAnalysis.py:10-151
@@ -22,8 +24,9 @@ Engine-vs-reference divergences (all deliberate, all shared with the oracle):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
-import pandas as pd
 
 from ..config import MatchConfig
 from .geodesy import bearing_deg, polyline_bearing_cos_dist
@@ -83,6 +86,7 @@ def layer_params(layer_points: pd.DataFrame) -> pd.DataFrame:
     # is enough to flip knife-edge Viterbi ties between twin edges
     d = np.sqrt(dx * dx + dy * dy)
     move_dir = bearing_deg(x[:-1], y[:-1], x[1:], y[1:])
+    import pandas as pd
     return pd.DataFrame({
         "pid_0": pts.pid.to_numpy()[:-1],
         "pid_1": pts.pid.to_numpy()[1:],
@@ -421,6 +425,7 @@ def viterbi_beam(cands: pd.DataFrame, gt: pd.DataFrame, cfg: MatchConfig = Match
         state = prev[1]
     epath = epath[::-1]
 
+    import pandas as pd
     if not end_probs:
         return 0.0, pd.DataFrame({"pid": [], "eid": []})
 
@@ -456,6 +461,7 @@ def viterbi_classic(cands: pd.DataFrame, gt: pd.DataFrame,
 
     Returns (end_prob, rlist) with rlist covering every candidate layer.
     """
+    import pandas as pd
     c_pid = cands.pid.to_numpy()
     c_eid = cands.eid.to_numpy()
     layer_ids = np.unique(c_pid)
@@ -902,6 +908,37 @@ def split_rows(flat: np.ndarray, off: np.ndarray) -> np.ndarray:
                        count=len(off) - 1)
 
 
+class ListCol(NamedTuple):
+    """A list column as CSR: row i is flat[off[i]:off[i + 1]]. An empty
+    row is NULL; no matched row carries an empty path."""
+    flat: np.ndarray
+    off: np.ndarray
+
+    @classmethod
+    def of_groups(cls, g: np.ndarray, items: np.ndarray, n: int) -> "ListCol":
+        """``n`` rows; row i holds the ``items`` whose group ``g`` is i, in
+        their order, as int64."""
+        order = np.argsort(g, kind="stable")
+        cnt = np.bincount(g, minlength=n)
+        return cls(items[order].astype(np.int64),
+                   np.concatenate([[0], np.cumsum(cnt)]))
+
+    @classmethod
+    def concat(cls, cols) -> "ListCol":
+        """The rows of ``cols`` one after another."""
+        ends = np.cumsum([0] + [c.off[-1] for c in cols[:-1]])
+        return cls(np.concatenate([c.flat for c in cols]),
+                   np.concatenate([cols[0].off[:1]] + [
+                       c.off[1:] + e for c, e in zip(cols, ends)]))
+
+    def rows(self) -> np.ndarray:
+        """Object array of the rows, None for a NULL one (the pandas
+        edge's epath column)."""
+        out = split_rows(self.flat, self.off)
+        out[np.diff(self.off) == 0] = None
+        return out
+
+
 def segment_reduce(off: np.ndarray, *terms) -> list[np.ndarray]:
     """Per-segment ``fn(v[off[i]:off[i + 1]])`` for each (fn, v) term
     (fn np.sum or np.prod; segments non-empty). The segments of one
@@ -934,8 +971,8 @@ def stitch_batch(gid: np.ndarray, w_off: np.ndarray, w_pid: np.ndarray,
     where there is none. ``paths=None`` is stitch_path's collect_steps
     mode: the ``steps`` and ``last_eid`` columns instead of epaths.
 
-    Returns one array per output column (status, epath, METRIC_COLS),
-    epath an object array of int64 arrays (None where stitch_path gives
+    Returns one array per output column (status, METRIC_COLS) and the
+    epath as a ListCol of int64 eids (NULL where stitch_path gives
     None)."""
     m = len(gid)
     n_w = np.diff(w_off)
@@ -1043,10 +1080,6 @@ def stitch_batch(gid: np.ndarray, w_off: np.ndarray, w_pid: np.ndarray,
         ep_g = np.concatenate([single, seq_g])
         ep_e = np.concatenate([w_eid[w_off[single]], seq])
 
-    # one split of every group's epath items; no items -> None
-    order = np.argsort(ep_g, kind="stable")
-    cnt = np.bincount(ep_g, minlength=m)
-    out["epath"] = split_rows(ep_e[order].astype(np.int64),
-                              np.concatenate([[0], np.cumsum(cnt)]))
-    out["epath"][cnt == 0] = None
+    # every group's epath items as one list column; no items -> NULL
+    out["epath"] = ListCol.of_groups(ep_g, ep_e, m)
     return out

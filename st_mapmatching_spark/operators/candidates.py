@@ -30,7 +30,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -38,9 +37,10 @@ from pyspark.sql.window import Window
 from ..config import MatchConfig
 from ..functions.geo_cols import cell_col, xy_cols
 from ..graph.network import Network
+from ..kernels.arrow_np import arrow_array
 from ..kernels.linear_ref import project_core
 from ..kernels.simplify import simplify_points_batch
-from ..sources.extract import extract_points
+from ..sources.extract import extract_points, geo_points, url_codes
 
 TRAJ_SCHEMA = "url string, pid_raw long, x double, y double, t_epoch long"
 # in-band dilation marker carried by the cell index (see network_frames)
@@ -79,6 +79,7 @@ def url_batches(batches):
     This is the streamed group-by of every per-trajectory mapInPandas
     stage (simplify_trajs, viterbi_match, match_points): many trajectories
     per Python call instead of one call and frame per url."""
+    import pandas as pd
     buf = None
     for pdf in batches:
         if buf is not None and len(buf):
@@ -126,7 +127,8 @@ def simplify_trajs(trajs: DataFrame, cfg: MatchConfig) -> DataFrame:
     tolerance = cfg.tolerance
     do_simplify = cfg.simplify
 
-    def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _frame(pdf):
+        import pandas as pd
         xy = pdf[["xm", "ym"]].to_numpy()
         keep, u, pid = simplify_runs(pdf.url.to_numpy(), xy, tolerance,
                                      do_simplify)
@@ -160,22 +162,21 @@ def simplify_runs(u: np.ndarray, xy: np.ndarray, tolerance: float,
     return keep, np.repeat(u[starts], counts), pid
 
 
-def extract_arrays(pdf: pd.DataFrame, lon0: float, lat0: float,
+def extract_arrays(code: np.ndarray, text, lon0: float, lat0: float,
                    tolerance: float, do_simplify: bool):
     """In-kernel core of extract_simplify, shared with the one-pass
-    matcher: pages batch -> (url, pid, x, y) numpy arrays (url-major,
-    pid-ascending; x/y metric; pid re-densified after Douglas-Peucker).
+    matcher: one pages batch -> (u, pid, x, y) numpy arrays, url-major
+    and pid-ascending, x/y metric, pid re-densified after Douglas-Peucker.
+    ``text`` is the batch's Arrow text column and ``code`` its pages' url
+    codes (url_codes' first array); ``u`` is each point's url code, so
+    the url strings never enter the kernel. Loads no pandas (geo_points).
     Returns None when the batch yields no points at all."""
     from ..kernels.projection import project_coords
-    pts = extract_points(pdf)
-    if len(pts) == 0:
+    page, _, lon, lat, _ = geo_points(code, text)
+    if len(page) == 0:
         return None
-    # points arrive grouped (extract sorts by url): slice per page,
-    # assemble one frame at the end (per-group DataFrames are the
-    # measured overhead at millions of pages)
-    xy_all = project_coords(pts[["x", "y"]].to_numpy(), lon0, lat0)
-    keep, u, pid = simplify_runs(pts.url.to_numpy(), xy_all, tolerance,
-                                 do_simplify)
+    xy_all = project_coords(np.stack([lon, lat], axis=1), lon0, lat0)
+    keep, u, pid = simplify_runs(code[page], xy_all, tolerance, do_simplify)
     return u, pid, xy_all[keep, 0], xy_all[keep, 1]
 
 
@@ -183,19 +184,28 @@ def extract_simplify(pages: DataFrame, cfg: MatchConfig) -> DataFrame:
     """pages -> simplified metric points in ONE Arrow stage with NO shuffle:
     a page row carries its whole trajectory (url is the table's primary
     key), so extraction, projection, and per-trajectory Douglas-Peucker all
-    happen inside the same batch. Output: (url, pid, x, y) metric."""
+    happen inside the same batch. Output: (url, pid, x, y) metric, the
+    url column a ``take`` of the input's (mapInArrow; no pandas)."""
     lon0, lat0, tolerance = cfg.lon0, cfg.lat0, cfg.tolerance
     do_simplify = cfg.simplify
 
     def op(batches):
-        for pdf in batches:
-            ex = extract_arrays(pdf, lon0, lat0, tolerance, do_simplify)
+        import pyarrow as pa
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            code, page = url_codes(b.column(0))
+            ex = extract_arrays(code, b.column(1), lon0, lat0, tolerance,
+                                do_simplify)
             if ex is None:
                 continue
             u, pid, x, y = ex
-            yield pd.DataFrame({"url": u, "pid": pid, "x": x, "y": y})
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(arrow_array(page[u])),
+                 arrow_array(pid.astype(np.int32)), arrow_array(x),
+                 arrow_array(y)], ["url", "pid", "x", "y"])
 
-    return pages.select("url", "text").mapInPandas(op, schema=POINTS_SCHEMA)
+    return pages.select("url", "text").mapInArrow(op, schema=POINTS_SCHEMA)
 
 
 REHYDRATE_SCHEMA = ("url string, pid int, x double, y double, eid long, "

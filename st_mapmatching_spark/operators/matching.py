@@ -44,17 +44,18 @@ import logging
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import MatchConfig
 from ..functions.geo_cols import bearing_col
-from ..graph.dijkstra import shortest_paths_to_targets
+from ..graph.dijkstra import path_columns
 from ..graph.network import Network
 from ..kernels import hmm
+from ..kernels.arrow_np import arrow_array, list_array
 from ..kernels.keys import key_find, key_index
+from ..sources.extract import url_codes
 from .candidates import (candidate_join, extract_arrays, extract_simplify,
                          network_frames, rehydrate_cands, url_batches,
                          url_typed)
@@ -84,24 +85,48 @@ SCORED_COLS = ["url", "pid_0", "pid_1", "eid_0", "eid_1", "flag", "observ_prob",
                "o_node", "d_node"]
 
 
-def no_match_rows(urls) -> list[dict]:
-    """One status-3 row (MATCHED_SCHEMA) per url: no candidates, no path,
-    NaN metrics. The pandas matchers start every trajectory's row from it
-    and overwrite what the decode finds."""
-    return [{"url": u, "status": hmm.STATUS_NO_CANDIDATES, "epath": None,
-             **dict.fromkeys(METRIC_COLS, np.nan)} for u in urls]
+def no_match_rows(urls) -> dict:
+    """One status-3 row (MATCHED_SCHEMA) per url, as columns: no
+    candidates, NULL path, NaN metrics."""
+    n = len(urls)
+    return {"url": urls,
+            "status": np.full(n, hmm.STATUS_NO_CANDIDATES, np.int32),
+            "epath": hmm.ListCol(np.empty(0, np.int64),
+                                 np.zeros(n + 1, np.int64)),
+            **{c: np.full(n, np.nan) for c in METRIC_COLS}}
 
 
-def with_no_match_rows(frames: list[pd.DataFrame], urls,
-                       have) -> pd.DataFrame:
-    """A kernel batch's output: the matched ``frames`` plus one status-3
-    row (no_match_rows) per url of ``urls`` not in ``have``, the urls
+def with_no_match_rows(parts: list[dict], urls: np.ndarray,
+                       have: np.ndarray) -> dict:
+    """A kernel batch's output columns: the matched ``parts`` (one
+    _decode_stitch result per chunk) followed by one status-3 row
+    (no_match_rows) per entry of ``urls`` not in ``have``, the urls
     _probe_match found candidates for."""
-    miss = [u for u in urls if u not in have]
-    if miss:
-        frames = [*frames, pd.DataFrame(no_match_rows(miss))]
-    return pd.concat(frames, ignore_index=True) if len(frames) > 1 \
-        else frames[0]
+    parts = [*parts, no_match_rows(urls[~np.isin(urls, have)])]
+    return {k: hmm.ListCol.concat([p[k] for p in parts]) if k == "epath"
+            else np.concatenate([p[k] for p in parts]) for k in parts[0]}
+
+
+def matched_frame(rows: dict):
+    """The pandas edge: kernel output columns as a DataFrame, epath an
+    object column of int64 arrays (None where NULL)."""
+    import pandas as pd
+    return pd.DataFrame({**rows, "epath": rows["epath"].rows()})
+
+
+def matched_batch(rows: dict, url):
+    """The Arrow edge: MATCHED_SCHEMA rows as a RecordBatch built from the
+    columns' numpy buffers; ``rows["url"]`` holds positions in the Arrow
+    array ``url``. NULL exactly where the pandas edge has it (mapInPandas
+    writes NaN as NULL): a NaN metric, and the epath of a row without a
+    path. Loads no pandas."""
+    import pyarrow as pa
+    return pa.RecordBatch.from_arrays(
+        [url.take(arrow_array(rows["url"])),
+         arrow_array(rows["status"].astype(np.int32)),
+         list_array(*rows["epath"]),
+         *(arrow_array(rows[c], ~np.isnan(rows[c])) for c in METRIC_COLS)],
+        ["url", "status", "epath", *METRIC_COLS])
 
 
 def build_pairs_df(cands: DataFrame, points: DataFrame, cfg: MatchConfig) -> DataFrame:
@@ -292,7 +317,7 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
     both = c_part.select(*order).unionByName(s_part.select(*order))
     src = both.repartition("url").sortWithinPartitions("url", "_tag")
 
-    def _frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _frame(pdf):
         """Split the batch's tagged union into candidate and pair arrays
         in _decode_stitch's order, find each pair's (pid_1, eid_1)
         candidate row, and decode every url of the batch at once."""
@@ -320,8 +345,9 @@ def viterbi_match(cands: DataFrame, scored: DataFrame, cfg: MatchConfig,
                                 pairs[e_col])
             pairs[side] = np.where(hit, corder[pos], -1)
         c_off = np.searchsorted(gid[ci], np.arange(gid[-1] + 2))
-        return _decode_stitch(u[head], c_off, cand, pairs, gid[pi],
-                              cfg).rename(columns={"epath": "epath0"})
+        return matched_frame(_decode_stitch(
+            u[head], c_off, cand, pairs, gid[pi], cfg)).rename(
+                columns={"epath": "epath0"})
 
     def op(batches):
         for pdf in url_batches(batches):
@@ -469,17 +495,6 @@ def sp_demands(cands: DataFrame, edge_attrs: DataFrame,
     return dem_a.unionByName(dem_b)
 
 
-def _csr_paths(eps: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """CSR (flat eids, offsets) of an object array of epaths (None =
-    empty)."""
-    lens = np.fromiter((0 if e is None else len(e) for e in eps),
-                       dtype=np.int64, count=len(eps))
-    flat = np.concatenate([np.empty(0, np.int64)]
-                          + [np.asarray(e, dtype=np.int64)
-                             for e in eps[lens > 0]])
-    return flat, np.concatenate([[0], np.cumsum(lens)])
-
-
 class DemandSpPayload:
     """The kernel's shortest paths, (o, d) lookups and CSR paths searched
     on demand: the first time a pair is asked for, it is searched by
@@ -521,24 +536,24 @@ class DemandSpPayload:
         return self.order[pos]
 
     def _search(self, o_node: np.ndarray, d_node: np.ndarray):
+        """Search the (o, d) pairs and append their rows to the memo,
+        column by column (graph.dijkstra.path_columns)."""
         od = np.unique(np.stack([o_node, d_node], axis=1), axis=0)
         heads = np.flatnonzero(np.diff(od[:, 0], prepend=od[0, 0] - 1))
         adj, espeed, edist, etot = self.state
-        rows = []
+        new = {c: [] for c in (*self._COLS, "ep_len", "ep_flat")}
         for lo, hi in zip(heads, np.append(heads[1:], len(od))):
-            rows.extend(shortest_paths_to_targets(
-                adj, int(od[lo, 0]), od[lo:hi, 1].tolist(), self.max_dist,
-                espeed, edist, etot))
-        new = pd.DataFrame(rows)
+            path_columns(adj, int(od[lo, 0]), od[lo:hi, 1].tolist(),
+                         self.max_dist, espeed, edist, etot, new)
         self.o = np.concatenate([self.o, od[:, 0]])
         self.d = np.concatenate([self.d, od[:, 1]])
         for c in self._COLS:
             old = getattr(self, c)
-            setattr(self, c, np.concatenate([old, new[c].to_numpy(old.dtype)]))
-        flat, off = _csr_paths(new.epath.to_numpy())
-        self.ep_off = np.concatenate([self.ep_off,
-                                      self.ep_off[-1] + off[1:]])
-        self.ep_flat = np.concatenate([self.ep_flat, flat])
+            setattr(self, c, np.concatenate([old, np.array(new[c], old.dtype)]))
+        self.ep_off = np.concatenate([self.ep_off, self.ep_off[-1] + np.cumsum(
+            np.array(new["ep_len"], np.int64))])
+        self.ep_flat = np.concatenate([self.ep_flat,
+                                       np.array(new["ep_flat"], np.int64)])
         self._reindex()
 
     def lookup(self, o_node: np.ndarray, d_node: np.ndarray) -> dict:
@@ -558,7 +573,7 @@ class DemandSpPayload:
 
 
 def _match_frame(c: dict, urls, geom, stats, spd,
-                 cfg: MatchConfig) -> pd.DataFrame:
+                 cfg: MatchConfig) -> dict:
     """Score EVERY trajectory of one chunk of candidates in one set of
     numpy passes (layer params, pair cross-product, flags, sp gather,
     dist/dir probs), then decode and stitch them all through
@@ -574,7 +589,8 @@ def _match_frame(c: dict, urls, geom, stats, spd,
     broadcast network tuples ((eids_sorted, mat, src, dst, dist, speed) /
     (dir_stats, (node ids, node xy))); ``spd`` the DemandSpPayload.
     Both kernel routes (match_pages_onepass, match_points) reach it
-    through _probe_match, so they cannot drift."""
+    through _probe_match, so they cannot drift. Returns _decode_stitch's
+    columns."""
     from ..kernels.geodesy import bearing_deg
 
     dist_eps, ratio_eps = cfg.flag_dist_eps, cfg.flag_ratio_eps
@@ -669,13 +685,15 @@ def _match_frame(c: dict, urls, geom, stats, spd,
 
 
 def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
-                   cfg: MatchConfig, paths=None) -> pd.DataFrame:
+                   cfg: MatchConfig, paths=None) -> dict:
     """The decode tail of _match_frame and viterbi_match: emission,
     Viterbi (lockstep beam, or classic per url) and one batched stitch
     (hmm.stitch_batch) over every url of a batch; one MATCHED_SCHEMA row
-    per url. ``paths`` is the sp payload's CSR path lookup
-    (DemandSpPayload.paths); with None the rows carry MATCHED_PRE_SCHEMA's
-    winning steps (steps, last_eid) instead of expanded paths.
+    per url, as columns: ``urls`` itself, int32 status, the epath as an
+    hmm.ListCol and a float64 array per metric. ``paths`` is the sp
+    payload's CSR path lookup (DemandSpPayload.paths); with None the rows
+    carry MATCHED_PRE_SCHEMA's winning steps (steps, last_eid) instead of
+    expanded paths.
 
     Url g's candidate rows are c_off[g]:c_off[g + 1] of ``cand`` (pid,
     eid, dist_p2c, len0, len1), sorted (url, pid, dist_p2c, eid).
@@ -761,20 +779,21 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
 
     # no candidates: status 3; one candidate layer: the nearest edge
     # (matching.py:170-178); more: the stitch
+    one = np.flatnonzero((n_c > 0) & ~has_pairs)
+    ep = st.pop("epath")
     out = {"url": urls,
-           "status": np.full(ngroups, hmm.STATUS_NO_CANDIDATES, np.int64),
-           "epath": np.full(ngroups, None, dtype=object),
+           "status": np.full(ngroups, hmm.STATUS_NO_CANDIDATES, np.int32),
+           "epath": hmm.ListCol.of_groups(
+               np.concatenate([one, np.repeat(multi, np.diff(ep.off))]),
+               np.concatenate([eid[c_off[one]], ep.flat]), ngroups),
            **{c: np.full(ngroups, np.nan) for c in METRIC_COLS}}
     if paths is None:
         out["steps"] = np.full(ngroups, None, dtype=object)
         out["last_eid"] = np.full(ngroups, np.nan)
-    one = np.flatnonzero((n_c > 0) & ~has_pairs)
     out["status"][one] = hmm.STATUS_ONE_POINT
-    out["epath"][one] = hmm.split_rows(eid[c_off[one]].astype(np.int64),
-                                       np.arange(len(one) + 1))
     for c, v in st.items():
         out[c][multi] = v
-    return pd.DataFrame(out)
+    return out
 
 
 def _kernel_broadcasts(spark: SparkSession, net: Network,
@@ -815,7 +834,7 @@ CHUNK_ROWS = 10_000
 
 
 def _probe_match(u, pid, x, y, cells, geom, stats, spd,
-                 cfg: MatchConfig) -> tuple[list[pd.DataFrame], set]:
+                 cfg: MatchConfig) -> tuple[list[dict], np.ndarray]:
     """Candidates + match for url-major points (extract_arrays' output or
     a slice of it), all in numpy, one url-aligned chunk at a time: cell
     probe of the radius-dilated index (searchsorted twin of
@@ -829,14 +848,17 @@ def _probe_match(u, pid, x, y, cells, geom, stats, spd,
     arrays; ``geom``, ``stats`` and ``spd`` are _match_frame's. Shared by
     both kernel routes: match_pages_onepass and match_points.
 
-    Returns the matched frames and the set of urls that had at least one
-    in-radius candidate; the caller emits status-3 rows for the rest."""
+    ``u`` is each point's url, an integer code at both edges (the url
+    strings never enter the kernel). Returns the matched chunks'
+    columns (_decode_stitch's) and the urls, in input order, that had at
+    least one in-radius candidate; the caller emits status-3 rows for the rest
+    (with_no_match_rows)."""
     from ..kernels.cells import xy_to_cell
     from ..kernels.linear_ref import project_core
     cells_s, cell_eids = cells
     eids_sorted, mat = geom[0], geom[1]
-    # url strings never enter the kernel: points carry a local integer
-    # gid, mapped back to the url once per output chunk
+    # points carry a local integer gid, mapped back to the url once per
+    # output chunk
     new_url = np.concatenate([[True], u[1:] != u[:-1]])
     urls_by_gid = u[new_url]
     pgid = np.cumsum(new_url) - 1
@@ -846,7 +868,7 @@ def _probe_match(u, pid, x, y, cells, geom, stats, spd,
     # each url's first point, and its first probe row, plus the ends
     p_off = np.flatnonzero(np.append(new_url, True))
     r_off = np.concatenate([[0], np.cumsum(cnt)])[p_off]
-    frames, have, a = [], [], 0
+    parts, have, a = [], [], 0
     while a < len(urls_by_gid):
         b = max(int(np.searchsorted(r_off, r_off[a] + CHUNK_ROWS,
                                     side="right")) - 1, a + 1)
@@ -877,10 +899,10 @@ def _probe_match(u, pid, x, y, cells, geom, stats, spd,
         cand = {"gid": pgid[P], "pid": pid[P], "x": x[P], "y": y[P],
                 "eid": E[o], "di": di[o], "dist_p2c": pr["dist"][o],
                 **{k: pr[k][o] for k in ("seg_idx", "ratio", "len0", "len1")}}
-        frames.append(_match_frame(cand, urls_by_gid, geom, stats, spd, cfg))
+        parts.append(_match_frame(cand, urls_by_gid, geom, stats, spd, cfg))
         have.append(cand["gid"])
-    return frames, (set(urls_by_gid[np.unique(np.concatenate(have))])
-                    if have else set())
+    return parts, urls_by_gid[np.unique(np.concatenate(have))] if have \
+        else urls_by_gid[:0]
 
 
 def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
@@ -910,20 +932,39 @@ def match_pages_onepass(spark: SparkSession, pages: DataFrame, net: Network,
     shortest paths are searched in-kernel (DemandSpPayload).
 
     The index is built radius-dilated (pad >= cfg.radius by construction
-    — candidate_join's in-band pad guard is satisfied structurally)."""
+    — candidate_join's in-band pad guard is satisfied structurally).
+
+    The stage is a mapInArrow (match_pages_batch) whose import and call
+    path never loads pandas: the GEO lines are parsed by pyarrow.compute
+    (sources.extract.geo_points), urls are integer codes inside the
+    kernel, and the output batch is built from the kernel's numpy
+    buffers, with NULL wherever the pandas edge has it. A Python worker
+    that runs only this stage never pays pandas' import (~33 MB of RSS
+    on top of numpy and pyarrow.compute, measured import by import)."""
     bcs = _kernel_broadcasts(spark, net, cfg)
-    lon0, lat0, tol, do_simpl = cfg.lon0, cfg.lat0, cfg.tolerance, cfg.simplify
 
     def op(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ex = extract_arrays(pdf, lon0, lat0, tol, do_simpl)
-            frames, have = ([], set()) if ex is None else _probe_match(
-                *ex, *(b.value for b in bcs), cfg)
-            yield with_no_match_rows(frames, pdf.url.to_numpy(), have)
+        for b in batches:
+            if b.num_rows:
+                yield match_pages_batch(b, *(bc.value for bc in bcs), cfg)
 
-    return pages.select("url", "text").mapInPandas(op, schema=MATCHED_SCHEMA)
+    return pages.select("url", "text").mapInArrow(op, schema=MATCHED_SCHEMA)
+
+
+def match_pages_batch(b, cells, geom, stats, spd, cfg: MatchConfig):
+    """match_pages_onepass' work on one pages RecordBatch (url, text):
+    its MATCHED_SCHEMA RecordBatch, one row per page. The kernel state is
+    _kernel_broadcasts' values. Urls are integer codes (url_codes) from
+    extraction to output, where the url column is a ``take`` of the
+    input's."""
+    code, page = url_codes(b.column(0))
+    ex = extract_arrays(code, b.column(1), cfg.lon0, cfg.lat0, cfg.tolerance,
+                        cfg.simplify)
+    parts, have = ([], code[:0]) if ex is None else _probe_match(
+        *ex, cells, geom, stats, spd, cfg)
+    rows = with_no_match_rows(parts, code, have)
+    rows["url"] = page[rows["url"]]
+    return matched_batch(rows, b.column(0))
 
 
 class Plan(NamedTuple):
@@ -999,10 +1040,14 @@ def match_points(spark: SparkSession, points_in: DataFrame, net: Network,
     def op(batches):
         for pdf in url_batches(batches):
             u = pdf.url.to_numpy()
-            frames, have = _probe_match(
-                u, pdf.pid.to_numpy(), pdf.x.to_numpy(), pdf.y.to_numpy(),
+            head = np.concatenate([[True], u[1:] != u[:-1]])
+            code = np.cumsum(head) - 1
+            parts, have = _probe_match(
+                code, pdf.pid.to_numpy(), pdf.x.to_numpy(), pdf.y.to_numpy(),
                 *(b.value for b in bcs), cfg)
-            yield with_no_match_rows(frames, pd.unique(u), have)
+            rows = with_no_match_rows(parts, np.arange(code[-1] + 1), have)
+            rows["url"] = u[head][rows["url"]]
+            yield matched_frame(rows)
 
     src = (points_in.select("url", "pid", "x", "y").repartition("url")
            .sortWithinPartitions("url", "pid"))

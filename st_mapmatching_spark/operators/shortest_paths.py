@@ -17,7 +17,6 @@ origins to their region's partition instead of broadcasting everything.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import MatchConfig
@@ -51,7 +50,8 @@ def shortest_path_table(spark: SparkSession, demands: DataFrame, net: Network,
     n_groups = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")) * 4,
                    32)
 
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_group(pdf):
+        import pandas as pd
         adj, espeed, edist, etot = bc.value
         rows = []
         for o, sub in pdf.groupby("o_node", sort=False):

@@ -135,8 +135,8 @@ def test_index_pad_marker_is_in_band(spark):
 def test_onepass_matcher_plan_is_one_stage(spark, pages, net, cfg):
     """The flagship regime (broadcastable network): the WHOLE matcher must
     be a single narrow Python stage — no Exchange (shuffle), no join, no
-    window, exactly one MapInPandas — so pages -> matched is one
-    embarrassingly parallel map at any executor count."""
+    window, exactly one MapInArrow and no MapInPandas — so pages ->
+    matched is one embarrassingly parallel map at any executor count."""
     from st_mapmatching_spark.operators.matching import match_pages_onepass
     pages_df = spark.createDataFrame(pages[["url", "text"]])
     df = match_pages_onepass(spark, pages_df, net, cfg)
@@ -145,4 +145,5 @@ def test_onepass_matcher_plan_is_one_stage(spark, pages, net, cfg):
     assert "Join" not in plan, plan
     assert "Window" not in plan, plan
     # formatted explain lists each node twice (tree + detail section)
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan

@@ -9,6 +9,7 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark import cloudpickle
 
@@ -18,6 +19,7 @@ from st_mapmatching_spark.kernels.projection import xy_to_lonlat
 from st_mapmatching_spark.operators import matching
 from st_mapmatching_spark.operators.candidates import (extract_arrays,
                                                        extract_simplify)
+from st_mapmatching_spark.sources.extract import url_codes
 
 NEAR_MISS = "https://example.com/traj/3_near_miss"
 
@@ -43,6 +45,18 @@ def chunk_pages(pages, net, cfg) -> pd.DataFrame:
     at = int(np.flatnonzero(p.url == "https://example.com/traj/3")[0]) + 1
     return pd.concat([p.iloc[:at], pd.DataFrame([_near_miss_page(net, cfg)]),
                       p.iloc[at:]], ignore_index=True)
+
+
+def _extract(pages: pd.DataFrame, cfg):
+    """extract_arrays over a pandas pages frame, each point's url code
+    mapped back to its url string."""
+    url = pa.array(pages.url.tolist(), pa.string())
+    code, page = url_codes(url)
+    u, pid, x, y = extract_arrays(code, pa.array(pages.text.tolist(),
+                                                 pa.string()),
+                                  cfg.lon0, cfg.lat0, cfg.tolerance,
+                                  cfg.simplify)
+    return pages.url.to_numpy()[page[u]], pid, x, y
 
 
 def _cell_index(net, cfg):
@@ -105,8 +119,7 @@ def test_near_miss_url_has_probe_rows(chunk_pages, net, cfg):
     """The near-miss url reaches the refine (its cells are indexed) and
     the outside url does not: the parity test below cuts a chunk of each
     kind."""
-    u, _, x, y = extract_arrays(chunk_pages, cfg.lon0, cfg.lat0,
-                                cfg.tolerance, cfg.simplify)
+    u, _, x, y = _extract(chunk_pages, cfg)
     rows = pd.Series(_probe_rows(x, y, _cell_index(net, cfg), cfg)).groupby(u).sum()
     assert rows[NEAR_MISS] > 0
     assert rows["https://example.com/outside"] == 0
@@ -151,8 +164,7 @@ def test_kernel_calls_stay_within_the_chunk_budget(monkeypatch, pages, net,
     more than CHUNK_ROWS candidate rows, except the long url's single-url
     chunk. The rows equal a one-chunk run's."""
     budget = 2_000
-    u, pid, x, y = extract_arrays(pages, cfg.lon0, cfg.lat0, cfg.tolerance,
-                                  cfg.simplify)
+    u, pid, x, y = _extract(pages, cfg)
     tiles = [(np.array([f"{s}#{t}" for s in u], dtype=object), pid, x, y)
              for t in range(8)]
     # the long url: one trajectory repeated until it alone is over budget
@@ -173,9 +185,10 @@ def test_kernel_calls_stay_within_the_chunk_budget(monkeypatch, pages, net,
 
     def run():
         spd = matching.DemandSpPayload(net.search_state(), cfg.max_dist)
-        frames, have = matching._probe_match(bu, bpid, bx, by, cells, geom,
-                                             stats, spd, cfg)
-        return matching.with_no_match_rows(frames, pd.unique(bu), have)
+        parts, have = matching._probe_match(bu, bpid, bx, by, cells, geom,
+                                            stats, spd, cfg)
+        return matching.matched_frame(
+            matching.with_no_match_rows(parts, pd.unique(bu), have))
 
     want = run()
     projected, scored = [], []

@@ -15,14 +15,30 @@ from st_mapmatching_spark.graph.dijkstra import shortest_paths_to_targets
 from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.kernels.keys import key_find, key_index
 from st_mapmatching_spark.operators.matching import (METRIC_COLS,
-                                                     _csr_paths,
                                                      _decode_stitch,
-                                                     no_match_rows)
+                                                     matched_frame)
 from test_viterbi_lockstep import _random_case
 from test_viterbi_match_batched import _mk_inputs
 
 CFG = MatchConfig()
 N_NODES = 12
+
+
+def _csr_paths(eps: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """CSR (flat eids, offsets) of an object array of epaths (None =
+    empty)."""
+    lens = np.fromiter((0 if e is None else len(e) for e in eps),
+                       dtype=np.int64, count=len(eps))
+    flat = np.concatenate([np.empty(0, np.int64)]
+                          + [np.asarray(e, dtype=np.int64)
+                             for e in eps[lens > 0]])
+    return flat, np.concatenate([[0], np.cumsum(lens)])
+
+
+def no_match_rows(urls) -> list[dict]:
+    """The reference's status-3 row per url: no path, NaN metrics."""
+    return [{"url": u, "status": hmm.STATUS_NO_CANDIDATES, "epath": None,
+             **dict.fromkeys(METRIC_COLS, np.nan)} for u in urls]
 
 
 class SpPayload:
@@ -132,8 +148,8 @@ def _batched(cands, pairs, cfg, paths, extra_urls=()):
         pos, hit = key_find(uniq, code, p_gid, p[p_col].to_numpy(),
                             p[e_col].to_numpy())
         pair[side] = np.where(hit, corder[pos], -1)
-    return _decode_stitch(urls, c_off, cand, pair, p_gid, cfg,
-                          paths).set_index("url")
+    return matched_frame(_decode_stitch(urls, c_off, cand, pair, p_gid, cfg,
+                                        paths)).set_index("url")
 
 
 def _reference(cands, pairs, cfg, sp_paths, collect, extra_urls=()):
@@ -299,6 +315,7 @@ def _stitch_cases(cases, cfg, sp_paths):
             {k: cc[k].to_numpy() for k in cc}, {k: pp[k].to_numpy()
                                                 for k in pp},
             cfg, cfg.dir_trans, None if collect else spd.paths)
+        got["epath"] = got["epath"].rows()
         for g, (pids, eids, ep, c, p) in enumerate(cases):
             gt = p.copy()
             if not collect:
@@ -393,11 +410,13 @@ def test_no_candidates_and_one_layer_urls():
 
 def test_demand_payload_equals_sp_table():
     """DemandSpPayload (searched per batch, one search per distinct
-    origin, memoized) gives every (o, d) exactly the lookup columns and
-    path of an SpPayload built from single-target searches over the same
-    adjacency: across two overlapping batches (memo hits, and origins
-    asked again with new targets), with o == d pairs, unreachable pairs
-    (a node off the graph) and pairs beyond max_dist."""
+    origin, its memo appended column by column) gives every (o, d)
+    exactly the lookup columns, bitwise, and the path of an SpPayload
+    built from shortest_paths_to_targets' single-target rows over the
+    same adjacency: across two overlapping batches (memo hits, and
+    origins asked again with new targets), with o == d pairs,
+    unreachable pairs (a node off the graph) and pairs beyond
+    max_dist."""
     from st_mapmatching_spark.graph.network import Network
     from st_mapmatching_spark.operators.matching import DemandSpPayload
     from st_mapmatching_spark.sources.network_gen import make_grid_network
@@ -422,7 +441,7 @@ def test_demand_payload_equals_sp_table():
         assert got.keys() == want.keys()
         for c in want:
             assert got[c].dtype == want[c].dtype, c
-            assert np.array_equal(got[c], want[c]), c
+            assert got[c].tobytes() == want[c].tobytes(), c
         for g, w in zip(spd.paths(o, d), want_spd.paths(o, d)):
             assert np.array_equal(g, w)
     assert len(spd.o) == len(rows)         # each pair searched once
