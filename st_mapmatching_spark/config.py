@@ -67,8 +67,8 @@ class MatchConfig:
     # or pre-assign numeric ids upstream.
     url_id_encode: bool = True
 
-    # decode strategy (matching.py:64, viterbi.py:200-246): beam_search=True
-    # is the reference default; False runs the classic full-lattice Viterbi
+    # decode strategy (matching.py:64, viterbi.py:200-246): True is the reference
+    # default beam, False the classic full-lattice Viterbi (both lockstep, hmm.py)
     beam_search: bool = True
 
     # projection origin (lon, lat) — pinned per network

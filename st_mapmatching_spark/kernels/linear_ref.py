@@ -102,16 +102,6 @@ def project_points_onto_polylines(points: np.ndarray, lines, cut: bool = True) -
     return out
 
 
-def cut_from_indices(coords: np.ndarray, seg_idx: int, ratio: float):
-    """Re-materialize the (seg0, seg1) cut of a polyline from the slim
-    (seg_idx, ratio) the refine stage shuffles — the projected point is
-    recomputed with the exact expression of the batch kernel, so the cut
-    is bitwise identical to the cut=True path."""
-    a = coords[seg_idx]
-    proj = a + (coords[seg_idx + 1] - a) * ratio
-    return cut_polyline(int(seg_idx), proj, float(ratio), coords)
-
-
 def cut_polyline(idx: int, proj: np.ndarray, ratio: float, coords: np.ndarray):
     """Split ``coords`` at (segment ``idx``, param ``ratio``) into
     (start->proj, proj->end). Boundary conventions follow the reference

@@ -25,17 +25,17 @@ Relational tail (Spark lifecycle of ST_Matching.matching, SURVEY.md §3.1):
   epath  : equi-join of the winning steps with the sp table
 
 Both routes end in one decode tail, _decode_stitch: per-url-max
-emission, lockstep beam (or classic) Viterbi and one batched stitch
+emission, one lockstep Viterbi (viterbi_beam_lockstep, or
+viterbi_classic_lockstep with beam_search=False) and one batched stitch
 (hmm.stitch_batch) over every trajectory of a batch, in flat arrays:
-the winning states come back from viterbi_beam_lockstep as offsets +
-(layer, eid), the winning pair rows are one composite-key lookup, the
-sp paths one gather from the payload's CSR path arrays
-(DemandSpPayload.paths) and the metrics per-url segment reductions.
-_match_frame calls it with the payload's paths, viterbi_match with
-none, emitting the winning steps for attach_epath_relational. Both
-score transitions with _transition_probs. hmm.stitch_path stays as the
-per-url reference (the oracle's stitch and the differential tests'
-baseline).
+the winning states come back as offsets + (layer, eid), the winning
+pair rows are one composite-key lookup, the sp paths one gather from
+the payload's CSR path arrays (DemandSpPayload.paths) and the metrics
+per-url segment reductions. _match_frame calls it with the payload's
+paths, viterbi_match with none, emitting the winning steps for
+attach_epath_relational. Both score transitions with _transition_probs.
+The per-url references (the oracle's decodes and stitch, and the
+differential tests' baseline) are in oracle/hmm_ref.py.
 """
 
 from __future__ import annotations
@@ -362,7 +362,7 @@ def attach_epath_relational(pre: DataFrame, sp: DataFrame, cfg: MatchConfig) -> 
     broadcast path dict (nothing collected to the driver; the join shuffles
     on (o_node, d_node) like any other).
 
-    Assembly mirrors hmm.stitch_path's tail exactly: full sequence =
+    Assembly mirrors hmm_ref.stitch_path's tail exactly: full sequence =
     [eid_i] ++ sp_epath_i per winning step (skipped for SAME_SRC_FIRST
     steps) ++ last_eid, then consecutive-dedup; a 1-edge deduped path is
     SAME_LINK (or FAILED below prob_thres) with the step metrics nulled
@@ -438,7 +438,7 @@ def layer_links(cands: DataFrame, points: DataFrame) -> DataFrame:
     dx = F.col("x1") - F.col("x")
     dy = F.col("y1") - F.col("y")
     # sqrt(dx*dx+dy*dy) to stay bit-identical with the numpy twin
-    # (kernels.hmm.layer_params) — see the ulp note there
+    # (oracle.hmm_ref.layer_params) — see the ulp note there
     return (layer_pts
             .withColumn("pid_1", F.lead("pid").over(w))
             .withColumn("x1", F.lead("x").over(w))
@@ -684,36 +684,46 @@ def _match_frame(c: dict, urls, geom, stats, spd,
                           lay_gid[p0][K], cfg, spd.paths)
 
 
+class MissingEmissionError(KeyError):
+    """A pair row whose (pid_1, eid_1) has no candidate row reached the
+    classic decode, which has no emission to score it with."""
+
+
 def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
                    cfg: MatchConfig, paths=None) -> dict:
-    """The decode tail of _match_frame and viterbi_match: emission,
-    Viterbi (lockstep beam, or classic per url) and one batched stitch
-    (hmm.stitch_batch) over every url of a batch; one MATCHED_SCHEMA row
-    per url, as columns: ``urls`` itself, int32 status, the epath as an
-    hmm.ListCol and a float64 array per metric. ``paths`` is the sp
-    payload's CSR path lookup (DemandSpPayload.paths); with None the rows
-    carry MATCHED_PRE_SCHEMA's winning steps (steps, last_eid) instead of
-    expanded paths.
+    """The decode tail of _match_frame and viterbi_match: emission, one
+    lockstep Viterbi (beam, or classic with beam_search=False) and one
+    batched stitch (hmm.stitch_batch) over every url of a batch; one
+    MATCHED_SCHEMA row per url, as columns: ``urls`` itself, int32
+    status, the epath as an hmm.ListCol and a float64 array per metric.
+    ``paths`` is the sp payload's CSR path lookup (DemandSpPayload.paths);
+    with None the rows carry MATCHED_PRE_SCHEMA's winning steps (steps,
+    last_eid) instead of expanded paths.
 
     Url g's candidate rows are c_off[g]:c_off[g + 1] of ``cand`` (pid,
     eid, dist_p2c, len0, len1), sorted (url, pid, dist_p2c, eid).
     ``pairs`` (SCORED_COLS' decode columns) is sorted (url, pid_0),
     ``pair_gid`` its url index, ``left`` the row of its (pid_0, eid_0)
     candidate and ``right`` that of its (pid_1, eid_1) candidate, -1 if
-    none (for right, a NaN emission). The emission is
+    none: for right, a NaN emission in the beam decode, and
+    MissingEmissionError in the classic one. The emission is
     recomputed in numpy (the JVM's exp/sqrt differ in the last ulp) and
     normalized by the per-url max."""
     ngroups = len(urls)
     n_c = np.diff(c_off)
     gid = np.repeat(np.arange(ngroups), n_c)
     pid, eid = cand["pid"], cand["eid"]
+    right = pairs["right"]
+    if not cfg.beam_search and (right < 0).any():
+        raise MissingEmissionError(
+            f"{int((right < 0).sum())} pair rows have no (pid_1, eid_1) "
+            "candidate row to take the classic decode's emission from")
     dens = hmm.gaussian_emission(cand["dist_p2c"], cfg.gps_sigma,
                                  cfg.gps_bias)
     gmax = np.full(ngroups, np.nan)
     ne = np.flatnonzero(n_c)
     gmax[ne] = np.maximum.reduceat(dens, c_off[ne])
     obs = hmm.observ_prob_from_density(dens, gmax[gid])
-    right = pairs["right"]
     p_obs = np.full(len(right), np.nan)
     p_obs[right >= 0] = obs[right[right >= 0]]
 
@@ -723,54 +733,44 @@ def _decode_stitch(urls, c_off, cand: dict, pairs: dict, pair_gid,
     lay_gid, lay_pid = gid[lay_row], pid[lay_row]
     pair_off = np.flatnonzero((np.diff(pair_gid, prepend=-1) != 0)
                               | (np.diff(pairs["pid_0"], prepend=-1) != 0))
-    plo = np.searchsorted(pair_gid, np.arange(ngroups))
-    phi = np.searchsorted(pair_gid, np.arange(ngroups), side="right")
-    has_pairs = phi > plo
+    has_pairs = np.zeros(ngroups, dtype=bool)
+    has_pairs[pair_gid] = True
     multi = np.flatnonzero(has_pairs)
 
     # winning states of every multi-layer url as flat arrays
+    pl_gid = np.searchsorted(multi, pair_gid[pair_off])
+    pair_cnt = np.diff(np.append(pair_off, len(pair_gid)))
+    n_steps = np.bincount(pl_gid, minlength=len(multi))
+    lay_lo = np.searchsorted(lay_gid, multi)
+    # a state's slot is its candidate row; a pair side with no
+    # candidate row gets a fresh slot per (layer, eid)
+    s0, s1, n_slots = pairs["left"], right, len(pid)
+    m0, m1 = np.flatnonzero(s0 < 0), np.flatnonzero(s1 < 0)
+    if len(m0) or len(m1):
+        pl_lay = lay_lo[pl_gid] + np.arange(len(pl_gid)) - np.repeat(
+            np.cumsum(n_steps) - n_steps, n_steps)
+        r_lay = np.repeat(pl_lay, pair_cnt)
+        _, fresh = np.unique(np.stack([
+            np.concatenate([r_lay[m0], r_lay[m1] + 1]),
+            np.concatenate([pairs["eid_0"][m0], pairs["eid_1"][m1]])],
+            axis=1), axis=0, return_inverse=True)
+        fresh = n_slots + fresh.ravel()
+        s0, s1 = s0.copy(), s1.copy()
+        s0[m0], s1[m1] = fresh[:len(m0)], fresh[len(m0):]
+        n_slots = int(fresh.max()) + 1
+    lattice = (pl_gid, pair_off, pair_cnt, pairs["eid_0"], pairs["eid_1"])
     if cfg.beam_search:
-        pl_gid = np.searchsorted(multi, pair_gid[pair_off])
-        pair_cnt = np.diff(np.append(pair_off, len(pair_gid)))
-        n_steps = np.bincount(pl_gid, minlength=len(multi))
-        lay_lo = np.searchsorted(lay_gid, multi)
-        # a state's slot is its candidate row; a pair side with no
-        # candidate row gets a fresh slot per (layer, eid)
-        s0, s1, n_slots = pairs["left"], right, len(pid)
-        m0, m1 = np.flatnonzero(s0 < 0), np.flatnonzero(s1 < 0)
-        if len(m0) or len(m1):
-            pl_lay = lay_lo[pl_gid] + np.arange(len(pl_gid)) - np.repeat(
-                np.cumsum(n_steps) - n_steps, n_steps)
-            r_lay = np.repeat(pl_lay, pair_cnt)
-            _, fresh = np.unique(np.stack([
-                np.concatenate([r_lay[m0], r_lay[m1] + 1]),
-                np.concatenate([pairs["eid_0"][m0], pairs["eid_1"][m1]])],
-                axis=1), axis=0, return_inverse=True)
-            fresh = n_slots + fresh.ravel()
-            s0, s1 = s0.copy(), s1.copy()
-            s0[m0], s1[m1] = fresh[:len(m0)], fresh[len(m0):]
-            n_slots = int(fresh.max()) + 1
         l0 = np.flatnonzero((pid == 0) & has_pairs[gid])
         w_off, w_idx, w_eid, end_prob = hmm.viterbi_beam_lockstep(
-            pl_gid, pair_off, pair_cnt, pairs["eid_0"], pairs["eid_1"],
-            pairs["trans_prob"] * p_obs, s0, s1, l0, obs[l0], n_slots,
-            n_steps, cfg)
-        w_pid = lay_pid[np.repeat(lay_lo, np.diff(w_off)) + w_idx]
+            *lattice, pairs["trans_prob"] * p_obs, s0, s1, l0, obs[l0],
+            n_slots, n_steps, cfg)
     else:
-        cand_cols = {**cand, "observ_prob": obs}
-        pair_cols = {**pairs, "observ_prob": p_obs}
-        dec = [hmm.decode_sequence(
-            hmm.ColFrame({k: v[c_off[g]:c_off[g + 1]]
-                          for k, v in cand_cols.items()}),
-            hmm.ColFrame({k: v[plo[g]:phi[g]]
-                          for k, v in pair_cols.items()}), cfg)
-            for g in multi]
-        end_prob = np.array([p for p, _ in dec], dtype=np.float64)
-        w_off = np.concatenate([[0], np.cumsum([len(r) for _, r in dec],
-                                               dtype=np.int64)])
-        w_pid, w_eid = (np.concatenate([np.empty(0, np.int64)] + [
-            getattr(r, c).to_numpy().astype(np.int64) for _, r in dec])
-            for c in ("pid", "eid"))
+        # the classic lattice starts at each url's first candidate layer
+        l0 = np.flatnonzero((pid == pid[c_off[gid]]) & has_pairs[gid])
+        w_off, w_idx, w_eid, end_prob = hmm.viterbi_classic_lockstep(
+            *lattice, pairs["dist_prob"] * p_obs, s0, s1, l0, obs[l0],
+            n_slots, n_steps)
+    w_pid = lay_pid[np.repeat(lay_lo, np.diff(w_off)) + w_idx]
 
     st = hmm.stitch_batch(
         multi, w_off, w_pid, w_eid, end_prob,

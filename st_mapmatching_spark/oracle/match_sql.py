@@ -7,9 +7,9 @@ statement over the events table.
 
 Independence: the SQL re-derives every stage from the shared closed-form
 constants (sources.derived) and the reference-documented semantics — it
-shares NO code with kernels/hmm.py. Engine/oracle agreement is therefore a
-genuine cross-implementation check of the HMM semantics (the gap the round-3
-verdict flagged: pytest parity alone was self-referential).
+shares NO code with kernels/hmm.py or hmm_ref.py. Engine/oracle agreement
+is therefore a genuine cross-implementation check of the HMM semantics (the
+gap the round-3 verdict flagged: pytest parity alone was self-referential).
 
 Float-parity design notes (all verified bitwise at sf0.001 and sf0.01):
 * Literals are emitted in E-notation (`fl`) — DuckDB parses short plain
@@ -37,9 +37,9 @@ Float-parity design notes (all verified bitwise at sf0.001 and sf0.01):
   back-pointers, insertion order) in a recursive CTE — beam pruning
   (prune_start_layer/trim/cap), NaN semantics (NaN compares greatest in
   DuckDB: masked explicitly to match numpy), and the first-max walk all
-  mirror kernels/hmm.py viterbi_beam/_prune; the classic decode mirrors
-  viterbi_classic's (value, prev-eid) tie rule via last-argmax over
-  eid-ascending lists.
+  mirror oracle/hmm_ref.py viterbi_beam/_prune; the classic decode
+  mirrors viterbi_classic's (value, prev-eid) tie rule via last-argmax
+  over eid-ascending lists.
 """
 
 from __future__ import annotations

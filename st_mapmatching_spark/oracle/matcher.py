@@ -3,8 +3,8 @@
 Runs the exact pipeline of ST_Matching.matching
 (/root/reference/mapmatching/matching.py:72-192) — simplify -> candidate
 retrieval -> validity gate -> transition graph -> scoring -> beam Viterbi ->
-path stitch — entirely in-process, using the same kernels the Spark engine
-executes inside Arrow UDFs. Candidate retrieval here is brute force
+path stitch — entirely in-process, on oracle/hmm_ref.py's references and
+the engine's geometry kernels. Candidate retrieval here is brute force
 (every point against every edge) so it is index-free ground truth for the
 engine's cell-cover join.
 """
@@ -21,6 +21,7 @@ from ..kernels import hmm
 from ..kernels.linear_ref import project_points_onto_polylines
 from ..kernels.projection import project_coords
 from ..kernels.simplify import simplify_points
+from . import hmm_ref
 
 
 def build_candidates(points_xy: np.ndarray, net: Network, cfg: MatchConfig) -> pd.DataFrame:
@@ -117,13 +118,13 @@ def match_trajectory(points_lonlat: np.ndarray, net: Network,
     layer_points["x"] = pts[layer_points.pid.to_numpy(), 0]
     layer_points["y"] = pts[layer_points.pid.to_numpy(), 1]
 
-    pairs = hmm.build_transition_pairs(cands, layer_points)
-    pairs = hmm.identify_flags(pairs, cfg.flag_dist_eps, cfg.flag_ratio_eps)
+    pairs = hmm_ref.build_transition_pairs(cands, layer_points)
+    pairs = hmm_ref.identify_flags(pairs, cfg.flag_dist_eps, cfg.flag_ratio_eps)
     pairs = attach_shortest_paths(pairs, net, cfg)
-    pairs = hmm.finalize_scores(pairs, net.edge_coords, cfg.dir_trans, cfg)
+    pairs = hmm_ref.finalize_scores(pairs, net.edge_coords, cfg.dir_trans, cfg)
 
-    end_prob, rlist = hmm.decode_sequence(cands, pairs, cfg)
-    out = hmm.stitch_path(rlist, pairs, cands, end_prob, cfg, cfg.dir_trans)
+    end_prob, rlist = hmm_ref.decode_sequence(cands, pairs, cfg)
+    out = hmm_ref.stitch_path(rlist, pairs, cands, end_prob, cfg, cfg.dir_trans)
     res.update(out)
     res["cands"] = cands
     res["pairs"] = pairs

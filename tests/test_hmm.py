@@ -7,6 +7,7 @@ import pytest
 
 from st_mapmatching_spark.config import MatchConfig
 from st_mapmatching_spark.kernels import hmm
+from st_mapmatching_spark.oracle import hmm_ref
 
 CFG = MatchConfig()
 
@@ -30,7 +31,7 @@ def test_flag_same_src_first_swap():
     # same edge, proj_0 (offset 40) before proj_1 (offset 50) -> flag 1,
     # sp endpoints swapped to edge.src -> edge.dst
     gt = pd.DataFrame([_pair_row(7, 7, dist_0=100, step_0_len=60, step_n_len=50)])
-    gt = hmm.identify_flags(gt)
+    gt = hmm_ref.identify_flags(gt)
     assert gt.flag[0] == hmm.FLAG_SAME_SRC_FIRST
     assert gt.o_node[0] == 1 and gt.d_node[0] == 2
 
@@ -39,7 +40,7 @@ def test_flag_same_src_last():
     # same edge, proj_0 (offset 80) far past proj_1 (offset 20) -> flag 2,
     # search loops edge.dst -> edge.src
     gt = pd.DataFrame([_pair_row(7, 7, dist_0=100, step_0_len=20, step_n_len=20)])
-    gt = hmm.identify_flags(gt)
+    gt = hmm_ref.identify_flags(gt)
     assert gt.flag[0] == hmm.FLAG_SAME_SRC_LAST
     assert gt.o_node[0] == 2 and gt.d_node[0] == 1
 
@@ -48,7 +49,7 @@ def test_flag_approx_point_reset():
     # proj_0 offset 53, proj_1 offset 50: within 5 m tolerance but not
     # cond_1 -> step_n/step_n_len reset to cand_0's head cut
     gt = pd.DataFrame([_pair_row(7, 7, dist_0=100, step_0_len=47, step_n_len=50)])
-    gt = hmm.identify_flags(gt)
+    gt = hmm_ref.identify_flags(gt)
     assert gt.flag[0] == hmm.FLAG_SAME_SRC_FIRST
     assert gt.step_n_len[0] == pytest.approx(53.0)
     np.testing.assert_allclose(gt.step_n[0], [[9.0, 9.0], [9.5, 9.0]])
@@ -56,7 +57,7 @@ def test_flag_approx_point_reset():
 
 def test_flag_normal_cross_edge():
     gt = pd.DataFrame([_pair_row(3, 9, dist_0=100, step_0_len=20, step_n_len=70)])
-    gt = hmm.identify_flags(gt)
+    gt = hmm_ref.identify_flags(gt)
     assert gt.flag[0] == hmm.FLAG_NORMAL
     assert gt.o_node[0] == 2 and gt.d_node[0] == 1  # dst_0 -> src_1
 
@@ -66,20 +67,20 @@ def _scored(gt, cost, epath=None, path_speed=12.0, dir_trans=False):
     gt["cost"] = cost
     gt["epath"] = [epath] * len(gt)
     gt["path_speed"] = path_speed
-    return hmm.finalize_scores(gt, {}, dir_trans, CFG)
+    return hmm_ref.finalize_scores(gt, {}, dir_trans, CFG)
 
 
 def test_dist_prob_clamp_and_flag1_override():
-    gt = hmm.identify_flags(pd.DataFrame([_pair_row(3, 9, step_0_len=20, step_n_len=10)]))
+    gt = hmm_ref.identify_flags(pd.DataFrame([_pair_row(3, 9, step_0_len=20, step_n_len=10)]))
     out = _scored(gt, cost=10.0)  # d_sht = 40, d_euc = 40 -> 1.0
     assert out.dist_prob[0] == pytest.approx(1.0)
 
-    gt2 = hmm.identify_flags(pd.DataFrame([_pair_row(3, 9, step_0_len=60, step_n_len=60)]))
+    gt2 = hmm_ref.identify_flags(pd.DataFrame([_pair_row(3, 9, step_0_len=60, step_n_len=60)]))
     out2 = _scored(gt2, cost=80.0)  # d_sht = 200 vs d_euc = 40 -> 0.2
     assert out2.dist_prob[0] == pytest.approx(0.2)
 
     # flag 1: d_sht = step_0_len + step_n_len - dist_0 = 60+50-100 = 10
-    gt3 = hmm.identify_flags(pd.DataFrame([_pair_row(7, 7, step_0_len=60, step_n_len=50)]))
+    gt3 = hmm_ref.identify_flags(pd.DataFrame([_pair_row(7, 7, step_0_len=60, step_n_len=50)]))
     out3 = _scored(gt3, cost=100.0, epath=[7])
     assert out3.d_sht[0] == pytest.approx(10.0)
     assert out3.epath[0] is None  # cleared for flag 1
@@ -87,13 +88,13 @@ def test_dist_prob_clamp_and_flag1_override():
 
 
 def test_unreachable_gives_zero_prob():
-    gt = hmm.identify_flags(pd.DataFrame([_pair_row(3, 9)]))
+    gt = hmm_ref.identify_flags(pd.DataFrame([_pair_row(3, 9)]))
     out = _scored(gt, cost=np.inf)
     assert out.dist_prob[0] == 0.0
 
 
 def test_temporal_weighted_speed():
-    gt = hmm.identify_flags(pd.DataFrame([_pair_row(3, 9, step_0_len=10, step_n_len=30)]))
+    gt = hmm_ref.identify_flags(pd.DataFrame([_pair_row(3, 9, step_0_len=10, step_n_len=30)]))
     out = _scored(gt, cost=60.0, path_speed=20.0)
     expect = (10 * 10 + 10 * 30 + 20 * 60) / 100.0
     assert out.avg_speed[0] == pytest.approx(expect)
@@ -128,7 +129,7 @@ def _lattice():
 
 def test_viterbi_picks_best_chain():
     cands, gt = _lattice()
-    end_prob, rlist = hmm.viterbi_beam(cands, gt, CFG)
+    end_prob, rlist = hmm_ref.viterbi_beam(cands, gt, CFG)
     assert list(rlist.eid) == [10, 20, 30]
     # layer1: 10->20 best prob = 1*0.9*1=0.9 ; layer2: 0.9*0.8*1=0.72
     assert end_prob == pytest.approx(0.72)
@@ -138,15 +139,15 @@ def test_viterbi_break_restarts_with_unit_prob():
     cands, gt = _lattice()
     # make layer 1 -> 2 unreachable from surviving states: zero out
     gt.loc[gt.pid_0 == 0, "trans_prob"] = np.nan
-    end_prob, rlist = hmm.viterbi_beam(cands, gt, CFG)
+    end_prob, rlist = hmm_ref.viterbi_beam(cands, gt, CFG)
     # nan probs at layer 0 -> empty prune -> break at layer 1 with prev=1
     assert len(rlist) >= 2
 
 
 def test_stitch_epath_concat_dedup():
     cands, gt = _lattice()
-    end_prob, rlist = hmm.viterbi_beam(cands, gt, CFG)
-    res = hmm.stitch_path(rlist, gt, cands, end_prob, CFG, dir_trans=False)
+    end_prob, rlist = hmm_ref.viterbi_beam(cands, gt, CFG)
+    res = hmm_ref.stitch_path(rlist, gt, cands, end_prob, CFG, dir_trans=False)
     assert res["epath"] == [10, 1000, 20, 2000, 30]
     assert res["status"] in (hmm.STATUS_SUCCESS, hmm.STATUS_FAILED)
     assert res["step_0"] == pytest.approx(10.0 / 100.0)
@@ -166,7 +167,7 @@ def test_stitch_same_link():
         "trans_prob": 0.95, "observ_prob": 1.0, "epath": None,
         "d_sht": 20.0, "avg_speed": 10.0, "dist_prob": 0.95, "flag": 1,
     }])
-    end_prob, rlist = hmm.viterbi_beam(cands, gt, CFG)
-    res = hmm.stitch_path(rlist, gt, cands, end_prob, CFG, dir_trans=False)
+    end_prob, rlist = hmm_ref.viterbi_beam(cands, gt, CFG)
+    res = hmm_ref.stitch_path(rlist, gt, cands, end_prob, CFG, dir_trans=False)
     assert res["epath"] == [10]
     assert res["status"] == hmm.STATUS_SAME_LINK

@@ -10,6 +10,7 @@ import pytest
 from st_mapmatching_spark.config import MatchConfig
 from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.kernels.keys import check_key_space, key_find, key_index
+from st_mapmatching_spark.oracle import hmm_ref
 from test_viterbi_lockstep import _batchify, _group, _random_case
 
 
@@ -67,7 +68,7 @@ def test_lockstep_decodes_eids_near_2_62():
     dec = hmm.viterbi_beam_lockstep(*_batchify(groups), cfg)
     assert int(dec[2].min()) >= big
     for g, (cands, gt) in enumerate(groups):
-        exp_prob, exp_rlist = hmm.viterbi_beam(cands, gt, cfg)
+        exp_prob, exp_rlist = hmm_ref.viterbi_beam(cands, gt, cfg)
         got_prob, ridx, reid = _group(*dec, g)
         pids = np.sort(cands.pid.unique())
         assert np.array_equal(pids[ridx], exp_rlist.pid.to_numpy())

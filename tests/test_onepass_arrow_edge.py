@@ -8,6 +8,7 @@ import pickle
 import subprocess
 import sys
 import types
+from dataclasses import replace
 
 import pandas as pd
 import pyarrow as pa
@@ -49,11 +50,11 @@ def test_worker_path_loads_no_pandas(tmp_path, pages, cfg):
     """A fresh interpreter imports the matching module, unpickles the
     four broadcast values (the sp memo empty, so the batch searches) and
     matches a pages RecordBatch read from Arrow IPC, as a worker gets it,
-    including a page without text: pandas is never imported."""
+    including a page without text: pandas is never imported, with the
+    beam decode and with the classic one the classic gates run
+    (beam_search=False, dir_trans=False)."""
     net = Network(*make_grid_network(cfg, nx=12, ny=12, seed=42), cfg)
     state, batch_file = tmp_path / "state.pkl", tmp_path / "pages.arrow"
-    with open(state, "wb") as f:
-        pickle.dump((_broadcast_values(net, cfg), cfg), f)
     urls = [*pages.url, "https://example.com/no_text"]
     batch = pa.RecordBatch.from_arrays(
         [pa.array(urls, pa.string()),
@@ -61,16 +62,23 @@ def test_worker_path_loads_no_pandas(tmp_path, pages, cfg):
     with pa.ipc.new_file(str(batch_file), batch.schema) as w:
         w.write_batch(batch)
     env = {**os.environ, "PYTHONPATH": ROOT}
-    proc = subprocess.run([sys.executable, "-c", _WORKER, str(state),
-                           str(batch_file)], capture_output=True, text=True,
-                          env=env, cwd=str(tmp_path), check=True)
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["pandas"] is False
-    assert sorted(out["url"]) == sorted(urls)
-    status = dict(zip(out["url"], out["status"]))
-    assert status["https://example.com/no_text"] == hmm.STATUS_NO_CANDIDATES
-    assert status["https://example.com/outside"] == hmm.STATUS_NO_CANDIDATES
-    assert "status: int32" in out["schema"]
+    for run_cfg in (cfg, replace(cfg, beam_search=False, dir_trans=False)):
+        with open(state, "wb") as f:
+            pickle.dump((_broadcast_values(net, run_cfg), run_cfg), f)
+        proc = subprocess.run([sys.executable, "-c", _WORKER, str(state),
+                               str(batch_file)], capture_output=True,
+                              text=True, env=env, cwd=str(tmp_path),
+                              check=True)
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["pandas"] is False, run_cfg
+        assert sorted(out["url"]) == sorted(urls)
+        status = dict(zip(out["url"], out["status"]))
+        assert status["https://example.com/no_text"] \
+            == hmm.STATUS_NO_CANDIDATES
+        assert status["https://example.com/outside"] \
+            == hmm.STATUS_NO_CANDIDATES
+        assert hmm.STATUS_SUCCESS in out["status"], run_cfg
+        assert "status: int32" in out["schema"]
 
 
 def test_arrow_edge_rows_equal_pandas_edge_null_for_null(spark, pages, net,

@@ -1,6 +1,6 @@
 """Differential test: the batched decode tail (_decode_stitch ->
-hmm.stitch_batch) against the per-url reference hmm.stitch_path, url by
-url, with sp paths from an SpPayload and in collect_steps mode. Every
+hmm.stitch_batch) against the per-url reference hmm_ref.stitch_path, url
+by url, with sp paths from an SpPayload and in collect_steps mode. Every
 output column must match exactly: the batch sums each url's steps in
 the order np.sum does (hmm.segment_reduce)."""
 
@@ -15,8 +15,10 @@ from st_mapmatching_spark.graph.dijkstra import shortest_paths_to_targets
 from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.kernels.keys import key_find, key_index
 from st_mapmatching_spark.operators.matching import (METRIC_COLS,
+                                                     MissingEmissionError,
                                                      _decode_stitch,
                                                      matched_frame)
+from st_mapmatching_spark.oracle import hmm_ref
 from test_viterbi_lockstep import _random_case
 from test_viterbi_match_batched import _mk_inputs
 
@@ -173,12 +175,12 @@ def _reference(cands, pairs, cfg, sp_paths, collect, extra_urls=()):
         obs = cpdf[["pid", "eid", "observ_prob"]].rename(
             columns={"pid": "pid_1", "eid": "eid_1"})
         gpdf = gpdf.merge(obs, on=["pid_1", "eid_1"], how="left")
-        end_prob, rlist = hmm.decode_sequence(cpdf, gpdf, cfg)
+        end_prob, rlist = hmm_ref.decode_sequence(cpdf, gpdf, cfg)
         if not collect:
             gpdf["epath"] = [
                 None if f == hmm.FLAG_SAME_SRC_FIRST else sp_paths.get((o, d))
                 for o, d, f in zip(gpdf.o_node, gpdf.d_node, gpdf.flag)]
-        row.update(hmm.stitch_path(rlist, gpdf, cpdf, end_prob, cfg,
+        row.update(hmm_ref.stitch_path(rlist, gpdf, cpdf, end_prob, cfg,
                                    cfg.dir_trans, collect_steps=collect))
     return pd.DataFrame(rows).set_index("url").sort_index()
 
@@ -225,6 +227,16 @@ def test_lockstep_lattices(seed):
     _check(cands, pairs, CFG, rng)
 
 
+@pytest.mark.parametrize("seed", range(3))
+def test_classic_lockstep_lattices(seed):
+    """The classic decode over the same lattices, a tenth of whose urls
+    have no layer 0: it starts at each url's first candidate layer."""
+    rng = np.random.default_rng(100 + seed)
+    cands, pairs = _lockstep_inputs(rng, 30)
+    assert (cands.groupby("url").pid.min() > 0).any()
+    _check(cands, pairs, replace(CFG, beam_search=False), rng)
+
+
 @pytest.mark.parametrize("seed", [3, 11, 17])
 @pytest.mark.parametrize("beam", [True, False])
 def test_match_batched_inputs(seed, beam):
@@ -266,6 +278,42 @@ def test_missing_right_candidates_share_a_state():
     _check(cands, pairs, CFG, rng)
     got = _batched(cands, pairs, CFG, None)
     assert 999 in [e for _, _, _, e in got.loc["m"].steps]
+
+
+def test_classic_hmm_break_is_failed():
+    """beam_search=False: a step that no valued state reaches (no row of
+    layer 1 -> 2 leaves eid 3, the only state layer 0 -> 1 reaches)
+    leaves the url no path: FAILED with end prob 0.0, as the per-url
+    viterbi_classic gives."""
+    rng = np.random.default_rng(9)
+    cands = pd.DataFrame({"url": "b", "pid": [0, 0, 1, 1, 2],
+                          "eid": [1, 2, 3, 4, 5],
+                          "dist_p2c": [1.0, 2.0, 3.0, 4.0, 5.0]})
+    pairs = pd.DataFrame({"url": "b", "pid_0": [0, 0, 1],
+                          "eid_0": [1, 2, 4], "eid_1": [3, 3, 5],
+                          "trans_prob": 0.5})
+    cands, pairs = _augment(rng, cands, pairs)
+    cfg = replace(CFG, beam_search=False)
+    _check(cands, pairs, cfg, rng)
+    got = _batched(cands, pairs, cfg, None).loc["b"]
+    assert got.status == hmm.STATUS_FAILED and got.epath is None
+    assert got.prob == 0.0
+
+
+def test_classic_missing_emission_raises():
+    """A pair row whose (pid_1, eid_1) has no candidate row (right = -1)
+    is a NaN emission to the beam decode, but the classic one has no
+    emission to score it with: _decode_stitch fails closed."""
+    rng = np.random.default_rng(10)
+    cands = pd.DataFrame({"url": "m", "pid": [0, 1], "eid": [10, 20],
+                          "dist_p2c": [1.0, 2.0]})
+    pairs = pd.DataFrame({"url": "m", "pid_0": [0, 0], "eid_0": [10, 10],
+                          "eid_1": [20, 999], "trans_prob": 0.5})
+    cands, pairs = _augment(rng, cands, pairs)
+    assert _batched(cands, pairs, CFG, None).loc["m"].status \
+        != hmm.STATUS_NO_CANDIDATES
+    with pytest.raises(MissingEmissionError):
+        _batched(cands, pairs, replace(CFG, beam_search=False), None)
 
 
 # ---------------------------------------------------------------------------
@@ -322,7 +370,7 @@ def _stitch_cases(cases, cfg, sp_paths):
                 gt["epath"] = [None if f == hmm.FLAG_SAME_SRC_FIRST
                                else sp_paths.get((o, d))
                                for o, d, f in zip(p.o_node, p.d_node, p.flag)]
-            want = hmm.stitch_path(pd.DataFrame({"pid": pids, "eid": eids}),
+            want = hmm_ref.stitch_path(pd.DataFrame({"pid": pids, "eid": eids}),
                                    gt, c, ep, cfg, cfg.dir_trans,
                                    collect_steps=collect)
             assert got["status"][g] == want["status"], (g, collect)

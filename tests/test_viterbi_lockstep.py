@@ -1,8 +1,11 @@
-"""Differential test: viterbi_beam_lockstep must reproduce the per-group
-viterbi_beam decision-for-decision on adversarial lattices — NaN
+"""Differential test: viterbi_beam_lockstep and viterbi_classic_lockstep
+must reproduce the per-group viterbi_beam and viterbi_classic
+(oracle/hmm_ref.py) decision-for-decision on adversarial lattices — NaN
 transition probs, HMM breaks (no reachable state), missing layer-0
 candidates, duplicate probabilities (tie-breaks), beam caps — and on
 batches shaped like the benchmark's kernel chunks."""
+
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -10,6 +13,7 @@ import pytest
 
 from st_mapmatching_spark.config import MatchConfig
 from st_mapmatching_spark.kernels import hmm
+from st_mapmatching_spark.oracle import hmm_ref
 
 
 def _random_case(rng: np.random.RandomState, ngroups: int):
@@ -50,9 +54,11 @@ def _random_case(rng: np.random.RandomState, ngroups: int):
     return groups
 
 
-def _batchify(groups):
+def _batchify(groups, first_layer=False):
     """Assemble the lockstep inputs exactly like _decode_stitch does: a
-    state's slot is its candidate row in the batch."""
+    state's slot is its candidate row in the batch. l0 holds the pid == 0
+    states, or with ``first_layer`` those of each group's first
+    candidate layer (the classic decode's start)."""
     pl_gid, off, tot = [], [], []
     e0, e1, tp, s0, s1 = [], [], [], [], []
     l0_s, l0_p = [], []
@@ -74,7 +80,8 @@ def _batchify(groups):
             s0.append([slot[(pids[i], e)] for e in sl.eid_0.tolist()])
             s1.append([slot[(pids[i + 1], e)] for e in sl.eid_1.tolist()])
             row_off += len(sl)
-        m0 = np.flatnonzero(cands.pid.to_numpy() == 0)
+        m0 = np.flatnonzero(cands.pid.to_numpy()
+                            == (pids[0] if first_layer else 0))
         l0_s.append(slot_off + m0)
         l0_p.append(cands.observ_prob.to_numpy()[m0])
         slot_off += len(cands)
@@ -95,28 +102,38 @@ def _group(w_off, w_idx, w_eid, w_prob, g):
     return w_prob[g], w_idx[sl], w_eid[sl]
 
 
+def _assert_decodes(dec, groups, ref):
+    """Every group's slice of the lockstep return ``dec`` equals
+    ref(cands, gt)'s (end_prob, rlist): pids, eids and end_prob (NaN
+    equal to NaN)."""
+    for g, (cands, gt) in enumerate(groups):
+        exp_prob, exp_rlist = ref(cands, gt)
+        got_prob, ridx, reid = _group(*dec, g)
+        pids = np.sort(cands.pid.unique())
+        assert np.array_equal(pids[ridx], exp_rlist.pid.to_numpy()
+                              .astype(np.int64)), f"group {g}: pids differ"
+        assert np.array_equal(reid, exp_rlist.eid.to_numpy()
+                              .astype(np.int64)), f"group {g}: eids differ"
+        assert got_prob == exp_prob or (np.isnan(got_prob)
+                                        and np.isnan(exp_prob)), \
+            f"group {g}: end_prob differs"
+
+
+def _classic_ref(cands, gt):
+    """viterbi_classic with the case's trans_prob as its dist_prob, so
+    that the lockstep's w (dist_prob * emit) is the batch's tp."""
+    return hmm_ref.viterbi_classic(cands, gt.assign(dist_prob=gt.trans_prob))
+
+
 @pytest.mark.parametrize("seed", range(8))
 def test_lockstep_equals_pergroup(seed):
     rng = np.random.RandomState(seed)
     cfg = MatchConfig()
     groups = _random_case(rng, ngroups=25)
     batch = _batchify(groups)
-    w_off, w_idx, w_eid, w_prob = hmm.viterbi_beam_lockstep(*batch, cfg)
-    assert len(w_off) == len(groups) + 1
-
-    for g, (cands, gt) in enumerate(groups):
-        exp_prob, exp_rlist = hmm.viterbi_beam(cands, gt, cfg)
-        got_prob, ridx, reid = _group(w_off, w_idx, w_eid, w_prob, g)
-        pids = np.sort(cands.pid.unique())
-        got_pid = pids[ridx]
-        assert np.array_equal(got_pid, exp_rlist.pid.to_numpy().astype(np.int64)), \
-            f"group {g}: pids differ"
-        assert np.array_equal(reid, exp_rlist.eid.to_numpy().astype(np.int64)), \
-            f"group {g}: eids differ"
-        if np.isnan(exp_prob):
-            assert np.isnan(got_prob)
-        else:
-            assert got_prob == exp_prob, f"group {g}: end_prob differs"
+    dec = hmm.viterbi_beam_lockstep(*batch, cfg)
+    assert len(dec[0]) == len(groups) + 1
+    _assert_decodes(dec, groups, lambda c, gt: hmm_ref.viterbi_beam(c, gt, cfg))
 
 
 def test_lockstep_low_beam_cap():
@@ -127,23 +144,19 @@ def test_lockstep_low_beam_cap():
     groups = _random_case(rng, ngroups=20)
     batch = _batchify(groups)
     dec = hmm.viterbi_beam_lockstep(*batch, cfg)
-    for g, (cands, gt) in enumerate(groups):
-        exp_prob, exp_rlist = hmm.viterbi_beam(cands, gt, cfg)
-        got_prob, ridx, reid = _group(*dec, g)
-        pids = np.sort(cands.pid.unique())
-        assert np.array_equal(pids[ridx], exp_rlist.pid.to_numpy().astype(np.int64))
-        assert np.array_equal(reid, exp_rlist.eid.to_numpy().astype(np.int64))
-        assert (got_prob == exp_prob) or (np.isnan(got_prob) and np.isnan(exp_prob))
+    _assert_decodes(dec, groups, lambda c, gt: hmm_ref.viterbi_beam(c, gt, cfg))
 
 
-def _bench_case(rng: np.random.RandomState, ngroups: int):
+def _bench_case(rng: np.random.RandomState, ngroups: int,
+                first_layer=False):
     """Lattices shaped like the benchmark's chunks, built in numpy: 60-80
     layers of 1-5 candidates over eids >= 2**40, NaN and zero transition
     probs, whole pair layers of NaN (an HMM break), a tenth of the pairs
     missing and groups without a layer 0. Even groups are thin (1-2 candidates, 70-80 layers), odd
     ones fat (1-5 candidates, 60-65 layers), so that past step 65 every
     pair layer has at most 4 rows. Returns the per-group (cands, gt) and
-    the lockstep inputs, slots being candidate rows as in _decode_stitch."""
+    the lockstep inputs, slots being candidate rows as in _decode_stitch
+    and l0 as in _batchify."""
     groups = []
     cols = {k: [] for k in ("pl_gid", "off", "cnt", "e0", "e1", "tp", "s0",
                             "s1", "l0_s", "l0_p", "n_steps")}
@@ -192,7 +205,8 @@ def _bench_case(rng: np.random.RandomState, ngroups: int):
         cols["tp"].append(tp * obs[R])
         cols["s0"].append(n_slots + L)
         cols["s1"].append(n_slots + R)
-        m0 = np.flatnonzero(cands.pid.to_numpy() == 0)
+        m0 = np.flatnonzero(cands.pid.to_numpy()
+                            == (pid[0] if first_layer else 0))
         cols["l0_s"].append(n_slots + m0)
         cols["l0_p"].append(obs[m0])
         cols["n_steps"].append([n_layers - 1])
@@ -213,13 +227,104 @@ def test_lockstep_benchmark_shaped(beam_cap, prune_start_layer):
     cfg = replace(MatchConfig(), beam_cap=beam_cap,
                   prune_start_layer=prune_start_layer)
     groups, batch = _bench_case(np.random.RandomState(7), 240)
-    w_off, w_idx, w_eid, w_prob = hmm.viterbi_beam_lockstep(*batch, cfg)
-    assert w_eid.dtype == np.int64 and w_idx.dtype == np.int64
-    for g, (cands, gt) in enumerate(groups):
-        exp_prob, exp_rlist = hmm.viterbi_beam(cands, gt, cfg)
-        got_prob, ridx, reid = _group(w_off, w_idx, w_eid, w_prob, g)
-        pids = np.sort(cands.pid.unique())
-        assert np.array_equal(pids[ridx], exp_rlist.pid.to_numpy()), g
-        assert np.array_equal(reid, exp_rlist.eid.to_numpy()), g
-        assert got_prob == exp_prob or (np.isnan(got_prob)
-                                        and np.isnan(exp_prob)), g
+    dec = hmm.viterbi_beam_lockstep(*batch, cfg)
+    assert dec[2].dtype == np.int64 and dec[1].dtype == np.int64
+    _assert_decodes(dec, groups, lambda c, gt: hmm_ref.viterbi_beam(c, gt, cfg))
+
+
+# ---------------------------------------------------------------------------
+# the classic decode: viterbi_classic_lockstep vs viterbi_classic
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("seed", range(8))
+def test_classic_lockstep_equals_pergroup(seed):
+    """NaN dist_probs, value ties (0.25, 0.5) and groups whose first
+    candidate layer is pid 1."""
+    groups = _random_case(np.random.RandomState(seed), ngroups=25)
+    dec = hmm.viterbi_classic_lockstep(*_batchify(groups, first_layer=True))
+    assert len(dec[0]) == len(groups) + 1
+    _assert_decodes(dec, groups, _classic_ref)
+
+
+def test_classic_lockstep_benchmark_shaped():
+    """240 benchmark-shaped groups: eids >= 2**40, whole pair layers of
+    NaN, dropped pairs and groups without a layer 0."""
+    groups, batch = _bench_case(np.random.RandomState(7), 240,
+                                first_layer=True)
+    dec = hmm.viterbi_classic_lockstep(*batch)
+    assert dec[2].dtype == np.int64 and int(dec[2].min()) >= 2 ** 40
+    _assert_decodes(dec, groups, _classic_ref)
+
+
+def _hand_group(layers: dict, rows: list):
+    """One group from {pid: [(eid, emit), ...]} and its pair rows
+    [(pid_0, eid_0, eid_1, dist_prob), ...], in _random_case's frames
+    (each row's observ_prob is its to-state's emit)."""
+    cands = pd.DataFrame(
+        [(p, e, float(i), o) for p, st in layers.items()
+         for i, (e, o) in enumerate(st)],
+        columns=["pid", "eid", "dist_p2c", "observ_prob"])
+    nxt = dict(zip(sorted(layers)[:-1], sorted(layers)[1:]))
+    emit = {(p, e): o for p, st in layers.items() for e, o in st}
+    gt = pd.DataFrame([(p, a, b, dp, emit[(nxt[p], b)])
+                       for p, a, b, dp in rows],
+                      columns=["pid_0", "eid_0", "eid_1", "trans_prob",
+                               "observ_prob"])
+    return cands, gt
+
+
+def test_classic_lockstep_named_cases():
+    """Each rule of viterbi_classic, one group per rule, in one call."""
+    nan = np.nan
+    cases = [
+        # an all-NaN step: every value NaN, compared as -inf, so each
+        # tie goes to the larger e0 and the end value is NaN
+        (_hand_group({0: [(1, .5), (2, .5)], 1: [(3, .4), (4, .6)],
+                      2: [(5, .5)]},
+                     [(0, 1, 3, nan), (0, 2, 3, nan), (0, 1, 4, nan),
+                      (0, 2, 4, nan), (1, 3, 5, .5), (1, 4, 5, .5)]),
+         [2, 4, 5], nan),
+        # a NaN row loses to a valued one
+        (_hand_group({0: [(1, .5), (2, .5)], 1: [(3, .5)]},
+                     [(0, 1, 3, .5), (0, 2, 3, nan)]), [1, 3], .75),
+        # a value tie on the previous state: the larger e0 wins
+        (_hand_group({0: [(1, .5), (2, .5)], 1: [(3, .5)]},
+                     [(0, 1, 3, .5), (0, 2, 3, .5)]), [2, 3], .75),
+        # a value tie on the end state: the larger eid wins
+        (_hand_group({0: [(1, .5)], 1: [(3, .5), (4, .5)]},
+                     [(0, 1, 3, .5), (0, 1, 4, .5)]), [1, 4], .75),
+        # an HMM break: no row of step 1 leaves a valued state
+        (_hand_group({0: [(1, .5), (2, .5)], 1: [(3, .5), (4, .5)],
+                      2: [(5, .5)]},
+                     [(0, 1, 3, .5), (0, 2, 3, .5), (1, 4, 5, .5)]),
+         [], 0.0),
+        # the first candidate layer is pid 3, not pid 0
+        (_hand_group({3: [(1, .5), (2, .25)], 5: [(6, .5)]},
+                     [(3, 1, 6, .5), (3, 2, 6, .5)]), [1, 6], .75),
+    ]
+    groups = [g for g, _, _ in cases]
+    dec = hmm.viterbi_classic_lockstep(*_batchify(groups, first_layer=True))
+    _assert_decodes(dec, groups, _classic_ref)
+    for g, (_, eids, end) in enumerate(cases):
+        got_prob, _, reid = _group(*dec, g)
+        assert list(reid) == eids, g
+        assert got_prob == end or (np.isnan(got_prob) and np.isnan(end)), g
+
+
+def test_reference_decodes_warn_nothing():
+    """The per-url decodes and the lockstep ones run the adversarial
+    lattices (all-NaN layers, breaks, missing layer 0) without a
+    RuntimeWarning: a new one would not be lost among old ones."""
+    cfg = MatchConfig()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        for seed in range(4):
+            groups = _random_case(np.random.RandomState(seed), ngroups=25)
+            _assert_decodes(hmm.viterbi_beam_lockstep(*_batchify(groups),
+                                                      cfg), groups,
+                            lambda c, gt: hmm_ref.viterbi_beam(c, gt, cfg))
+            _assert_decodes(hmm.viterbi_classic_lockstep(
+                *_batchify(groups, first_layer=True)), groups, _classic_ref)
+        groups, batch = _bench_case(np.random.RandomState(7), 60)
+        _assert_decodes(hmm.viterbi_beam_lockstep(*batch, cfg), groups,
+                        lambda c, gt: hmm_ref.viterbi_beam(c, gt, cfg))

@@ -10,6 +10,7 @@ import pytest
 from st_mapmatching_spark.config import MatchConfig
 from st_mapmatching_spark.kernels import hmm
 from st_mapmatching_spark.operators.matching import SCORED_COLS, viterbi_match
+from st_mapmatching_spark.oracle import hmm_ref
 
 
 CFG = MatchConfig(dir_trans=False)
@@ -19,8 +20,9 @@ def _mk_inputs(rng, n_urls, adversarial=True):
     """Synthetic candidate + scored-pair tables shaped like the
     relational pipeline's (including, for the beam decode, a deliberate
     pair row whose (pid_1, eid_1) has no candidate -> the merge's NaN
-    path; the classic decode indexes its emit dict directly and raises
-    on such rows in the old recipe too, so they are beam-only)."""
+    path; the classic decode has no emission for such rows and raises,
+    per url (viterbi_classic's emit dict) and batched
+    (MissingEmissionError), so they are beam-only)."""
     cand_rows, pair_rows = [], []
     for ui in range(n_urls):
         url = f"u{ui:03d}"
@@ -82,8 +84,8 @@ def _reference_rows(cands, scored, cfg):
                      "observ_prob": "_obs"})
         gpdf = gpdf.merge(obs_map, on=["pid_1", "eid_1"], how="left")
         gpdf["observ_prob"] = gpdf.pop("_obs")
-        end_prob, rlist = hmm.decode_sequence(cpdf, gpdf, cfg)
-        res = hmm.stitch_path(rlist, gpdf, cpdf, end_prob, cfg,
+        end_prob, rlist = hmm_ref.decode_sequence(cpdf, gpdf, cfg)
+        res = hmm_ref.stitch_path(rlist, gpdf, cpdf, end_prob, cfg,
                               dir_trans=False, collect_steps=True)
         if "epath" in res:
             res["epath0"] = res.pop("epath")
